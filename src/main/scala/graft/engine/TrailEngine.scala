@@ -72,13 +72,20 @@ object TrailEngine {
       .toVector
   }
 
-  /** Emitted row schema: one row per (trail × tuple × yield-item). */
+  /** Emitted row schema: one row per (trail × tuple × yield-item), or per
+    * (trail × tuple × sketch) for HLL yields. `item` is the encoded tuple
+    * for `s`/`m` rows, null for `c` rows, and for `h` rows the trail-local
+    * sketch's nonzero registers as [[graft.trck.Hll.sparse]] (index hi,
+    * index lo, rank) triples — ≤ 3k bytes for k distinct items, never the
+    * dense 16 KiB array. TrckSparkRunner.aggregateEmits folds every kind
+    * in one aggregation pass.
+    */
   private val emitSchema = StructType(Seq(
     StructField("uuid", StringType),
     StructField("tuple_idx", IntegerType),
     StructField("kind", StringType), // c / s / m / h
     StructField("dst", StringType),
-    StructField("item", BinaryType), // encoded tuple; null for counters
+    StructField("item", BinaryType),
     StructField("n", LongType),
   ))
 
@@ -359,8 +366,8 @@ object TrailEngine {
             m.foreach { case (t, c) => buf += Row(ctxCookie, j, "m", d, t, c) }
           }
           r.hlls.foreach { case (d, h) =>
-            // emit the trail-local sketch registers; merged upstream
-            buf += Row(ctxCookie, j, "h", d, h.registers, 1L)
+            // the trail-local sketch's nonzero registers; merged upstream
+            buf += Row(ctxCookie, j, "h", d, h.sparse, 1L)
           }
         }
 

@@ -315,63 +315,56 @@ object TrckSparkRunner {
     val srcCol = if (events.columns.contains("__src")) Some("__src") else None
     require(srcCol.isEmpty || srcCuts.nonEmpty,
       "multi-source events (__src column) need the unionSources cuts passed as srcCuts")
-    val cuts = srcCuts
-    // one aggregation pass per DECLARED yield family — most programs only
-    // count, so they get a single job; the emit stream is cached only when
-    // more than one family will traverse it
-    val needCounters = prog.yieldCounters.nonEmpty
-    val needSets = prog.yieldSets.nonEmpty || prog.yieldMultisets.nonEmpty
-    val needHlls = prog.yieldHlls.nonEmpty
-    val nPasses = Seq(needCounters, needSets, needHlls).count(identity)
-    val em0 = TrailEngine
+    val em = TrailEngine
       .emits(prog, trailDf, uuidCol, tsCol, tiebreak, params, Some(tuples), fcalls,
-        winEntries, srcCol, cuts, prepared)
-    val em = if (nPasses > 1) em0.cache() else em0
+        winEntries, srcCol, srcCuts, prepared)
+    aggregateEmits(prog, tuples, em)
+  }
 
+  /** Fold an emit stream ([[TrailEngine.emits]] schema) into reference-shaped
+    * results in ONE aggregation pass and one collect: group by (tuple_idx,
+    * kind, dst, item for set/multiset rows), sum `n` for counter, set and
+    * multiset groups, register-max the sparse sketches of `h` groups, then
+    * dispatch each collected row on `kind` on the driver. The HLL aggregate
+    * is planned only when the program declares an HLL yield, so other
+    * programs keep a plain HashAggregate. Per-tuple rows fold into slot 0
+    * under mergeResults: counters add, set counts add, sketches
+    * register-max (reference: match_add_results).
+    */
+  def aggregateEmits(
+      prog: CompiledProgram, tuples: Vector[ForeachTuple], em: DataFrame): LocalRunner.RunOutput = {
     val nSlots = if (prog.mergeResults) 1 else tuples.length
     val results = Vector.fill(nSlots)(new Results(prog))
-    def slotIdx(i: Int) = if (prog.mergeResults) 0 else i
-
-    // counters
-    if (needCounters)
-      em.filter(col("kind") === "c")
-        .groupBy("tuple_idx", "dst").agg(sum("n").as("v"))
-        .collect()
-        .foreach { r =>
-          val res = results(slotIdx(r.getInt(0)))
-          res.touched = true // direct map writes bypass the emit methods
-          res.counters.updateWith(r.getString(1))(c => Some(c.getOrElse(0L) + r.getLong(2)))
+    val kind = col("kind")
+    // a literal item key for programs without set/multiset yields: the
+    // optimizer drops it from the grouping, and the remaining fixed-width
+    // and string keys keep the codegen fast hash map
+    val item =
+      if (prog.yieldSets.isEmpty && prog.yieldMultisets.isEmpty) lit(null).cast("binary")
+      else when(kind.isin("s", "m"), col("item"))
+    val hll =
+      if (prog.yieldHlls.isEmpty) Nil
+      else Seq(graft.functions.HllAggregator
+        .trckHllMergeSparseHex(when(kind === "h", col("item"))).as("hex"))
+    em.groupBy(col("tuple_idx"), kind, col("dst"), item.as("item"))
+      .agg(sum("n").as("v"), hll: _*)
+      .collect()
+      .foreach { r =>
+        val res = results(if (prog.mergeResults) 0 else r.getInt(0))
+        res.touched = true // direct map writes bypass the emit methods
+        val dst = r.getString(2)
+        r.getString(1) match {
+          case "c" =>
+            res.counters.updateWith(dst)(c => Some(c.getOrElse(0L) + r.getLong(4)))
+          case "h" =>
+            val h = Hll.fromHexString(r.getString(5))
+            res.hlls.updateWith(dst)(prev => Some(prev.fold(h)(_.merge(h))))
+          case k =>
+            val m = if (k == "s") res.sets(dst) else res.msets(dst)
+            val item = r.getAs[Array[Byte]](3)
+            m.update(item, m.getOrElse(item, 0L) + r.getLong(4))
         }
-    // sets + multisets: distinct encoded tuples with counts
-    if (needSets)
-      em.filter(col("kind").isin("s", "m"))
-        .groupBy("tuple_idx", "kind", "dst", "item").agg(sum("n").as("v"))
-        .collect()
-        .foreach { r =>
-          val res = results(slotIdx(r.getInt(0)))
-          res.touched = true // direct map writes bypass the emit methods
-          val m = if (r.getString(1) == "s") res.sets(r.getString(2)) else res.msets(r.getString(2))
-          val k = r.getAs[Array[Byte]]("item")
-          m.update(k, m.getOrElse(k, 0L) + r.getLong(4))
-        }
-    // hlls: merge per-trail register arrays. Register-max INTO the slot,
-    // never overwrite: with mergeResults every tuple_idx maps to slot 0,
-    // and the per-tuple sketches must union (reference: match_add_results'
-    // hll merge) — an update() here kept only whichever tuple's row was
-    // collected last (EngineEquivalenceSpec pins the merged-HLL case).
-    if (needHlls)
-      em.filter(col("kind") === "h")
-        .groupBy("tuple_idx", "dst")
-        .agg(graft.functions.HllAggregator.trckHllMergeHex(col("item")).as("hex"))
-        .collect()
-        .foreach { r =>
-          val res = results(slotIdx(r.getInt(0)))
-          res.touched = true // direct map writes bypass the emit methods
-          val h = Hll.fromHexString(r.getString(2))
-          res.hlls.updateWith(r.getString(1))(prev => Some(prev.fold(h)(_.merge(h))))
-        }
-    if (nPasses > 1) em.unpersist()
-
+      }
     LocalRunner.RunOutput(prog, tuples, results, prog.mergeResults)
   }
 }

@@ -18,8 +18,8 @@ import graft.trck.Hll
   */
 object HllAggregator {
 
-  /** Register-max union into `a` (null-tolerant on `b`) — the ONE merge
-    * all three aggregators below share, so a future fix can never
+  /** Register-max union into `a` (null-tolerant on `b`) — the ONE dense
+    * merge every aggregator below shares, so a future fix can never
     * silently miss a face.
     */
   private def registerMax(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
@@ -62,27 +62,37 @@ object HllAggregator {
   val estimateUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
     org.apache.spark.sql.functions.udf((hex: String) => Option(hex).map(estimate))
 
-  /** Merge-aggregator over already-serialized sketches (e.g. the per-trail
-    * sketches the TrailEngine emits): register-max union.
+  /** Merge-aggregator over per-trail sparse sketches ([[Hll.sparse]]
+    * triples, the TrailEngine's `h` emit rows): register-max union. The
+    * buffer stays empty until the first non-null input, so groups of a
+    * shared aggregation that never see a sketch (counter and set rows fed
+    * as null) allocate no registers and finish as null; a group whose
+    * sketches are all empty still finishes as the reference's "0e00".
     */
-  val mergeRegisters: Aggregator[Array[Byte], Array[Byte], String] =
+  val mergeSparse: Aggregator[Array[Byte], Array[Byte], String] =
     new Aggregator[Array[Byte], Array[Byte], String] {
-      override def zero: Array[Byte] = new Array[Byte](Hll.M)
-      override def reduce(buf: Array[Byte], regs: Array[Byte]): Array[Byte] =
-        registerMax(buf, regs)
+      override def zero: Array[Byte] = Array.emptyByteArray
+      override def reduce(buf: Array[Byte], sparse: Array[Byte]): Array[Byte] =
+        if (sparse == null) buf
+        else {
+          val regs = if (buf.length == 0) new Array[Byte](Hll.M) else buf
+          Hll.maxSparse(regs, sparse)
+          regs
+        }
       override def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-        registerMax(a, b)
-      override def finish(buf: Array[Byte]): String = Hll.serializeRegisters(buf)
+        if (a.length == 0) b else if (b.length == 0) a else registerMax(a, b)
+      override def finish(buf: Array[Byte]): String =
+        if (buf.length == 0) null else Hll.serializeRegisters(buf)
       override def bufferEncoder: Encoder[Array[Byte]] = Encoders.BINARY
       override def outputEncoder: Encoder[String] = Encoders.STRING
     }
 
-  def trckHllMergeHex(c: Column): Column = udaf(mergeRegisters).apply(c)
+  def trckHllMergeSparseHex(c: Column): Column = udaf(mergeSparse).apply(c)
 
-  /** [[mergeRegisters]] with a BINARY result instead of the RLE-hex
-    * serialization — for iterative consumers (HyperBall's per-round ball
-    * union) that feed the merged registers straight into the next round
-    * and would only pay a decode for the hex form.
+  /** Merge-aggregator over dense register arrays with a BINARY result —
+    * for iterative consumers (HyperBall's per-round ball union) that feed
+    * the merged registers straight into the next round and would only pay
+    * a decode for a hex form.
     */
   val mergeRegistersBinary: Aggregator[Array[Byte], Array[Byte], Array[Byte]] =
     new Aggregator[Array[Byte], Array[Byte], Array[Byte]] {

@@ -179,7 +179,7 @@ object TrailStream {
             r.counters.foreach { case (d, v) => if (v != 0) buf += EmitRow(ctxId, j, "c", d, null, v) }
             r.sets.foreach { case (d, m) => m.foreach { case (t, c) => buf += EmitRow(ctxId, j, "s", d, t, c) } }
             r.msets.foreach { case (d, m) => m.foreach { case (t, c) => buf += EmitRow(ctxId, j, "m", d, t, c) } }
-            r.hlls.foreach { case (d, h) => buf += EmitRow(ctxId, j, "h", d, h.registers, 1L) }
+            r.hlls.foreach { case (d, h) => buf += EmitRow(ctxId, j, "h", d, h.sparse, 1L) }
           }
 
           if (state.hasTimedOut) {

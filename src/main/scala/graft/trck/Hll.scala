@@ -68,6 +68,30 @@ final class Hll private (val registers: Array[Byte]) extends Serializable {
     0.0
   }
 
+  /** Nonzero registers as (index hi, index lo, rank) byte triples, in
+    * index order — the per-trail emit form: a sketch of k distinct items
+    * ships at most 3k bytes instead of all [[Hll.M]] registers.
+    * [[Hll.maxSparse]] folds it back into a register array.
+    */
+  def sparse: Array[Byte] = {
+    var n = 0
+    var i = 0
+    while (i < M) { if (registers(i) != 0) n += 1; i += 1 }
+    val out = new Array[Byte](3 * n)
+    var o = 0
+    i = 0
+    while (i < M) {
+      if (registers(i) != 0) {
+        out(o) = (i >>> 8).toByte
+        out(o + 1) = i.toByte
+        out(o + 2) = registers(i)
+        o += 3
+      }
+      i += 1
+    }
+    out
+  }
+
   /** Hex serialization: 2 hex chars precision, 2 hex chars version (01 =
     * non-empty), then RLE pairs (count[,countHigh],value) hex-encoded
     * (reference: src/hyperloglog.c:386-409 hll_to_string,
@@ -126,6 +150,16 @@ object Hll {
       i += 1
     }
     EmptyHex
+  }
+
+  /** Register-max a [[Hll.sparse]] triple array into `regs` (M registers). */
+  def maxSparse(regs: Array[Byte], sparse: Array[Byte]): Unit = {
+    var o = 0
+    while (o + 2 < sparse.length) {
+      val idx = ((sparse(o) & 0xff) << 8) | (sparse(o + 1) & 0xff)
+      if ((regs(idx) & 0xff) < (sparse(o + 2) & 0xff)) regs(idx) = sparse(o + 2)
+      o += 3
+    }
   }
 
   def fromHexString(s: String): Hll = {

@@ -121,7 +121,11 @@ object TrailMatcher {
         onResult(j, scratch)
         var k = j + 1
         val end = j + n
-        var memo: (FsmState, Results) = null
+        // a representative whose own values are absent from the trail IS
+        // the absent-value run: seed the memo from it rather than running
+        // the first absent tuple again (keeps the ≤ N+1 bound)
+        var memo: (FsmState, Results) =
+          if (dvOk && !tupleInTrail(j)) (st, scratch) else null
         while (k < end) {
           if (!dvOk || tupleInTrail(k)) {
             val (s2, r2, _) = runOne(k)

@@ -7,7 +7,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.GraftSession
-import graft.engine.ProgramFuzzSpec
+import graft.engine.{ProgramFuzzSpec, TrckSparkRunner}
 import graft.trck._
 import graft.trck.LocalRunner.{Db, ForeachTuple, RawEvent}
 
@@ -109,43 +109,15 @@ class TrailStreamFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
     })
   }
 
-  /** Aggregate collected EmitRows exactly the way TrckSparkRunner.run folds
-    * the batch emit stream into Results (sum counters, per-item sums for
-    * sets/multisets, register-max HLL merge, mergeResults slot collapse).
+  /** Fold the collected EmitRows through the batch engine's own
+    * aggregation (TrckSparkRunner.aggregateEmits), the sentinel's rows
+    * excluded.
     */
   private def aggregate(
       tbl: String, prog: Compiled.CompiledProgram,
-      tuples: Vector[ForeachTuple]): LocalRunner.RunOutput = {
-    val em = spark.table(tbl).filter(col("uuid") =!= Sentinel)
-    val nSlots = if (prog.mergeResults) 1 else tuples.length
-    val results = Vector.fill(nSlots)(new Results(prog))
-    def slot(i: Int) = results(if (prog.mergeResults) 0 else i)
-    em.filter(col("kind") === "c")
-      .groupBy("tupleIdx", "dst").agg(sum("n").as("v"))
-      .collect()
-      .foreach(r => slot(r.getInt(0)).counters
-        .updateWith(r.getString(1))(c => Some(c.getOrElse(0L) + r.getLong(2))))
-    em.filter(col("kind").isin("s", "m"))
-      .groupBy("tupleIdx", "kind", "dst", "item").agg(sum("n").as("v"))
-      .collect()
-      .foreach { r =>
-        val res = slot(r.getInt(0))
-        val m = if (r.getString(1) == "s") res.sets(r.getString(2)) else res.msets(r.getString(2))
-        val k = r.getAs[Array[Byte]]("item")
-        m.update(k, m.getOrElse(k, 0L) + r.getLong(4))
-      }
-    em.filter(col("kind") === "h")
-      .groupBy("tupleIdx", "dst")
-      .agg(graft.functions.HllAggregator.trckHllMergeHex(col("item")).as("hex"))
-      .collect()
-      .foreach { r =>
-        // register-max into the slot (mergeResults folds every tupleIdx
-        // into slot 0 — overwrite would keep one arbitrary tuple's sketch)
-        val h = Hll.fromHexString(r.getString(2))
-        slot(r.getInt(0)).hlls.updateWith(r.getString(1))(prev => Some(prev.fold(h)(_.merge(h))))
-      }
-    LocalRunner.RunOutput(prog, tuples, results, prog.mergeResults)
-  }
+      tuples: Vector[ForeachTuple]): LocalRunner.RunOutput =
+    TrckSparkRunner.aggregateEmits(prog, tuples,
+      spark.table(tbl).filter(col("uuid") =!= Sentinel).withColumnRenamed("tupleIdx", "tuple_idx"))
 
   private def runStream(
       prog: Compiled.CompiledProgram, dbs: Seq[Db], params: Fsm.Bindings,
