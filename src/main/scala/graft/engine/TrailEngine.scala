@@ -18,11 +18,14 @@ import graft.trck.LocalRunner.ForeachTuple
   *   scan (pruned to uuid + ts + program fields, filters pushed down)
   *     → repartition(uuid)                 // the ONE shuffle
   *     → sortWithinPartitions(uuid, ts, tiebreak…)
-  *     → mapPartitions: iterate consecutive same-uuid runs, one trail in
-  *       memory at a time (no per-group materialization of the partition),
-  *       run the foreach loop with the reference's N+1 skip optimizations,
-  *       finalize at MAX_TIMESTAMP inline (single-source ⇒ no cross-trail
-  *       state), emit compact yield rows
+  *     → mapPartitions: read consecutive same-uuid runs in one pass, one
+  *       trail in memory at a time (no per-group materialization of the
+  *       partition); consecutive duplicates are dropped once per source
+  *       segment, and each segment replays through the cookie's window
+  *       entries, each entry on its own ts slice
+  *       ([[graft.trck.TrailMatcher.runEntries]]: the foreach loop with the
+  *       reference's N+1 skip optimizations); finalize at MAX_TIMESTAMP
+  *       inline (no cross-trail state), emit compact yield rows
   *     → groupBy(tuple, dst[, item]) aggregation — partial map-side combine
   *       makes the second shuffle O(distinct yields), not O(events)
   *
@@ -71,6 +74,24 @@ object TrailEngine {
       .sorted
       .toVector
   }
+
+  /** The foreach tuples a run iterates: one empty tuple for a program
+    * without foreach, else `explicit`, else the implicit-foreach sweep —
+    * "" first, then [[lexiconSweep]] of the bound field over `lexicon`
+    * (reference: src/match_traildb.c:188-236).
+    */
+  def runTuples(
+      prog: CompiledProgram,
+      explicit: Option[Vector[ForeachTuple]],
+      lexicon: DataFrame,
+  ): Vector[ForeachTuple] =
+    if (prog.groupbyVars.isEmpty) Vector(ForeachTuple(Vector.empty))
+    else
+      explicit.getOrElse {
+        require(prog.groupbyVars.size == 1, "implicit foreach requires exactly one var")
+        val field = prog.varFields(prog.groupbyVars.head)
+        ("" +: lexiconSweep(lexicon, field)).map(v => ForeachTuple(Vector(Left(v))))
+      }
 
   /** Emitted row schema: one row per (trail × tuple × yield-item), or per
     * (trail × tuple × sketch) for HLL yields. `item` is the encoded tuple
@@ -192,7 +213,8 @@ object TrailEngine {
         * previous DB left; the LAST entry's output state carries forward;
         * finalization runs once per cookie) — exactly LocalRunner /
         * src/match_traildb.c:513-560 + j128m keying at :570,:789.
-        * Unlisted trails must be dropped upstream (broadcast semi-join).
+        * Unlisted trails are read and skipped; drop them upstream
+        * (broadcast semi-join) so they never reach the shuffle.
         */
       windows: Option[Seq[LocalRunner.WindowEntry]] = None,
       /** source-index column for multi-source runs (see
@@ -219,16 +241,7 @@ object TrailEngine {
   ): DataFrame = {
     val spark = events.sparkSession
 
-    val tuples: Vector[ForeachTuple] =
-      if (prog.groupbyVars.isEmpty) Vector(ForeachTuple(Vector.empty))
-      else
-        foreachTuples.getOrElse {
-          // implicit foreach: lexicon sweep, "" first
-          // (reference: src/match_traildb.c:188-236)
-          require(prog.groupbyVars.size == 1, "implicit foreach requires exactly one var")
-          val field = prog.varFields(prog.groupbyVars.head)
-          ("" +: lexiconSweep(events, field)).map(v => ForeachTuple(Vector(Left(v))))
-        }
+    val tuples = runTuples(prog, foreachTuples, events)
 
     // prune to what the FSM needs; all extra columns only matter for dedup,
     // which by reference semantics uses the full input row. The src column
@@ -293,7 +306,7 @@ object TrailEngine {
     val enc = RowEncoder.encoderFor(emitSchema)
 
     val emitted = sorted.mapPartitions { rows =>
-      val ts = tuplesB.value
+      val tups = tuplesB.value
       val winMap = winB.value
       val cuts = cutsB.value
       new Iterator[Row] {
@@ -305,50 +318,7 @@ object TrailEngine {
           val v = r.get(i); if (v == null) "" else v.toString
         }
 
-        /** Fast path for the common case (no windows, single source): one
-          * streaming pass with inline consecutive-dup elision — no per-row
-          * dedup-value buffering (measurably faster on the 20M-event perf
-          * fixture).
-          */
-        private def processNextTrailSimple(first: Row, uuid: String): Unit = {
-          val evs = scala.collection.mutable.ArrayBuffer[TrailEvent]()
-          var prev: Row = null
-          var cur = first
-          var done = false
-          while (!done && cur != null) {
-            if (cur.getString(0) != uuid) { pending = cur; done = true }
-            else if (ghostIdx >= 0 && cur.getInt(ghostIdx) == 1) {
-              // presence sentinel: establishes the trail, contributes no event
-              cur = if (rows.hasNext) rows.next() else null
-            } else {
-              val dup = prev != null && prev.getLong(1) == cur.getLong(1) && {
-                var i = fieldBase; var same = true
-                while (same && i < fieldBase + nDedup) { same = rowField(prev, i) == rowField(cur, i); i += 1 }
-                same
-              }
-              if (!dup) {
-                val arr = new Array[String](fieldIdxInRow.length)
-                var i = 0
-                while (i < arr.length) {
-                  arr(i) = if (fieldIdxInRow(i) == -1) "" else rowField(cur, fieldIdxInRow(i))
-                  i += 1
-                }
-                evs += new TrailEvent(cur.getLong(1), arr)
-                prev = cur
-              }
-              cur = if (rows.hasNext) rows.next() else null
-            }
-          }
-          // ONE shared initial state for all tuples: processTrail never
-          // mutates saved entries (runOne copies first) and groups aliases
-          // with an identity fast path — per-tuple initial allocation was
-          // pure overhead at wide foreach cardinalities
-          val init = FsmState.initial(prog)
-          val saved = Array.fill(ts.length)(init)
-          val out = TrailMatcher.processTrail(
-            prog, ts, saved, evs.toArray, uuid, 0L, 0L, params, fcalls, emitAs(uuid))
-          TrailMatcher.finalizeTrail(prog, ts, out, uuid, params, fcalls, emitAs(uuid))
-        }
+        private def nextRow(): Row = if (rows.hasNext) rows.next() else null
 
         private def emitAs(ctxCookie: String)(j: Int, r: Results): Unit = {
           // O(1) skip for identity results: a wide foreach broadcasts one
@@ -371,110 +341,81 @@ object TrailEngine {
           }
         }
 
+        /** A source's min_ts cut. Single-source runs carry no cuts (src
+          * tag 0, cuts empty); a TAGGED source beyond the cuts array means
+          * the caller lost the unionSources cuts — silently treating it as
+          * uncut would include events below that source's min_ts.
+          */
+        private def cutOf(src: Long): Long =
+          if (cuts.isEmpty) 0L
+          else if (src >= 0 && src < cuts.length) cuts(src.toInt)
+          else throw new IllegalStateException(
+            s"source index $src has no min_ts cut (${cuts.length} cuts) — " +
+              "pass unionSources' cuts through srcCuts")
+
+        /** Read one trail (the consecutive same-uuid rows) in one pass:
+          * ghost rows establish the trail but add no event, consecutive
+          * duplicates are dropped against the previous kept row, and each
+          * source segment replays through the cookie's window entries as
+          * soon as its last row is read.
+          */
         private def processNextTrail(): Unit = {
           buf.clear(); bufPos = 0
-          var first = pending
-          if (first == null && rows.hasNext) first = rows.next()
-          if (first == null) return
-          pending = null
-          val uuid = first.getString(0)
-          if (winMap.isEmpty && !hasSrc) { processNextTrailSimple(first, uuid); return }
-
-          // general path: buffer the whole trail (consecutive same-uuid
-          // rows): timestamps, source index, program fields, dedup-compare
-          // values. Dedup runs per (source, window-entry) pass below, like
-          // the reference's per-ctx trail reads.
-          val tsArr = scala.collection.mutable.ArrayBuffer[Long]()
-          val srcArr = scala.collection.mutable.ArrayBuffer[Long]()
-          val ghostArr = scala.collection.mutable.ArrayBuffer[Boolean]()
-          val fieldRows = scala.collection.mutable.ArrayBuffer[Array[String]]()
-          val dedupRows = scala.collection.mutable.ArrayBuffer[Array[String]]()
-          var cur = first
-          var done = false
-          while (!done && cur != null) {
-            if (cur.getString(0) != uuid) { pending = cur; done = true }
-            else {
-              ghostArr += (ghostIdx >= 0 && cur.getInt(ghostIdx) == 1)
-              tsArr += cur.getLong(1)
-              srcArr += (if (hasSrc) cur.getLong(2) else 0L)
-              val fa = new Array[String](fieldIdxInRow.length)
-              var i = 0
-              while (i < fa.length) {
-                fa(i) = if (fieldIdxInRow(i) == -1) "" else rowField(cur, fieldIdxInRow(i))
-                i += 1
-              }
-              fieldRows += fa
-              val da = new Array[String](nDedup)
-              i = 0
-              while (i < nDedup) { da(i) = rowField(cur, fieldBase + i); i += 1 }
-              dedupRows += da
-              cur = if (rows.hasNext) rows.next() else null
+          var cur = if (pending != null) pending else rows.next()
+          val uuid = cur.getString(0)
+          val entries = TrailMatcher.entriesOf(winMap, uuid)
+          if (entries.isEmpty) {
+            // unlisted trail: consume its rows, emit nothing
+            while (cur != null && cur.getString(0) == uuid) cur = nextRow()
+            pending = cur
+            return
+          }
+          // ONE shared initial state for all tuples: processTrail never
+          // mutates saved entries (runOne copies first) and groups aliases
+          // with an identity fast path — per-tuple initial allocation was
+          // pure overhead at wide foreach cardinalities
+          val init = FsmState.initial(prog)
+          var carried = Array.fill(tups.length)(init)
+          val evs = scala.collection.mutable.ArrayBuffer[TrailEvent]()
+          var src = if (hasSrc) cur.getLong(2) else 0L
+          var prev: Row = null
+          // per segment, every window entry runs from the state the
+          // previous source left and the LAST entry's output carries
+          // (LocalRunner dbStates overwrite)
+          def replay(from: Array[FsmState], segSrc: Long): Array[FsmState] = {
+            val out = TrailMatcher.runEntries(
+              prog, tups, from, evs.toArray, entries, cutOf(segSrc), params, fcalls, emitAs)
+            evs.clear()
+            out
+          }
+          while (cur != null && cur.getString(0) == uuid) {
+            if (hasSrc && cur.getLong(2) != src) {
+              carried = replay(carried, src); prev = null; src = cur.getLong(2)
             }
-          }
-          val n = tsArr.length
-
-          val entriesOpt: Option[IndexedSeq[LocalRunner.WindowEntry]] = winMap match {
-            case Some(m) => m.get(uuid) // unlisted trails drop
-            case None    => Some(IndexedSeq(LocalRunner.WindowEntry(uuid, uuid, 0L, 0L)))
-          }
-          if (entriesOpt.isEmpty) return
-          val entries = entriesOpt.get
-
-          // per-source segments in replay order; per segment, every window
-          // entry runs from the state the previous source left and the LAST
-          // entry's output carries (LocalRunner dbStates overwrite)
-          var carried = {
-            // one shared initial state — see processNextTrailSimple
-            val init = FsmState.initial(prog)
-            Array.fill(ts.length)(init)
-          }
-          var segLo = 0
-          while (segLo < n) {
-            val src = srcArr(segLo)
-            var segHi = segLo
-            while (segHi < n && srcArr(segHi) == src) segHi += 1
-            // single-source runs carry no cuts (src tag 0, cuts empty); a
-            // TAGGED source beyond the cuts array means the caller lost the
-            // unionSources cuts — silently treating it as uncut would
-            // include events below that source's min_ts, so fail fast
-            val cut =
-              if (cuts.isEmpty) 0L
-              else if (src >= 0 && src < cuts.length) cuts(src.toInt)
-              else throw new IllegalStateException(
-                s"source index $src has no min_ts cut (${cuts.length} cuts) — " +
-                  "pass unionSources' cuts through srcCuts")
-
-            var lastOut = carried
-            var e = 0
-            while (e < entries.length) {
-              val entry = entries(e)
-              val ws = math.max(entry.start, cut)
-              val we = entry.end
-              // filter to the entry's bounds, then consecutive-dup elision
-              val evs = scala.collection.mutable.ArrayBuffer[TrailEvent]()
-              var prevIdx = -1
-              var i = segLo
-              while (i < segHi) {
-                val t = tsArr(i)
-                if (!ghostArr(i) && (ws == 0L || t >= ws) && (we == 0L || t < we)) {
-                  val dup = prevIdx >= 0 && tsArr(prevIdx) == t &&
-                    java.util.Arrays.equals(
-                      dedupRows(prevIdx).asInstanceOf[Array[AnyRef]],
-                      dedupRows(i).asInstanceOf[Array[AnyRef]])
-                  if (!dup) { evs += new TrailEvent(t, fieldRows(i)); prevIdx = i }
+            if (ghostIdx < 0 || cur.getInt(ghostIdx) != 1) {
+              val dup = prev != null && prev.getLong(1) == cur.getLong(1) && {
+                var i = fieldBase; var same = true
+                while (same && i < fieldBase + nDedup) { same = rowField(prev, i) == rowField(cur, i); i += 1 }
+                same
+              }
+              if (!dup) {
+                val arr = new Array[String](fieldIdxInRow.length)
+                var i = 0
+                while (i < arr.length) {
+                  arr(i) = if (fieldIdxInRow(i) == -1) "" else rowField(cur, fieldIdxInRow(i))
+                  i += 1
                 }
-                i += 1
+                evs += new TrailEvent(cur.getLong(1), arr)
+                prev = cur
               }
-              lastOut = TrailMatcher.processTrail(
-                prog, ts, carried, evs.toArray, entry.id, ws, we, params, fcalls, emitAs(entry.id))
-              e += 1
             }
-            carried = lastOut
-            segLo = segHi
+            cur = nextRow()
           }
+          pending = cur
+          carried = replay(carried, src)
           // one finalization per cookie, ctx = the real cookie
           // (reference: :899-944 iterates the cookie-keyed states map)
-          TrailMatcher.finalizeTrail(prog, ts, carried, uuid, params, fcalls, emitAs(uuid))
+          TrailMatcher.finalizeTrail(prog, tups, carried, uuid, params, fcalls, emitAs(uuid))
         }
 
         override def hasNext: Boolean = {

@@ -246,19 +246,10 @@ object TrckSparkRunner {
     val presentBase = presence
       .map(p => applyFilters(p, uuidCol, tsCol, filters.copy(cnf = None)))
       .getOrElse(afterExclude)
-    val tuples: Vector[ForeachTuple] =
-      if (prog.groupbyVars.isEmpty) Vector(ForeachTuple(Vector.empty))
-      else
-        foreachTuples.getOrElse {
-          require(prog.groupbyVars.size == 1, "implicit foreach requires exactly one var")
-          val field = prog.varFields(prog.groupbyVars.head)
-          // lexicon sweep over the UNfiltered input: the reference reads the
-          // DB lexicon, not the filtered event stream
-          // (src/match_traildb.c:188-236; LocalRunner matches). Guarded
-          // against high-cardinality fields (TrailEngine.lexiconSweep).
-          val values = TrailEngine.lexiconSweep(lexiconEvents.getOrElse(events), field)
-          ("" +: values).map(v => ForeachTuple(Vector(Left(v))))
-        }
+    // implicit-foreach lexicon over the UNfiltered input: the reference
+    // reads the DB lexicon, not the filtered event stream
+    // (src/match_traildb.c:188-236; LocalRunner matches)
+    val tuples = TrailEngine.runTuples(prog, foreachTuples, lexiconEvents.getOrElse(events))
 
     // F2 window file: drop unlisted trails AND events outside every window
     // of their cookie before the shuffle (broadcast join on per-cookie

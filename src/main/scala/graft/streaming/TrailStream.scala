@@ -56,9 +56,9 @@ object TrailStream {
     */
   final case class EmitRow(uuid: String, tupleIdx: Int, kind: String, dst: String, item: Array[Byte], n: Long)
 
-  /** Consecutive-dup elision over the full projected event (mirrors
-    * Fsm.TrailCtx.dedupConsecutive, but on the WIDE dedup projection — the
-    * FSM-field array is a subset and would elide too much).
+  /** Consecutive-dup elision over the full projected event: the WIDE dedup
+    * projection, not the FSM-field array (a subset, which would elide too
+    * much).
     */
   private def dedupConsecutiveIn(evs: Array[InEvent]): Array[InEvent] = {
     if (evs.length < 2) return evs
@@ -89,7 +89,10 @@ object TrailStream {
 
   /** Wire a streaming events DataFrame (uuidCol, tsCol seconds, program
     * field columns) into the FSM. Returns the stream of emitted yield rows
-    * (same schema as TrailEngine.emits).
+    * (same schema as TrailEngine.emits). Each micro-batch of a cookie is
+    * ts-sorted, consecutive duplicates are dropped once, and the events
+    * replay through [[graft.trck.TrailMatcher.runEntries]] — the batch
+    * engine's per-segment replay, each entry on its own ts slice.
     *
     * Finalization: pass `eventTimeGapSec` (> 0) for watermark-driven
     * event-time finalization — a trail finalizes when the watermark (built
@@ -138,7 +141,8 @@ object TrailStream {
         array(fieldCols.map(f =>
           if (events.columns.contains(f)) coalesce(col(f).cast("string"), lit("")) else lit("")): _*
         ).as("fields"),
-        array(dedupCols.map(c => col(c).cast("string")): _*).as("dedupFields"),
+        // null and "" compare equal, as in the batch engine and LocalRunner
+        array(dedupCols.map(c => coalesce(col(c).cast("string"), lit(""))): _*).as("dedupFields"),
       )
     // window runs: unlisted trails never reach the stateful operator
     val projected0 = windows match {
@@ -192,40 +196,16 @@ object TrailStream {
           } else {
             val prev = state.getOption.getOrElse(
               TrailState(Array.fill(nTuples)(toData(FsmState.initial(prog))), 0L))
-            // micro-batch = "next DB": sort, apply the min_ts cut, dedup
-            val evs = rows.toArray.sortBy(_.ts)
-            val saved = prev.states.map(fromData(_, prog.nWindowRules))
-            val out = winByCookie match {
-              case Some(m) =>
-                // per-entry ctx loop, batch-engine semantics: every entry
-                // starts from the state the previous batch left; the LAST
-                // entry's output carries forward; the high-water cut folds
-                // into each entry's window start (LocalRunner's
-                // max(start, minTs)); dedup runs per entry on the
-                // bounds-filtered events, comparing the FULL event
-                val entries = m.getOrElse(uuid, IndexedSeq.empty)
-                var lastOut = saved
-                entries.foreach { entry =>
-                  val ws = math.max(entry.start, prev.maxTs)
-                  val we = entry.end
-                  val inBounds = evs.filter(e =>
-                    (ws == 0L || e.ts >= ws) && (we == 0L || e.ts < we))
-                  val trail = dedupConsecutiveIn(inBounds)
-                    .map(e => new TrailEvent(e.ts, e.fields))
-                  lastOut = TrailMatcher.processTrail(
-                    prog, tuples, saved, trail, entry.id, ws, we, params, fcalls, emit(entry.id))
-                }
-                lastOut
-              case None =>
-                val cut = evs.filter(e => prev.maxTs == 0L || e.ts >= prev.maxTs)
-                val trail = dedupConsecutiveIn(cut).map(e => new TrailEvent(e.ts, e.fields))
-                // wStart = the high-water cut, like LocalRunner's
-                // max(0, minTs): Y5 filter-start yields must render the cut,
-                // not 0, from the second micro-batch on
-                TrailMatcher.processTrail(
-                  prog, tuples, saved, trail, uuid, prev.maxTs, 0L, params, fcalls, emit(uuid))
-            }
-            val newMax = if (evs.isEmpty) prev.maxTs else math.max(prev.maxTs, evs.map(_.ts).max)
+            // micro-batch = "next DB": sort, dedup once, then every entry
+            // runs on its ts slice above the high-water cut (LocalRunner's
+            // max(start, minTs)), starting from the state the previous batch
+            // left; the LAST entry's output carries forward
+            val evs = dedupConsecutiveIn(rows.toArray.sortBy(_.ts))
+            val out = TrailMatcher.runEntries(
+              prog, tuples, prev.states.map(fromData(_, prog.nWindowRules)),
+              evs.map(e => new TrailEvent(e.ts, e.fields)), TrailMatcher.entriesOf(winByCookie, uuid),
+              prev.maxTs, params, fcalls, emit)
+            val newMax = if (evs.isEmpty) prev.maxTs else math.max(prev.maxTs, evs.last.ts)
             state.update(TrailState(out.map(toData), newMax))
             if (eventTimeGapSec > 0)
               // fire when the watermark passes last-event + gap; clamp above

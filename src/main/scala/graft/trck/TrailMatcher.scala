@@ -2,7 +2,7 @@ package graft.trck
 
 import Compiled._
 import Fsm._
-import LocalRunner.ForeachTuple
+import LocalRunner.{ForeachTuple, WindowEntry}
 
 /** The per-trail foreach loop with the reference's two skip optimizations
   * (reference: src/match_traildb.c:579-744):
@@ -141,6 +141,52 @@ object TrailMatcher {
         }
         j = end
       }
+    }
+    out
+  }
+
+  /** `cookie`'s window entries in window-file order (`byCookie` groups a
+    * window file's entries by cookie); without a window file, the single
+    * unbounded entry `(cookie, cookie, 0, 0)`.
+    */
+  def entriesOf(
+      byCookie: Option[Map[String, IndexedSeq[WindowEntry]]], cookie: String): IndexedSeq[WindowEntry] =
+    byCookie.fold(IndexedSeq(WindowEntry(cookie, cookie, 0L, 0L)))(_.getOrElse(cookie, IndexedSeq.empty))
+
+  /** Replay one source segment of a trail through every window entry of its
+    * cookie (reference: src/match_traildb.c:513-560). `events` are
+    * ts-sorted with consecutive duplicates already removed: dedup before
+    * the bounds is the same as dedup after them, because duplicates share
+    * a ts and the bounds read only the ts. Entry e runs on the ts slice
+    * `[max(start, cut), end)` (a bound of 0 means no bound) with its id as
+    * ctx cookie, starting from `carried`; the last entry's output is
+    * returned (`carried` itself when there are no entries).
+    */
+  def runEntries(
+      prog: CompiledProgram,
+      tuples: IndexedSeq[ForeachTuple],
+      carried: Array[FsmState],
+      events: Array[TrailEvent],
+      entries: IndexedSeq[WindowEntry],
+      cut: Long,
+      params: Bindings,
+      fcalls: Map[String, Fcall],
+      emit: String => (Int, Results) => Unit,
+  ): Array[FsmState] = {
+    def from(bound: Long, lo: Int): Int = {
+      val i = events.indexWhere(_.ts >= bound, lo)
+      if (i < 0) events.length else i
+    }
+    var out = carried
+    for (entry <- entries) {
+      val ws = math.max(entry.start, cut)
+      val we = entry.end
+      val lo = if (ws == 0L) 0 else from(ws, 0)
+      val hi = if (we == 0L) events.length else from(we, lo)
+      val slice =
+        if (lo == 0 && hi == events.length) events
+        else java.util.Arrays.copyOfRange(events, lo, hi)
+      out = processTrail(prog, tuples, carried, slice, entry.id, ws, we, params, fcalls, emit(entry.id))
     }
     out
   }

@@ -352,6 +352,75 @@ class EngineEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     for (k <- localOut.head.keys) assert(sparkOut.head(k) == localOut.head(k), s"key $k")
   }
 
+  test("dedup once per source segment: bounds, source boundary, negative ts, ghost rows, Spark = local") {
+    // Spark drops consecutive duplicates once per source segment and then
+    // slices each window entry by ts; LocalRunner filters per entry first.
+    // Duplicates share a ts, so the two agree at every bound.
+    val program = Ir.Program(
+      Vector(Ir.Rule(None, None, None, entrypoint = false, List(
+        Ir.Clause(Map.empty, negated = false, Some("repeat"), List(
+          Ir.Yield("$n", Nil),
+          Ir.Yield("&seen", List(Ir.FieldTerm("type"))),
+          Ir.Yield("#bounds", List(
+            Ir.FieldTerm("cookie"),
+            Ir.FieldTerm("cookie_timestamp_filter_start"),
+            Ir.FieldTerm("cookie_timestamp_filter_end"))))),
+      ), None)),
+      None,
+    )
+    val prog = Compiled.compile(program)
+    def ev(ts: Long, t: String, e: String) = RawEvent(ts, Map("type" -> t, "advertisable_eid" -> e))
+    // equal-ts groups hold only identical events, so the order the sort
+    // picks among them cannot matter
+    val db1 = Db(Seq(
+      // a duplicate pair at an entry's start (kept once) and one at its
+      // end (both excluded)
+      "edge" -> Seq(ev(100, "cli", "a1"), ev(100, "cli", "a1"), ev(150, "imp", "a2"),
+        ev(200, "pxl", "a1"), ev(200, "pxl", "a1")),
+      // its last event is duplicated as the first event of source 2, at
+      // exactly the min_ts cut: one per source, both kept
+      "span" -> Seq(ev(400, "imp", "a1"), ev(500, "cli", "a2")),
+      // negative timestamps under an unbounded entry
+      "neg" -> Seq(ev(-100, "cli", "a3"), ev(-100, "cli", "a3"), ev(-50, "imp", "a3")),
+    ))
+    val db2 = Db(Seq("span" -> Seq(ev(500, "cli", "a2"), ev(600, "ct2", "a1"))))
+    val ws = LocalRunner.WindowSet(Seq(
+      LocalRunner.WindowEntry("w-edge", "edge", 100L, 200L),
+      LocalRunner.WindowEntry("w-edge2", "edge", 150L, 0L),
+      LocalRunner.WindowEntry("span", "span", 0L, 0L),
+      LocalRunner.WindowEntry("neg", "neg", 0L, 0L),
+    ))
+    def toDf(db: Db) = {
+      val s = spark
+      import s.implicits._
+      db.trails.flatMap { case (uuid, evs) =>
+        evs.map(e => (uuid, e.ts, e.fields("type"), e.fields("advertisable_eid")))
+      }.toDF("uuid", "ts", "type", "advertisable_eid")
+    }
+
+    val local = LocalRunner.run(prog, Seq(db1, db2), windows = Some(ws))
+    // edge 2 + 2, span 2 + 2, neg 2 (hand count; 13 without elision)
+    assert(local.results.head.counters("n") == 10L)
+    val (unioned, cuts) = TrckSparkRunner.unionSources(Seq(toDf(db1), toDf(db2)), "ts")
+    val sparkOut = TrckSparkRunner.runRaw(prog, unioned, "uuid", "ts",
+      filters = TrckSparkRunner.EngineFilters(windows = Some(ws)), srcCuts = cuts)
+    assert(sparkOut.toOutputs == local.toOutputs)
+
+    // a presence sentinel sitting between two duplicates: a hand-ordered
+    // prepared layout (one partition, order kept) pins that position
+    val ghostDb = Db(Seq("g" -> Seq(ev(0, "cli", "a1"), ev(0, "cli", "a1"), ev(10, "imp", "a2"))))
+    val s = spark
+    import s.implicits._
+    val layout = Seq[(String, Long, String, String, Int)](
+      ("g", 0L, "cli", "a1", 0), ("g", 0L, null, null, 1), ("g", 0L, "cli", "a1", 0),
+      ("g", 10L, "imp", "a2", 0),
+    ).toDF("uuid", "ts", "type", "advertisable_eid", "__ghost").coalesce(1)
+    val ghostLocal = LocalRunner.run(prog, Seq(ghostDb))
+    assert(ghostLocal.results.head.counters("n") == 2L)
+    val ghostSpark = TrckSparkRunner.runRaw(prog, layout, "uuid", "ts", prepared = true)
+    assert(ghostSpark.toOutputs == ghostLocal.toOutputs)
+  }
+
   for (seed <- Seq(1L, 7L, 42L)) {
     test(s"engine matches local runner (seed=$seed)") {
       val prog = Compiled.compile(program)

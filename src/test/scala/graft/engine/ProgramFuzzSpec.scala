@@ -52,9 +52,16 @@ class ProgramFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
     }.toDF("uuid", "ts", "seq", "type", "advertisable_eid")
   }
 
-  for (seed <- Seq(101L, 202L, 303L, 404L, 505L, 606L, 1717L, 2828L, 3939L,
-    4041L, 5152L, 6263L, 7374L)) {
-    test(s"random program equivalence, Spark == LocalRunner (seed=$seed)") {
+  // two sources with min_ts cuts and explicit foreach tuples; the
+  // one-source seeds run a single source without cuts and sweep the
+  // foreach values implicitly (the perftest1 shape)
+  private val twoSourceSeeds = Seq(101L, 202L, 303L, 404L, 505L, 606L, 1717L, 2828L, 3939L,
+    4041L, 5152L, 6263L, 7374L)
+  private val oneSourceSeeds = Seq(1212L, 2323L, 3434L, 4545L)
+
+  for ((seed, oneSource) <- twoSourceSeeds.map(_ -> false) ++ oneSourceSeeds.map(_ -> true)) {
+    val shape = if (oneSource) ", one source" else ""
+    test(s"random program equivalence, Spark == LocalRunner (seed=$seed$shape)") {
       val rnd = new scala.util.Random(seed)
       val program = randomProgram(rnd)
       val prog = Compiled.compile(program)
@@ -66,14 +73,19 @@ class ProgramFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
         sets = Map("ts" -> Set(types(rnd.nextInt(types.length)), types(rnd.nextInt(types.length)))),
       )
       val tuples: Option[Vector[ForeachTuple]] =
-        if (prog.groupbyVars.isEmpty) None
+        if (prog.groupbyVars.isEmpty || oneSource) None
         else Some(Vector("a1", "a2", "zz").map(v => ForeachTuple(Vector(Left(v)))))
 
-      val local = LocalRunner.run(prog, Seq(db1, db2), params, tuples)
-
-      val (unioned, cuts) = TrckSparkRunner.unionSources(Seq(dbToDf(db1), dbToDf(db2)), "ts")
-      val engine = TrckSparkRunner.runRaw(
-        prog, unioned, "uuid", "ts", Seq("seq"), params, tuples, srcCuts = cuts)
+      val (local, engine) =
+        if (oneSource)
+          (LocalRunner.run(prog, Seq(db1), params, tuples),
+            TrckSparkRunner.runRaw(prog, dbToDf(db1), "uuid", "ts", Seq("seq"), params, tuples))
+        else {
+          val (unioned, cuts) = TrckSparkRunner.unionSources(Seq(dbToDf(db1), dbToDf(db2)), "ts")
+          (LocalRunner.run(prog, Seq(db1, db2), params, tuples),
+            TrckSparkRunner.runRaw(
+              prog, unioned, "uuid", "ts", Seq("seq"), params, tuples, srcCuts = cuts))
+        }
 
       val grouped = prog.groupbyVars.nonEmpty && !prog.mergeResults
       val localJson = OutputJson.render(local.toOutputs, grouped)

@@ -149,7 +149,8 @@ class TrailStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     // count every "click"; the two ts=100 events differ ONLY in a column
     // the program never references — the reference compares the whole item
     // array (src/ctx.c:112-131), so BOTH count; a third truly identical
-    // event IS elided
+    // event IS elided, and so is one differing only by null vs "" (both
+    // read as the empty value, as in the batch engine and LocalRunner)
     val prog = Compiled.compile(TrckQueries.countProgram)
     val input = MemoryStream[(String, Long, String, String)]
     val events = input.toDF().toDF("uuid", "ts", "event_type", "session_id")
@@ -160,10 +161,12 @@ class TrailStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
         ("u1", 100L, "click", "s1"),
         ("u1", 100L, "click", "s2"), // differs only in session_id → kept
         ("u1", 100L, "click", "s2"), // true consecutive duplicate → elided
-        ("u1", 200L, "click", "s2"))
+        ("u1", 200L, "click", "s2"),
+        ("u1", 300L, "click", null),
+        ("u1", 300L, "click", "")) // null vs "" only → elided
       query.processAllAvailable()
       val n = spark.sql("SELECT sum(n) FROM fsm_dedup_out WHERE kind = 'c'").head.getLong(0)
-      assert(n == 3L, s"expected 3 clicks (dup elided, session-diff kept), got $n")
+      assert(n == 4L, s"expected 4 clicks (dups elided, session-diff kept), got $n")
     } finally query.stop()
   }
 
