@@ -100,9 +100,9 @@ object TrckQueries {
     // table at the new root, not silently keep serving the old files
     durableCache.computeIfAbsent(s"${System.identityHashCode(s)}:$root:$dir", _ => {
       s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      // table name from the SANITIZED FULL PATHS, not a hash: ScaleProbe
-      // builds durable layouts for two dirs in one session, and a hash
-      // collision would silently serve the wrong corpus
+      // table name from the SANITIZED FULL PATHS, not a hash: one session
+      // may build durable layouts for several dirs, and a hash collision
+      // would silently serve the wrong corpus
       def sanitize(p: String) = p.stripSuffix("/")
         .map(c => if (c.isLetterOrDigit) c else '_').dropWhile(_ == '_')
       val tbl = "trails_durable_" + (
@@ -522,8 +522,7 @@ object TrckQueries {
       (s, dir) => {
         val prog = Compiled.compile(implicitForeachProgram)
         val ev = trailEvents(s, dir)
-        val values = TrailEngine.lexiconSweep(ev, "event_type")
-        val tuples = ("" +: values).map(v => ForeachTuple(Vector(Left(v))))
+        val tuples = TrailEngine.runTuples(prog, None, ev)
         val em = TrailEngine.emits(
           prog, ev, "uuid", "ts_sec", Seq("event_id"), foreachTuples = Some(tuples))
         TrailEngine

@@ -29,7 +29,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * one String per shingle via slice+concat_ws — O(n·k) char copies plus
   * per-shingle allocation, measured as the dominant cost of both
   * `c_decontaminate` and `c_repetition` (r6/r7 profilers, since deleted —
-  * protocol in graft.TimeQueries — sf0.1: gram construction ≈ 2.1-2.8 s of
+  * protocol in graft.Bench — sf0.1: gram construction ≈ 2.1-2.8 s of
   * ~3 s totals; with this expression wired in, both queries run 0.55-0.7 s).
   * This expression does one byte scan for token ranges and hashes each
   * shingle out of a reused buffer — no word array, no shingle strings —

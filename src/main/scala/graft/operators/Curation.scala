@@ -27,7 +27,7 @@ object Curation {
     * [[graft.functions.ShingleHash64]] expression — one byte scan per doc,
     * no word array, no per-shingle String — which is the measured dominant
     * cost killer (measured r7 by the since-deleted ProfileDecontam — its
-    * protocol lives on in graft.TimeQueries — sf0.1 warm, 3 reps: full query
+    * protocol lives on in graft.Bench — sf0.1 warm, 3 reps: full query
     * 3.13-3.52 s with the md5-60 slice+concat chain vs **0.42-0.44 s**
     * native; train-side hash extraction alone 2.10-2.22 s → 0.10-0.12 s;
     * an xxhash64-over-shingle-strings middle ground measured 2.83-2.99 s,
@@ -185,7 +185,7 @@ object Curation {
     * exploded two-level n_distinct_grams alternative 18% WORSE. r7 replaced
     * the string grams with the native codegen'd ShingleHash64 (counts over
     * 64-bit hashes ≡ counts over strings): full query now 0.57-0.71 s
-    * (TimeQueries, sf0.1 warm, 5 reps) — ~5.5× — leaving the explode+agg
+    * (sf0.1 warm, 5 reps) — ~5.5× — leaving the explode+agg
     * as the dominant remaining cost. At 30× data the string-gram version
     * ran 2.54× wall (SCALE_PROBE_r06); the hash version only lowers the
     * per-row constant, so sub-linearity stands.

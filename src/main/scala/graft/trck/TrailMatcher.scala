@@ -27,8 +27,8 @@ object TrailMatcher {
     * by [[processTrail]] — the quantity the reference bounds at ~N+1 per
     * trail for N distinct foreach values present in the trail
     * (src/match_traildb.c:596-608). A JVM-wide adder, so it is meaningful
-    * only under local[*] where every task shares the driver JVM; the
-    * ScaleProbe foreach arm resets and reads it around a run. One
+    * only under local[*] where every task shares the driver JVM;
+    * MatchCallBoundSpec resets and reads it around a run. One
     * uncontended add per match call — negligible.
     */
   val matchCalls = new java.util.concurrent.atomic.LongAdder

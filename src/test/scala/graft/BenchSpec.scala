@@ -1,81 +1,71 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The bench harness's self-defense plumbing (no Spark): previous-round
-  * effective-time loading for the round_over_round trigger — raw Bench
-  * artifacts, the round driver's wrapper shape (usable `parsed` vs
-  * tail-only), arbitration-minimum folding, and the sf guard — plus the
-  * suspect threshold shape.
+/** `graft.Bench`'s contract on the sf0.001 corpus: one JSON object with
+  * per-query min/median/q1/q3 whose medians sum to `value`; unknown query
+  * names fail before anything runs; a failing query is recorded, not
+  * timed; `mult > 1` replicates the trail tables and links the rest.
   */
-class BenchSpec extends AnyFunSuite {
+class BenchSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private def write(name: String, content: String): String = {
-    val p = Files.createTempDirectory("graft-bench-spec").resolve(name)
-    Files.writeString(p, content)
-    p.toString
+  private val dir = "/root/testdata/sf0.001"
+
+  private lazy val spark: SparkSession =
+    GraftSession.builder("4").appName("bench-spec").getOrCreate()
+
+  override def afterAll(): Unit = spark.stop()
+
+  private def bench(args: String*) = {
+    val line = Bench.run(spark, Bench.parse(args))
+    assert(!line.contains('\n'), line)
+    new ObjectMapper().readTree(line)
   }
 
-  private val raw =
-    """{"metric":"total","value":10.0,"sf":"/root/testdata/sf0.1",
-      | "queries":{"q_fast":0.5,"q_noisy":4.0,"q_failed":null},
-      | "arbitrated":{
-      |   "q_noisy":{"first":4.0,"band":1.0,"reps":[1.1,1.0,1.2],"min":1.0,"verdict":"contaminated"},
-      |   "q_fast":{"first":0.5,"band":0.4,"reps":[0.45],"min":0.45,"verdict":"clean"}}}""".stripMargin
-
-  test("raw artifact: arbitration minima replace contaminated/inflated firsts only") {
-    val m = Bench.loadPrevEffective(write("prev.json", raw), "sf0.1")
-    // q_noisy was self-classified contaminated -> its effective time is the
-    // rep minimum; q_fast's "clean" arbitration must NOT replace the first
-    // reading; a failed (null) query contributes nothing
-    assert(m == Map("q_fast" -> 0.5, "q_noisy" -> 1.0), m)
+  test("two queries, two reps: one JSON object, medians sum to value") {
+    val names = Seq("m1_fsm_count", "g2_fsm_implicit_foreach")
+    val js = bench(dir, "1", "2", names.mkString(","))
+    assert(js.isObject && js.get("reps").asInt == 2 && js.get("n_failed").asInt == 0, js)
+    val qs = js.get("queries")
+    assert(qs.fieldNames.asScala.toSeq == names, js)
+    for (n <- names) {
+      val q = qs.get(n)
+      val Seq(mn, q1, med, q3) = Seq("min", "q1", "median", "q3").map(k => q.get(k).asDouble)
+      assert(mn > 0 && mn <= q1 && q1 <= med && med <= q3, q)
+      assert(q.get("stages").asLong > 0 && q.get("tasks").asLong > 0, q)
+    }
+    val sum = names.map(n => qs.get(n).get("median").asDouble).sum
+    assert(math.abs(js.get("value").asDouble - sum) < 1e-9, js)
   }
 
-  test("sf mismatch rejects the artifact entirely") {
-    assert(Bench.loadPrevEffective(write("prev.json", raw), "sf0.01").isEmpty)
+  test("an unknown query name throws before any run") {
+    val e = intercept[IllegalArgumentException](Bench.parse(Seq(dir, "1", "2", "m1_fsm_count,no_such_q")))
+    assert(e.getMessage.contains("no_such_q"))
+    intercept[IllegalArgumentException](Bench.parse(Seq(dir, "0")))
   }
 
-  test("driver wrapper: usable parsed block is descended into, tail-only is rejected") {
-    val wrapped =
-      s"""{"n": 17, "rc": 0, "sf": 0.1, "tail": "…", "parsed": ${raw.replaceAll("\n", " ")}}"""
-    val m = Bench.loadPrevEffective(write("wrapped.json", wrapped), "sf0.1")
-    assert(m == Map("q_fast" -> 0.5, "q_noisy" -> 1.0), m)
-    val tailOnly = """{"n": 17, "rc": 0, "sf": 0.1, "tail": "d\":0.689", "parsed": null}"""
-    assert(Bench.loadPrevEffective(write("tail.json", tailOnly), "sf0.1").isEmpty)
+  test("mult 2 doubles the trail tables and links the rest") {
+    val js = bench(dir, "2", "1", "m1_fsm_count,q5_join_broadcast")
+    assert(js.get("n_failed").asInt == 0, js)
+    def clicks(d: String) = SparkEntry.queries("m1_fsm_count")(spark, d).head.getLong(0)
+    assert(clicks(Bench.ScaledDir) == 2 * clicks(dir))
+    assert(Files.isSymbolicLink(Paths.get(Bench.ScaledDir, "lineitem.parquet")))
   }
 
-  test("missing/garbage files load as empty, never throw") {
-    assert(Bench.loadPrevEffective("/nonexistent/prev.json", "sf0.1").isEmpty)
-    assert(Bench.loadPrevEffective(write("garbage.json", "not json"), "sf0.1").isEmpty)
-  }
-
-  test("loadPrevEffective skips pass1-only partial artifacts") {
-    val partial = write("partial.json",
-      """{"metric":"total","value":10.0,"partial":true,
-         "queries":{"q1":1.0},"sf":"/x/sf0.1"}""")
-    assert(Bench.loadPrevEffective(partial, "sf0.1").isEmpty)
-  }
-
-  test("mergePasses: min of two passes; one-pass failure keeps the survivor") {
-    assert(Bench.mergePasses(("q", Some(1.5), None), ("q", Some(0.9), None))
-      == (("q", Some(0.9), None)))
-    // a single-pass failure (GC pause, transient OOM) must not lose the query
-    assert(Bench.mergePasses(("q", None, Some("OOM")), ("q", Some(0.9), None))
-      == (("q", Some(0.9), None)))
-    assert(Bench.mergePasses(("q", Some(1.5), None), ("q", None, Some("OOM")))
-      == (("q", Some(1.5), None)))
-    // both-pass failure is an error row carrying the first pass's class
-    assert(Bench.mergePasses(("q", None, Some("A")), ("q", None, Some("B")))
-      == (("q", None, Some("A"))))
-  }
-
-  test("suspect threshold: 2x band unconditionally - no sub-second blind spot") {
-    // the old band+0.75s floor could never fire for bands < 0.75 s, which
-    // is most of the registry; r13/r14/r17/r18 each shipped a >2x
-    // sub-second escape through that gap
-    assert(Bench.threshold(0.2) == 0.4) // sub-second bands now trigger at 2x
-    assert(Bench.threshold(5.0) == 10.0) // 2x everywhere
+  test("a failing query records its error, is never timed and adds nothing to value") {
+    val partial = Files.createTempDirectory("graft-bench-spec")
+    Files.createSymbolicLink(partial.resolve("events.parquet"), Paths.get(dir, "events.parquet"))
+    val js = bench(partial.toString, "1", "2", "m1_fsm_count,d_exact_dup")
+    assert(js.get("n_failed").asInt == 1, js)
+    val bad = js.get("queries").get("d_exact_dup")
+    assert(bad.has("error") && !bad.has("min") && !bad.has("median"), bad)
+    assert(js.get("value").asDouble == js.get("queries").get("m1_fsm_count").get("median").asDouble, js)
   }
 }

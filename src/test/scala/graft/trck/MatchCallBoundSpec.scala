@@ -42,20 +42,26 @@ class MatchCallBoundSpec extends AnyFunSuite {
   test("perftest1-shaped trails make exactly N+1 match calls each, with exact counters") {
     // seg 2, 3, 5, 100 (every lexicon value present) and 1
     val cookies = Seq(1, 2, 4, 98, 99)
-    val values = "" +: (0 until 100).map(_.toString).sorted
-    val tuples = values.map(v => ForeachTuple(Vector(Left(v)))).toVector
-    TrailMatcher.matchCalls.reset()
-    for (c <- cookies) {
-      val got = new Array[Long](tuples.length)
-      val saved = Array.fill(tuples.length)(FsmState.initial(prog))
-      TrailMatcher.processTrail(prog, tuples, saved, trail(c), c.toString, 0L, 0L, Bindings(), Map.empty,
-        (j, r) => got(j) += r.counters.getOrElse("r", 0L))
-      val want = values.map { v =>
-        if (v.nonEmpty && v.toInt < seg(c)) 2L * (0 until 100).count(_ % seg(c) == v.toInt) else 0L
+    val lexicon = (0 until 100).map(_.toString)
+    // the 101 lexicon tuples, then 10k tuples whose 9.9k extra values are
+    // absent from every trail: calls must not scale with |@arr|
+    for (extra <- Seq(Nil, (0 until 9899).map(i => s"absent$i"))) {
+      val values = "" +: (lexicon ++ extra).sorted
+      val tuples = values.map(v => ForeachTuple(Vector(Left(v)))).toVector
+      TrailMatcher.matchCalls.reset()
+      for (c <- cookies) {
+        val got = new Array[Long](tuples.length)
+        val saved = Array.fill(tuples.length)(FsmState.initial(prog))
+        TrailMatcher.processTrail(prog, tuples, saved, trail(c), c.toString, 0L, 0L, Bindings(), Map.empty,
+          (j, r) => got(j) += r.counters.getOrElse("r", 0L))
+        val want = values.map { v =>
+          if (lexicon.contains(v) && v.toInt < seg(c)) 2L * (0 until 100).count(_ % seg(c) == v.toInt)
+          else 0L
+        }
+        assert(got.toVector == want, s"cookie $c counters, ${tuples.length} tuples")
       }
-      assert(got.toVector == want, s"cookie $c counters")
+      val bound = cookies.map(c => math.min(seg(c), 100) + 1).sum
+      assert(TrailMatcher.matchCalls.sum() == bound, s"${tuples.length} tuples")
     }
-    val bound = cookies.map(c => math.min(seg(c), 100) + 1).sum
-    assert(TrailMatcher.matchCalls.sum() == bound)
   }
 }
