@@ -23,9 +23,11 @@ import graft.trck.LocalRunner.ForeachTuple
   *       partition); consecutive duplicates are dropped once per source
   *       segment, and each segment replays through the cookie's window
   *       entries, each entry on its own ts slice
-  *       ([[graft.trck.TrailMatcher.runEntries]]: the foreach loop with the
-  *       reference's N+1 skip optimizations); finalize at MAX_TIMESTAMP
-  *       inline (no cross-trail state), emit compact yield rows
+  *       ([[graft.trck.TrailMatcher.runEntries]]: one pass per trail for
+  *       all foreach tuples, stepping tuple classes per event — at most
+  *       G + N event-steps per event for G starting states and N tuples
+  *       whose values occur); finalize at MAX_TIMESTAMP inline (no
+  *       cross-trail state), emit compact yield rows
   *     → groupBy(tuple, dst[, item]) aggregation — partial map-side combine
   *       makes the second shuffle O(distinct yields), not O(events)
   *
@@ -33,8 +35,8 @@ import graft.trck.LocalRunner.ForeachTuple
   * O(longest trail + tuple count), independent of partition size — the
   * property that lets this run on 1000 executors with skewed users.
   *
-  * The per-trail semantics are shared byte-for-byte with LocalRunner
-  * (the golden-tested oracle) via TrailMatcher.
+  * LocalRunner (the golden-tested definition) runs each tuple alone;
+  * Spark ≡ LocalRunner fuzzing checks TrailMatcher's class loop against it.
   */
 object TrailEngine {
 
@@ -371,9 +373,7 @@ object TrailEngine {
             return
           }
           // ONE shared initial state for all tuples: processTrail never
-          // mutates saved entries (runOne copies first) and groups aliases
-          // with an identity fast path — per-tuple initial allocation was
-          // pure overhead at wide foreach cardinalities
+          // mutates saved states, and equal states start in one class
           val init = FsmState.initial(prog)
           var carried = Array.fill(tups.length)(init)
           val evs = scala.collection.mutable.ArrayBuffer[TrailEvent]()

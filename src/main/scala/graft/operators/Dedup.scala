@@ -58,6 +58,14 @@ object Dedup {
   def normalizeText(c: Column): Column =
     trim(regexp_replace(regexp_replace(lower(c), "[^\\p{L}\\p{N}\\s]", " "), "\\s+", " "))
 
+  /** A connected-component closure's result: `labels` (id, comp = the
+    * component's min vertex id) and the number of `rounds` the closure ran
+    * (0 for the union-find collect path). Both closures carry logarithmic
+    * round bounds (stars O(log² n), min-label + jump O(log diameter)), so
+    * `rounds` is the convergence witness a scale test reads.
+    */
+  final case class Components(labels: DataFrame, rounds: Int)
+
   /** Connected components over an undirected edge list — the exact closure
     * of pairwise near-dup relations into canonical clusters (the one-pass
     * min-over-shared-bucket canonicalization in MinHash/SimHash is the
@@ -72,17 +80,6 @@ object Dedup {
     * contracts in O(log n) rounds regardless of diameter (spec-checked
     * equivalent on chain/random/isolated graphs).
     */
-  /** Round count of the most recent CC-closure call in this JVM (driver-
-    * side loop counters; 0 for the union-find collect path). The scale-
-    * probe witness for closure convergence: both closures carry
-    * logarithmic round bounds (stars O(log² n), min-label+jump
-    * O(log diameter)), so the round count between corpus sizes should
-    * grow like the log of the multiple — a round count tracking the DATA
-    * multiple would explain (and indict) any superlinear wall ratio.
-    * Probe-only observability; never read by the operators themselves.
-    */
-  @volatile var lastClosureIterations: Int = -1
-
   def connectedComponents(
       vertices: DataFrame, // one column: vertex id (long)
       edges: DataFrame,    // two columns: endpoint ids
@@ -94,7 +91,7 @@ object Dedup {
         * adaptive shape as broadcast-join thresholds.
         */
       collectThreshold: Long = 1000000L,
-  ): DataFrame = {
+  ): Components = {
     val vCol = vertices.columns.head
     // comp labels are the min vertex id, carried as long — fail fast on
     // non-integral ids (a silent cast would null every label and converge
@@ -136,8 +133,7 @@ object Dedup {
       // unions always attach the larger root beneath the smaller, so every
       // root IS its component's min id — find() alone yields the label
       import spark.implicits._
-      lastClosureIterations = 0
-      return ids.toSeq.map(id => (id, find(id))).toDF("id", "comp")
+      return Components(ids.toSeq.map(id => (id, find(id))).toDF("id", "comp"), 0)
     }
 
     val sym = edg.select(col("a").as("src"), col("b").as("dst"))
@@ -177,8 +173,7 @@ object Dedup {
     require(converged,
       s"min-label propagation did not converge within $maxIter rounds — raise " +
         "maxIter or use connectedComponentsStars (O(log² n) on any diameter)")
-    lastClosureIterations = iter
-    labels
+    Components(labels, iter)
   }
 
   /** Connected components by alternating large-star/small-star contraction
@@ -204,7 +199,7 @@ object Dedup {
       vertices: DataFrame,
       edges: DataFrame,
       maxIter: Int = 50,
-  ): DataFrame = {
+  ): Components = {
     val vCol = vertices.columns.head
     OpChecks.requireIntegralId(vertices, vCol)
     val (ea, eb) = (edges.columns(0), edges.columns(1))
@@ -273,13 +268,12 @@ object Dedup {
       s"star contraction did not converge within $maxIter rounds — raise maxIter " +
         "(the read-off below assumes a star forest; an unconverged edge set would " +
         "silently emit duplicate vertex rows)")
-    lastClosureIterations = iter
     // after convergence every edge is (root=min, member): components read
     // off directly; isolated vertices are their own component
     val comp = e.select(col("b").as("id"), col("a").as("comp"))
-    vtx
-      .join(comp, Seq("id"), "left")
-      .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
+    Components(
+      vtx.join(comp, Seq("id"), "left").select(col("id"), coalesce(col("comp"), col("id")).as("comp")),
+      iter)
   }
 
   /** Passage-level exact dedup stats: split each doc into NON-overlapping

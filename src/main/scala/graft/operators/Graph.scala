@@ -391,10 +391,10 @@ object Graph {
     */
   /** Rounds the last [[hyperBallHarmonic]] call actually executed before
     * the no-counter-changed termination fired (the convergence witness the
-    * scale probes record, like `Dedup.lastClosureIterations`): on a graph
-    * of diameter d it should read d+1 — d growing rounds plus the one
-    * saturated round that detects convergence. JVM-wide, local-mode-probe
-    * use only.
+    * scale probes record; the CC closures return theirs instead, as
+    * `Dedup.Components.rounds`): on a graph of diameter d it should read
+    * d+1 — d growing rounds plus the one saturated round that detects
+    * convergence. JVM-wide, local-mode-probe use only.
     */
   @volatile var lastHyperBallRounds: Int = -1
 

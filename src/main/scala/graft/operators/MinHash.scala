@@ -652,7 +652,7 @@ object MinHash {
       .join(tsz.select(col("id").as("id_b"), col("nsz").as("nb")), Seq("id_b"))
       .filter(col("ni") * (den + num) >= (col("na") + col("nb")) * num)
       .select("id_a", "id_b")
-    Dedup.connectedComponents(docs.select(col(idCol)), verified)
+    Dedup.connectedComponents(docs.select(col(idCol)), verified).labels
       .select(col("id").as(idCol), col("comp").as("canonical_id"))
   }
 

@@ -328,7 +328,7 @@ object TrainingDataQueries {
       (s, dir) => {
         val emb = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
         val edges = Similarity.exactPairsAbove(emb, threshold = EmbedSimThreshold)
-        Dedup.connectedComponents(emb.select("vec_id"), edges)
+        Dedup.connectedComponents(emb.select("vec_id"), edges).labels
           .select(col("id").as("vec_id"), col("comp").as("component"))
           .orderBy("vec_id")
       },
@@ -344,7 +344,7 @@ object TrainingDataQueries {
       (s, dir) => {
         val emb = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
         val edges = Similarity.exactPairsAbove(emb, threshold = EmbedSimThreshold)
-        Dedup.connectedComponentsStars(emb.select("vec_id"), edges)
+        Dedup.connectedComponentsStars(emb.select("vec_id"), edges).labels
           .select(col("id").as("vec_id"), col("comp").as("component"))
           .orderBy("vec_id")
       },
@@ -374,7 +374,7 @@ object TrainingDataQueries {
         val emb = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
         val edges = Similarity.quantizedLshPairsAbove(
           emb, tNum = 7, tDen = 20, planes = 8, maxHotDropFrac = 0.5)
-        Dedup.connectedComponentsStars(emb.select("vec_id"), edges)
+        Dedup.connectedComponentsStars(emb.select("vec_id"), edges).labels
           .select(col("id").as("vec_id"), col("comp").as("component"))
           .orderBy("vec_id")
       },

@@ -25,8 +25,7 @@ import graft.{GraftSession, Tables}
   *   - equality is multiset equality over all emitted rows.
   *
   * Usage: runMain graft.streaming.RestartProbe [sfDir] [nBatches]
-  * Prints one JSON line and writes SPARK_GRAFT_RESTART_PROBE_OUT
-  * (default restart_probe_out.json).
+  * Prints one bare JSON line on stdout and writes no file.
   */
 object RestartProbe {
 
@@ -271,14 +270,6 @@ object RestartProbe {
       s"""{"metric":"restart_probe","sf_dir":"$dir","batches":$nBatches,""" +
         s""""restart_after":$restartAfter,"docs_per_batch":${corpus.length},""" +
         s""""arms":[${arms.mkString(",")}]}"""
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_RESTART_PROBE_OUT", "restart_probe_out.json")
-    try {
-      val w = new java.io.PrintWriter(outPath, "UTF-8")
-      try w.println(json) finally w.close()
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[restart-probe] could not write $outPath: $e")
-    }
     println(json)
     spark.stop()
   }

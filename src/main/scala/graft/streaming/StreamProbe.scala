@@ -46,8 +46,7 @@ private[streaming] object ProbeSynth {
   * exists to catch.
   *
   * Usage: runMain graft.streaming.StreamProbe [sfDir] [nBatches]
-  * Prints one JSON line and writes it to SPARK_GRAFT_STREAM_PROBE_OUT
-  * (default stream_probe_out.json).
+  * Prints one bare JSON line on stdout and writes no file.
   */
 object StreamProbe {
   def main(args: Array[String]): Unit = {
@@ -227,14 +226,6 @@ object StreamProbe {
         s""""batches":$nBatches,"docs_per_batch":${corpus.length},""" +
         s""""watermark":"$watermark","step_sec":$stepSec,""" +
         s""""arms":[${arms.mkString(",")}]}"""
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_STREAM_PROBE_OUT", "stream_probe_out.json")
-    try {
-      val w = new java.io.PrintWriter(outPath, "UTF-8")
-      try w.println(json) finally w.close()
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[stream-probe] could not write $outPath: $e")
-    }
     println(json)
     spark.stop()
   }

@@ -178,7 +178,7 @@ object TrailStream {
           // emit rows carry the result ctx id: the window ENTRY id inside an
           // entry's run (batch parity — TrailEngine emits per entry id), the
           // cookie otherwise (including finalization, like LocalRunner's
-          // per-cookie finalizeTrail)
+          // per-cookie finalization)
           def emit(ctxId: String)(j: Int, r: Results): Unit = {
             r.counters.foreach { case (d, v) => if (v != 0) buf += EmitRow(ctxId, j, "c", d, null, v) }
             r.sets.foreach { case (d, m) => m.foreach { case (t, c) => buf += EmitRow(ctxId, j, "s", d, t, c) } }

@@ -44,7 +44,7 @@ object Fsm {
 
     /** reference: gen_match_same_state (src/fsm2c.py:916-930) */
     def sameAs(o: FsmState): Boolean = {
-      if (o eq this) return true // aliased per-tuple states (TrailMatcher shares them)
+      if (o eq this) return true // class members share one state (TrailMatcher)
       if (ri != o.ri || windowExpires != o.windowExpires) return false
       var i = 0
       while (i < outerIds.length - 1) {
@@ -54,6 +54,23 @@ object Fsm {
         i += 1
       }
       true
+    }
+
+    /** Equality is [[sameAs]], so states key hash maps by content. A key
+      * must not be mutated while it is in a map.
+      */
+    override def equals(o: Any): Boolean = o match {
+      case s: FsmState => sameAs(s)
+      case _           => false
+    }
+    override def hashCode: Int = {
+      var h = ri * 31 + java.lang.Long.hashCode(windowExpires)
+      var i = 0
+      while (i < outerIds.length - 1 && outerIds(i) != -1) {
+        h = (h * 31 + outerIds(i)) * 31 + java.lang.Long.hashCode(outerExpires(i))
+        i += 1
+      }
+      h
     }
   }
 
@@ -77,10 +94,42 @@ object Fsm {
       scalars.getOrElse(Ir.stripType(sigilName), null)
     def set(sigilName: String): Set[String] =
       sets.getOrElse(Ir.stripType(sigilName), null)
-    def tsScalar(sigilName: String): Long = {
-      val v = scalar(sigilName)
-      if (v == null) -1L else java.lang.Long.parseLong(v.trim)
+  }
+
+  /** [[Bindings]] resolved against one program into arrays aligned with
+    * `prog.varNames`, so the per-event loop does pure array access (the
+    * analog of the reference resolving param value-ids once per DB,
+    * src/match_traildb.c:86-159). `groupby(i)`: var i is a foreach var.
+    */
+  final class Resolved(
+      val binds: Bindings,
+      val scalars: Array[String],
+      val sets: Array[Set[String]],
+      val ts: Array[Long],
+      val groupby: Array[Boolean],
+  )
+
+  def resolve(prog: CompiledProgram, binds: Bindings, groupbyVars: Set[String]): Resolved = {
+    val n = prog.varNames.length
+    val r = new Resolved(binds, new Array[String](n), new Array[Set[String]](n), new Array[Long](n), new Array[Boolean](n))
+    var vi = 0
+    while (vi < n) {
+      val v = prog.varNames(vi)
+      Ir.varType(v) match {
+        case "scalar" =>
+          val sv = binds.scalar(v)
+          r.scalars(vi) = sv
+          r.ts(vi) =
+            if (sv != null && sv.trim.nonEmpty && sv.trim.forall(_.isDigit))
+              java.lang.Long.parseLong(sv.trim)
+            else -1L
+        case "set" | "multiset" => r.sets(vi) = binds.set(v)
+        case _                  => ()
+      }
+      r.groupby(vi) = groupbyVars.contains(v)
+      vi += 1
     }
+    r
   }
 
   /** Trail context: position cursor over a (filtered, consecutive-dup-free)
@@ -96,9 +145,14 @@ object Fsm {
       val filterEnd: Long = 0L,
   ) {
     var pos: Int = 0
-    def endOfTrail: Boolean = pos >= events.length
+    /** exclusive end of the events a run reads */
+    var end: Int = events.length
+    def endOfTrail: Boolean = pos >= end
     def current: TrailEvent = events(pos)
-    def advance(): Unit = if (pos < events.length) pos += 1
+    def advance(): Unit = if (pos < end) pos += 1
+
+    /** Point the cursor at events `[from, until)` for the next run. */
+    def range(from: Int, until: Int): TrailCtx = { pos = from; end = until; this }
 
     /** cookie as 16 zero-padded raw bytes, carried as an ISO-8859-1 string
       * (reference: bin/json2tdb:36-38 pads; src/results_json.c:88-103 hexes
@@ -127,10 +181,31 @@ object Fsm {
     def hll(dst: String, values: Array[String], types: Array[Byte]): Unit
   }
 
-  /** Run telemetry driving the foreach skip optimizations (reference flags
+  /** An append-only record of yields, replayed by range into another
+    * [[Emitter]]: TrailMatcher's per-class yields, settled per member.
+    */
+  final class YieldLog extends Emitter {
+    private val records = new scala.collection.mutable.ArrayBuffer[Emitter => Unit]
+    def size: Int = records.length
+    override def counter(dst: String): Unit = records += (_.counter(dst))
+    override def set(dst: String, values: Array[String], types: Array[Byte]): Unit =
+      records += (_.set(dst, values, types))
+    override def multiset(dst: String, values: Array[String], types: Array[Byte]): Unit =
+      records += (_.multiset(dst, values, types))
+    override def hll(dst: String, values: Array[String], types: Array[Byte]): Unit =
+      records += (_.hll(dst, values, types))
+
+    /** Re-emit records `[from, until)` into `e`. */
+    def replay(from: Int, until: Int, e: Emitter): Unit = {
+      var i = from
+      while (i < until) { records(i)(e); i += 1 }
+    }
+  }
+
+  /** Run telemetry driving TrailMatcher's early break (reference flags
     * GROUPBY_USED / RESULT_UPDATED, src/fns_imported.h:63-65). We set
     * groupbyUsed only when a *foreach* var is consulted (the reference sets
-    * it for any param var — ours reuses strictly more runs, which is safe
+    * it for any param var — ours shares strictly more steps, which is safe
     * because free vars are constant across tuples) and additionally when a
     * foreach var is echoed by a yield.
     */
@@ -178,61 +253,61 @@ object Fsm {
       stats: RunStats = new RunStats,
       groupbyVars: Set[String] = Set.empty,
       fcalls: Map[String, Fcall] = Map.empty,
-  ): Boolean = {
-    var abort = false
-    var mode = CONT
-    var ri = state.ri
-    var timestamp = 0L
-    var item: TrailEvent = null
+  ): Boolean =
+    new Machine(prog, fcalls).run(state, ctx, resolve(prog, binds, groupbyVars), emitter, stats)
 
-    if (ri == -1) return true // quit in a previous DB → stays aborted
+  /** The interpreter. One instance serves any number of [[run]]s (one at a
+    * time): its control registers are fields, so a run allocates nothing
+    * beyond the yields it makes.
+    *
+    * A run starts in CONT at `state.ri` with `timestamp` 0 and stops at the
+    * end of the ctx range. Runs chained at event boundaries equal one run
+    * over the whole range: every transition that follows a consumed event
+    * (START reads that event's timestamp) completes before the run stops,
+    * so the next run resumes in CONT at the rule the previous one left in
+    * `state.ri`; CONT's prelude is idempotent there (a window block's after
+    * cannot `repeat`, so a run never stops on an outer rule), and only a
+    * fresh state at an outer entrypoint reads `timestamp` 0, on the first
+    * run of a trail as in one run (ChainedRunSpec).
+    */
+  final class Machine(prog: CompiledProgram, fcalls: Map[String, Fcall]) {
+    private var state: FsmState = _
+    private var ctx: TrailCtx = _
+    private var res: Resolved = _
+    private var emitter: Emitter = _
+    private var stats: RunStats = _
+    private var abort = false
+    private var mode = CONT
+    private var ri = 0
+    private var timestamp = 0L
+    private var item: TrailEvent = null
 
-    // Pre-resolve every param var once per run into index-aligned arrays —
-    // the per-event hot loop does pure array access, no map lookups or
-    // string allocation (the analog of the reference resolving param
-    // value-ids once per DB, src/match_traildb.c:86-159).
-    val nVars = prog.varNames.length
-    val scalarByIdx = new Array[String](nVars)
-    val setByIdx = new Array[Set[String]](nVars)
-    val tsByIdx = new Array[Long](nVars)
-    val gbByIdx = new Array[Boolean](nVars)
-    var vi = 0
-    while (vi < nVars) {
-      val v = prog.varNames(vi)
-      Ir.varType(v) match {
-        case "scalar" =>
-          val sv = binds.scalar(v)
-          scalarByIdx(vi) = sv
-          tsByIdx(vi) =
-            if (sv != null && sv.trim.nonEmpty && sv.trim.forall(_.isDigit))
-              java.lang.Long.parseLong(sv.trim)
-            else -1L
-        case "set" | "multiset" => setByIdx(vi) = binds.set(v)
-        case _                  => ()
-      }
-      gbByIdx(vi) = groupbyVars.contains(v)
-      vi += 1
+    def run(state: FsmState, ctx: TrailCtx, res: Resolved, emitter: Emitter, stats: RunStats): Boolean = {
+      this.state = state; this.ctx = ctx; this.res = res; this.emitter = emitter; this.stats = stats
+      abort = false; mode = CONT; ri = state.ri; timestamp = 0L; item = null
+      if (ri == -1) true // quit in a previous DB → stays aborted
+      else { loop(); abort }
     }
 
-    def evalPred(p: Pred): Boolean = p match {
+    private def evalPred(p: Pred): Boolean = p match {
       case EqLit(slot, v) =>
         val ev = if (slot == -1) "" else item.fields(slot)
         ev == v
       case EqScalar(slot, vIdx, _) =>
-        if (gbByIdx(vIdx)) stats.groupbyUsed = true
-        val pv = scalarByIdx(vIdx)
+        if (res.groupby(vIdx)) stats.groupbyUsed = true
+        val pv = res.scalars(vIdx)
         val ev = if (slot == -1) "" else item.fields(slot)
         pv != null && ev == pv
       case InSet(slot, vIdx, _) =>
-        if (gbByIdx(vIdx)) stats.groupbyUsed = true
-        val ps = setByIdx(vIdx)
+        if (res.groupby(vIdx)) stats.groupbyUsed = true
+        val ps = res.sets(vIdx)
         val ev = if (slot == -1) "" else item.fields(slot)
         ps != null && ps.contains(ev)
       case TsCmp(op, lit, vIdx, _) =>
         val rhs = if (vIdx == -1) lit
         else {
-          if (gbByIdx(vIdx)) stats.groupbyUsed = true
-          tsByIdx(vIdx)
+          if (res.groupby(vIdx)) stats.groupbyUsed = true
+          res.ts(vIdx)
         }
         // uint64 comparison semantics: the reference stores timestamps and
         // param values as uint64, so an unbound %scalar's -1 sentinel is
@@ -249,14 +324,14 @@ object Fsm {
         }
     }
 
-    def evalClause(c: CClause): Boolean = {
+    private def evalClause(c: CClause): Boolean = {
       var r = true
       var i = 0
       while (r && i < c.preds.length) { r = evalPred(c.preds(i)); i += 1 }
       if (c.negated) !r else r
     }
 
-    def evalTerm(t: Ir.YieldTerm, currentRule: Int): String = t match {
+    private def evalTerm(t: Ir.YieldTerm, currentRule: Int): String = t match {
       case Ir.FieldTerm("cookie") => ctx.cookiePadded
       case Ir.FieldTerm("timestamp") => java.lang.Long.toString(item.ts)
       case Ir.FieldTerm("cookie_timestamp_filter_start") => java.lang.Long.toString(ctx.filterStart)
@@ -266,8 +341,9 @@ object Fsm {
         if (slot == -1 || item.isEmpty) "" else item.fields(slot)
       case Ir.LiteralTerm(v) => v
       case Ir.ParamTerm(n) =>
-        if (groupbyVars.contains(n)) stats.groupbyUsed = true
-        Option(binds.scalar(n)).getOrElse("")
+        val vi = prog.varNames.indexOf(n)
+        if (vi >= 0 && res.groupby(vi)) stats.groupbyUsed = true
+        Option(res.binds.scalar(n)).getOrElse("")
       case Ir.WindowRefTerm(None) =>
         val dur = prog.rules(currentRule).window.getOrElse(
           sys.error("Cannot yield window start timestamp when window is infinite"))
@@ -285,12 +361,12 @@ object Fsm {
         f(args.map(evalTerm(_, currentRule)))
     }
 
-    def termType(t: Ir.YieldTerm): Byte = t match {
+    private def termType(t: Ir.YieldTerm): Byte = t match {
       case Ir.FieldTerm("cookie") => Tuple.TypeBytes
       case _                      => Tuple.TypeString
     }
 
-    def runYields(c: CClause, currentRule: Int): Unit = {
+    private def runYields(c: CClause, currentRule: Int): Unit = {
       if (c.yields.nonEmpty) stats.resultUpdated = true
       var i = 0
       while (i < c.yields.length) {
@@ -314,7 +390,7 @@ object Fsm {
     /** reference: src/fsm2c.py:379-397 — truncate the outer stack to dst's
       * nesting depth when jumping.
       */
-    def balance(dst: Int): Unit =
+    private def balance(dst: Int): Unit =
       if (prog.hasWindowRules && dst < prog.rules.length) {
         val idx = prog.rules(dst).windowStack.length
         state.outerIds(idx) = -1
@@ -324,7 +400,7 @@ object Fsm {
     /** Execute a matched clause's yields + action; sets mode/ri.
       * reference: src/fsm2c.py:400-433 compile_clause_action.
       */
-    def runAction(c: CClause, actionRule: Int): Unit = {
+    private def runAction(c: CClause, actionRule: Int): Unit = {
       runYields(c, actionRule)
       c.action match {
         case Repeat =>
@@ -362,124 +438,126 @@ object Fsm {
     // min(timestamp, window_expires)+d re-entry) strictly advances
     // windowExpires every pass and therefore never repeats a state, no
     // matter how many thousands of passes it makes.
-    var stallPos = -2
-    var cycPow = 1
-    var cycLam = 0
-    var snapMode = -1; var snapRi = -1; var snapWin = 0L
-    val snapOuterIds: Array[Int] = new Array[Int](state.outerIds.length)
-    val snapOuterExp: Array[Long] = new Array[Long](state.outerExpires.length)
-    def cycleSnapshot(): Unit = {
+    private var stallPos = -2
+    private var cycPow = 1
+    private var cycLam = 0
+    private var snapMode = -1; private var snapRi = -1; private var snapWin = 0L
+    private val snapOuterIds: Array[Int] = new Array[Int](prog.nWindowRules + 1)
+    private val snapOuterExp: Array[Long] = new Array[Long](prog.nWindowRules + 1)
+    private def cycleSnapshot(): Unit = {
       snapMode = mode; snapRi = ri; snapWin = state.windowExpires
       System.arraycopy(state.outerIds, 0, snapOuterIds, 0, snapOuterIds.length)
       System.arraycopy(state.outerExpires, 0, snapOuterExp, 0, snapOuterExp.length)
     }
-    def cycleRepeats: Boolean =
+    private def cycleRepeats: Boolean =
       mode == snapMode && ri == snapRi && state.windowExpires == snapWin &&
         java.util.Arrays.equals(state.outerIds, snapOuterIds) &&
         java.util.Arrays.equals(state.outerExpires, snapOuterExp)
 
-    while (mode != STOP) {
-      // consuming fast path pays only the pos compare; the first repeat
-      // iteration at a position arms the detector (snapMode == -1)
-      if (ctx.pos == stallPos) {
-        if (snapMode == -1) cycleSnapshot()
-        else if (cycleRepeats)
-          throw new IllegalStateException(
-            s"FSM control state repeated without consuming an event " +
-              s"(rule ${ri}, ts=$timestamp) — non-terminating restart cycle in the program")
-        else {
-          cycLam += 1
-          if (cycLam == cycPow) { cycPow <<= 1; cycLam = 0; cycleSnapshot() }
-        }
-      } else { stallPos = ctx.pos; cycPow = 1; cycLam = 0; snapMode = -1 }
-      mode match {
-        case START =>
-          val r = prog.rules(ri)
-          if (r.isOuter) {
-            // push a window block and fall through to the first inner rule
-            // (reference: src/fsm2c.py:211-233 enter_rule, outer branch)
-            var i = 0
-            while (state.outerIds(i) != -1) i += 1
-            state.outerIds(i) = ri
-            if (i + 1 < state.outerIds.length) state.outerIds(i + 1) = -1
-            state.outerExpires(i) = r.window match {
-              case Some(d) =>
-                if (state.windowExpires > 0) math.min(timestamp, state.windowExpires) + d
-                else timestamp + d
-              case None => ExpiresNever
-            }
-            ri += 1 // fall through; mode stays START
-          } else {
-            state.windowExpires = r.window match {
-              case Some(d) =>
-                if (state.windowExpires > 0) math.min(timestamp, state.windowExpires) + d
-                else timestamp + d
-              case None => ExpiresNever
-            }
-            mode = CONT
-          }
-
-        case CONT =>
-          if (prog.rules(ri).isOuter) {
-            // RULE_CONT of a window-block rule has no body in the generated
-            // C — control falls through to the NEXT rule's RULE_START
-            // without pushing the outer window (reference: compile_block
-            // early return, src/fsm2c.py:617-619). This is how a fresh
-            // state whose entrypoint is an outer rule starts inside the
-            // first inner rule with no window on the stack.
-            ri += 1
-            mode = START
-          } else {
-            // RULE_CONT prelude (reference: src/fsm2c.py:620-627)
-            state.ri = ri
-            if (ri == 0 && prog.hasWindowRules) {
-              state.outerIds(0) = -1
-              state.outerExpires(0) = 0
-            }
-            if (ctx.endOfTrail) mode = STOP else mode = LOOP
-          }
-
-        case LOOP =>
-          if (ctx.endOfTrail) mode = STOP
+    private def loop(): Unit = {
+      stallPos = -2; cycPow = 1; cycLam = 0; snapMode = -1
+      while (mode != STOP) {
+        // consuming fast path pays only the pos compare; the first repeat
+        // iteration at a position arms the detector (snapMode == -1)
+        if (ctx.pos == stallPos) {
+          if (snapMode == -1) cycleSnapshot()
+          else if (cycleRepeats)
+            throw new IllegalStateException(
+              s"FSM control state repeated without consuming an event " +
+                s"(rule ${ri}, ts=$timestamp) — non-terminating restart cycle in the program")
           else {
-            val r = prog.rules(ri)
-            item = ctx.current
-            timestamp = item.ts
-            val withinWindow = state.windowExpires == 0 || state.windowExpires > timestamp
-            if (withinWindow && !item.isEmpty) {
-              var ci = 0
-              var matched = false
-              while (!matched && ci < r.clauses.length) {
-                val c = r.clauses(ci)
-                if (evalClause(c)) { matched = true; runAction(c, ri) }
-                else ci += 1
-              }
-              if (!matched) throw new NonExhaustiveException(r.name, timestamp)
-            } else {
-              if (item.isEmpty) ctx.advance()
-              // expired outer windows, bottom of stack first
-              // (reference: src/fsm2c.py:646-663)
-              var handled = false
-              var i = 0
-              while (!handled && i < state.outerIds.length && state.outerIds(i) != -1) {
-                val exp = state.outerExpires(i)
-                val within2 = exp == 0 || exp > timestamp
-                if (!within2) {
-                  val outerId = state.outerIds(i)
-                  state.outerIds(i) = -1
-                  state.outerExpires(i) = 0
-                  runAction(prog.rules(outerId).after, outerId)
-                  handled = true
-                } else i += 1
-              }
-              // own after action, without consuming (for restart-from-here)
-              // (reference: src/fsm2c.py:664-665)
-              if (!handled) runAction(r.after, ri)
-              if (mode == LOOP && ctx.endOfTrail) mode = STOP
-            }
+            cycLam += 1
+            if (cycLam == cycPow) { cycPow <<= 1; cycLam = 0; cycleSnapshot() }
           }
+        } else { stallPos = ctx.pos; cycPow = 1; cycLam = 0; snapMode = -1 }
+        mode match {
+          case START =>
+            val r = prog.rules(ri)
+            if (r.isOuter) {
+              // push a window block and fall through to the first inner rule
+              // (reference: src/fsm2c.py:211-233 enter_rule, outer branch)
+              var i = 0
+              while (state.outerIds(i) != -1) i += 1
+              state.outerIds(i) = ri
+              if (i + 1 < state.outerIds.length) state.outerIds(i + 1) = -1
+              state.outerExpires(i) = r.window match {
+                case Some(d) =>
+                  if (state.windowExpires > 0) math.min(timestamp, state.windowExpires) + d
+                  else timestamp + d
+                case None => ExpiresNever
+              }
+              ri += 1 // fall through; mode stays START
+            } else {
+              state.windowExpires = r.window match {
+                case Some(d) =>
+                  if (state.windowExpires > 0) math.min(timestamp, state.windowExpires) + d
+                  else timestamp + d
+                case None => ExpiresNever
+              }
+              mode = CONT
+            }
+
+          case CONT =>
+            if (prog.rules(ri).isOuter) {
+              // RULE_CONT of a window-block rule has no body in the generated
+              // C — control falls through to the NEXT rule's RULE_START
+              // without pushing the outer window (reference: compile_block
+              // early return, src/fsm2c.py:617-619). This is how a fresh
+              // state whose entrypoint is an outer rule starts inside the
+              // first inner rule with no window on the stack.
+              ri += 1
+              mode = START
+            } else {
+              // RULE_CONT prelude (reference: src/fsm2c.py:620-627)
+              state.ri = ri
+              if (ri == 0 && prog.hasWindowRules) {
+                state.outerIds(0) = -1
+                state.outerExpires(0) = 0
+              }
+              if (ctx.endOfTrail) mode = STOP else mode = LOOP
+            }
+
+          case LOOP =>
+            if (ctx.endOfTrail) mode = STOP
+            else {
+              val r = prog.rules(ri)
+              item = ctx.current
+              timestamp = item.ts
+              val withinWindow = state.windowExpires == 0 || state.windowExpires > timestamp
+              if (withinWindow && !item.isEmpty) {
+                var ci = 0
+                var matched = false
+                while (!matched && ci < r.clauses.length) {
+                  val c = r.clauses(ci)
+                  if (evalClause(c)) { matched = true; runAction(c, ri) }
+                  else ci += 1
+                }
+                if (!matched) throw new NonExhaustiveException(r.name, timestamp)
+              } else {
+                if (item.isEmpty) ctx.advance()
+                // expired outer windows, bottom of stack first
+                // (reference: src/fsm2c.py:646-663)
+                var handled = false
+                var i = 0
+                while (!handled && i < state.outerIds.length && state.outerIds(i) != -1) {
+                  val exp = state.outerExpires(i)
+                  val within2 = exp == 0 || exp > timestamp
+                  if (!within2) {
+                    val outerId = state.outerIds(i)
+                    state.outerIds(i) = -1
+                    state.outerExpires(i) = 0
+                    runAction(prog.rules(outerId).after, outerId)
+                    handled = true
+                  } else i += 1
+                }
+                // own after action, without consuming (for restart-from-here)
+                // (reference: src/fsm2c.py:664-665)
+                if (!handled) runAction(r.after, ri)
+                if (mode == LOOP && ctx.endOfTrail) mode = STOP
+              }
+            }
+        }
       }
     }
-    abort
   }
 }

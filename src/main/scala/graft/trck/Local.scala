@@ -75,27 +75,6 @@ final class Results(prog: CompiledProgram) extends Emitter {
     }
   }
 
-  /** Merge `other` n times (reference: add_results_vec — same result applied
-    * to a run of equal-state tuples).
-    */
-  def mergeTimes(other: Results, n: Int): Unit = {
-    if (!other.touched) return // identity — nothing to add
-    touched = true
-    other.counters.foreach { case (k, v) => counters(k) = counters(k) + v * n }
-    other.sets.foreach { case (k, m) =>
-      val dst = sets(k); m.foreach { case (t, c) => dst.update(t, dst.getOrElse(t, 0L) + c * n) }
-    }
-    other.msets.foreach { case (k, m) =>
-      val dst = msets(k); m.foreach { case (t, c) => dst.update(t, dst.getOrElse(t, 0L) + c * n) }
-    }
-    other.hlls.foreach { case (k, h) =>
-      hlls.get(k) match {
-        case Some(mine) => mine.merge(h)
-        case None       => hlls.update(k, Hll.fromHexString(h.toHexString))
-      }
-    }
-  }
-
   /** JSON-able map replicating results_json keys/values: `$c` → long,
     * `#s` → sorted array of rendered tuples, `&m` → {rendered: count},
     * `^h` → RLE-hex sketch (reference: src/results_json.c:233-295,
@@ -116,11 +95,12 @@ final class Results(prog: CompiledProgram) extends Emitter {
 
 /** Single-process runner replicating `run_groupby_query2`
   * (reference: src/match_traildb.c:372-953): multi-DB state carry-over,
-  * min_ts cross-DB cut, per-uuid window filter, exclude set, foreach loop
-  * with the groupby-independence early-break and distinct-value skipping,
-  * and MAX_TIMESTAMP finalization. This is the semantic oracle the Spark
-  * engine and the golden tests check against; the Spark engine runs the
-  * same per-trail loop inside partitions.
+  * min_ts cross-DB cut, per-uuid window filter, exclude set, the foreach
+  * loop and MAX_TIMESTAMP finalization. This is the definition the Spark
+  * engine, the streaming engine and the golden tests check against, so it
+  * runs the plainest form of the loop: one `Fsm.matchTrail` per (trail ×
+  * tuple) per DB and one per (cookie × tuple) at finalization, with none of
+  * [[TrailMatcher]]'s sharing between tuples.
   */
 object LocalRunner {
 
@@ -304,27 +284,24 @@ object LocalRunner {
           new TrailEvent(e.ts, arr)
         }.toArray
 
-        val saved = states.getOrElseUpdate(cookie, {
-          // one shared initial state: processTrail copies before mutating
-          // and groups aliases via identity (TrailMatcher aliasing contract)
-          val init = FsmState.initial(prog)
-          Array.fill(nTuples)(init)
-        })
-        dbStates(cookie) = TrailMatcher.processTrail(
-          prog, tuples, saved, events, ctxCookie, wStart, wEnd, params, fcalls,
-          (j, scratch) => slot(j).merge(scratch),
-        )
+        // the definition: one plain run per (trail × tuple), no skip rule
+        val saved = states.getOrElseUpdate(cookie, Array.fill(nTuples)(FsmState.initial(prog)))
+        dbStates(cookie) = Array.tabulate(nTuples) { j =>
+          val st = saved(j).copyOf()
+          Fsm.matchTrail(prog, st, new TrailCtx(ctxCookie, events, wStart, wEnd),
+            tuples(j).bind(gvars, params), slot(j), stats, groupbySet, fcalls)
+          st
+        }
       }
       states ++= dbStates
       minTs = dbMaxTs
     }
 
-    // finalization at MAX_TIMESTAMP (reference: :899-944)
-    for ((cookie, sts) <- states)
-      TrailMatcher.finalizeTrail(
-        prog, tuples, sts, cookie, params, fcalls,
-        (j, scratch) => slot(j).merge(scratch),
-      )
+    // finalization at MAX_TIMESTAMP (reference: :899-944), one run per
+    // (cookie × tuple) whose state left the initial one
+    for ((cookie, sts) <- states; j <- 0 until nTuples if !sts(j).isInitial(prog.entrypoint))
+      Fsm.matchTrail(prog, sts(j), TrailCtx.finalization(cookie),
+        tuples(j).bind(gvars, params), slot(j), stats, groupbySet, fcalls)
 
     RunOutput(prog, tuples, results, prog.mergeResults)
   }

@@ -39,12 +39,6 @@ object OutputJson {
     case other => "\"" + esc(other.toString) + "\""
   }
 
-  def renderOne(m: mutable.LinkedHashMap[String, Any]): String = {
-    val sb = new java.lang.StringBuilder
-    appendOne(sb, m, Long.MaxValue)
-    sb.toString
-  }
-
   /** Driver-side render budget. Results are small by reference contract
     * (per-tuple counters/set tallies — the reason the reference renders
     * them in one buffer, src/results_json.c:233-295), but a pathological

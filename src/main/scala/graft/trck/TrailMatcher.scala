@@ -1,302 +1,302 @@
 package graft.trck
 
+import scala.collection.mutable.ArrayBuffer
+
 import Compiled._
 import Fsm._
 import LocalRunner.{ForeachTuple, WindowEntry}
 
-/** The per-trail foreach loop with the reference's two skip optimizations
-  * (reference: src/match_traildb.c:579-744):
+/** The per-trail foreach loop: one pass over a trail for all foreach tuples
+  * (the Spark engine and TrailStream run it; LocalRunner, the definition,
+  * runs each tuple alone).
   *
-  *  1. groupby-independence early-break: a run that never consulted a
-  *     foreach var applies verbatim to every tuple sharing the same
-  *     starting state;
-  *  2. distinct-value skipping: among tuples that do share a starting
-  *     state, those whose values don't appear in the trail all behave
-  *     identically — one memoized run covers them.
+  * A class is a set of tuples that share one FSM state. A foreach predicate
+  * only compares a tuple's value with an event field, so the members whose
+  * values are absent from an event all take one transition: per event, a
+  * class steps once with its foreach vars unbound, plus once for each member
+  * whose value the event holds (a value → tuples index finds them). Such a
+  * member leaves, and joins the class whose state it reached. If the class
+  * step never read a foreach var (`RunStats.groupbyUsed`) no member leaves:
+  * the per-event form of the reference's early break
+  * (src/match_traildb.c:579-744). Events where no tuple is special run in
+  * one Fsm call per class, so a program without foreach makes one call per
+  * trail segment. Bound: ≤ G + N event-steps per event, for G distinct
+  * starting states and N tuples whose values occur in the trail (the
+  * reference's N+1 calls times the trail length); ≤ 2 on perftest1.
   *
-  * Together these give the reference's ≤ N+1 match-calls-per-trail bound
-  * for N distinct foreach values present in the trail
-  * (reference: src/match_traildb.c:596-608).
-  *
-  * Shared between LocalRunner (multi-DB semantics oracle) and the Spark
-  * engine (runs inside mapPartitions).
+  * A class logs its yields; a member settles the log range between joining
+  * and leaving into its own Results. Programs whose yields echo a foreach
+  * var, or that compare one with the timestamp, replay each tuple alone.
   */
 object TrailMatcher {
 
-  /** Local-mode instrumentation: total [[Fsm.matchTrail]] invocations made
-    * by [[processTrail]] — the quantity the reference bounds at ~N+1 per
-    * trail for N distinct foreach values present in the trail
-    * (src/match_traildb.c:596-608). A JVM-wide adder, so it is meaningful
-    * only under local[*] where every task shares the driver JVM;
-    * MatchCallBoundSpec resets and reads it around a run. One
-    * uncontended add per match call — negligible.
+  /** FSM event-steps made by [[processTrail]] (the events each Fsm run
+    * reads, summed). JVM-wide, so meaningful only under local[*]; one add
+    * per trail.
     */
   val matchCalls = new java.util.concurrent.atomic.LongAdder
 
-  /** Run every foreach tuple over one trail. `saved` holds per-tuple
-    * starting states (mutated copies are returned); `onResult(j, scratch)`
-    * receives each tuple's yields (scratch may be shared across tuples —
-    * merge, don't keep).
+  /** What the loop needs of (program, tuples, params), built once per task
+    * (one per thread, reused while the same objects come back).
     */
-  def processTrail(
-      prog: CompiledProgram,
-      tuples: IndexedSeq[ForeachTuple],
-      saved: Array[FsmState],
-      events: Array[TrailEvent],
-      cookie: String,
-      wStart: Long,
-      wEnd: Long,
-      params: Bindings,
-      fcalls: Map[String, Fcall],
-      onResult: (Int, Results) => Unit,
-  ): Array[FsmState] = {
-    val gvars = prog.groupbyVars
-    val groupbySet = gvars.toSet
-    val nTuples = tuples.length
-    val out = new Array[FsmState](nTuples)
+  private final class Plan(val prog: CompiledProgram, val tuples: IndexedSeq[ForeachTuple],
+      val params: Bindings, val fcalls: Map[String, Fcall]) {
+    private val gvars = prog.groupbyVars
+    private val gset = gvars.toSet
+    private val bound = new Array[Resolved](tuples.length)
+    def binds(j: Int): Resolved = {
+      if (bound(j) == null) bound(j) = Fsm.resolve(prog, tuples(j).bind(gvars, params), gset)
+      bound(j)
+    }
+    /** foreach vars unbound: every foreach predicate reads false */
+    val generic: Resolved = {
+      val names = gvars.map(Ir.stripType)
+      Fsm.resolve(prog, Bindings(params.scalars -- names, params.sets -- names), gset)
+    }
+    private val clauses = prog.rules.flatMap(r => r.clauses :+ r.after)
+    private def echoes(t: Ir.YieldTerm): Boolean = t match {
+      case Ir.ParamTerm(n)     => gset(n)
+      case Ir.FcallTerm(_, as) => as.exists(echoes)
+      case _                   => false
+    }
+    /** false: replay every tuple alone */
+    val classes: Boolean = !clauses.exists(c => c.yields.exists(_.src.exists(echoes)) ||
+      c.preds.exists { case TsCmp(_, _, v, _) => v >= 0 && gset(prog.varNames(v)); case _ => false })
+    /** (event slot, value → tuples bound to it) per foreach predicate: an
+      * event holding a tuple's bound value may move it off its class's step
+      */
+    val index: Array[(Int, java.util.HashMap[String, Array[Int]])] = if (!classes) Array.empty else
+      clauses.flatMap(_.preds).collect {
+        case EqScalar(slot, v, n) if generic.groupby(v) => (slot, v, (b: Bindings) => Option(b.scalar(n)).toSeq)
+        case InSet(slot, v, n) if generic.groupby(v)    => (slot, v, (b: Bindings) => Option(b.set(n)).toSeq.flatten)
+      }.distinctBy(p => (p._1, p._2)).map { case (slot, _, values) =>
+        val m = new java.util.HashMap[String, Array[Int]]()
+        tuples.indices.flatMap(j => values(tuples(j).bind(gvars, params)).map(_ -> j)).groupMap(_._1)(_._2)
+          .foreach { case (x, js) => m.put(x, js.toArray) }
+        slot -> m
+      }
+    // per-trail scratch: the event a tuple was last found special at, the
+    // special chain of its class, and the tuples that left with their states
+    var tick = 0
+    val mark = new Array[Int](tuples.length)
+    val nextSp = new Array[Int](tuples.length)
+    val movedK = new Array[Int](tuples.length)
+    val moved = new Array[FsmState](tuples.length)
+  }
+
+  private val plans = new ThreadLocal[Plan]
+
+  private def planFor(
+      prog: CompiledProgram, tuples: IndexedSeq[ForeachTuple], params: Bindings, fcalls: Map[String, Fcall]): Plan = {
+    val p = plans.get
+    if (p != null && (p.prog eq prog) && (p.tuples eq tuples) && (p.params eq params) && (p.fcalls eq fcalls)) p
+    else { val q = new Plan(prog, tuples, params, fcalls); plans.set(q); q }
+  }
+
+  /** Tuples sharing one state, stepped with `binds`; `into` is set when
+    * merged into a bigger class at that class's log position `intoAt`.
+    */
+  private final class Cls(val state: FsmState, val binds: Resolved) {
+    val log = new YieldLog
+    var size = 0; var into: Cls = null; var intoAt = 0
+    var spHead = -1; var spCount = 0 // this event's special members: chain head, count
+    private var full: Results = null
+    def fullResults(prog: CompiledProgram): Results = {
+      if (full == null) { full = new Results(prog); log.replay(0, log.size, full) }
+      full
+    }
+  }
+
+  /** Run every foreach tuple over one trail. `saved` holds per-tuple
+    * starting states (never mutated); the returned states are shared by
+    * the members of a class and must not be mutated either.
+    * `onResult(j, scratch)` receives each tuple's yields (scratch may be
+    * shared across tuples — merge, don't keep).
+    */
+  def processTrail(prog: CompiledProgram, tuples: IndexedSeq[ForeachTuple], saved: Array[FsmState],
+      events: Array[TrailEvent], cookie: String, wStart: Long, wEnd: Long, params: Bindings,
+      fcalls: Map[String, Fcall], onResult: (Int, Results) => Unit): Array[FsmState] = {
+    val plan = planFor(prog, tuples, params, fcalls)
+    val m = new Machine(prog, fcalls)
+    val ctx = new TrailCtx(cookie, events, wStart, wEnd)
     val stats = new RunStats
-
-    val dvOk = gvars.nonEmpty && gvars.forall(v => prog.varFields.get(v).exists(_ != "timestamp"))
-    val gvFields = gvars.map(v => prog.varFields.getOrElse(v, ""))
-
-    var trailVals: Array[Set[String]] = null
-    def tupleInTrail(k: Int): Boolean = {
-      if (trailVals == null)
-        trailVals = gvFields.map { f =>
-          val s = prog.slot(f)
-          if (s == -1) Set.empty[String]
+    val n = tuples.length
+    val len = events.length
+    var steps = 0L
+    def run(st: FsmState, from: Int, until: Int, binds: Resolved, e: Emitter): Unit = {
+      steps += until - from; stats.reset()
+      m.run(st, ctx.range(from, until), binds, e, stats)
+    }
+    val out = new Array[FsmState](n)
+    val cls = new Array[Cls](n)
+    val joinAt = new Array[Int](n)
+    val own = new Array[Results](n)
+    val live = ArrayBuffer[Cls]()
+    val byState = new java.util.HashMap[FsmState, Cls]()
+    // equal starting states share a class; without the class loop each
+    // tuple is a class of its own, stepping with its own bindings
+    for (j <- 0 until n) {
+      val s = saved(j)
+      val c =
+        if (!plan.classes) { val c1 = new Cls(s.copyOf(), plan.binds(j)); live += c1; c1 }
+        else if (j > 0 && (s eq saved(j - 1))) cls(j - 1)
+        else byState.get(s) match {
+          case null => val c1 = new Cls(s.copyOf(), plan.generic); byState.put(s, c1); live += c1; c1
+          case c0   => c0
+        }
+      cls(j) = c; c.size += 1
+    }
+    // add c's log from j's join up to `until` to j's own results
+    def settle(j: Int, c: Cls, until: Int): Results = {
+      if (own(j) == null) own(j) = new Results(prog)
+      c.log.replay(joinAt(j), until, own(j)); own(j)
+    }
+    def find(j: Int): Cls = {
+      var c = cls(j)
+      while (c.into != null) {
+        if (c.log.size > joinAt(j)) settle(j, c, c.log.size)
+        joinAt(j) = c.intoAt; c = c.into
+      }
+      cls(j) = c; c
+    }
+    var nMoved = 0; var pos = 0; var t = 0
+    while (t <= len) {
+      var specials = false
+      if (t < len) {
+        if (plan.tick == Int.MaxValue) { java.util.Arrays.fill(plan.mark, 0); plan.tick = 0 }
+        plan.tick += 1
+        for ((slot, idx) <- plan.index) {
+          val js = idx.get(if (slot == -1) "" else events(t).fields(slot))
+          if (js != null) for (k <- js if plan.mark(k) != plan.tick) {
+            plan.mark(k) = plan.tick; specials = true
+            val c = find(k)
+            plan.nextSp(k) = c.spHead; c.spHead = k; c.spCount += 1
+          }
+        }
+      }
+      if (specials) {
+        for (c <- live) {
+          if (c.spCount == 0) run(c.state, pos, t + 1, c.binds, c.log)
           else {
-            val b = Set.newBuilder[String]
-            var i = 0
-            while (i < events.length) { b += events(i).fields(s); i += 1 }
-            b.result()
+            if (t > pos) run(c.state, pos, t, c.binds, c.log)
+            val q = c.log.size
+            // with no generic member left, the first special steps the class
+            val j0 = if (c.spCount == c.size) c.spHead else -1
+            val pre = if (c.spCount > 1 || j0 == -1) c.state.copyOf() else null
+            run(c.state, t, t + 1, if (j0 == -1) c.binds else plan.binds(j0), c.log)
+            if (stats.groupbyUsed) {
+              var k = c.spHead
+              while (k != -1) {
+                if (k != j0) {
+                  c.size -= 1
+                  val st = if (plan.nextSp(k) == -1) pre else pre.copyOf()
+                  run(st, t, t + 1, plan.binds(k), settle(k, c, q))
+                  plan.moved(nMoved) = st; plan.movedK(nMoved) = k; nMoved += 1
+                }
+                k = plan.nextSp(k)
+              }
+            }
+            c.spHead = -1; c.spCount = 0
           }
-        }.toArray
-      // index loop, no zipWithIndex: this runs once per (trail × tuple) at
-      // wide foreach cardinality — a per-call collection alloc is hot
-      val items = tuples(k).items
-      var i = 0
-      while (i < items.length) {
-        items(i) match {
-          case Left(v)   => if (trailVals(i).contains(v)) return true
-          case Right(vs) => if (vs.exists(trailVals(i).contains)) return true
         }
-        i += 1
-      }
-      false
-    }
-
-    def runOne(j: Int): (FsmState, Results, Boolean) = {
-      matchCalls.increment()
-      val st = saved(j).copyOf()
-      val scratch = new Results(prog)
-      stats.reset()
-      val ctx = new TrailCtx(cookie, events, wStart, wEnd)
-      Fsm.matchTrail(prog, st, ctx, tuples(j).bind(gvars, params), scratch, stats, groupbySet, fcalls)
-      (st, scratch, stats.groupbyUsed)
-    }
-
-    var j = 0
-    while (j < nTuples) {
-      var n = 1
-      while (j + n < nTuples && saved(j + n).sameAs(saved(j))) n += 1
-
-      val (st, scratch, used) = runOne(j)
-      if (!used) {
-        // the representative's run applies to every tuple in the group, and
-        // every tuple SHARES the one result-state object: nothing mutates a
-        // state in place except finalizeTrail, which is identity-aware (it
-        // snapshots a shared state before its first binding-sensitive run).
-        // The previous per-tuple copyOf here was the dominant cost of wide
-        // foreach loops — 10k state copies per trail at 10k tuples, for
-        // states the reference's own N+1 bound says are identical.
-        var k = j
-        while (k < j + n) {
-          out(k) = st
-          onResult(k, scratch); k += 1
+        // classes whose states met merge, the smaller into the larger
+        byState.clear()
+        for (c <- live if c.size > 0) byState.get(c.state) match {
+          case null => byState.put(c.state, c)
+          case d =>
+            val (big, small) = if (d.size >= c.size) (d, c) else (c, d)
+            small.into = big; small.intoAt = big.log.size; big.size += small.size; small.size = 0
+            byState.put(big.state, big)
         }
-        j += n
-      } else {
-        out(j) = st
-        onResult(j, scratch)
-        var k = j + 1
-        val end = j + n
-        // a representative whose own values are absent from the trail IS
-        // the absent-value run: seed the memo from it rather than running
-        // the first absent tuple again (keeps the ≤ N+1 bound)
-        var memo: (FsmState, Results) =
-          if (dvOk && !tupleInTrail(j)) (st, scratch) else null
-        while (k < end) {
-          if (!dvOk || tupleInTrail(k)) {
-            val (s2, r2, _) = runOne(k)
-            out(k) = s2; onResult(k, r2)
-          } else if (memo == null) {
-            val (s2, r2, _) = runOne(k); memo = (s2, r2)
-            out(k) = s2; onResult(k, r2)
-          } else {
-            // memo users share the memoized state too (see early-break note)
-            out(k) = memo._1; onResult(k, memo._2)
+        live.filterInPlace(_.size > 0)
+        // leavers join the class whose state they reached, or found one
+        for (i <- 0 until nMoved) {
+          val k = plan.movedK(i); val st = plan.moved(i); plan.moved(i) = null
+          val d = byState.get(st) match {
+            case null => val c1 = new Cls(st, plan.generic); byState.put(st, c1); live += c1; c1
+            case d0   => d0
           }
-          k += 1
+          cls(k) = d; joinAt(k) = d.log.size; d.size += 1
         }
-        j = end
-      }
+        nMoved = 0
+        pos = t + 1
+      } else if (t == len && (len > pos || len == 0))
+        live.foreach(c => run(c.state, pos, len, c.binds, c.log))
+      t += 1
     }
+    for (j <- 0 until n) {
+      val c = find(j)
+      out(j) = c.state
+      onResult(j, if (own(j) == null && joinAt(j) == 0) c.fullResults(prog) else settle(j, c, c.log.size))
+    }
+    matchCalls.add(steps)
     out
   }
 
-  /** `cookie`'s window entries in window-file order (`byCookie` groups a
-    * window file's entries by cookie); without a window file, the single
-    * unbounded entry `(cookie, cookie, 0, 0)`.
+  /** `cookie`'s window entries in window-file order (`byCookie`: a window
+    * file's entries by cookie); without one, the unbounded `(cookie, cookie, 0, 0)`.
     */
   def entriesOf(
       byCookie: Option[Map[String, IndexedSeq[WindowEntry]]], cookie: String): IndexedSeq[WindowEntry] =
     byCookie.fold(IndexedSeq(WindowEntry(cookie, cookie, 0L, 0L)))(_.getOrElse(cookie, IndexedSeq.empty))
 
   /** Replay one source segment of a trail through every window entry of its
-    * cookie (reference: src/match_traildb.c:513-560). `events` are
-    * ts-sorted with consecutive duplicates already removed: dedup before
-    * the bounds is the same as dedup after them, because duplicates share
-    * a ts and the bounds read only the ts. Entry e runs on the ts slice
-    * `[max(start, cut), end)` (a bound of 0 means no bound) with its id as
-    * ctx cookie, starting from `carried`; the last entry's output is
-    * returned (`carried` itself when there are no entries).
+    * cookie (reference: src/match_traildb.c:513-560). `events` are ts-sorted
+    * with consecutive duplicates removed (the same as dedup after the
+    * bounds: duplicates share a ts). Entry e runs on the ts slice
+    * `[max(start, cut), end)` (0 = no bound) with its id as ctx cookie,
+    * from `carried`; the last entry's output (else `carried`) is returned.
     */
-  def runEntries(
-      prog: CompiledProgram,
-      tuples: IndexedSeq[ForeachTuple],
-      carried: Array[FsmState],
-      events: Array[TrailEvent],
-      entries: IndexedSeq[WindowEntry],
-      cut: Long,
-      params: Bindings,
-      fcalls: Map[String, Fcall],
-      emit: String => (Int, Results) => Unit,
-  ): Array[FsmState] = {
-    def from(bound: Long, lo: Int): Int = {
-      val i = events.indexWhere(_.ts >= bound, lo)
-      if (i < 0) events.length else i
-    }
+  def runEntries(prog: CompiledProgram, tuples: IndexedSeq[ForeachTuple], carried: Array[FsmState],
+      events: Array[TrailEvent], entries: IndexedSeq[WindowEntry], cut: Long, params: Bindings,
+      fcalls: Map[String, Fcall], emit: String => (Int, Results) => Unit): Array[FsmState] = {
+    def from(ts: Long, lo: Int): Int = events.indexWhere(_.ts >= ts, lo) match { case -1 => events.length; case i => i }
     var out = carried
     for (entry <- entries) {
       val ws = math.max(entry.start, cut)
       val we = entry.end
       val lo = if (ws == 0L) 0 else from(ws, 0)
       val hi = if (we == 0L) events.length else from(we, lo)
-      val slice =
-        if (lo == 0 && hi == events.length) events
-        else java.util.Arrays.copyOfRange(events, lo, hi)
+      val slice = if (lo == 0 && hi == events.length) events else java.util.Arrays.copyOfRange(events, lo, hi)
       out = processTrail(prog, tuples, carried, slice, entry.id, ws, we, params, fcalls, emit(entry.id))
     }
     out
   }
 
   /** Does running the FSM over an EMPTY trail mutate a fresh state? True
-    * when the entrypoint chain immediately enters outer window-block rules
-    * (state.ri advances past the markers and outer expiries are pushed at
-    * ts 0), which makes zero-event trails observable at finalization
-    * (after-yields at MAX_TIMESTAMP). The reference runs the per-trail loop
-    * for every trail present in a DB — including trails whose events are
-    * all filtered away — so engines that drop empty trails early must use
-    * this probe to know when that shortcut is visible.
+    * when the entrypoint chain enters outer window-block rules (outer
+    * expiries pushed at ts 0), which makes zero-event trails observable at
+    * finalization. The reference runs the per-trail loop for every trail in
+    * a DB, even one whose events are all filtered away, so engines that drop
+    * empty trails early use this probe to know when that is visible.
     */
   def emptyRunMutates(prog: CompiledProgram): Boolean = {
     val st = FsmState.initial(prog)
-    Fsm.matchTrail(
-      prog, st, new TrailCtx("", Array.empty[TrailEvent], 0L, 0L),
-      Bindings(), new Results(prog))
+    Fsm.matchTrail(prog, st, new TrailCtx("", Array.empty[TrailEvent]), Bindings(), new Results(prog))
     !st.isInitial(prog.entrypoint)
   }
 
   /** MAX_TIMESTAMP finalization for one trail's surviving states
-    * (reference: src/match_traildb.c:899-944).
-    *
-    * Identity-aware: [[processTrail]]'s early-break and memo paths ALIAS
-    * one state object across a whole tuple group (the reference's N+1
-    * bound says they are identical — copying them per tuple was the
-    * dominant cost of wide foreach loops). An aliased group finalizes
-    * ONCE when the run never consults the foreach binding — the same
-    * groupby-independence rule the per-event loop uses — and falls back
-    * to one run per tuple from a pre-run snapshot when it does. Skip/run
-    * membership is decided from the PRE-finalization states (the
-    * representative's in-place run must not change later aliases'
-    * eligibility).
+    * (reference: src/match_traildb.c:899-944). A finalization run reads no
+    * event field, so where the class loop applies it is binding-free: it
+    * runs once per distinct state, and every tuple in that state shares the
+    * result. Otherwise each tuple runs with its own bindings.
     */
-  def finalizeTrail(
-      prog: CompiledProgram,
-      tuples: IndexedSeq[ForeachTuple],
-      states: Array[FsmState],
-      cookie: String,
-      params: Bindings,
-      fcalls: Map[String, Fcall],
-      onResult: (Int, Results) => Unit,
-  ): Unit = {
-    val gvars = prog.groupbyVars
-    val groupbySet = gvars.toSet
+  def finalizeTrail(prog: CompiledProgram, tuples: IndexedSeq[ForeachTuple], states: Array[FsmState],
+      cookie: String, params: Bindings, fcalls: Map[String, Fcall], onResult: (Int, Results) => Unit): Unit = {
+    val plan = planFor(prog, tuples, params, fcalls)
+    val m = new Machine(prog, fcalls)
+    val ctx = TrailCtx.finalization(cookie)
     val stats = new RunStats
-    val n = states.length
-    val fin = new Array[Boolean](n)
-    val shares = new java.util.IdentityHashMap[FsmState, Integer]()
-    // aliases are overwhelmingly CONSECUTIVE (processTrail's early-break
-    // groups) — walk runs so the map sees one op per run, not per tuple
-    var j = 0
-    while (j < n) {
-      var e = j + 1
-      while (e < n && (states(e) eq states(j))) e += 1
-      if (!states(j).isInitial(prog.entrypoint)) {
-        java.util.Arrays.fill(fin, j, e, true)
-        val c = shares.get(states(j))
-        shares.put(states(j), if (c == null) e - j else c + (e - j))
+    val done = new java.util.HashMap[FsmState, Results]()
+    for (j <- states.indices if !states(j).isInitial(prog.entrypoint)) {
+      var r = if (plan.classes) done.get(states(j)) else null
+      if (r == null) {
+        r = new Results(prog)
+        m.run(states(j).copyOf(), ctx.range(0, 1), if (plan.classes) plan.generic else plan.binds(j), r, stats)
+        if (plan.classes) done.put(states(j), r)
       }
-      j = e
-    }
-    val done = new java.util.IdentityHashMap[FsmState, Results]()
-    val preSnap = new java.util.IdentityHashMap[FsmState, FsmState]()
-    // consecutive-alias cache: a broadcastable result flows to the next
-    // tuples of the same run with zero map lookups
-    var prevSt: FsmState = null
-    var prevRes: Results = null
-    j = 0
-    while (j < n) {
-      if (fin(j)) {
-        val st = states(j)
-        if ((st eq prevSt) && prevRes != null) onResult(j, prevRes)
-        else {
-          prevSt = st
-          prevRes = null
-          val cached = done.get(st)
-          if (cached != null) { prevRes = cached; onResult(j, cached) }
-          else {
-            val pre = preSnap.get(st)
-            if (pre != null) {
-              // shared state whose finalization IS binding-sensitive: each
-              // tuple runs from its own copy of the pre-run snapshot
-              val scratch = new Results(prog)
-              stats.reset()
-              Fsm.matchTrail(
-                prog, pre.copyOf(), TrailCtx.finalization(cookie),
-                tuples(j).bind(gvars, params), scratch, stats, groupbySet, fcalls,
-              )
-              onResult(j, scratch)
-            } else {
-              val shared = shares.get(st) > 1
-              val snap = if (shared) st.copyOf() else null
-              val scratch = new Results(prog)
-              stats.reset()
-              Fsm.matchTrail(
-                prog, st, TrailCtx.finalization(cookie),
-                tuples(j).bind(gvars, params), scratch, stats, groupbySet, fcalls,
-              )
-              onResult(j, scratch)
-              if (shared) {
-                if (!stats.groupbyUsed) { done.put(st, scratch); prevRes = scratch }
-                else preSnap.put(st, snap)
-              }
-            }
-          }
-        }
-      }
-      j += 1
+      onResult(j, r)
     }
   }
 }

@@ -163,10 +163,9 @@ object ProgramFuzzSpec {
           List(Ir.FieldTerm(if (rnd.nextBoolean()) "type" else "cookie")))
         case 2 => Ir.Yield("&m0", List(Ir.FieldTerm("type")))
         case 3 => Ir.Yield("^h0", List(Ir.FieldTerm("advertisable_eid")))
-        // the foreach var ITSELF — in an after-clause this makes
-        // finalization binding-sensitive, exercising the identity-aware
-        // finalizeTrail's snapshot branch under random programs (unbound
-        // %g renders "" identically in both engines)
+        // the foreach var ITSELF — yields that echo it make TrailMatcher
+        // replay each tuple alone instead of stepping tuple classes
+        // (unbound %g renders "" identically in both engines)
         case 4 => Ir.Yield("#sg", List(Ir.ParamTerm("%g")))
       })
     def randomAction(ri: Int): String = rnd.nextInt(5) match {

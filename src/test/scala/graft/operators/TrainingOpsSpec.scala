@@ -232,14 +232,13 @@ class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     def check(vs: Seq[Long], es: Seq[(Long, Long)], clue: String): Unit = {
       val vdf = vs.toDF("id")
       val edf = es.toDF("x", "y")
-      Dedup.lastClosureIterations = -1
-      val stars = Dedup.connectedComponentsStars(vdf, edf)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      // the scale-probe witness must be armed by every closure call
-      assert(Dedup.lastClosureIterations >= 1, s"$clue: stars witness unset")
-      val baseline = Dedup.connectedComponents(vdf, edf)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(Dedup.lastClosureIterations >= 0, s"$clue: min-label witness unset")
+      val starsCc = Dedup.connectedComponentsStars(vdf, edf)
+      val stars = starsCc.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      // every closure call reports the rounds it ran
+      assert(starsCc.rounds >= 1, s"$clue: stars rounds unset")
+      val baselineCc = Dedup.connectedComponents(vdf, edf)
+      val baseline = baselineCc.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(baselineCc.rounds >= 0, s"$clue: min-label rounds unset")
       assert(stars == baseline, clue)
     }
     // long chain — the adversarial case for min-label propagation
@@ -555,18 +554,18 @@ class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("a", "b")
     val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L, 20L -> 20L)
     // driver union-find path (under the collect threshold)
-    val small = graft.operators.Dedup.connectedComponents(vertices, edges)
+    val small = graft.operators.Dedup.connectedComponents(vertices, edges).labels
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(small == expected)
     // distributed min-label + pointer-jumping path (threshold forced to 0)
-    val dist = graft.operators.Dedup.connectedComponents(vertices, edges, collectThreshold = 0L)
+    val dist = graft.operators.Dedup.connectedComponents(vertices, edges, collectThreshold = 0L).labels
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(dist == expected)
     // an iteration budget too small to converge must fail fast, never
     // return a silently-unconverged (wrong) label set
     val e = intercept[IllegalArgumentException] {
       graft.operators.Dedup.connectedComponents(
-        vertices, edges, maxIter = 1, collectThreshold = 0L).collect()
+        vertices, edges, maxIter = 1, collectThreshold = 0L).labels.collect()
     }
     assert(e.getMessage.contains("converge"))
   }
@@ -617,7 +616,7 @@ class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // and the CC closure keeps the null-vector id as its own component
     val cc = graft.operators.Dedup.connectedComponentsStars(
       withNull.select("vec_id"),
-      Similarity.quantizedLshPairsAbove(withNull, 1, 100, planes = 2))
+      Similarity.quantizedLshPairsAbove(withNull, 1, 100, planes = 2)).labels
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(cc(99L) == 99L, s"null-vector doc must stay self-canonical: $cc")
   }

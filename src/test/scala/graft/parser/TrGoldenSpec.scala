@@ -70,7 +70,15 @@ class TrGoldenSpec extends AnyFunSuite {
         .toList.sortBy(_.toString)
     else Nil
 
-  for (path <- files) {
+  /** The in-repo corpus (src/test/resources/golden): foreach anchors whose
+    * expected values are derived by hand from the reference semantics
+    * (SURVEY.md §1-3), independent of any engine.
+    */
+  private val inRepo =
+    Files.list(Paths.get(getClass.getResource("/golden").toURI)).iterator.asScala
+      .filter(_.getFileName.toString.endsWith(".tr")).toList.sortBy(_.toString)
+
+  for (path <- files ++ inRepo) {
     val text = Files.readString(path)
     TrParser.extractTestTrailer(text) match {
       case None => test(s"${path.getFileName} (no trailer)") { cancel("no embedded tests") }
@@ -85,7 +93,8 @@ class TrGoldenSpec extends AnyFunSuite {
         val windows = loadWindowSet(Paths.get(path.toString + ".window.csv"))
         val exclude = loadExclude(Paths.get(path.toString + ".exclude.csv"))
         for ((t, i) <- tests.zipWithIndex) {
-          val name = s"${path.getFileName} #$i${if (t.desc.nonEmpty) s" (${t.desc})" else ""}"
+          val corpus = if (inRepo.contains(path)) "golden/" else ""
+          val name = s"$corpus${path.getFileName} #$i${if (t.desc.nonEmpty) s" (${t.desc})" else ""}"
           test(name) {
             val prog = Compiled.compile(program)
             val out = LocalRunner.run(prog, t.dbs, params, tuples, t.cnf, windows, exclude, fcalls)
@@ -99,6 +108,10 @@ class TrGoldenSpec extends AnyFunSuite {
           }
         }
     }
+  }
+
+  test("in-repo golden corpus discovered") {
+    assert(inRepo.size >= 4, s"expected >=4 in-repo .tr files, found ${inRepo.size}")
   }
 
   test("tr corpus discovered") {

@@ -6,17 +6,18 @@ import graft.parser.TrParser
 import Fsm.{Bindings, FsmState, TrailEvent}
 import LocalRunner.ForeachTuple
 
-/** The reference's match-call bound: for N distinct foreach values present
-  * in a trail, the per-trail foreach loop makes at most N+1 FSM runs — one
-  * per present value plus one memoized run that covers every absent value
-  * (reference: src/match_traildb.c:596-608).
+/** The per-trail foreach loop's work bound, read from
+  * `TrailMatcher.matchCalls` (FSM event-steps). The reference makes at most
+  * N+1 whole-trail match calls for N distinct foreach values present in a
+  * trail (src/match_traildb.c:596-608), i.e. (N+1)·L event-steps for a
+  * trail of L events; the class loop must stay within that for any trail,
+  * and within 2L on perftest1's program, which takes one generic and one
+  * special step per event.
   *
   * Fixture: perftest1-shaped trails (the reference perf fixture, as
   * `graft.PerfFixture` generates it) — implicit `foreach %aeid` over the
   * "" tuple plus the lexicon, two DBs of 100 events each, cookie c's
-  * events cycling through `(c + 1) % 100 + 1` distinct values. The ""
-  * tuple sorts first, so the group representative's own value is absent:
-  * that run must seed the absent-value memo, not be repeated.
+  * events cycling through `(c + 1) % 100 + 1` distinct values.
   */
 class MatchCallBoundSpec extends AnyFunSuite {
 
@@ -39,29 +40,34 @@ class MatchCallBoundSpec extends AnyFunSuite {
     }).toArray
   }
 
-  test("perftest1-shaped trails make exactly N+1 match calls each, with exact counters") {
+  test("perftest1-shaped trails take <= 2L event-steps, exact counters") {
     // seg 2, 3, 5, 100 (every lexicon value present) and 1
     val cookies = Seq(1, 2, 4, 98, 99)
     val lexicon = (0 until 100).map(_.toString)
     // the 101 lexicon tuples, then 10k tuples whose 9.9k extra values are
-    // absent from every trail: calls must not scale with |@arr|
-    for (extra <- Seq(Nil, (0 until 9899).map(i => s"absent$i"))) {
+    // absent from every trail: steps must not grow with |@arr|
+    val stepsByInput = for (extra <- Seq(Nil, (0 until 9899).map(i => s"absent$i"))) yield {
       val values = "" +: (lexicon ++ extra).sorted
       val tuples = values.map(v => ForeachTuple(Vector(Left(v)))).toVector
-      TrailMatcher.matchCalls.reset()
-      for (c <- cookies) {
+      for (c <- cookies) yield {
         val got = new Array[Long](tuples.length)
         val saved = Array.fill(tuples.length)(FsmState.initial(prog))
-        TrailMatcher.processTrail(prog, tuples, saved, trail(c), c.toString, 0L, 0L, Bindings(), Map.empty,
+        val events = trail(c)
+        TrailMatcher.matchCalls.reset()
+        TrailMatcher.processTrail(prog, tuples, saved, events, c.toString, 0L, 0L, Bindings(), Map.empty,
           (j, r) => got(j) += r.counters.getOrElse("r", 0L))
+        val steps = TrailMatcher.matchCalls.sum()
         val want = values.map { v =>
           if (lexicon.contains(v) && v.toInt < seg(c)) 2L * (0 until 100).count(_ % seg(c) == v.toInt)
           else 0L
         }
         assert(got.toVector == want, s"cookie $c counters, ${tuples.length} tuples")
+        val n = math.min(seg(c), 100) // distinct values present
+        assert(steps <= (n + 1L) * events.length, s"cookie $c: $steps steps > (N+1)L")
+        assert(steps <= 2L * events.length, s"cookie $c: $steps steps > 2L")
+        steps
       }
-      val bound = cookies.map(c => math.min(seg(c), 100) + 1).sum
-      assert(TrailMatcher.matchCalls.sum() == bound, s"${tuples.length} tuples")
     }
+    assert(stepsByInput(0) == stepsByInput(1), "10k tuples must cost the 101-tuple input's steps")
   }
 }
