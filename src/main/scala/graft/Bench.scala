@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   *     timed again; it adds nothing to `value`;
   *   - per query, one listener records shuffle-write bytes, spill bytes,
   *     stages and tasks of its last run. `SPARK_GRAFT_CPUS` sets the
-  *     local core count.
+  *     local core count (default: every available processor).
   */
 object Bench {
 
@@ -55,8 +55,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val a = parse(args.toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(cpus).appName("bench").getOrCreate()
+    val spark = GraftSession.builder().appName("bench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try println(run(spark, a)) finally spark.stop()
   }

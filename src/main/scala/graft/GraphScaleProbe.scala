@@ -22,7 +22,7 @@ import graft.operators.Graph
   *
   * Also runs [[Graph.hyperBallHarmonic]] on a binary de Bruijn graph two
   * decades past the fixture (|V|=2048, diameter exactly 11) and records
-  * [[Graph.lastHyperBallRounds]] — the convergence early-exit must stop at
+  * its returned rounds (`Graph.HyperBall.rounds`) — the early-exit must stop at
   * diameter+1 = 12 rounds, not the 16-hop ceiling, and per-node sketch
   * state is what bounds memory (2048 × 16 KiB ≈ 32 MB/round here).
   *
@@ -58,8 +58,7 @@ object GraphScaleProbe {
   def main(args: Array[String]): Unit = {
     val baseE = args.headOption.map(_.toLong).getOrElse(1000000L)
     val mult = args.lift(1).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(cpus).appName("graph-scale-probe").getOrCreate()
+    val spark = GraftSession.builder().appName("graph-scale-probe").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def r2(v: Double) = math.round(v * 100) / 100.0
 
@@ -103,14 +102,13 @@ object GraphScaleProbe {
     // HyperBall convergence arm: diameter EXACTLY 11 at n=2048 — the
     // early-exit must stop at 12 rounds (11 growth + 1 saturated detect),
     // well under the 16-hop ceiling
-    Graph.lastHyperBallRounds = -1
     val sw = deBruijnEdges(spark, 2048L).localCheckpoint(true)
     val t0 = System.nanoTime()
     // maxLocalVertices = 0: this arm MEASURES the distributed round loop's
     // convergence — the small-graph driver arm would otherwise absorb the
     // 2048-node fixture
-    Graph.hyperBallHarmonic(sw, maxLocalVertices = 0)
-      .write.format("noop").mode("overwrite").save()
+    val hb = Graph.hyperBallHarmonic(sw, maxLocalVertices = 0)
+    hb.scores.write.format("noop").mode("overwrite").save()
     val hbSec = (System.nanoTime() - t0) / 1e9
 
     val commit =
@@ -120,7 +118,7 @@ object GraphScaleProbe {
       s"""{"metric":"graph_scale_probe","commit":"$commit","mult":$mult,""" +
         s""""base":$baseJson,"scaled":$scaledJson,""" +
         s""""ratio":{"pagerank":${r2(prRatio)},"weighted":${r2(wRatio)}},""" +
-        s""""hyperball":{"n_vertices":2048,"diameter":11,"max_hops":16,"rounds":${Graph.lastHyperBallRounds},"sec":${r2(hbSec)}}}"""
+        s""""hyperball":{"n_vertices":2048,"diameter":11,"max_hops":16,"rounds":${hb.rounds},"sec":${r2(hbSec)}}}"""
     val outPath = sys.env.getOrElse("SPARK_GRAFT_GRAPH_PROBE_OUT", "/tmp/graph_probe_out.json")
     try {
       val w = new java.io.PrintWriter(outPath, "UTF-8")

@@ -88,7 +88,7 @@ object Json2Tdb {
       }
     }
 
-    val spark = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import scala.jdk.CollectionConverters._
     spark.createDataFrame(rows.asJava, schema).write.mode("overwrite").parquet(outPath)

@@ -36,7 +36,7 @@ object PerfFixture {
   def main(args: Array[String]): Unit = {
     val nCookies = args.headOption.map(_.toInt).getOrElse(100000)
     val nEventsPerDb = 100 // × 2 DBs = 200 events/trail (reference config)
-    val spark = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -14,7 +14,7 @@ object PlanAudit {
     val names = if (args.length > 1) args.tail.toSeq
     else Seq("q1_agg", "q5_join_broadcast", "f2_window_filter", "m1_fsm_count",
       "d_minhash_lsh", "ann_brute_topk", "d_embed_neardup_exact", "d_exact_dup")
-    val spark = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     for (n <- names) {
       val df = SparkEntry.queries(n)(spark, sfDir)

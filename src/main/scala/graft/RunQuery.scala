@@ -10,8 +10,9 @@ package graft
   * }}}
   *
   * Under spark-submit the submitted master/conf win (see [[GraftSession]]);
-  * standalone it falls back to local[SPARK_GRAFT_CPUS]. Exits nonzero on an
-  * unknown query name, listing the registry.
+  * standalone it falls back to local[SPARK_GRAFT_CPUS] (default: every
+  * available processor). Exits nonzero on an unknown query name, listing
+  * the registry.
   */
 object RunQuery {
   def main(args: Array[String]): Unit = {
@@ -28,7 +29,7 @@ object RunQuery {
         System.err.println(s"queries: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}")
         sys.exit(2)
       case Some(fn) =>
-        val spark = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")).getOrCreate()
+        val spark = GraftSession.builder().getOrCreate()
         spark.sparkContext.setLogLevel("WARN")
         fn(spark, dir).show(maxRows, truncate = false)
         spark.stop()

@@ -87,8 +87,7 @@ object TaScaleProbe {
     * Prints {"metric":"ta_deca_probe",...}.
     */
   private def decaMain(work: String): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(cpus).appName("ta-deca-probe").getOrCreate()
+    val spark = GraftSession.builder().appName("ta-deca-probe").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import org.apache.spark.sql.functions._
     val probeQs = Seq("ta_sessionize", "ta_asof_orders", "ta_rfm_segments")
@@ -144,8 +143,7 @@ object TaScaleProbe {
 
   /** The hot-session adversarial arm (see object doc). */
   private def hotMain(work: String): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(cpus).appName("ta-hot-probe").getOrCreate()
+    val spark = GraftSession.builder().appName("ta-hot-probe").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val arms = Seq(30L, 360L).map(d => hotArm(spark, s"$work/hot$d", d))
     val commit =
@@ -245,8 +243,7 @@ object TaScaleProbe {
     }
     val mult = args.headOption.map(_.toInt).getOrElse(10)
     val work = args.lift(1).getOrElse("/tmp/graft_ta_span")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(cpus).appName("ta-span-probe").getOrCreate()
+    val spark = GraftSession.builder().appName("ta-span-probe").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import org.apache.spark.sql.functions._
 

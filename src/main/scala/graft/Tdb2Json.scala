@@ -34,7 +34,7 @@ object Tdb2Json {
     require(path != null,
       "usage: Tdb2Json <events.parquet> [--uuid-col c] [--ts-col c] [--tiebreak-col c] [--limit n]")
 
-    val spark = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val df0 = spark.read.parquet(path)
     val fields = df0.columns.filterNot(c => c == uuidCol || c == tsCol).toSeq

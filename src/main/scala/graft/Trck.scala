@@ -118,27 +118,12 @@ object Trck {
         }
         LocalRunner.runModule(module, prog, dbs.toSeq, binds, tuples, cnf, windows, exclude)
       } else {
-        val spark = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
+        val spark = GraftSession.builder().getOrCreate()
         spark.sparkContext.setLogLevel("WARN")
-        val dfs = inputs.map(spark.read.parquet(_)).toSeq
-        // sequential-DB semantics: min_ts cut + per-source replay order.
-        // Pre-cut per-source trail presence is needed whenever empty
-        // per-entry runs are observable — window runs always, non-window
-        // runs when the program's entrypoint chain mutates a fresh state —
-        // so a fully-cut source still runs its empty loop like the
-        // reference iterating every DB's trail list.
-        val needsPresence = dfs.lengthCompare(1) > 0 &&
-          (windows.isDefined || graft.trck.TrailMatcher.emptyRunMutates(prog))
-        val (events, srcCuts, presence) =
-          if (needsPresence) {
-            val (e, c, p) = TrckSparkRunner.unionSourcesWithPresence(dfs, tsCol, uuidCol)
-            (e, c, Some(p))
-          } else {
-            val (e, c) = TrckSparkRunner.unionSources(dfs, tsCol)
-            (e, c, None)
-          }
-        // the implicit-foreach lexicon sweeps the UNcut union
-        val lexicon = if (dfs.lengthCompare(1) == 0) None else Some(dfs.reduce(_ unionByName _))
+        // sequential-DB semantics (min_ts cut, per-source replay order,
+        // presence and lexicon over every DB) live in unionSources + runRaw
+        val (events, srcCuts) =
+          TrckSparkRunner.unionSources(inputs.map(spark.read.parquet(_)).toSeq, tsCol)
         val filters = TrckSparkRunner.EngineFilters(
           cnf = cnf.flatMap(c => TrckSparkRunner.cnfColumn(c.clauses, events)),
           windows = windows,
@@ -149,9 +134,8 @@ object Trck {
               Some(exclude.toSeq.toDF(uuidCol))
             },
         )
-        val out = TrckSparkRunner.runRawModule(
-          module, prog, events, uuidCol, tsCol, tiebreak.reverse, binds, tuples, filters,
-          lexiconEvents = lexicon, srcCuts = srcCuts, presence = presence)
+        val out = TrckSparkRunner.runRaw(
+          prog, events, uuidCol, tsCol, tiebreak.reverse, binds, tuples, filters, module, srcCuts)
         spark.stop()
         out
       }

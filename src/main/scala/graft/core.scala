@@ -89,15 +89,8 @@ object Tables {
   * bench scale, a regression for already-cheap map-only queries.
   */
 object Spread {
-  /** A/B kill switch for measurement only: SPARK_GRAFT_NO_SPREAD=1 makes
-    * every Spread call a no-op, so the same build can time both shapes
-    * back-to-back on the same box (drift-cancelling A/B). Never set in
-    * the bench/driver environment.
-    */
-  private val disabled = sys.env.contains("SPARK_GRAFT_NO_SPREAD")
-
   def apply(df: DataFrame): DataFrame = {
-    if (disabled || df.isStreaming) df
+    if (df.isStreaming) df
     else {
       val spark = df.sparkSession
       val target = spark.sparkContext.defaultParallelism.toLong
@@ -140,6 +133,12 @@ object Spread {
   * back to `local[cpus]` with a matching modest shuffle partition count.
   */
 object GraftSession {
+  /** The builder every main uses: local cores from `SPARK_GRAFT_CPUS`,
+    * else every available processor.
+    */
+  def builder(): SparkSession.Builder =
+    builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString))
+
   def builder(cpus: String): SparkSession.Builder = {
     val b = SparkSession
       .builder()

@@ -166,10 +166,11 @@ object TrailEngine {
     * loop and finalization running — the same empty-trail parity
     * TrckSparkRunner maintains on the unprepared path, now durable in the
     * layout (filters over a prepared frame keep `__ghost=1` rows;
-    * runRaw(prepared = true) does so automatically). For multi-source
-    * frames built by unionSources, pass `presence` from
-    * [[TrckSparkRunner.unionSourcesWithPresence]] so a source fully below
-    * its min_ts cut keeps its (uuid, src) sentinel.
+    * runRaw(prepared = true) does so automatically). For multi-source runs,
+    * prepare the uncut [[TrckSparkRunner.unionSources]] frame with
+    * `srcCol = Some("__src")`: it is its own presence, so a source whose
+    * events all fall below its min_ts cut keeps its (uuid, src) sentinel,
+    * and runRaw applies the cut.
     */
   def prepare(
       events: DataFrame,
@@ -177,11 +178,10 @@ object TrailEngine {
       tsCol: String,
       tiebreak: Seq[String] = Nil,
       srcCol: Option[String] = None,
-      presence: Option[DataFrame] = None,
   ): DataFrame = {
     val withGhosts =
       if (events.columns.contains("__ghost")) events // already sentinel-bearing
-      else withPresenceSentinels(events, presence.getOrElse(events), uuidCol, tsCol, srcCol)
+      else withPresenceSentinels(events, events, uuidCol, tsCol, srcCol)
     withGhosts
       .repartition(col(uuidCol))
       // sort on the SAME cast values emits sorts on — raw-typed string
@@ -224,7 +224,8 @@ object TrailEngine {
         * sequentially, and `srcCuts(i)` (the min_ts cut of source i) feeds
         * the per-source ctx window start like LocalRunner's
         * `max(windowStart, minTs)` (Local.scala) — so Y5
-        * cookie_timestamp_filter_start yields match.
+        * cookie_timestamp_filter_start yields match, and rows below the
+        * cut never enter a replay.
         */
       srcCol: Option[String] = None,
       srcCuts: Array[Long] = Array.empty,
@@ -251,7 +252,7 @@ object TrailEngine {
     // 10 before 2) and does not join the dedup compare — per-source
     // segmentation already prevents cross-boundary elision.
     // "__ghost" marks zero-event sentinel rows (one per trail that exists
-    // in the source but lost every event to filters — see
+    // in the source but lost every event to the min_ts cut or filters — see
     // TrckSparkRunner.withSentinels): they assert the trail's presence per
     // source so the per-entry loop and finalization still run, but are
     // never materialized as events and never join the dedup compare.

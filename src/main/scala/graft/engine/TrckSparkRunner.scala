@@ -1,7 +1,5 @@
 package graft.engine
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -48,32 +46,14 @@ object TrckSparkRunner {
     ands.reduceOption(_ && _)
   }
 
-  /** Apply F1 (CNF) and F3 (exclude) to a trail-events DataFrame. F2
-    * (windows) is handled in [[run]] because it changes the trail keying,
-    * not just the row set.
-    */
-  def applyFilters(events: DataFrame, uuidCol: String, tsCol: String, filters: EngineFilters): DataFrame = {
-    var df = events
-    filters.cnf.foreach(c => df = df.filter(c))
-    filters.exclude.foreach { ex =>
-      df = df.join(
-        broadcast(ex.select(col(ex.columns.head).as(uuidCol))), Seq(uuidCol), "left_anti")
-    }
-    df
-  }
-
   /** Union one zero-event `__ghost` sentinel row per trail (per source, for
     * multi-source runs) present in `presentFrom`, so trails whose events
-    * are all filtered away still reach the engine's per-entry loop and
-    * MAX_TIMESTAMP finalization — the reference iterates DB trails
-    * regardless of how many events survive per-event filters
-    * (src/match_traildb.c:513-560). The engine never materializes sentinels
-    * as events (TrailEngine `__ghost` handling); for trails with surviving
-    * events the extra row is inert. By default presence is judged from the
-    * post-cut events; pass [[unionSourcesWithPresence]]'s frame through
-    * runRaw's `presence` to also cover a source whose events all fall
-    * below its min_ts cut (the reference still runs that DB's empty
-    * per-entry loop).
+    * are all cut or filtered away still reach the engine's per-entry loop
+    * and MAX_TIMESTAMP finalization — the reference iterates DB trails
+    * regardless of how many events survive the min_ts cut and per-event
+    * filters (src/match_traildb.c:513-560). The engine never materializes
+    * sentinels as events (TrailEngine `__ghost` handling); for trails with
+    * surviving events the extra row is inert.
     */
   private def withSentinels(
       real: DataFrame, presentFrom: DataFrame, uuidCol: String, tsCol: String): DataFrame =
@@ -81,27 +61,38 @@ object TrckSparkRunner {
       srcCol = if (presentFrom.columns.contains("__src")) Some("__src") else None)
 
   /** Widen a row predicate so `__ghost=1` presence sentinels survive it:
-    * sentinel rows carry null fields and ts 0, so any CNF/bounds predicate
-    * would silently drop them — losing exactly the empty-trail parity they
-    * exist for. No-op on frames without the column.
+    * sentinel rows carry null fields and ts 0, so any cut/CNF/bounds
+    * predicate would silently drop them — losing exactly the empty-trail
+    * parity they exist for. No-op on frames without the column.
     */
   private def keepGhosts(df: DataFrame, c: Column): Column =
     if (df.columns.contains("__ghost")) c || col("__ghost") === 1 else c
 
-  /** Multiple sequential sources ("TrailDBs") → one tagged DataFrame plus
-    * the per-source min_ts cuts, with the reference's cross-DB semantics
-    * (src/match_traildb.c:804 — `min_ts = tdb_max_timestamp(db)`, a plain
-    * OVERWRITE with the previous DB's max, NOT a running max): source i's
-    * events are dropped below source i-1's max timestamp (one tiny max()
-    * aggregation per source), and a `__src` column orders each trail's
-    * replay by source before timestamp (run/runRaw pick the column up
-    * automatically; pass the cuts through so the per-source ctx window
-    * starts — Y5 yields — clamp like LocalRunner's max(start, minTs)).
+  /** The min_ts cut as a row predicate over a `__src`-tagged frame: a row
+    * of source i needs `ts >= cuts(i)`, and a zero cut keeps every row
+    * (LocalRunner sets no lower bound for a window start of 0). It adds no
+    * column, so nothing joins the engine's dedup set; pushed through the
+    * union, each source's branch folds it to a plain `ts >= cut` scan
+    * filter.
+    */
+  private def cutPredicate(tsCol: String, cuts: Array[Long]): Option[Column] =
+    cuts.zipWithIndex.collect { case (cut, i) if cut != 0L =>
+      col("__src") =!= i || col(tsCol).cast("long") >= cut
+    }.reduceOption(_ && _)
+
+  /** Multiple sequential sources ("TrailDBs") → one `__src`-tagged
+    * DataFrame plus the per-source min_ts cuts, with the reference's
+    * cross-DB semantics (src/match_traildb.c:804 — `min_ts =
+    * tdb_max_timestamp(db)`, a plain OVERWRITE with the previous DB's max,
+    * NOT a running max): `cuts(i)` is source i-1's max timestamp (one tiny
+    * max() aggregation per source). No row is dropped here: [[runRaw]]
+    * takes the implicit-foreach lexicon and trail presence from the whole
+    * frame, as the reference reads every DB's lexicon and trail list, and
+    * then applies the cut before the shuffle. `__src` orders each trail's
+    * replay by source before timestamp; pass the cuts as runRaw's `srcCuts`.
     * Cross-DB-boundary duplicate events are NOT deduped — the engine runs
     * consecutive-dup elision per source segment, matching the per-DB trail
-    * reads. The cuts CANNOT be reconstructed from the cut data (a source
-    * whose max is below its own cut loses all rows yet still defines the
-    * next source's cut), hence the tuple return.
+    * reads.
     */
   def unionSources(sources: Seq[DataFrame], tsCol: String): (DataFrame, Array[Long]) = {
     require(sources.nonEmpty)
@@ -114,81 +105,18 @@ object TrckSparkRunner {
           .map(_.asInstanceOf[Long]).getOrElse(0L))
     }
     val cuts = (0L +: maxes.init).toArray // cuts(i) = max of source i-1
-    val df = sources.zipWithIndex.map { case (df, i) =>
-      val tagged = df.withColumn("__src", lit(i))
-      if (cuts(i) == 0L) tagged else tagged.filter(col(tsCol).cast("long") >= cuts(i))
-    }.reduce(_ unionByName _)
+    val df = sources.zipWithIndex.map { case (df, i) => df.withColumn("__src", lit(i)) }
+      .reduce(_ unionByName _)
     (df, cuts)
   }
 
-  /** [[unionSources]] plus a PRE-CUT presence frame: one (uuid, __src) row
-    * per trail per source it appears in, computed BEFORE the min_ts cut
-    * drops rows. Feed it to [[runRaw]]'s `presence` for window runs so a
-    * trail whose source-i events all fall below the cut still runs that
-    * source's per-entry loop with zero events, exactly like the reference
-    * iterating every DB's trail list. Costs one distinct pass per source —
-    * only pay it when the run needs reference-exact empty-trail semantics.
-    */
-  def unionSourcesWithPresence(
-      sources: Seq[DataFrame], tsCol: String, uuidCol: String): (DataFrame, Array[Long], DataFrame) = {
-    val (df, cuts) = unionSources(sources, tsCol)
-    val presence = sources.zipWithIndex
-      .map { case (s, i) => s.select(col(uuidCol)).distinct().withColumn("__src", lit(i)) }
-      .reduce(_ unionByName _)
-    (df, cuts, presence)
-  }
-
-  /** Run a program over a trail DataFrame and assemble reference-shaped
-    * results (one map per foreach tuple, or one for merged/no-groupby).
-    */
-  def run(
-      prog: CompiledProgram,
-      events: DataFrame,
-      uuidCol: String,
-      tsCol: String,
-      tiebreak: Seq[String] = Nil,
-      params: Bindings = Bindings(),
-      foreachTuples: Option[Vector[ForeachTuple]] = None,
-      filters: EngineFilters = EngineFilters(),
-      fcalls: Map[String, Fsm.Fcall] = Map.empty,
-      lexiconEvents: Option[DataFrame] = None,
-      srcCuts: Array[Long] = Array.empty,
-      presence: Option[DataFrame] = None,
-      prepared: Boolean = false,
-  ): Vector[mutable.LinkedHashMap[String, Any]] =
-    runRaw(prog, events, uuidCol, tsCol, tiebreak, params, foreachTuples, filters, fcalls,
-      lexiconEvents, srcCuts, presence, prepared).toOutputs
-
-  /** [[runRaw]] with a full fcall module: initialize fires on the driver
-    * before the query plan is built, finalize after the aggregated results
-    * are collected (runRaw is eager — the collects happen inside it), once
-    * per query run like the reference's main-scope calls
-    * (src/match_traildb.c:1248,1256).
-    */
-  def runRawModule(
-      module: Fsm.FcallModule,
-      prog: CompiledProgram,
-      events: DataFrame,
-      uuidCol: String,
-      tsCol: String,
-      tiebreak: Seq[String] = Nil,
-      params: Bindings = Bindings(),
-      foreachTuples: Option[Vector[ForeachTuple]] = None,
-      filters: EngineFilters = EngineFilters(),
-      lexiconEvents: Option[DataFrame] = None,
-      srcCuts: Array[Long] = Array.empty,
-      presence: Option[DataFrame] = None,
-      prepared: Boolean = false,
-  ): LocalRunner.RunOutput = {
-    module.onInitialize()
-    try runRaw(prog, events, uuidCol, tsCol, tiebreak, params, foreachTuples, filters,
-      module.fcalls, lexiconEvents, srcCuts, presence, prepared)
-    finally module.onFinalize()
-  }
-
-  /** As [[run]] but returns the raw [[LocalRunner.RunOutput]] (for the
-    * msgpack/proto sinks, which need the encoded tuples, not the rendered
-    * strings).
+  /** Run a program over a trail DataFrame and return the raw
+    * [[LocalRunner.RunOutput]] (`toOutputs` renders reference-shaped maps;
+    * the msgpack/proto sinks read the encoded tuples). The module's
+    * initialize hook fires on the driver before the query plan is built,
+    * its finalize hook after the aggregated results are collected (runRaw
+    * is eager — the collects happen inside it), once per query run like
+    * the reference's main-scope calls (src/match_traildb.c:1248,1256).
     */
   def runRaw(
       prog: CompiledProgram,
@@ -199,21 +127,11 @@ object TrckSparkRunner {
       params: Bindings = Bindings(),
       foreachTuples: Option[Vector[ForeachTuple]] = None,
       filters: EngineFilters = EngineFilters(),
-      fcalls: Map[String, Fsm.Fcall] = Map.empty,
-      /** implicit-foreach lexicon source when `events` is pre-cut (the
-        * reference sweeps the full DB lexicons, min_ts cut or not)
-        */
-      lexiconEvents: Option[DataFrame] = None,
-      /** per-source min_ts cuts from [[unionSources]] (required for Y5 /
-        * window-clamp parity whenever `events` carries a `__src` column)
+      module: Fsm.FcallModule = Fsm.FcallModule(Map.empty),
+      /** per-source min_ts cuts from [[unionSources]] (required whenever
+        * `events` carries a `__src` column)
         */
       srcCuts: Array[Long] = Array.empty,
-      /** pre-cut per-source trail presence from
-        * [[unionSourcesWithPresence]] — when given, zero-event sentinels
-        * are derived from it instead of the post-cut events, closing the
-        * last empty-trail gap (a source fully below its min_ts cut)
-        */
-      presence: Option[DataFrame] = None,
       /** true ⇒ `events` is a [[TrailEngine.prepare]] layout (or an
         * equivalent bucketed table): uuid-clustered, (uuid, src, ts,
         * tiebreak)-sorted, `__ghost` sentinels baked in — the per-query
@@ -224,92 +142,100 @@ object TrckSparkRunner {
         */
       prepared: Boolean = false,
   ): LocalRunner.RunOutput = {
-    // a sentinel-bearing frame (prepare layout) is its own presence source:
-    // CNF/bounds predicates are widened to keep __ghost rows, and the
-    // sentinel-union below is skipped
-    val hasGhostCol = events.columns.contains("__ghost")
-    require(
-      !prepared || hasGhostCol ||
-        (filters.windows.isEmpty && !TrailMatcher.emptyRunMutates(prog)),
-      "prepared layout lacks __ghost presence sentinels, but this run's " +
-        "empty-trail semantics are observable (window file, or the " +
-        "entrypoint chain mutates a fresh state): a listed cookie filtered " +
-        "to zero events would silently skip its per-entry loop — rebuild " +
-        "the layout with TrailEngine.prepare (it bakes sentinels in) or " +
-        "run unprepared")
-    // exclude first (excluded trails must not even run empty), CNF second —
-    // trail PRESENCE is judged pre-CNF, like the reference looking a cookie
-    // up in the DB before filtering its events (src/match_traildb.c:513-524)
-    val afterExclude = applyFilters(events, uuidCol, tsCol, filters.copy(cnf = None))
-    val filtered =
-      filters.cnf.map(c => afterExclude.filter(keepGhosts(afterExclude, c))).getOrElse(afterExclude)
-    val presentBase = presence
-      .map(p => applyFilters(p, uuidCol, tsCol, filters.copy(cnf = None)))
-      .getOrElse(afterExclude)
-    // implicit-foreach lexicon over the UNfiltered input: the reference
-    // reads the DB lexicon, not the filtered event stream
-    // (src/match_traildb.c:188-236; LocalRunner matches)
-    val tuples = TrailEngine.runTuples(prog, foreachTuples, lexiconEvents.getOrElse(events))
+    module.onInitialize()
+    try {
+      // a sentinel-bearing frame (prepare layout) is its own presence source:
+      // cut/CNF/bounds predicates are widened to keep __ghost rows, and the
+      // sentinel-union below is skipped
+      val hasGhostCol = events.columns.contains("__ghost")
+      require(
+        !prepared || hasGhostCol ||
+          (filters.windows.isEmpty && !TrailMatcher.emptyRunMutates(prog)),
+        "prepared layout lacks __ghost presence sentinels, but this run's " +
+          "empty-trail semantics are observable (window file, or the " +
+          "entrypoint chain mutates a fresh state): a listed cookie filtered " +
+          "to zero events would silently skip its per-entry loop — rebuild " +
+          "the layout with TrailEngine.prepare (it bakes sentinels in) or " +
+          "run unprepared")
+      val srcCol = if (events.columns.contains("__src")) Some("__src") else None
+      require(srcCol.isEmpty || srcCuts.nonEmpty,
+        "multi-source events (__src column) need the unionSources cuts passed as srcCuts")
+      // implicit-foreach lexicon over the uncut, unfiltered input: the
+      // reference reads the DB lexicons, not the filtered event stream
+      // (src/match_traildb.c:188-236; LocalRunner matches)
+      val tuples = TrailEngine.runTuples(prog, foreachTuples, events)
+      // exclude first (excluded trails must not even run empty); trail
+      // PRESENCE is judged on what is left, before the min_ts cut and CNF,
+      // like the reference looking a cookie up in each DB before cutting and
+      // filtering its events (src/match_traildb.c:513-524)
+      val presentBase = filters.exclude.fold(events) { ex =>
+        events.join(
+          broadcast(ex.select(col(ex.columns.head).as(uuidCol))), Seq(uuidCol), "left_anti")
+      }
+      // then the cut and CNF, before the shuffle; the engine clamps every
+      // entry to [max(start, cut), end) as well, so the cut only prunes
+      val filtered = (srcCol.flatMap(_ => cutPredicate(tsCol, srcCuts)) ++ filters.cnf)
+        .reduceOption(_ && _)
+        .map(c => presentBase.filter(keepGhosts(presentBase, c)))
+        .getOrElse(presentBase)
 
-    // F2 window file: drop unlisted trails AND events outside every window
-    // of their cookie before the shuffle (broadcast join on per-cookie
-    // coverage bounds — a 2-year trail with a 1-day window ships one day of
-    // events, like the old per-entry range join); the per-entry ctx loop
-    // runs inside the engine with the window list broadcast (reference
-    // window_set semantics incl. cookie-keyed state carry and one
-    // finalization per cookie). Safe because an event outside the union of
-    // its cookie's entry bounds can never enter any processTrail call.
-    val (trailDf, winEntries) = filters.windows match {
-      case Some(ws) =>
-        val spark = events.sparkSession
-        import spark.implicits._
-        val bounds = ws.entries
-          .groupBy(_.cookie)
-          .map { case (cookie, es) =>
-            // 0 means unbounded on that side for ANY entry of the cookie
-            val lo = if (es.exists(_.start == 0L)) 0L else es.map(_.start).min
-            val hi = if (es.exists(_.end == 0L)) 0L else es.map(_.end).max
-            (cookie, lo, hi)
+      // F2 window file: drop unlisted trails AND events outside every window
+      // of their cookie before the shuffle (broadcast join on per-cookie
+      // coverage bounds — a 2-year trail with a 1-day window ships one day of
+      // events, like the old per-entry range join); the per-entry ctx loop
+      // runs inside the engine with the window list broadcast (reference
+      // window_set semantics incl. cookie-keyed state carry and one
+      // finalization per cookie). Safe because an event outside the union of
+      // its cookie's entry bounds can never enter any processTrail call.
+      val (trailDf, winEntries) = filters.windows match {
+        case Some(ws) =>
+          val spark = events.sparkSession
+          import spark.implicits._
+          val bounds = ws.entries
+            .groupBy(_.cookie)
+            .map { case (cookie, es) =>
+              // 0 means unbounded on that side for ANY entry of the cookie
+              val lo = if (es.exists(_.start == 0L)) 0L else es.map(_.start).min
+              val hi = if (es.exists(_.end == 0L)) 0L else es.map(_.end).max
+              (cookie, lo, hi)
+            }
+            .toSeq
+            .toDF(uuidCol, "__wlo", "__whi")
+          val joined = filtered
+            .join(broadcast(bounds), Seq(uuidCol)) // inner: unlisted trails drop
+            .filter(keepGhosts(filtered,
+              (col("__wlo") === 0L || col(tsCol).cast("long") >= col("__wlo")) &&
+                (col("__whi") === 0L || col(tsCol).cast("long") < col("__whi"))))
+            .drop("__wlo", "__whi") // must not leak into the engine's dedup set
+          // A listed cookie whose events are all out-of-bounds (or all
+          // CNF-removed) must STILL run its per-entry loop and finalization —
+          // the reference iterates the window list against DB trails, not
+          // against surviving events — so keep a zero-event sentinel per
+          // listed cookie present in the pre-filter events. A sentinel-bearing
+          // layout already carries them (the inner bounds join keeps listed
+          // cookies' ghosts, keepGhosts saved them from the ts filter).
+          if (hasGhostCol) (joined, Some(ws.entries))
+          else {
+            val listed = presentBase
+              .join(broadcast(bounds.select(uuidCol)), Seq(uuidCol), "left_semi")
+            (withSentinels(joined, listed, uuidCol, tsCol), Some(ws.entries))
           }
-          .toSeq
-          .toDF(uuidCol, "__wlo", "__whi")
-        val joined = filtered
-          .join(broadcast(bounds), Seq(uuidCol)) // inner: unlisted trails drop
-          .filter(keepGhosts(filtered,
-            (col("__wlo") === 0L || col(tsCol).cast("long") >= col("__wlo")) &&
-              (col("__whi") === 0L || col(tsCol).cast("long") < col("__whi"))))
-          .drop("__wlo", "__whi") // must not leak into the engine's dedup set
-        // A listed cookie whose events are all out-of-bounds (or all
-        // CNF-removed) must STILL run its per-entry loop and finalization —
-        // the reference iterates the window list against DB trails, not
-        // against surviving events — so keep a zero-event sentinel per
-        // listed cookie present in the pre-filter events. A sentinel-bearing
-        // layout already carries them (the inner bounds join keeps listed
-        // cookies' ghosts, keepGhosts saved them from the ts filter).
-        if (hasGhostCol) (joined, Some(ws.entries))
-        else {
-          val listed = presentBase
-            .join(broadcast(bounds.select(uuidCol)), Seq(uuidCol), "left_semi")
-          (withSentinels(joined, listed, uuidCol, tsCol), Some(ws.entries))
-        }
-      case None =>
-        // Without windows the empty-trail run is observable only when the
-        // entrypoint chain mutates a fresh state (outer window-block entry:
-        // after-yields appear at finalization) — probe once and keep the
-        // common path sentinel-free (no extra distinct pass at scale).
-        if (hasGhostCol) (filtered, None)
-        else if (TrailMatcher.emptyRunMutates(prog))
-          (withSentinels(filtered, presentBase, uuidCol, tsCol), None)
-        else (filtered, None)
-    }
+        case None =>
+          // Without windows the empty-trail run is observable only when the
+          // entrypoint chain mutates a fresh state (outer window-block entry:
+          // after-yields appear at finalization) — probe once and keep the
+          // common path sentinel-free (no extra distinct pass at scale).
+          if (hasGhostCol) (filtered, None)
+          else if (TrailMatcher.emptyRunMutates(prog))
+            (withSentinels(filtered, presentBase, uuidCol, tsCol), None)
+          else (filtered, None)
+      }
 
-    val srcCol = if (events.columns.contains("__src")) Some("__src") else None
-    require(srcCol.isEmpty || srcCuts.nonEmpty,
-      "multi-source events (__src column) need the unionSources cuts passed as srcCuts")
-    val em = TrailEngine
-      .emits(prog, trailDf, uuidCol, tsCol, tiebreak, params, Some(tuples), fcalls,
-        winEntries, srcCol, srcCuts, prepared)
-    aggregateEmits(prog, tuples, em)
+      val em = TrailEngine
+        .emits(prog, trailDf, uuidCol, tsCol, tiebreak, params, Some(tuples), module.fcalls,
+          winEntries, srcCol, srcCuts, prepared)
+      aggregateEmits(prog, tuples, em)
+    } finally module.onFinalize()
   }
 
   /** Fold an emit stream ([[TrailEngine.emits]] schema) into reference-shaped

@@ -511,11 +511,11 @@ object Dedup {
     */
   private def shingleStream(docs: DataFrame, k: Int,
                             idCol: String, textCol: String): DataFrame =
-    // r21: NOT spread — drift-cancelled A/B (SPARK_GRAFT_NO_SPREAD, 2×4
-    // reps each way) read the substr family consistently SLOWER with a
-    // spread here (c_substr_decon 0.79→1.37, c_substr_decon_clean
-    // 1.00→1.69, d_substr_dup 1.43→1.71): the xxhash shingle explode is
-    // cheap, and this stream's TWO consumers each pay the added exchange.
+    // r21: NOT spread — a drift-cancelled A/B (2×4 reps each way) read
+    // the substr family consistently SLOWER with a spread here
+    // (c_substr_decon 0.79→1.37, c_substr_decon_clean 1.00→1.69,
+    // d_substr_dup 1.43→1.71): the xxhash shingle explode is cheap, and
+    // this stream's TWO consumers each pay the added exchange.
     docs.filter(col(textCol).isNotNull)
       .filter(size(split(trim(col(textCol)), "\\s+")) >= k)
       .select(col(idCol), posexplode(graft.functions.ShingleHash64(col(textCol), k)))

@@ -324,9 +324,6 @@ object Graph {
     * [[hyperBallHarmonic]], never as the 100 TB path (the same
     * exact-feeder-vs-production-twin split as d_embed_cc / d_embed_cc_lsh).
     */
-  def shortestPaths(links: DataFrame, doublingRounds: Int = 4): DataFrame =
-    shortestPathsFromEdges(links.distinct(), doublingRounds)
-
   private def shortestPathsFromEdges(edges: DataFrame, doublingRounds: Int): DataFrame = {
     require(doublingRounds >= 1, "need at least one doubling round")
     var dist = edges.select(col("src").as("u"), col("dst").as("v"), lit(1L).as("d"))
@@ -389,14 +386,14 @@ object Graph {
     * FLAG against the exact ppm value (the a4_hll_estimate_check
     * pattern).
     */
-  /** Rounds the last [[hyperBallHarmonic]] call actually executed before
-    * the no-counter-changed termination fired (the convergence witness the
-    * scale probes record; the CC closures return theirs instead, as
-    * `Dedup.Components.rounds`): on a graph of diameter d it should read
-    * d+1 — d growing rounds plus the one saturated round that detects
-    * convergence. JVM-wide, local-mode-probe use only.
+  /** A [[hyperBallHarmonic]] result: `scores` (host, hb_centrality) and the
+    * number of `rounds` the loop executed before the no-counter-changed
+    * termination fired — the convergence witness a scale test reads (as
+    * `Dedup.Components.rounds` is for the CC closures): on a graph of
+    * diameter d it reads d+1, d growing rounds plus the one saturated round
+    * that detects convergence.
     */
-  @volatile var lastHyperBallRounds: Int = -1
+  final case class HyperBall(scores: DataFrame, rounds: Int)
 
   /** Driver-local vertex bound for [[hyperBallHarmonic]]'s small-graph
     * arm: register state is 16 KiB per node, so 4096 nodes is 64 MiB of
@@ -408,7 +405,7 @@ object Graph {
   val HyperBallLocalMaxEdges = 1000000L
 
   def hyperBallHarmonic(links: DataFrame, maxHops: Int = 16,
-                        maxLocalVertices: Int = HyperBallLocalMaxVertices): DataFrame = {
+                        maxLocalVertices: Int = HyperBallLocalMaxVertices): HyperBall = {
     require(maxHops >= 1, "need at least one hop")
     val edges = links.distinct()
     val nodes = nodesOf(edges)
@@ -471,8 +468,7 @@ object Graph {
       st = stepped.select(col("host"), col("regs"), col("est"), col("hacc"))
       r += 1
     }
-    lastHyperBallRounds = r - 1
-    st.select(col("host"), col("hacc").as("hb_centrality"))
+    HyperBall(st.select(col("host"), col("hacc").as("hb_centrality")), r - 1)
   }
 
   /** Driver replay of [[pageRankFrom]] for small graphs: same uniform or
@@ -581,13 +577,13 @@ object Graph {
     * [[hyperBallHarmonic]]): same singleton-sketch seeding, same
     * register-max union along in-edges each round, same
     * `max(0, est_new − est) / r` accumulation in the same round order,
-    * same no-register-changed termination and `lastHyperBallRounds`
-    * witness — the double arithmetic is step-for-step the distributed
-    * plan's, so outputs match bit-for-bit.
+    * same no-register-changed termination and rounds witness — the double
+    * arithmetic is step-for-step the distributed plan's, so outputs match
+    * bit-for-bit.
     */
   private def hyperBallLocal(spark: org.apache.spark.sql.SparkSession,
                              hosts: Array[Long], edgeArr: Array[(Long, Long)],
-                             maxHops: Int): DataFrame = {
+                             maxHops: Int): HyperBall = {
     import spark.implicits._
     val idx = hosts.zipWithIndex.toMap
     val n = hosts.length
@@ -622,8 +618,7 @@ object Graph {
       regs = next
       r += 1
     }
-    lastHyperBallRounds = r - 1
-    hosts.indices.map(i => (hosts(i), hacc(i))).toDF("host", "hb_centrality")
+    HyperBall(hosts.indices.map(i => (hosts(i), hacc(i))).toDF("host", "hb_centrality"), r - 1)
   }
 
   /** Staged-CTE oracle for [[pageRankFrom]]: r0..r`iters` generated
@@ -765,7 +760,7 @@ object Graph {
       (s, dir) => {
         val links = syntheticLinks(Tables(s, dir, "documents"))
         val exact = harmonicExact(links)
-        val hb = hyperBallHarmonic(links)
+        val hb = hyperBallHarmonic(links).scores
         exact.join(hb, Seq("host"))
           .select(col("host"), col("harmonic_ppm"),
             (abs(col("hb_centrality") - col("harmonic_ppm") / lit(1e6)) <=

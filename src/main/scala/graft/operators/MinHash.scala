@@ -360,7 +360,13 @@ object MinHash {
         coalesce(col("dup_of_existing"), lit(false)).as("dup_of_existing"))
   }
 
-  /** [[bucketPairCounts]] in the md5 oracle family. */
+  /** (id_a, id_b, shared_bands) with id_a < id_b — candidate pairs of the
+    * md5 oracle family counted by how many band buckets they co-occur in.
+    * Pair expansion is an array lambda over ≤ maxBucket elements
+    * (interpreted, but tiny), so the only wide operations are the
+    * signature aggregation, the bucket groupBy and the final pair count —
+    * each a single shuffle.
+    */
   def bucketPairCountsMd5(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
                           k: Int = 3, h: Int = 16, bands: Int = 8, maxBucket: Int = 20): DataFrame = {
     val rows = h / bands
@@ -656,8 +662,14 @@ object MinHash {
       .select(col("id").as(idCol), col("comp").as("canonical_id"))
   }
 
-  /** membership rows → per-bucket sorted member lists (hot buckets dropped),
-    * shared by both hash families.
+  /** membership rows → per-bucket member lists (band, bk, ids sorted asc),
+    * singleton and hot (> maxBucket) buckets dropped. Pair generation
+    * expands these small arrays instead of self-joining the bucket stream
+    * (a self-join would recompute the whole shingle→signature pipeline once
+    * per side). The hot filter runs on a windowed count BEFORE
+    * collect_list, so a pathological bucket is counted (spillable sort) but
+    * never materialized as an array; the groupBy reuses the window's
+    * (band, bk) partitioning — one shuffle.
     */
   private def bucketMembersFrom(memberships: DataFrame, idCol: String, maxBucket: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy("band", "bk")
@@ -668,51 +680,6 @@ object MinHash {
       .agg(array_sort(collect_list(idCol)).as("ids"))
   }
 
-  /** (idCol, band, bk) — exploded LSH bucket memberships, hot buckets
-    * (> maxBucket members) dropped. `sigs` = output of [[signatures]]
-    * (pass a cached frame when also using the signatures downstream).
-    * Windowed count, like every other bucket shape here — the former
-    * groupBy + join-back evaluated the whole shingle→minhash lineage once
-    * per join side and leaked undocumented columns.
-    */
-  def bandedBucketsFromSigs(sigs: DataFrame, idCol: String = "doc_id",
-                            h: Int = 64, bands: Int = 16, maxBucket: Int = 50): DataFrame = {
-    val rows = h / bands
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("band", "bk")
-    sigs
-      .select(col(idCol), posexplode(bandKeys(col("sig"), bands, rows)).as(Seq("band", "bk")))
-      .withColumn("__n", count(lit(1)).over(w))
-      .filter(col("__n") <= maxBucket)
-      .select(col(idCol), col("band"), col("bk"))
-  }
-
-  def bandedBuckets(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
-                    k: Int = 3, h: Int = 64, bands: Int = 16, maxBucket: Int = 50): DataFrame =
-    bandedBucketsFromSigs(signatures(docs, idCol, textCol, k, h), idCol, h, bands, maxBucket)
-
-  /** Per-bucket membership lists: (band, bk, ids sorted asc), hot buckets
-    * (> maxBucket) dropped. ONE pass over the signatures — downstream pair
-    * generation expands the small arrays instead of self-joining the bucket
-    * stream (a self-join would recompute the whole shingle→minhash pipeline
-    * once per side; at 100 TB that triples the dominant stage). The hot
-    * filter runs on a windowed count BEFORE collect_list, so a pathological
-    * bucket is counted (spillable sort) but never materialized as an array.
-    * The groupBy reuses the window's (band, bk) partitioning — one shuffle.
-    */
-  def bucketMembers(sigs: DataFrame, idCol: String = "doc_id",
-                    h: Int = 64, bands: Int = 16, maxBucket: Int = 50): DataFrame = {
-    val rows = h / bands
-    bucketMembersFrom(
-      sigs.select(col(idCol), posexplode(bandKeys(col("sig"), bands, rows)).as(Seq("band", "bk"))),
-      idCol, maxBucket)
-  }
-
-  /** (id_a, id_b, shared_bands) with id_a < id_b — candidate pairs counted
-    * by how many band buckets they co-occur in. Pair expansion is an array
-    * lambda over ≤ maxBucket elements (interpreted, but tiny), so the only
-    * wide operations are the signature aggregation, the bucket groupBy and
-    * the final pair count — each a single shuffle.
-    */
   /** SQL lambda expanding a sorted array column into its ordered 2-element
     * combinations as `named_struct('a', x, 'b', y)` with x before y —
     * shared by every bucketed pair generator (the arrays are ≤ maxBucket
@@ -722,14 +689,6 @@ object MinHash {
     expr(
       s"flatten(transform($arrayCol, (a, i) -> " +
         s"transform(slice($arrayCol, i + 2, size($arrayCol)), b -> named_struct('a', a, 'b', b))))")
-
-  def bucketPairCounts(sigs: DataFrame, idCol: String = "doc_id",
-                       h: Int = 64, bands: Int = 16, maxBucket: Int = 20): DataFrame =
-    bucketMembers(sigs, idCol, h, bands, maxBucket)
-      .select(explode(pairExpand("ids")).as("p"))
-      .select(col("p.a").as("id_a"), col("p.b").as("id_b"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("shared_bands"))
 
   /** docs → (doc_id, canonical_id): canonical is the smallest doc_id this
     * doc shares any LSH bucket with (including itself).
@@ -802,23 +761,6 @@ object MinHash {
       Murmur3HashFunction.hash(slice, ArrayType(LongType), s1.toLong).toInt
     }
   }
-
-  /** candidate near-dup pairs (id_a < id_b), deduped across bands */
-  def candidatePairsFromSigs(sigs: DataFrame, idCol: String = "doc_id",
-                             h: Int = 64, bands: Int = 16, maxBucket: Int = 20): DataFrame =
-    bucketPairCounts(sigs, idCol, h, bands, maxBucket).select("id_a", "id_b")
-
-  def candidatePairs(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
-                     k: Int = 3, h: Int = 64, bands: Int = 16, maxBucket: Int = 20): DataFrame =
-    candidatePairsFromSigs(signatures(docs, idCol, textCol, k, h), idCol, h, bands, maxBucket)
-
-  /** estimated Jaccard similarity from two signatures */
-  def estJaccard(sigA: Column, sigB: Column): Column =
-    aggregate(
-      zip_with(sigA, sigB, (a, b) => when(a === b, 1).otherwise(0)),
-      lit(0),
-      (acc, x) => acc + x,
-    ).cast("double") / size(sigA)
 
   /** Exact n-gram Jaccard between two texts (for candidate verification).
     * Set ops run over native 64-bit shingle hashes (ShingleHash64 —

@@ -85,8 +85,7 @@ object RestartProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val nBatches = args.lift(1).map(_.toInt).getOrElse(8)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(cpus).appName("restart-probe").getOrCreate()
+    val spark = GraftSession.builder().appName("restart-probe").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

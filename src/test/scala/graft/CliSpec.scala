@@ -212,6 +212,42 @@ class CliSpec extends AnyFunSuite {
       new String(sparkOut, "UTF-8"))
   }
 
+  test("CLI over two parquet DBs equals the JSON path: min_ts cut, window file, fully-cut cookie") {
+    // nested window blocks: an empty per-entry run mutates a fresh state,
+    // so u2 (listed, present only in DB 2, every event below DB 1's max)
+    // must still run DB 2's empty loop and finalize
+    val prog = writeTemp("nested.tr",
+      """start ->
+        |    window
+        |        mid ->
+        |            window
+        |                inner ->
+        |                    receive
+        |                        type = "conv" -> yield $conv, quit
+        |                        * -> repeat
+        |            after 100s -> yield $midexp, quit
+        |    after 300s -> yield $outerexp, quit
+        |""".stripMargin)
+    val db1 = writeTemp("db1.json", """{"u1": [{"timestamp": 5000, "type": "x"}]}""")
+    val db2 = writeTemp("db2.json",
+      """{"u1": [{"timestamp": 6000, "type": "conv"}],
+        | "u2": [{"timestamp": 1000, "type": "x"}]}""".stripMargin)
+    val windows = writeTemp("windows.csv", "u1,0,0\nu2,0,0\n")
+    val dir = Files.createTempDirectory("graft-cli-multidb")
+    val parquets = Seq(db1, db2).zipWithIndex.map { case (in, i) =>
+      val out = dir.resolve(s"db$i.parquet").toString
+      Json2Tdb.main(Array(in, out))
+      out
+    }
+    val (_, local) = withCapturedStdout(Trck.main(Array(prog, "--window-file", windows, db1, db2)))
+    val (_, spark) = withCapturedStdout(
+      Trck.main((Seq(prog, "--window-file", windows) ++ parquets).toArray))
+    val localText = new String(local, "UTF-8")
+    // u1 quits on conv, so the one $midexp is u2's empty run
+    assert(localText.trim == "{\"$outerexp\":0,\"$midexp\":1,\"$conv\":1}", localText)
+    assert(new String(spark, "UTF-8") == localText)
+  }
+
   test("Json2Tdb simple format gets the all-zero cookie; bad timestamps fail loudly") {
     val dir = Files.createTempDirectory("graft-json2tdb-simple")
     val in = writeTemp("simple.json",

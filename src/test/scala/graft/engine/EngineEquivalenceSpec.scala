@@ -236,7 +236,10 @@ class EngineEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
       })
     }
     val db1 = fixedDb(1L, 0L, 800)      // max ≈ several thousand (HIGH)
-    val db2 = fixedDb(2L, 0L, 50)       // max ≈ few hundred (LOW) — mostly cut
+    // db2: max ≈ few hundred (LOW) — mostly cut; its extra trail holds the
+    // only a9 event, below db1's max
+    val db2 = Db(fixedDb(2L, 0L, 50).trails :+
+      ("cutonly" -> Seq(RawEvent(1L, Map("type" -> "cli", "advertisable_eid" -> "a9")))))
     val db3 = fixedDb(3L, 400L, 300)    // straddles db2's max, below db1's
     val tuples = eids.map(e => ForeachTuple(Vector(Left(e)))).toVector
 
@@ -251,6 +254,16 @@ class EngineEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val gotOut = sparkOut.toOutputs
     assert(gotOut.length == localOut.length)
     for ((l, g) <- localOut.zip(gotOut)) assert(g == l)
+
+    // implicit foreach: the reference sweeps every DB's whole lexicon, so
+    // a9, seen only below a cut, is still a tuple (with empty results)
+    val implicitProg = Compiled.compile(
+      program.copy(groupby = Some(Ir.GroupBy(List("%a"), None, mergeResults = false))))
+    val localImplicit = LocalRunner.run(implicitProg, Seq(db1, db2, db3))
+    assert(localImplicit.tuples.contains(ForeachTuple(Vector(Left("a9")))))
+    val sparkImplicit = TrckSparkRunner.runRaw(
+      implicitProg, unioned, "uuid", "ts", Seq("seq"), srcCuts = cuts)
+    assert(sparkImplicit.toOutputs == localImplicit.toOutputs)
   }
 
   test("window-file runs: per-entry ctx, cookie-keyed state, single finalization, Spark = local") {
@@ -295,9 +308,9 @@ class EngineEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     ))
 
     val local = LocalRunner.run(prog, Seq(db), windows = Some(ws))
-    val sparkOut = TrckSparkRunner.run(
+    val sparkOut = TrckSparkRunner.runRaw(
       prog, dbToDf(db), "uuid", "ts", Seq("seq"),
-      filters = TrckSparkRunner.EngineFilters(windows = Some(ws)))
+      filters = TrckSparkRunner.EngineFilters(windows = Some(ws))).toOutputs
 
     val localOut = local.toOutputs
     assert(sparkOut.length == localOut.length)
@@ -344,9 +357,9 @@ class EngineEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     val local = LocalRunner.run(prog, Seq(db1, db2), windows = Some(ws))
     val (unioned, cuts) = TrckSparkRunner.unionSources(Seq(dbToDf(db1), dbToDf(db2)), "ts")
-    val sparkOut = TrckSparkRunner.run(
+    val sparkOut = TrckSparkRunner.runRaw(
       prog, unioned, "uuid", "ts", Seq("seq"),
-      filters = TrckSparkRunner.EngineFilters(windows = Some(ws)), srcCuts = cuts)
+      filters = TrckSparkRunner.EngineFilters(windows = Some(ws)), srcCuts = cuts).toOutputs
 
     val localOut = local.toOutputs
     for (k <- localOut.head.keys) assert(sparkOut.head(k) == localOut.head(k), s"key $k")

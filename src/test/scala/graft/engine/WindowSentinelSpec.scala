@@ -16,7 +16,8 @@ import graft.trck.LocalRunner.{Db, RawEvent}
   * whenever the entrypoint chain enters outer window-block rules — the
   * outer expiry is pushed at ts 0, so finalization at MAX_TIMESTAMP fires
   * the block's `after` yields. The Spark path keeps zero-event sentinels
-  * for exactly these trails (TrckSparkRunner.withSentinels).
+  * for exactly these trails (TrckSparkRunner.withSentinels), judged before
+  * the min_ts cut of a multi-source run.
   */
 class WindowSentinelSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -101,8 +102,8 @@ class WindowSentinelSpec extends AnyFunSuite with BeforeAndAfterAll {
     // u2 exists ONLY in source 2, and all its source-2 events fall below
     // source 1's max timestamp (the min_ts cut) — the reference still runs
     // db2's empty per-entry loop for u2 (state mutates, finalization
-    // emits). Post-cut events carry no trace of u2, so only the pre-cut
-    // presence frame can restore it.
+    // emits). runRaw judges presence before it applies the cut, so plain
+    // unionSources output is enough.
     val prog = Compiled.compile(nestedWindowProgram)
     val db1 = Db(Seq("u1" -> Seq(RawEvent(5000L, Map("type" -> "x")))))
     val db2 = Db(Seq(
@@ -115,19 +116,11 @@ class WindowSentinelSpec extends AnyFunSuite with BeforeAndAfterAll {
     ))
     val local = LocalRunner.run(prog, Seq(db1, db2), windows = Some(ws))
     assert(local.results.head.counters("midexp") >= 2L, "u2's empty run must contribute")
-    val (unioned, cuts, presence) = TrckSparkRunner.unionSourcesWithPresence(
-      Seq(dbToDf(db1), dbToDf(db2)), "ts", "uuid")
+    val (unioned, cuts) = TrckSparkRunner.unionSources(Seq(dbToDf(db1), dbToDf(db2)), "ts")
     val engine = TrckSparkRunner.runRaw(
       prog, unioned, "uuid", "ts", Seq("seq"),
-      filters = TrckSparkRunner.EngineFilters(windows = Some(ws)),
-      srcCuts = cuts, presence = Some(presence))
-    assert(render(engine) == render(local))
-    // without the presence frame the u2 segment is unrecoverable — the gap
-    // this feature closes
-    val engineNoP = TrckSparkRunner.runRaw(
-      prog, unioned, "uuid", "ts", Seq("seq"),
       filters = TrckSparkRunner.EngineFilters(windows = Some(ws)), srcCuts = cuts)
-    assert(render(engineNoP) != render(local))
+    assert(render(engine) == render(local))
   }
 
   test("pre-cut presence also covers NON-window multi-source runs (empty-run programs)") {
@@ -142,10 +135,9 @@ class WindowSentinelSpec extends AnyFunSuite with BeforeAndAfterAll {
     ))
     val local = LocalRunner.run(prog, Seq(db1, db2))
     assert(local.results.head.counters("midexp") >= 2L)
-    val (unioned, cuts, presence) = TrckSparkRunner.unionSourcesWithPresence(
-      Seq(dbToDf(db1), dbToDf(db2)), "ts", "uuid")
+    val (unioned, cuts) = TrckSparkRunner.unionSources(Seq(dbToDf(db1), dbToDf(db2)), "ts")
     val engine = TrckSparkRunner.runRaw(
-      prog, unioned, "uuid", "ts", Seq("seq"), srcCuts = cuts, presence = Some(presence))
+      prog, unioned, "uuid", "ts", Seq("seq"), srcCuts = cuts)
     assert(render(engine) == render(local))
   }
 
@@ -195,8 +187,8 @@ class WindowSentinelSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("prepared multi-source layout with pre-cut presence matches LocalRunner") {
-    // the fully-cut-source case through a prepared layout: presence must be
-    // supplied at PREPARE time (the post-cut union has no trace of u2)
+    // the fully-cut-source case through a prepared layout: the uncut union
+    // is its own presence, and runRaw applies the cut over the layout
     val prog = Compiled.compile(nestedWindowProgram)
     val db1 = Db(Seq("u1" -> Seq(RawEvent(5000L, Map("type" -> "x")))))
     val db2 = Db(Seq(
@@ -208,11 +200,9 @@ class WindowSentinelSpec extends AnyFunSuite with BeforeAndAfterAll {
       LocalRunner.WindowEntry("u2", "u2", 0L, 0L),
     ))
     val local = LocalRunner.run(prog, Seq(db1, db2), windows = Some(ws))
-    val (unioned, cuts, presence) = TrckSparkRunner.unionSourcesWithPresence(
-      Seq(dbToDf(db1), dbToDf(db2)), "ts", "uuid")
+    val (unioned, cuts) = TrckSparkRunner.unionSources(Seq(dbToDf(db1), dbToDf(db2)), "ts")
     val preparedDf = TrailEngine.prepare(
-      unioned, "uuid", "ts", Seq("seq"), srcCol = Some("__src"),
-      presence = Some(presence)).persist()
+      unioned, "uuid", "ts", Seq("seq"), srcCol = Some("__src")).persist()
     preparedDf.count()
     val engine = TrckSparkRunner.runRaw(
       prog, preparedDf, "uuid", "ts", Seq("seq"),

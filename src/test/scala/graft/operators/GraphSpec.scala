@@ -68,11 +68,8 @@ class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
     // small-graph arm has its own equivalence test below.
     val e = edgesOf(0L -> 1L, 1L -> 2L, 2L -> 3L, 3L -> 0L)
     def run(maxHops: Int): (Map[Long, Double], Int) = {
-      Graph.lastHyperBallRounds = -1
-      val rows = Graph.hyperBallHarmonic(e, maxHops = maxHops, maxLocalVertices = 0)
-        .collect()
-        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      (rows, Graph.lastHyperBallRounds)
+      val hb = Graph.hyperBallHarmonic(e, maxHops = maxHops, maxLocalVertices = 0)
+      (hb.scores.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap, hb.rounds)
     }
     val (atCeil4, r4) = run(4)
     val (atCeil16, r16) = run(16)
@@ -91,16 +88,13 @@ class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
     for (e <- Seq(
         edgesOf(0L -> 1L, 1L -> 2L, 2L -> 3L, 3L -> 0L),
         Graph.syntheticLinks(Tables(spark, sfDir, "documents")))) {
-      Graph.lastHyperBallRounds = -1
-      val dist = Graph.hyperBallHarmonic(e, maxLocalVertices = 0).collect()
-        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      val rDist = Graph.lastHyperBallRounds
-      Graph.lastHyperBallRounds = -1
-      val local = Graph.hyperBallHarmonic(e).collect()
-        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      val distHb = Graph.hyperBallHarmonic(e, maxLocalVertices = 0)
+      val dist = distHb.scores.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      val localHb = Graph.hyperBallHarmonic(e)
+      val local = localHb.scores.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
       assert(local == dist, s"local $local vs distributed $dist")
-      assert(Graph.lastHyperBallRounds == rDist,
-        s"rounds witness: local ${Graph.lastHyperBallRounds} vs distributed $rDist")
+      assert(localHb.rounds == distHb.rounds,
+        s"rounds witness: local ${localHb.rounds} vs distributed ${distHb.rounds}")
     }
   }
 
@@ -203,7 +197,7 @@ class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("hyperball estimate tracks exact within the registered tolerance") {
     val links = Graph.syntheticLinks(Tables(spark, sfDir, "documents"))
     val exact = ranksOf(Graph.harmonicExact(links))
-    val hb = Graph.hyperBallHarmonic(links).collect()
+    val hb = Graph.hyperBallHarmonic(links).scores.collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(hb.keySet == exact.keySet)
     exact.foreach { case (host, ppm) =>

@@ -86,7 +86,7 @@ class FcallLifecycleSpec extends AnyFunSuite with BeforeAndAfterAll {
         (u, e.ts, i.toLong, e.fields("type"), e.fields("advertisable_eid")) }
     }.toDF("uuid", "ts", "seq", "type", "advertisable_eid")
     val module = freshModule()
-    val engine = TrckSparkRunner.runRawModule(module, prog, df, "uuid", "ts", Seq("seq"))
+    val engine = TrckSparkRunner.runRaw(prog, df, "uuid", "ts", Seq("seq"), module = module)
     assert(OutputJson.render(engine.toOutputs, grouped = false) ==
       OutputJson.render(local.toOutputs, grouped = false))
     assert(log.head == "init" && log.last == "fin")
