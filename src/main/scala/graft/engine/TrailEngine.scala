@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Row}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -16,13 +16,14 @@ import graft.trck.LocalRunner.ForeachTuple
   * Physical shape (the plan that survives 100 TB):
   *
   *   scan (pruned to uuid + ts + program fields, filters pushed down)
+  *     → [[project]]: the one trail row projection
   *     → repartition(uuid)                 // the ONE shuffle
   *     → sortWithinPartitions(uuid, ts, tiebreak…)
-  *     → mapPartitions: read consecutive same-uuid runs in one pass, one
-  *       trail in memory at a time (no per-group materialization of the
-  *       partition); consecutive duplicates are dropped once per source
-  *       segment, and each segment replays through the cookie's window
-  *       entries, each entry on its own ts slice
+  *     → mapPartitions: a [[TrailReader]] reads consecutive same-uuid runs
+  *       in one pass, one trail in memory at a time (no per-group
+  *       materialization of the partition); consecutive duplicates are
+  *       dropped once per source segment, and each segment replays through
+  *       the cookie's window entries, each entry on its own ts slice
   *       ([[graft.trck.TrailMatcher.runEntries]]: one pass per trail for
   *       all foreach tuples, stepping tuple classes per event — at most
   *       G + N event-steps per event for G starting states and N tuples
@@ -34,6 +35,10 @@ import graft.trck.LocalRunner.ForeachTuple
   * State never outlives one trail iterator step, so executor memory is
   * O(longest trail + tuple count), independent of partition size — the
   * property that lets this run on 1000 executors with skewed users.
+  *
+  * The trail row codec ([[project]], [[TrailReader]], [[emitSchema]]) is
+  * also the streaming engine's: [[graft.streaming.TrailStream.emits]]
+  * feeds the reader one cookie's micro-batch rows at a time.
   *
   * LocalRunner (the golden-tested definition) runs each tuple alone;
   * Spark ≡ LocalRunner fuzzing checks TrailMatcher's class loop against it.
@@ -96,12 +101,15 @@ object TrailEngine {
       }
 
   /** Emitted row schema: one row per (trail × tuple × yield-item), or per
-    * (trail × tuple × sketch) for HLL yields. `item` is the encoded tuple
-    * for `s`/`m` rows, null for `c` rows, and for `h` rows the trail-local
-    * sketch's nonzero registers as [[graft.trck.Hll.sparse]] (index hi,
-    * index lo, rank) triples — ≤ 3k bytes for k distinct items, never the
-    * dense 16 KiB array. TrckSparkRunner.aggregateEmits folds every kind
-    * in one aggregation pass.
+    * (trail × tuple × sketch) for HLL yields. `uuid` is the result ctx id:
+    * the window entry id inside an entry's run, the cookie otherwise (and
+    * at finalization). `item` is the encoded tuple for `s`/`m` rows, null
+    * for `c` rows, and for `h` rows the trail-local sketch's nonzero
+    * registers as [[graft.trck.Hll.sparse]] (index hi, index lo, rank)
+    * triples — ≤ 3k bytes for k distinct items, never the dense 16 KiB
+    * array. TrckSparkRunner.aggregateEmits folds every kind in one
+    * aggregation pass. [[graft.streaming.TrailStream.emits]] writes the
+    * same rows through the same [[TrailReader]].
     */
   private val emitSchema = StructType(Seq(
     StructField("uuid", StringType),
@@ -111,6 +119,173 @@ object TrailEngine {
     StructField("item", BinaryType),
     StructField("n", LongType),
   ))
+
+  /** Encoder of [[emitSchema]] rows. */
+  private[graft] val emitEncoder: Encoder[Row] = RowEncoder.encoderFor(emitSchema)
+
+  /** Column positions of a [[project]]ed frame: `__uuid` at 0, `__ts` at
+    * 1, `__srcord` at 2 when `hasSrc`, then the `nDedup` string columns
+    * that make up the consecutive-duplicate compare; `fieldIdx(i)` is the
+    * position of `prog.fields(i)` among them (-1: not a column, reads
+    * ""), `ghostIdx` that of `__ghost` (-1: none). Columns after the
+    * projection's own (a stream's watermark column) join no compare.
+    */
+  private[graft] final case class RowLayout(hasSrc: Boolean, nDedup: Int, fieldIdx: Array[Int], ghostIdx: Int) {
+    val fieldBase: Int = if (hasSrc) 3 else 2
+  }
+
+  /** The trail row projection both engines read: uuid and ts, the source
+    * index AS A NUMBER (a string cast would order source 10 before 2),
+    * every non-reserved column as a string, tiebreaks in their own types
+    * (a numeric tiebreak sorted as a string would order "10" before "9"
+    * under equal ts) and `__ghost`. Every non-reserved column joins the
+    * dedup compare: the reference compares the full event (src/ctx.c:
+    * 112-131), so an event differing only in a column the program never
+    * reads is not a duplicate. The source index, tiebreaks and `__ghost`
+    * do not: per-source segmentation already prevents cross-boundary
+    * elision, and `__ghost` rows ([[withPresenceSentinels]]) assert a
+    * trail's presence but are never events.
+    */
+  private[graft] def project(
+      prog: CompiledProgram,
+      events: DataFrame,
+      uuidCol: String,
+      tsCol: String,
+      tiebreak: Seq[String] = Nil,
+      srcCol: Option[String] = None,
+  ): (DataFrame, RowLayout) = {
+    val hasGhost = events.columns.contains("__ghost")
+    val reserved = (Seq(uuidCol, tsCol) ++ srcCol ++ (if (hasGhost) Seq("__ghost") else Nil)).toSet
+    val dedupCols = events.columns.filterNot(reserved).toSeq
+    val projected = events.select(
+      (col(uuidCol).cast(StringType).as("__uuid") +:
+        graft.Tables.tsLong(events, tsCol).as("__ts") +:
+        srcCol.map(c => col(c).cast(LongType).as("__srcord")).toSeq) ++
+        dedupCols.map(c => col(c).cast(StringType).as(c)) ++
+        tiebreak.zipWithIndex.map { case (c, i) => col(c).as(s"__tb$i") } ++
+        (if (hasGhost) Seq(col("__ghost").cast(IntegerType).as("__ghost")) else Nil): _*
+    )
+    val fieldBase = if (srcCol.isDefined) 3 else 2
+    val fieldIdx = prog.fields.map { f =>
+      val i = dedupCols.indexOf(f)
+      if (i >= 0) i + fieldBase else -1
+    }
+    val ghostIdx = if (hasGhost) fieldBase + dedupCols.length + tiebreak.length else -1
+    (projected, RowLayout(srcCol.isDefined, dedupCols.length, fieldIdx, ghostIdx))
+  }
+
+  /** Window entries per cookie, in window-file order. */
+  private[graft] def windowsByCookie(
+      windows: Option[Seq[LocalRunner.WindowEntry]]): Option[Map[String, IndexedSeq[LocalRunner.WindowEntry]]] =
+    windows.map(_.groupBy(_.cookie).view.mapValues(_.toIndexedSeq).toMap)
+
+  /** The trail row codec of one task: decodes a trail's [[project]]ed
+    * rows into [[TrailEvent]]s, replays them, and encodes each tuple's
+    * [[Results]] as [[emitSchema]] rows into `out`. Not serializable:
+    * build one inside the task.
+    */
+  private[graft] final class TrailReader(
+      prog: CompiledProgram,
+      tuples: Vector[ForeachTuple],
+      layout: RowLayout,
+      params: Bindings,
+      fcalls: Map[String, Fsm.Fcall],
+      winMap: Option[Map[String, IndexedSeq[LocalRunner.WindowEntry]]],
+  ) {
+    val out = scala.collection.mutable.ArrayBuffer[Row]()
+    private val evs = scala.collection.mutable.ArrayBuffer[TrailEvent]()
+    import layout.{fieldBase, fieldIdx, ghostIdx, hasSrc, nDedup}
+
+    private def rowField(r: Row, i: Int): String = {
+      val v = r.get(i); if (v == null) "" else v.toString
+    }
+
+    private def emitAs(ctxCookie: String)(j: Int, r: Results): Unit = {
+      // O(1) skip for identity results: a wide foreach broadcasts one
+      // scratch to thousands of absent-value tuples that yielded
+      // nothing — iterating four empty/zero maps per tuple was
+      // measurable at 10k-tuple cardinality
+      if (!r.touched) return
+      r.counters.foreach { case (d, v) =>
+        if (v != 0) out += Row(ctxCookie, j, "c", d, null, v)
+      }
+      r.sets.foreach { case (d, m) =>
+        m.foreach { case (t, c) => out += Row(ctxCookie, j, "s", d, t, c) }
+      }
+      r.msets.foreach { case (d, m) =>
+        m.foreach { case (t, c) => out += Row(ctxCookie, j, "m", d, t, c) }
+      }
+      r.hlls.foreach { case (d, h) =>
+        // the trail-local sketch's nonzero registers; merged upstream
+        out += Row(ctxCookie, j, "h", d, h.sparse, 1L)
+      }
+    }
+
+    /** Every tuple in the program's initial state. ONE shared state:
+      * processTrail never mutates saved states, and equal states start in
+      * one class.
+      */
+    def initial: Array[FsmState] = {
+      val init = FsmState.initial(prog)
+      Array.fill(tuples.length)(init)
+    }
+
+    /** Read the rows of trail `uuid` at the head of `rows` (ordered by
+      * source, then ts) in one pass: ghost rows establish the trail but
+      * add no event, consecutive duplicates are dropped against the
+      * previous kept row, and each source segment replays through the
+      * cookie's window entries from the state the previous segment left,
+      * with `cutOf(source)` as its min_ts cut, as soon as its last row is
+      * read. Returns the states the last segment leaves.
+      */
+    def read(uuid: String, rows: scala.collection.BufferedIterator[Row], from: Array[FsmState],
+             cutOf: Long => Long): Array[FsmState] = {
+      val entries = TrailMatcher.entriesOf(winMap, uuid)
+      var carried = from
+      var src = if (hasSrc && rows.hasNext) rows.head.getLong(2) else 0L
+      var prev: Row = null
+      // per segment, every window entry runs from the state the
+      // previous source left and the LAST entry's output carries
+      // (LocalRunner dbStates overwrite)
+      def replay(states: Array[FsmState], segSrc: Long): Array[FsmState] = {
+        val out = TrailMatcher.runEntries(
+          prog, tuples, states, evs.toArray, entries, cutOf(segSrc), params, fcalls, emitAs)
+        evs.clear()
+        out
+      }
+      while (rows.hasNext && rows.head.getString(0) == uuid) {
+        val cur = rows.next()
+        if (hasSrc && cur.getLong(2) != src) {
+          carried = replay(carried, src); prev = null; src = cur.getLong(2)
+        }
+        if (ghostIdx < 0 || cur.getInt(ghostIdx) != 1) {
+          val dup = prev != null && prev.getLong(1) == cur.getLong(1) && {
+            var i = fieldBase; var same = true
+            while (same && i < fieldBase + nDedup) { same = rowField(prev, i) == rowField(cur, i); i += 1 }
+            same
+          }
+          if (!dup) {
+            val arr = new Array[String](fieldIdx.length)
+            var i = 0
+            while (i < arr.length) {
+              arr(i) = if (fieldIdx(i) == -1) "" else rowField(cur, fieldIdx(i))
+              i += 1
+            }
+            evs += new TrailEvent(cur.getLong(1), arr)
+            prev = cur
+          }
+        }
+      }
+      replay(carried, src)
+    }
+
+    /** MAX_TIMESTAMP finalization, once per cookie with ctx = the real
+      * cookie (reference: src/match_traildb.c:899-944 iterates the
+      * cookie-keyed states map).
+      */
+    def finish(uuid: String, states: Array[FsmState]): Unit =
+      TrailMatcher.finalizeTrail(prog, tuples, states, uuid, params, fcalls, emitAs(uuid))
+  }
 
   /** Union one zero-event `__ghost=1` sentinel row per trail (per source
     * when `srcCol` is set) present in `presentFrom` onto `real` (whose rows
@@ -243,35 +418,8 @@ object TrailEngine {
       prepared: Boolean = false,
   ): DataFrame = {
     val spark = events.sparkSession
-
     val tuples = runTuples(prog, foreachTuples, events)
-
-    // prune to what the FSM needs; all extra columns only matter for dedup,
-    // which by reference semantics uses the full input row. The src column
-    // is projected separately AS A NUMBER (a string cast would order source
-    // 10 before 2) and does not join the dedup compare — per-source
-    // segmentation already prevents cross-boundary elision.
-    // "__ghost" marks zero-event sentinel rows (one per trail that exists
-    // in the source but lost every event to the min_ts cut or filters — see
-    // TrckSparkRunner.withSentinels): they assert the trail's presence per
-    // source so the per-entry loop and finalization still run, but are
-    // never materialized as events and never join the dedup compare.
-    val hasGhost = events.columns.contains("__ghost")
-    val reserved = (Seq(uuidCol, tsCol) ++ srcCol ++ (if (hasGhost) Seq("__ghost") else Nil)).toSet
-    val dedupCols = events.columns.filterNot(reserved).toSeq
-    val srcSel: Seq[Column] = srcCol.map(c => col(c).cast(LongType).as("__srcord")).toSeq
-    // tiebreak columns keep their ORIGINAL types in dedicated sort columns —
-    // the dedup projection below casts everything to string, and a numeric
-    // tiebreak sorted lexically would order "10" before "9" under equal ts
-    val tbSel: Seq[Column] = tiebreak.zipWithIndex.map { case (c, i) => col(c).as(s"__tb$i") }
-    val ghostSel: Seq[Column] =
-      if (hasGhost) Seq(col("__ghost").cast(IntegerType).as("__ghost")) else Nil
-    val projected = events.select(
-      (col(uuidCol).cast(StringType).as("__uuid") +:
-        graft.Tables.tsLong(events, tsCol).as("__ts") +:
-        srcSel) ++
-        dedupCols.map(c => col(c).cast(StringType).as(c)) ++ tbSel ++ ghostSel: _*
-    )
+    val (projected, layout) = project(prog, events, uuidCol, tsCol, tiebreak, srcCol)
 
     // r21 note: an explicit-count repartition here (to defeat AQE's
     // coalesce-to-one at bench scale, the sessions()/asOfJoin fix) was
@@ -287,148 +435,45 @@ object TrailEngine {
         projected
           .repartition(col("__uuid"))
           .sortWithinPartitions(
-            col("__uuid") +: (srcSel.map(_ => col("__srcord")) ++
+            col("__uuid") +: (srcCol.map(_ => col("__srcord")).toSeq ++
               (col("__ts") +: tiebreak.indices.map(i => col(s"__tb$i")))): _*)
 
-    val hasSrc = srcCol.isDefined
-    val fieldBase = 2 + (if (hasSrc) 1 else 0)
-    val fieldIdxInRow: Array[Int] = prog.fields.map { f =>
-      val i = dedupCols.indexOf(f)
-      if (i >= 0) i + fieldBase else -1
-    }
-    val nDedup = dedupCols.length
-    val ghostIdx = if (hasGhost) fieldBase + nDedup + tiebreak.length else -1
-
-    // window entries per cookie, in window-file order
-    val winByCookie: Option[Map[String, IndexedSeq[LocalRunner.WindowEntry]]] =
-      windows.map(_.groupBy(_.cookie).view.mapValues(_.toIndexedSeq).toMap)
-
     val tuplesB = spark.sparkContext.broadcast(tuples)
-    val winB = spark.sparkContext.broadcast(winByCookie)
+    val winB = spark.sparkContext.broadcast(windowsByCookie(windows))
     val cutsB = spark.sparkContext.broadcast(srcCuts)
-    val enc = RowEncoder.encoderFor(emitSchema)
 
-    val emitted = sorted.mapPartitions { rows =>
-      val tups = tuplesB.value
-      val winMap = winB.value
+    sorted.mapPartitions { part =>
+      val reader = new TrailReader(prog, tuplesB.value, layout, params, fcalls, winB.value)
       val cuts = cutsB.value
+      val rows = part.buffered
+
+      /** A source's min_ts cut. Single-source runs carry no cuts (src
+        * tag 0, cuts empty); a TAGGED source beyond the cuts array means
+        * the caller lost the unionSources cuts — silently treating it as
+        * uncut would include events below that source's min_ts.
+        */
+      val cutOf: Long => Long = src =>
+        if (cuts.isEmpty) 0L
+        else if (src >= 0 && src < cuts.length) cuts(src.toInt)
+        else throw new IllegalStateException(
+          s"source index $src has no min_ts cut (${cuts.length} cuts) — " +
+            "pass unionSources' cuts through srcCuts")
+
+      // one trail in memory at a time: read the next same-uuid run and
+      // finalize it once the emit rows of the previous trail are drained
       new Iterator[Row] {
-        private val buf = scala.collection.mutable.ArrayBuffer[Row]()
-        private var bufPos = 0
-        private var pending: Row = null // first row of next trail
-
-        private def rowField(r: Row, i: Int): String = {
-          val v = r.get(i); if (v == null) "" else v.toString
-        }
-
-        private def nextRow(): Row = if (rows.hasNext) rows.next() else null
-
-        private def emitAs(ctxCookie: String)(j: Int, r: Results): Unit = {
-          // O(1) skip for identity results: a wide foreach broadcasts one
-          // scratch to thousands of absent-value tuples that yielded
-          // nothing — iterating four empty/zero maps per tuple was
-          // measurable at 10k-tuple cardinality
-          if (!r.touched) return
-          r.counters.foreach { case (d, v) =>
-            if (v != 0) buf += Row(ctxCookie, j, "c", d, null, v)
-          }
-          r.sets.foreach { case (d, m) =>
-            m.foreach { case (t, c) => buf += Row(ctxCookie, j, "s", d, t, c) }
-          }
-          r.msets.foreach { case (d, m) =>
-            m.foreach { case (t, c) => buf += Row(ctxCookie, j, "m", d, t, c) }
-          }
-          r.hlls.foreach { case (d, h) =>
-            // the trail-local sketch's nonzero registers; merged upstream
-            buf += Row(ctxCookie, j, "h", d, h.sparse, 1L)
-          }
-        }
-
-        /** A source's min_ts cut. Single-source runs carry no cuts (src
-          * tag 0, cuts empty); a TAGGED source beyond the cuts array means
-          * the caller lost the unionSources cuts — silently treating it as
-          * uncut would include events below that source's min_ts.
-          */
-        private def cutOf(src: Long): Long =
-          if (cuts.isEmpty) 0L
-          else if (src >= 0 && src < cuts.length) cuts(src.toInt)
-          else throw new IllegalStateException(
-            s"source index $src has no min_ts cut (${cuts.length} cuts) — " +
-              "pass unionSources' cuts through srcCuts")
-
-        /** Read one trail (the consecutive same-uuid rows) in one pass:
-          * ghost rows establish the trail but add no event, consecutive
-          * duplicates are dropped against the previous kept row, and each
-          * source segment replays through the cookie's window entries as
-          * soon as its last row is read.
-          */
-        private def processNextTrail(): Unit = {
-          buf.clear(); bufPos = 0
-          var cur = if (pending != null) pending else rows.next()
-          val uuid = cur.getString(0)
-          val entries = TrailMatcher.entriesOf(winMap, uuid)
-          if (entries.isEmpty) {
-            // unlisted trail: consume its rows, emit nothing
-            while (cur != null && cur.getString(0) == uuid) cur = nextRow()
-            pending = cur
-            return
-          }
-          // ONE shared initial state for all tuples: processTrail never
-          // mutates saved states, and equal states start in one class
-          val init = FsmState.initial(prog)
-          var carried = Array.fill(tups.length)(init)
-          val evs = scala.collection.mutable.ArrayBuffer[TrailEvent]()
-          var src = if (hasSrc) cur.getLong(2) else 0L
-          var prev: Row = null
-          // per segment, every window entry runs from the state the
-          // previous source left and the LAST entry's output carries
-          // (LocalRunner dbStates overwrite)
-          def replay(from: Array[FsmState], segSrc: Long): Array[FsmState] = {
-            val out = TrailMatcher.runEntries(
-              prog, tups, from, evs.toArray, entries, cutOf(segSrc), params, fcalls, emitAs)
-            evs.clear()
-            out
-          }
-          while (cur != null && cur.getString(0) == uuid) {
-            if (hasSrc && cur.getLong(2) != src) {
-              carried = replay(carried, src); prev = null; src = cur.getLong(2)
-            }
-            if (ghostIdx < 0 || cur.getInt(ghostIdx) != 1) {
-              val dup = prev != null && prev.getLong(1) == cur.getLong(1) && {
-                var i = fieldBase; var same = true
-                while (same && i < fieldBase + nDedup) { same = rowField(prev, i) == rowField(cur, i); i += 1 }
-                same
-              }
-              if (!dup) {
-                val arr = new Array[String](fieldIdxInRow.length)
-                var i = 0
-                while (i < arr.length) {
-                  arr(i) = if (fieldIdxInRow(i) == -1) "" else rowField(cur, fieldIdxInRow(i))
-                  i += 1
-                }
-                evs += new TrailEvent(cur.getLong(1), arr)
-                prev = cur
-              }
-            }
-            cur = nextRow()
-          }
-          pending = cur
-          carried = replay(carried, src)
-          // one finalization per cookie, ctx = the real cookie
-          // (reference: :899-944 iterates the cookie-keyed states map)
-          TrailMatcher.finalizeTrail(prog, tups, carried, uuid, params, fcalls, emitAs(uuid))
-        }
-
+        private var pos = 0
         override def hasNext: Boolean = {
-          while (bufPos >= buf.length && (pending != null || rows.hasNext))
-            processNextTrail()
-          bufPos < buf.length
+          while (pos >= reader.out.length && rows.hasNext) {
+            reader.out.clear(); pos = 0
+            val uuid = rows.head.getString(0)
+            reader.finish(uuid, reader.read(uuid, rows, reader.initial, cutOf))
+          }
+          pos < reader.out.length
         }
-        override def next(): Row = { val r = buf(bufPos); bufPos += 1; r }
+        override def next(): Row = { val r = reader.out(pos); pos += 1; r }
       }
-    }(enc)
-
-    emitted
+    }(emitEncoder)
   }
 
   /** Counter results as a DataFrame: (tuple vars…, dst, value), summed

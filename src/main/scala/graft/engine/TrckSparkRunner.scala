@@ -46,20 +46,6 @@ object TrckSparkRunner {
     ands.reduceOption(_ && _)
   }
 
-  /** Union one zero-event `__ghost` sentinel row per trail (per source, for
-    * multi-source runs) present in `presentFrom`, so trails whose events
-    * are all cut or filtered away still reach the engine's per-entry loop
-    * and MAX_TIMESTAMP finalization — the reference iterates DB trails
-    * regardless of how many events survive the min_ts cut and per-event
-    * filters (src/match_traildb.c:513-560). The engine never materializes
-    * sentinels as events (TrailEngine `__ghost` handling); for trails with
-    * surviving events the extra row is inert.
-    */
-  private def withSentinels(
-      real: DataFrame, presentFrom: DataFrame, uuidCol: String, tsCol: String): DataFrame =
-    TrailEngine.withPresenceSentinels(real, presentFrom, uuidCol, tsCol,
-      srcCol = if (presentFrom.columns.contains("__src")) Some("__src") else None)
-
   /** Widen a row predicate so `__ghost=1` presence sentinels survive it:
     * sentinel rows carry null fields and ts 0, so any cut/CNF/bounds
     * predicate would silently drop them — losing exactly the empty-trail
@@ -218,7 +204,7 @@ object TrckSparkRunner {
           else {
             val listed = presentBase
               .join(broadcast(bounds.select(uuidCol)), Seq(uuidCol), "left_semi")
-            (withSentinels(joined, listed, uuidCol, tsCol), Some(ws.entries))
+            (TrailEngine.withPresenceSentinels(joined, listed, uuidCol, tsCol, srcCol), Some(ws.entries))
           }
         case None =>
           // Without windows the empty-trail run is observable only when the
@@ -227,7 +213,7 @@ object TrckSparkRunner {
           // common path sentinel-free (no extra distinct pass at scale).
           if (hasGhostCol) (filtered, None)
           else if (TrailMatcher.emptyRunMutates(prog))
-            (withSentinels(filtered, presentBase, uuidCol, tsCol), None)
+            (TrailEngine.withPresenceSentinels(filtered, presentBase, uuidCol, tsCol, srcCol), None)
           else (filtered, None)
       }
 

@@ -190,11 +190,11 @@ object RestartProbe {
         docs => TrailStream.emits(funnelProg, funnelEvents(docs), "uuid", "ts")
           // binary `item` stringifies as an identity hash — hex it so the
           // multiset fingerprint is value-stable across runs
-          .toDF().selectExpr("uuid", "tupleIdx", "kind", "dst", "hex(item) AS item_hex", "n")),
+          .selectExpr("uuid", "tuple_idx", "kind", "dst", "hex(item) AS item_hex", "n")),
       arm("trailFsmWindowed",
         docs => TrailStream.emits(funnelProg, funnelEvents(docs), "uuid", "ts",
             windows = Some(winEntries))
-          .toDF().selectExpr("uuid", "tupleIdx", "kind", "dst", "hex(item) AS item_hex", "n")),
+          .selectExpr("uuid", "tuple_idx", "kind", "dst", "hex(item) AS item_hex", "n")),
       arm("dedupNearMinHash",
         docs => DocStream.dedupNearMinHash(docs, watermarkDelay = watermark)),
       // bounded-stateful arm: one counter per source ([[ProbeSynth]]'s

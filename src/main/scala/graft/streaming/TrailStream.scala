@@ -1,12 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.engine.TrailEngine
 import graft.trck._
 import graft.trck.Compiled.CompiledProgram
-import graft.trck.Fsm.{Bindings, FsmState, TrailEvent}
+import graft.trck.Fsm.{Bindings, FsmState}
 import graft.trck.LocalRunner.ForeachTuple
 
 /** Incremental trail matching over a Structured Streaming source.
@@ -42,39 +43,6 @@ object TrailStream {
   final case class StateData(ri: Int, windowExpires: Long, outerIds: Array[Int], outerExpires: Array[Long])
   final case class TrailState(states: Array[StateData], maxTs: Long)
 
-  /** `fields` is prog.fields-ordered for the FSM; `dedupFields` carries ALL
-    * non-reserved input columns — consecutive-duplicate elision compares the
-    * FULL event (reference: src/ctx.c:112-131; an event differing only in a
-    * column the program never references is NOT a duplicate), exactly like
-    * the batch engine's dedup projection.
-    */
-  final case class InEvent(uuid: String, ts: Long, eventTime: java.sql.Timestamp,
-                           fields: Array[String], dedupFields: Array[String])
-
-  /** `uuid` carries the result ctx id — the window entry id for window
-    * runs, the cookie otherwise — matching the batch engine's emit keying.
-    */
-  final case class EmitRow(uuid: String, tupleIdx: Int, kind: String, dst: String, item: Array[Byte], n: Long)
-
-  /** Consecutive-dup elision over the full projected event: the WIDE dedup
-    * projection, not the FSM-field array (a subset, which would elide too
-    * much).
-    */
-  private def dedupConsecutiveIn(evs: Array[InEvent]): Array[InEvent] = {
-    if (evs.length < 2) return evs
-    val out = new scala.collection.mutable.ArrayBuffer[InEvent](evs.length)
-    out += evs(0)
-    var i = 1
-    while (i < evs.length) {
-      val a = evs(i - 1); val b = evs(i)
-      val dup = a.ts == b.ts && java.util.Arrays.equals(
-        a.dedupFields.asInstanceOf[Array[AnyRef]], b.dedupFields.asInstanceOf[Array[AnyRef]])
-      if (!dup) out += b
-      i += 1
-    }
-    out.toArray
-  }
-
   private def toData(s: FsmState): StateData =
     StateData(s.ri, s.windowExpires, s.outerIds.clone(), s.outerExpires.clone())
 
@@ -89,10 +57,19 @@ object TrailStream {
 
   /** Wire a streaming events DataFrame (uuidCol, tsCol seconds, program
     * field columns) into the FSM. Returns the stream of emitted yield rows
-    * (same schema as TrailEngine.emits). Each micro-batch of a cookie is
-    * ts-sorted, consecutive duplicates are dropped once, and the events
-    * replay through [[graft.trck.TrailMatcher.runEntries]] — the batch
-    * engine's per-segment replay, each entry on its own ts slice.
+    * in the batch engine's format, `(uuid, tuple_idx, kind, dst, item, n)`,
+    * which TrckSparkRunner.aggregateEmits folds. Rows go through the batch
+    * engine's trail row codec: [[graft.engine.TrailEngine.project]] (its
+    * watermark column comes after the projection, so it never joins the
+    * consecutive-duplicate compare), then one
+    * [[graft.engine.TrailEngine.TrailReader]] per cookie and micro-batch:
+    * the batch's rows sorted by ts, consecutive duplicates dropped once,
+    * replayed through [[graft.trck.TrailMatcher.runEntries]] with the
+    * cookie's high-water mark as the min_ts cut.
+    *
+    * A foreach program needs `foreachTuples` that bind every foreach var
+    * (alone or with `params`): a stream has no lexicon to sweep, and an
+    * unbound var would make every `%var` predicate read false.
     *
     * Finalization: pass `eventTimeGapSec` (> 0) for watermark-driven
     * event-time finalization — a trail finalizes when the watermark (built
@@ -125,41 +102,30 @@ object TrailStream {
       eventTimeGapSec: Long = 0L,
       watermarkDelay: String = "0 seconds",
       windows: Option[Seq[LocalRunner.WindowEntry]] = None,
-  ): Dataset[EmitRow] = {
+  ): DataFrame = {
+    val unbound = prog.groupbyVars.filter { v =>
+      val name = Ir.stripType(v)
+      foreachTuples.exists { t =>
+        val b = t.bind(prog.groupbyVars, params)
+        !b.scalars.contains(name) && !b.sets.contains(name)
+      }
+    }
+    require(unbound.isEmpty,
+      s"foreach vars ${unbound.mkString(", ")} are unbound: a stream has no lexicon to " +
+        "sweep, so pass foreachTuples (or params) that bind every foreach var")
+
     val spark = events.sparkSession
     import spark.implicits._
 
-    val fieldCols = prog.fields.toSeq
-    // every non-reserved column joins the dedup compare (batch-engine
-    // parity); the FSM-field array stays prog.fields-ordered
-    val dedupCols = events.columns.filterNot(Set(uuidCol, tsCol)).toSeq
-    val projectedAll = events
-      .select(
-        col(uuidCol).cast("string").as("uuid"),
-        graft.Tables.tsLong(events, tsCol).as("ts"),
-        timestamp_seconds(graft.Tables.tsLong(events, tsCol)).as("eventTime"),
-        array(fieldCols.map(f =>
-          if (events.columns.contains(f)) coalesce(col(f).cast("string"), lit("")) else lit("")): _*
-        ).as("fields"),
-        // null and "" compare equal, as in the batch engine and LocalRunner
-        array(dedupCols.map(c => coalesce(col(c).cast("string"), lit(""))): _*).as("dedupFields"),
-      )
+    val (projectedAll, layout) = TrailEngine.project(prog, events, uuidCol, tsCol)
+    val timed = projectedAll.withColumn("__eventTime", timestamp_seconds(col("__ts")))
     // window runs: unlisted trails never reach the stateful operator
-    val projected0 = windows match {
-      case Some(ws) =>
-        val listed = ws.map(_.cookie).distinct.toDF("uuid")
-        projectedAll.join(broadcast(listed), Seq("uuid"), "left_semi")
-      case None => projectedAll
+    val listed = windows.fold(timed) { ws =>
+      timed.join(broadcast(ws.map(_.cookie).distinct.toDF("__uuid")), Seq("__uuid"), "left_semi")
     }
     val projected =
-      (if (eventTimeGapSec > 0) projected0.withWatermark("eventTime", watermarkDelay)
-       else projected0).as[InEvent]
-
-    val winByCookie: Option[Map[String, IndexedSeq[LocalRunner.WindowEntry]]] =
-      windows.map(_.groupBy(_.cookie).view.mapValues(_.toIndexedSeq).toMap)
-
-    val tuples = foreachTuples
-    val nTuples = tuples.length
+      if (eventTimeGapSec > 0) listed.withWatermark("__eventTime", watermarkDelay) else listed
+    val winByCookie = TrailEngine.windowsByCookie(windows)
 
     // NoTimeout unless finalization is requested — with a timeout mode
     // enabled Spark schedules continuous timeout-check micro-batches even
@@ -170,42 +136,24 @@ object TrailStream {
       else GroupStateTimeout.NoTimeout()
 
     projected
-      .groupByKey(_.uuid)
+      .groupByKey((r: Row) => r.getString(0))(Encoders.STRING)
       .flatMapGroupsWithState(OutputMode.Append(), timeoutMode)(
-        (uuid: String, rows: Iterator[InEvent], state: GroupState[TrailState]) => {
-          val buf = scala.collection.mutable.ArrayBuffer[EmitRow]()
-
-          // emit rows carry the result ctx id: the window ENTRY id inside an
-          // entry's run (batch parity — TrailEngine emits per entry id), the
-          // cookie otherwise (including finalization, like LocalRunner's
-          // per-cookie finalization)
-          def emit(ctxId: String)(j: Int, r: Results): Unit = {
-            r.counters.foreach { case (d, v) => if (v != 0) buf += EmitRow(ctxId, j, "c", d, null, v) }
-            r.sets.foreach { case (d, m) => m.foreach { case (t, c) => buf += EmitRow(ctxId, j, "s", d, t, c) } }
-            r.msets.foreach { case (d, m) => m.foreach { case (t, c) => buf += EmitRow(ctxId, j, "m", d, t, c) } }
-            r.hlls.foreach { case (d, h) => buf += EmitRow(ctxId, j, "h", d, h.sparse, 1L) }
-          }
-
+        (uuid: String, rows: Iterator[Row], state: GroupState[TrailState]) => {
+          val reader = new TrailEngine.TrailReader(prog, foreachTuples, layout, params, fcalls, winByCookie)
           if (state.hasTimedOut) {
             // end-of-input analog: MAX_TIMESTAMP finalization, state dropped
-            state.getOption.foreach { ts0 =>
-              val sts = ts0.states.map(fromData(_, prog.nWindowRules))
-              TrailMatcher.finalizeTrail(prog, tuples, sts, uuid, params, fcalls, emit(uuid))
-            }
+            state.getOption.foreach(st => reader.finish(uuid, st.states.map(fromData(_, prog.nWindowRules))))
             state.remove()
           } else {
-            val prev = state.getOption.getOrElse(
-              TrailState(Array.fill(nTuples)(toData(FsmState.initial(prog))), 0L))
-            // micro-batch = "next DB": sort, dedup once, then every entry
-            // runs on its ts slice above the high-water cut (LocalRunner's
-            // max(start, minTs)), starting from the state the previous batch
-            // left; the LAST entry's output carries forward
-            val evs = dedupConsecutiveIn(rows.toArray.sortBy(_.ts))
-            val out = TrailMatcher.runEntries(
-              prog, tuples, prev.states.map(fromData(_, prog.nWindowRules)),
-              evs.map(e => new TrailEvent(e.ts, e.fields)), TrailMatcher.entriesOf(winByCookie, uuid),
-              prev.maxTs, params, fcalls, emit)
-            val newMax = if (evs.isEmpty) prev.maxTs else math.max(prev.maxTs, evs.last.ts)
+            // micro-batch = "next DB": every entry runs on its ts slice
+            // above the high-water cut (LocalRunner's max(start, minTs)),
+            // starting from the state the previous batch left
+            val prev = state.getOption
+            val maxTs = prev.fold(0L)(_.maxTs)
+            val sorted = rows.toArray.sortBy(_.getLong(1))
+            val out = reader.read(uuid, sorted.iterator.buffered,
+              prev.fold(reader.initial)(_.states.map(fromData(_, prog.nWindowRules))), _ => maxTs)
+            val newMax = if (sorted.isEmpty) maxTs else math.max(maxTs, sorted.last.getLong(1))
             state.update(TrailState(out.map(toData), newMax))
             if (eventTimeGapSec > 0)
               // fire when the watermark passes last-event + gap; clamp above
@@ -214,9 +162,9 @@ object TrailStream {
                 math.max((newMax + eventTimeGapSec) * 1000L, state.getCurrentWatermarkMs() + 1L))
             else if (idleTimeoutMs > 0) state.setTimeoutDuration(idleTimeoutMs)
           }
-          buf.iterator
+          reader.out.iterator
         }
-      )
+      )(Encoders.product[TrailState], TrailEngine.emitEncoder)
   }
 
   /** Streaming face of the A4 HLL yield: per-group trck-format distinct

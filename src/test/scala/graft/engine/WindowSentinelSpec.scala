@@ -16,7 +16,7 @@ import graft.trck.LocalRunner.{Db, RawEvent}
   * whenever the entrypoint chain enters outer window-block rules — the
   * outer expiry is pushed at ts 0, so finalization at MAX_TIMESTAMP fires
   * the block's `after` yields. The Spark path keeps zero-event sentinels
-  * for exactly these trails (TrckSparkRunner.withSentinels), judged before
+  * for exactly these trails (TrailEngine.withPresenceSentinels), judged before
   * the min_ts cut of a multi-source run.
   */
 class WindowSentinelSpec extends AnyFunSuite with BeforeAndAfterAll {

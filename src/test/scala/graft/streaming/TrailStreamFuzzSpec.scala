@@ -32,8 +32,12 @@ import graft.trck.LocalRunner.{Db, ForeachTuple, RawEvent}
   *  - **strictly increasing per-uuid timestamps** inside a batch: the
   *    stream orders a micro-batch by `ts` while LocalRunner keeps trail
   *    insertion order, so equal-ts events with different fields would
-  *    compare two legal-but-different orderings (consecutive-duplicate
-  *    semantics are pinned by TrailStreamSpec / the batch fuzz instead).
+  *    compare two legal-but-different orderings. The one exception is a
+  *    same-ts copy of an event (see `withCopies`): identical, identical but
+  *    for null vs "" in `advertisable_eid`, or different only in a `note`
+  *    column no program reads. Either order of such a pair reads the same
+  *    to the program, so the copies fuzz the stream's consecutive-duplicate
+  *    drop, and LocalRunner decides which copies are dropped.
   *
   * Finalization: `eventTimeGapSec` is set far beyond the corpus's time
   * span so no trail can time out while data is still flowing (LocalRunner
@@ -59,13 +63,34 @@ class TrailStreamFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
     "advertisable_eid" -> eids(rnd.nextInt(eids.length)),
   )
 
-  /** First batch: strictly increasing ts per uuid. */
+  /** `e`, sometimes followed or preceded by a same-ts copy: identical
+    * (a duplicate), identical but for null vs "" in `advertisable_eid`
+    * (a duplicate: the key is absent from the null one's fields, and both
+    * read as ""), or with a `note` column no program reads (not a
+    * duplicate: dedup compares the full event).
+    */
+  private def withCopies(rnd: scala.util.Random, e: RawEvent): Seq[RawEvent] =
+    if (rnd.nextInt(4) != 0) Seq(e)
+    else {
+      val kind = rnd.nextInt(3)
+      TrailStreamFuzzSpec.copyKinds += kind
+      kind match {
+        case 0 => Seq(e, e)
+        case 1 =>
+          val empty = RawEvent(e.ts, e.fields.updated("advertisable_eid", ""))
+          val absent = RawEvent(e.ts, e.fields - "advertisable_eid")
+          if (rnd.nextBoolean()) Seq(empty, absent) else Seq(absent, empty)
+        case 2 => Seq(e, RawEvent(e.ts, e.fields.updated("note", s"n${rnd.nextInt(3)}")))
+      }
+    }
+
+  /** First batch: strictly increasing ts per uuid, plus same-ts copies. */
   private def firstBatch(rnd: scala.util.Random, nTrails: Int, nEvents: Int): Db =
     Db((0 until nTrails).map { u =>
       var ts = rnd.nextInt(200).toLong
-      val evs = (0 until nEvents).map { _ =>
+      val evs = (0 until nEvents).flatMap { _ =>
         ts += 1 + rnd.nextInt(400)
-        RawEvent(ts, randomEvent(rnd))
+        withCopies(rnd, RawEvent(ts, randomEvent(rnd)))
       }
       s"user$u" -> evs
     })
@@ -86,13 +111,13 @@ class TrailStreamFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
         var ts = globalMax + (if (rnd.nextBoolean()) 0L else rnd.nextInt(100).toLong)
         val lateCeil = uuidMax.getOrElse(uuid, 0L)
         val allLate = rnd.nextInt(6) == 0 && lateCeil > 1
-        val evs = (0 until 4 + rnd.nextInt(8)).map { _ =>
+        val evs = (0 until 4 + rnd.nextInt(8)).flatMap { _ =>
           if ((allLate || rnd.nextInt(4) == 0) && lateCeil > 1)
             // strictly below this uuid's own high-water: cut by BOTH engines
-            RawEvent(1L + rnd.nextLong(lateCeil - 1), randomEvent(rnd))
+            Seq(RawEvent(1L + rnd.nextLong(lateCeil - 1), randomEvent(rnd)))
           else {
             ts += 1 + rnd.nextInt(300)
-            RawEvent(ts, randomEvent(rnd))
+            withCopies(rnd, RawEvent(ts, randomEvent(rnd)))
           }
         }
         // user1 gets one event at EXACTLY the previous global max — the
@@ -109,7 +134,7 @@ class TrailStreamFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
     })
   }
 
-  /** Fold the collected EmitRows through the batch engine's own
+  /** Fold the collected emit rows through the batch engine's own
     * aggregation (TrckSparkRunner.aggregateEmits), the sentinel's rows
     * excluded.
     */
@@ -117,7 +142,7 @@ class TrailStreamFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
       tbl: String, prog: Compiled.CompiledProgram,
       tuples: Vector[ForeachTuple]): LocalRunner.RunOutput =
     TrckSparkRunner.aggregateEmits(prog, tuples,
-      spark.table(tbl).filter(col("uuid") =!= Sentinel).withColumnRenamed("tupleIdx", "tuple_idx"))
+      spark.table(tbl).filter(col("uuid") =!= Sentinel))
 
   private def runStream(
       prog: Compiled.CompiledProgram, dbs: Seq[Db], params: Fsm.Bindings,
@@ -126,8 +151,8 @@ class TrailStreamFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(String, Long, String, String)]
-    val events = input.toDF().toDF("uuid", "ts", "type", "advertisable_eid")
+    val input = MemoryStream[(String, Long, String, String, String)]
+    val events = input.toDF().toDF("uuid", "ts", "type", "advertisable_eid", "note")
     // nonzero watermark delay: with delay 0, Spark's stateful late-row
     // filter drops rows at exactly the previous batch's max BEFORE the
     // engine's own cut sees them — the ==-boundary case must be decided by
@@ -141,16 +166,17 @@ class TrailStreamFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
     try {
       dbs.foreach { db =>
         input.addData(db.trails.flatMap { case (uuid, evs) =>
-          evs.map(e => (uuid, e.ts, e.fields("type"), e.fields("advertisable_eid")))
+          evs.map(e => (uuid, e.ts, e.fields("type"),
+            e.fields.getOrElse("advertisable_eid", null), e.fields.getOrElse("note", null)))
         }: _*)
         query.processAllAvailable()
       }
       // end-of-input: sentinel batch 1 raises the watermark past every
       // trail's last-event+gap; batch 2 triggers the timeout sweep
       val globalMax = dbs.flatMap(_.trails.flatMap(_._2.map(_.ts))).max
-      input.addData((Sentinel, globalMax + GapSec + 1000L, "vis", ""))
+      input.addData((Sentinel, globalMax + GapSec + 1000L, "vis", "", null))
       query.processAllAvailable()
-      input.addData((Sentinel, globalMax + GapSec + 2000L, "vis", ""))
+      input.addData((Sentinel, globalMax + GapSec + 2000L, "vis", "", null))
       query.processAllAvailable()
       aggregate(tbl, prog, tuples)
     } finally query.stop()
@@ -236,9 +262,12 @@ class TrailStreamFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("streaming fuzz corpus was not vacuous") {
     assert(TrailStreamFuzzSpec.nonTrivial >= 3,
       s"only ${TrailStreamFuzzSpec.nonTrivial} non-trivial runs")
+    assert(TrailStreamFuzzSpec.copyKinds == Set(0, 1, 2),
+      s"same-ts copy kinds generated: ${TrailStreamFuzzSpec.copyKinds}")
   }
 }
 
 object TrailStreamFuzzSpec {
   @volatile var nonTrivial: Int = 0
+  @volatile var copyKinds: Set[Int] = Set.empty
 }

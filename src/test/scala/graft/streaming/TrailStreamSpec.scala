@@ -170,6 +170,29 @@ class TrailStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally query.stop()
   }
 
+  test("a foreach program needs tuples that bind every foreach var") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import graft.trck.LocalRunner.ForeachTuple
+    // with the default tuple %aeid is unbound, every `= %aeid` reads
+    // false, and a stream has no lexicon to sweep: refuse it, naming the var
+    val prog = Compiled.compile(graft.parser.TrParser.parse(
+      """foreach %aeid
+        |    start ->
+        |        receive
+        |            advertisable_eid = %aeid -> yield $r, repeat
+        |            * -> repeat
+        |""".stripMargin))
+    val events = MemoryStream[(String, Long, String)].toDF().toDF("uuid", "ts", "advertisable_eid")
+    val e = intercept[IllegalArgumentException](TrailStream.emits(prog, events, "uuid", "ts"))
+    assert(e.getMessage.contains("%aeid"), e.getMessage)
+    // a binding tuple is accepted, and the rows are in the batch format
+    val bound = TrailStream.emits(prog, events, "uuid", "ts",
+      foreachTuples = Vector(ForeachTuple(Vector(Left("a1")))))
+    assert(bound.columns.toSeq == Seq("uuid", "tuple_idx", "kind", "dst", "item", "n"))
+  }
+
   test("event-time timeout finalizes trails once the watermark passes") {
     val s = spark
     import s.implicits._

@@ -15,7 +15,7 @@ import LocalRunner.ForeachTuple
   * special step per event.
   *
   * Fixture: perftest1-shaped trails (the reference perf fixture, as
-  * `graft.PerfFixture` generates it) — implicit `foreach %aeid` over the
+  * trckperf's `perftest1` workload generates it) — implicit `foreach %aeid` over the
   * "" tuple plus the lexicon, two DBs of 100 events each, cookie c's
   * events cycling through `(c + 1) % 100 + 1` distinct values.
   */
