@@ -1,9 +1,14 @@
 package graft.engine
 
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Encoder, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.trck._
 import graft.trck.Compiled.CompiledProgram
@@ -49,13 +54,24 @@ object TrailEngine {
   val MaxImplicitForeachKey = "spark.graft.maxImplicitForeach"
   val MaxImplicitForeachDefault = 100000L
 
+  /** The local property `SparkContext.setJobDescription` writes. */
+  private val JobDescriptionKey = "spark.job.description"
+
   /** Implicit-foreach lexicon sweep: the distinct non-empty values of
-    * `field`, driver-collected and sorted. The collect itself is
+    * `field` (cast to string), collected to the driver and sorted in
+    * Scala `String` order, as LocalRunner sorts. The collect is
     * reference-sanctioned (the reference sweeps the DB lexicons the same
-    * way, src/match_traildb.c:188-236) and fine for enum-like fields — but
-    * a user pointing `foreach %x` at a high-cardinality field must get a
-    * clear error, not a driver OOM, so an approx_count_distinct pre-check
-    * fails fast above the configurable bound.
+    * way, src/match_traildb.c:188-236) and fine for enum-like fields.
+    *
+    * One Spark job, one scan of the pruned column, no shuffle: each task
+    * gathers its partition's distinct values, copying a value only on
+    * first sight, and stops reading once it holds `bound + 1`; the driver
+    * merges task results as they arrive and stops growing the merged set
+    * at `bound + 1`. The bound ([[MaxImplicitForeachKey]]) is exact: a
+    * field with more than `bound` distinct values fails with a clear
+    * error instead of a driver OOM. The job runs on the caller's thread,
+    * so the caller's job group and other local properties attribute it;
+    * its job description names the sweep and is restored afterwards.
     */
   def lexiconSweep(events: DataFrame, field: String): Vector[String] = {
     // a field that is not a column reads as "" everywhere else in the
@@ -65,21 +81,37 @@ object TrailEngine {
     val spark = events.sparkSession
     val bound = spark.conf.getOption(MaxImplicitForeachKey)
       .map(_.toLong).getOrElse(MaxImplicitForeachDefault)
-    val approx = events.agg(approx_count_distinct(col(field)).as("n")).head.getLong(0)
-    if (approx > bound)
+    val cap = bound + 1
+    val rows = events.select(col(field).cast(StringType)).queryExecution.toRdd
+    val sweep = (it: Iterator[InternalRow]) => {
+      val seen = new java.util.HashSet[UTF8String]
+      while (seen.size < cap && it.hasNext) {
+        val r = it.next()
+        if (!r.isNullAt(0)) {
+          val v = r.getUTF8String(0)
+          // rows are reused buffers: copy only a value not seen before
+          if (v.numBytes > 0 && !seen.contains(v)) seen.add(v.clone())
+        }
+      }
+      seen.asScala.iterator.map(_.toString).toArray
+    }
+    val merged = mutable.HashSet.empty[String]
+    val sc = spark.sparkContext
+    val prevDescription = sc.getLocalProperty(JobDescriptionKey)
+    sc.setJobDescription(s"trck lexicon sweep: $field")
+    try
+      sc.runJob(rows, sweep, (_: Int, vs: Array[String]) => {
+        val it = vs.iterator
+        while (merged.size < cap && it.hasNext) merged += it.next()
+      })
+    finally sc.setLocalProperty(JobDescriptionKey, prevDescription)
+    if (merged.size > bound)
       throw new IllegalArgumentException(
-        s"implicit foreach over '$field' would sweep ~$approx distinct values " +
-          s"(bound $bound): the lexicon is collected to the driver, so this " +
-          s"field is too high-cardinality for an implicit sweep — bind an " +
-          s"explicit foreach array, or raise $MaxImplicitForeachKey")
-    events
-      .select(coalesce(col(field).cast(StringType), lit("")).as("v"))
-      .distinct()
-      .collect()
-      .map(_.getString(0))
-      .filter(_.nonEmpty)
-      .sorted
-      .toVector
+        s"implicit foreach over '$field' would sweep more than $bound distinct " +
+          s"values: the lexicon is collected to the driver, so this field is " +
+          s"too high-cardinality for an implicit sweep — bind an explicit " +
+          s"foreach array, or raise $MaxImplicitForeachKey")
+    merged.toVector.sorted
   }
 
   /** The foreach tuples a run iterates: one empty tuple for a program

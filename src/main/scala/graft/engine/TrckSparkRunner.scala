@@ -70,30 +70,33 @@ object TrckSparkRunner {
     * DataFrame plus the per-source min_ts cuts, with the reference's
     * cross-DB semantics (src/match_traildb.c:804 — `min_ts =
     * tdb_max_timestamp(db)`, a plain OVERWRITE with the previous DB's max,
-    * NOT a running max): `cuts(i)` is source i-1's max timestamp (one tiny
-    * max() aggregation per source). No row is dropped here: [[runRaw]]
-    * takes the implicit-foreach lexicon and trail presence from the whole
-    * frame, as the reference reads every DB's lexicon and trail list, and
-    * then applies the cut before the shuffle. `__src` orders each trail's
-    * replay by source before timestamp; pass the cuts as runRaw's `srcCuts`.
-    * Cross-DB-boundary duplicate events are NOT deduped — the engine runs
-    * consecutive-dup elision per source segment, matching the per-DB trail
-    * reads.
+    * NOT a running max): `cuts(i)` is source i-1's max timestamp, floored
+    * at 0, and 0 for an empty or all-null source. One aggregation over the
+    * tagged union of sources 0..N-2 computes every max a cut reads; the
+    * last source's max is never read, so it is never computed. No row is
+    * dropped here: [[runRaw]] takes the implicit-foreach lexicon and trail
+    * presence from the whole frame, as the reference reads every DB's
+    * lexicon and trail list, and then applies the cut before the shuffle.
+    * `__src` orders each trail's replay by source before timestamp; pass
+    * the cuts as runRaw's `srcCuts`. Cross-DB-boundary duplicate events are
+    * NOT deduped — the engine runs consecutive-dup elision per source
+    * segment, matching the per-DB trail reads.
     */
   def unionSources(sources: Seq[DataFrame], tsCol: String): (DataFrame, Array[Long]) = {
     require(sources.nonEmpty)
     if (sources.lengthCompare(1) == 0) return (sources.head, Array.empty)
-    val maxes = sources.map { df =>
-      // floored at 0 like LocalRunner's foldLeft(0L)(max) — an all-negative
-      // source must not introduce a negative cut the oracle wouldn't apply
-      math.max(0L,
-        Option(df.agg(max(col(tsCol).cast("long"))).head.get(0))
-          .map(_.asInstanceOf[Long]).getOrElse(0L))
-    }
-    val cuts = (0L +: maxes.init).toArray // cuts(i) = max of source i-1
-    val df = sources.zipWithIndex.map { case (df, i) => df.withColumn("__src", lit(i)) }
-      .reduce(_ unionByName _)
-    (df, cuts)
+    val tagged = sources.zipWithIndex.map { case (df, i) => df.withColumn("__src", lit(i)) }
+    val maxes = tagged.init
+      .map(_.select(col("__src"), col(tsCol).cast("long").as("ts")))
+      .reduce(_ union _)
+      .groupBy("__src").agg(max("ts"))
+      .collect()
+      .collect { case r if !r.isNullAt(1) => r.getInt(0) -> r.getLong(1) }
+      .toMap
+    // floored at 0 like LocalRunner's foldLeft(0L)(max) — an all-negative
+    // source must not introduce a negative cut the oracle wouldn't apply
+    val cuts = (0L +: sources.indices.init.map(i => math.max(0L, maxes.getOrElse(i, 0L)))).toArray
+    (tagged.reduce(_ unionByName _), cuts)
   }
 
   /** Run a program over a trail DataFrame and return the raw

@@ -376,8 +376,9 @@ object Similarity {
 
   /** Conf key bounding [[exactPairsAboveBroadcast]]'s driver collect; the
     * same fail-loud posture as [[graft.engine.TrailEngine.lexiconSweep]]'s
-    * implicit-foreach bound: a pre-flight count against a configurable cap
-    * instead of a silent driver OOM at production corpus size.
+    * implicit-foreach bound: a configurable cap that fails loudly instead
+    * of a silent driver OOM at production corpus size (here checked by a
+    * pre-flight count).
     */
   val MaxBroadcastRowsKey = "graft.similarity.maxBroadcastRows"
   val MaxBroadcastRowsDefault = 2000000L

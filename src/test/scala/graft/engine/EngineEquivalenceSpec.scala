@@ -6,6 +6,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.GraftSession
+import graft.parser.TrParser
 import graft.trck._
 import graft.trck.LocalRunner.{Db, ForeachTuple, RawEvent}
 
@@ -264,6 +265,28 @@ class EngineEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sparkImplicit = TrckSparkRunner.runRaw(
       implicitProg, unioned, "uuid", "ts", Seq("seq"), srcCuts = cuts)
     assert(sparkImplicit.toOutputs == localImplicit.toOutputs)
+  }
+
+  test("golden implicit_foreach_lexicon.tr through unionSources + runRaw gives its expected rows") {
+    // the in-repo golden file's trails and hand-derived expectation (TrGoldenSpec
+    // runs the same file on LocalRunner)
+    val text = scala.io.Source.fromResource("golden/implicit_foreach_lexicon.tr").mkString
+    val trailer = org.json4s.jackson.JsonMethods.parse(TrParser.extractTestTrailer(text).get)
+    val golden = TestHarness.parseTest((trailer \ "tests")(0))
+    val prog = Compiled.compile(TrParser.parse(TrParser.programText(text)))
+    val s = spark
+    import s.implicits._
+    val dfs = golden.dbs.map { db =>
+      db.trails.flatMap { case (uuid, evs) =>
+        evs.map(e => (uuid, e.ts, e.fields.get("type"), e.fields.get("advertisable_eid")))
+      }.toDF("uuid", "ts", "type", "advertisable_eid")
+    }
+    val (unioned, cuts) = TrckSparkRunner.unionSources(dfs, "ts")
+    val got = TestHarness.outputToJValues(
+      TrckSparkRunner.runRaw(prog, unioned, "uuid", "ts", srcCuts = cuts))
+    val org.json4s.JArray(expected) = golden.expected
+    assert(got.length == expected.length)
+    assert(TestHarness.compare(golden.expected, got).isEmpty, TestHarness.compare(golden.expected, got))
   }
 
   test("window-file runs: per-entry ctx, cookie-keyed state, single finalization, Spark = local") {
