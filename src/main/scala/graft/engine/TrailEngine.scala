@@ -6,7 +6,10 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Encoder, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.codegen.{LazilyGeneratedOrdering, UnsafeRowWriter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -22,24 +25,34 @@ import graft.trck.LocalRunner.ForeachTuple
   *
   *   scan (pruned to uuid + ts + program fields, filters pushed down)
   *     → [[project]]: the one trail row projection
-  *     → repartition(uuid)                 // the ONE shuffle
-  *     → sortWithinPartitions(uuid, ts, tiebreak…)
-  *     → mapPartitions: a [[TrailReader]] reads consecutive same-uuid runs
-  *       in one pass, one trail in memory at a time (no per-group
-  *       materialization of the partition); consecutive duplicates are
-  *       dropped once per source segment, and each segment replays through
-  *       the cookie's window entries, each entry on its own ts slice
-  *       ([[graft.trck.TrailMatcher.runEntries]]: one pass per trail for
-  *       all foreach tuples, stepping tuple classes per event — at most
-  *       G + N event-steps per event for G starting states and N tuples
-  *       whose values occur); finalize at MAX_TIMESTAMP inline (no
-  *       cross-trail state), emit compact yield rows
+  *     → [[TrailPack]] (map side, narrow): each task concatenates each
+  *       trail's projected `UnsafeRow`s into one `(__uuid, __rows)`
+  *       fragment, flushing every buffered trail once the task holds
+  *       [[TrailPack.BudgetBytes]] — the exchange and its sort carry about
+  *       one fragment per (trail × map task), not one row per event
+  *     → repartition(__uuid)               // the ONE shuffle
+  *     → sortWithinPartitions(__uuid)      // brings a trail's fragments together
+  *     → [[TrailMatch]]: consecutive same-uuid fragments are one trail; a
+  *       [[TrailReader]] splits them back into `UnsafeRow` views, orders
+  *       them by (source, ts, tiebreak…) with Spark's generated ordering,
+  *       drops consecutive duplicates once per source segment and replays
+  *       each segment through the cookie's window entries, each entry on
+  *       its own ts slice ([[graft.trck.TrailMatcher.runEntries]]: one pass
+  *       per trail for all foreach tuples, stepping tuple classes per event
+  *       — at most G + N event-steps per event for G starting states and N
+  *       tuples whose values occur); finalize at MAX_TIMESTAMP inline (no
+  *       cross-trail state), emit compact yield `UnsafeRow`s. No event is
+  *       decoded into an external `Row`
   *     → groupBy(tuple, dst[, item]) aggregation — partial map-side combine
   *       makes the second shuffle O(distinct yields), not O(events)
   *
-  * State never outlives one trail iterator step, so executor memory is
-  * O(longest trail + tuple count), independent of partition size — the
-  * property that lets this run on 1000 executors with skewed users.
+  * A prepared layout ([[prepare]], `emits(prepared = true)`) runs
+  * project → TrailPack → TrailMatch with no exchange and no sort.
+  *
+  * Matching state never outlives one trail, so executor memory is
+  * O(pack budget + longest trail + tuple count), independent of partition
+  * size — the property that lets this run on 1000 executors with skewed
+  * users.
   *
   * The trail row codec ([[project]], [[TrailReader]], [[emitSchema]]) is
   * also the streaming engine's: [[graft.streaming.TrailStream.emits]]
@@ -56,6 +69,17 @@ object TrailEngine {
 
   /** The local property `SparkContext.setJobDescription` writes. */
   private val JobDescriptionKey = "spark.job.description"
+
+  /** Run `body` (which starts Spark jobs on this thread) under the job
+    * description `description`, restoring the caller's afterwards; the
+    * caller's job group and other local properties are left alone.
+    */
+  private[graft] def withJobDescription[T](sc: org.apache.spark.SparkContext, description: String)(body: => T): T = {
+    val prev = sc.getLocalProperty(JobDescriptionKey)
+    sc.setJobDescription(description)
+    try body
+    finally sc.setLocalProperty(JobDescriptionKey, prev)
+  }
 
   /** Implicit-foreach lexicon sweep: the distinct non-empty values of
     * `field` (cast to string), collected to the driver and sorted in
@@ -97,14 +121,12 @@ object TrailEngine {
     }
     val merged = mutable.HashSet.empty[String]
     val sc = spark.sparkContext
-    val prevDescription = sc.getLocalProperty(JobDescriptionKey)
-    sc.setJobDescription(s"trck lexicon sweep: $field")
-    try
+    withJobDescription(sc, s"trck lexicon sweep: $field") {
       sc.runJob(rows, sweep, (_: Int, vs: Array[String]) => {
         val it = vs.iterator
         while (merged.size < cap && it.hasNext) merged += it.next()
       })
-    finally sc.setLocalProperty(JobDescriptionKey, prevDescription)
+    }
     if (merged.size > bound)
       throw new IllegalArgumentException(
         s"implicit foreach over '$field' would sweep more than $bound distinct " +
@@ -143,7 +165,7 @@ object TrailEngine {
     * aggregation pass. [[graft.streaming.TrailStream.emits]] writes the
     * same rows through the same [[TrailReader]].
     */
-  private val emitSchema = StructType(Seq(
+  private[graft] val emitSchema = StructType(Seq(
     StructField("uuid", StringType),
     StructField("tuple_idx", IntegerType),
     StructField("kind", StringType), // c / s / m / h
@@ -159,11 +181,23 @@ object TrailEngine {
     * 1, `__srcord` at 2 when `hasSrc`, then the `nDedup` string columns
     * that make up the consecutive-duplicate compare; `fieldIdx(i)` is the
     * position of `prog.fields(i)` among them (-1: not a column, reads
-    * ""), `ghostIdx` that of `__ghost` (-1: none). Columns after the
-    * projection's own (a stream's watermark column) join no compare.
+    * ""), then `nTiebreak` tiebreaks, and `ghostIdx` that of `__ghost`
+    * (-1: none). `schema` is the projection's own; columns after it (a
+    * stream's watermark column) join no compare and no ordering.
     */
-  private[graft] final case class RowLayout(hasSrc: Boolean, nDedup: Int, fieldIdx: Array[Int], ghostIdx: Int) {
+  private[graft] final case class RowLayout(
+      hasSrc: Boolean, nDedup: Int, fieldIdx: Array[Int], nTiebreak: Int, ghostIdx: Int, schema: StructType) {
     val fieldBase: Int = if (hasSrc) 3 else 2
+
+    /** The order of a trail's rows: source, ts, then each tiebreak,
+      * ascending with nulls first.
+      */
+    def ordering: LazilyGeneratedOrdering = {
+      val tiebreaks = (0 until nTiebreak).map(_ + fieldBase + nDedup)
+      val key = (if (hasSrc) Seq(2) else Nil) ++ (1 +: tiebreaks)
+      new LazilyGeneratedOrdering(key.map(i =>
+        SortOrder(BoundReference(i, schema(i).dataType, nullable = true), Ascending)))
+    }
   }
 
   /** The trail row projection both engines read: uuid and ts, the source
@@ -203,7 +237,8 @@ object TrailEngine {
       if (i >= 0) i + fieldBase else -1
     }
     val ghostIdx = if (hasGhost) fieldBase + dedupCols.length + tiebreak.length else -1
-    (projected, RowLayout(srcCol.isDefined, dedupCols.length, fieldIdx, ghostIdx))
+    (projected,
+      RowLayout(srcCol.isDefined, dedupCols.length, fieldIdx, tiebreak.length, ghostIdx, projected.schema))
   }
 
   /** Window entries per cookie, in window-file order. */
@@ -211,10 +246,10 @@ object TrailEngine {
       windows: Option[Seq[LocalRunner.WindowEntry]]): Option[Map[String, IndexedSeq[LocalRunner.WindowEntry]]] =
     windows.map(_.groupBy(_.cookie).view.mapValues(_.toIndexedSeq).toMap)
 
-  /** The trail row codec of one task: decodes a trail's [[project]]ed
-    * rows into [[TrailEvent]]s, replays them, and encodes each tuple's
-    * [[Results]] as [[emitSchema]] rows into `out`. Not serializable:
-    * build one inside the task.
+  /** The trail row codec of one task: orders a trail's [[project]]ed
+    * rows, decodes them into [[TrailEvent]]s, replays them, and encodes
+    * each tuple's [[Results]] as [[emitSchema]] `UnsafeRow`s into `out`.
+    * Not serializable: build one inside the task.
     */
   private[graft] final class TrailReader(
       prog: CompiledProgram,
@@ -224,33 +259,52 @@ object TrailEngine {
       fcalls: Map[String, Fsm.Fcall],
       winMap: Option[Map[String, IndexedSeq[LocalRunner.WindowEntry]]],
   ) {
-    val out = scala.collection.mutable.ArrayBuffer[Row]()
-    private val evs = scala.collection.mutable.ArrayBuffer[TrailEvent]()
+    val out = mutable.ArrayBuffer[InternalRow]()
+    /** non-ghost rows read, and those kept after consecutive-duplicate elision */
+    var eventsIn, eventsKept = 0L
+    private val evs = mutable.ArrayBuffer[TrailEvent]()
+    private val ordering = layout.ordering
+    private val writer = new UnsafeRowWriter(emitSchema.length)
     import layout.{fieldBase, fieldIdx, ghostIdx, hasSrc, nDedup}
 
-    private def rowField(r: Row, i: Int): String = {
-      val v = r.get(i); if (v == null) "" else v.toString
+    private def field(r: InternalRow, i: Int): String =
+      if (r.isNullAt(i)) "" else r.getUTF8String(i).toString
+
+    /** dedup compare of one string column: null and "" are equal */
+    private def sameField(a: InternalRow, b: InternalRow, i: Int): Boolean = {
+      val an = a.isNullAt(i) || a.getUTF8String(i).numBytes == 0
+      val bn = b.isNullAt(i) || b.getUTF8String(i).numBytes == 0
+      if (an || bn) an && bn else a.getUTF8String(i) == b.getUTF8String(i)
     }
 
-    private def emitAs(ctxCookie: String)(j: Int, r: Results): Unit = {
-      // O(1) skip for identity results: a wide foreach broadcasts one
-      // scratch to thousands of absent-value tuples that yielded
-      // nothing — iterating four empty/zero maps per tuple was
-      // measurable at 10k-tuple cardinality
-      if (!r.touched) return
-      r.counters.foreach { case (d, v) =>
-        if (v != 0) out += Row(ctxCookie, j, "c", d, null, v)
-      }
-      r.sets.foreach { case (d, m) =>
-        m.foreach { case (t, c) => out += Row(ctxCookie, j, "s", d, t, c) }
-      }
-      r.msets.foreach { case (d, m) =>
-        m.foreach { case (t, c) => out += Row(ctxCookie, j, "m", d, t, c) }
-      }
-      r.hlls.foreach { case (d, h) =>
-        // the trail-local sketch's nonzero registers; merged upstream
-        out += Row(ctxCookie, j, "h", d, h.sparse, 1L)
-      }
+    private val Seq(kindC, kindS, kindM, kindH) = Seq("c", "s", "m", "h").map(UTF8String.fromString)
+
+    private def emit(ctx: UTF8String, j: Int, kind: UTF8String, dst: String, item: Array[Byte], n: Long): Unit = {
+      writer.reset()
+      writer.zeroOutNullBytes()
+      if (ctx == null) writer.setNullAt(0) else writer.write(0, ctx)
+      writer.write(1, j)
+      writer.write(2, kind)
+      writer.write(3, UTF8String.fromString(dst))
+      if (item == null) writer.setNullAt(4) else writer.write(4, item)
+      writer.write(5, n)
+      out += writer.getRow.copy()
+    }
+
+    private def emitAs(ctxCookie: String): (Int, Results) => Unit = {
+      val ctx = UTF8String.fromString(ctxCookie)
+      (j: Int, r: Results) =>
+        // O(1) skip for identity results: a wide foreach broadcasts one
+        // scratch to thousands of absent-value tuples that yielded
+        // nothing — iterating four empty/zero maps per tuple was
+        // measurable at 10k-tuple cardinality
+        if (r.touched) {
+          r.counters.foreach { case (d, v) => if (v != 0) emit(ctx, j, kindC, d, null, v) }
+          r.sets.foreach { case (d, m) => m.foreach { case (t, c) => emit(ctx, j, kindS, d, t, c) } }
+          r.msets.foreach { case (d, m) => m.foreach { case (t, c) => emit(ctx, j, kindM, d, t, c) } }
+          // the trail-local sketch's nonzero registers; merged upstream
+          r.hlls.foreach { case (d, h) => emit(ctx, j, kindH, d, h.sparse, 1L) }
+        }
     }
 
     /** Every tuple in the program's initial state. ONE shared state:
@@ -262,20 +316,23 @@ object TrailEngine {
       Array.fill(tuples.length)(init)
     }
 
-    /** Read the rows of trail `uuid` at the head of `rows` (ordered by
-      * source, then ts) in one pass: ghost rows establish the trail but
-      * add no event, consecutive duplicates are dropped against the
-      * previous kept row, and each source segment replays through the
-      * cookie's window entries from the state the previous segment left,
-      * with `cutOf(source)` as its min_ts cut, as soon as its last row is
-      * read. Returns the states the last segment leaves.
+    /** Read trail `uuid` from `rows(0 until n)`, all of its rows in any
+      * order: sort them by [[RowLayout.ordering]] (stable, so rows equal on
+      * the key keep their given order), then in one pass ghost rows
+      * establish the trail but add no event, consecutive duplicates are
+      * dropped against the previous kept row, and each source segment
+      * replays through the cookie's window entries from the state the
+      * previous segment left, with `cutOf(source)` as its min_ts cut, as
+      * soon as its last row is read. Returns the states the last segment
+      * leaves.
       */
-    def read(uuid: String, rows: scala.collection.BufferedIterator[Row], from: Array[FsmState],
+    def read(uuid: String, rows: Array[InternalRow], n: Int, from: Array[FsmState],
              cutOf: Long => Long): Array[FsmState] = {
+      java.util.Arrays.sort(rows, 0, n, ordering)
       val entries = TrailMatcher.entriesOf(winMap, uuid)
       var carried = from
-      var src = if (hasSrc && rows.hasNext) rows.head.getLong(2) else 0L
-      var prev: Row = null
+      var src = if (hasSrc && n > 0) rows(0).getLong(2) else 0L
+      var prev: InternalRow = null
       // per segment, every window entry runs from the state the
       // previous source left and the LAST entry's output carries
       // (LocalRunner dbStates overwrite)
@@ -285,25 +342,29 @@ object TrailEngine {
         evs.clear()
         out
       }
-      while (rows.hasNext && rows.head.getString(0) == uuid) {
-        val cur = rows.next()
+      var k = 0
+      while (k < n) {
+        val cur = rows(k)
+        k += 1
         if (hasSrc && cur.getLong(2) != src) {
           carried = replay(carried, src); prev = null; src = cur.getLong(2)
         }
         if (ghostIdx < 0 || cur.getInt(ghostIdx) != 1) {
+          eventsIn += 1
           val dup = prev != null && prev.getLong(1) == cur.getLong(1) && {
             var i = fieldBase; var same = true
-            while (same && i < fieldBase + nDedup) { same = rowField(prev, i) == rowField(cur, i); i += 1 }
+            while (same && i < fieldBase + nDedup) { same = sameField(prev, cur, i); i += 1 }
             same
           }
           if (!dup) {
             val arr = new Array[String](fieldIdx.length)
             var i = 0
             while (i < arr.length) {
-              arr(i) = if (fieldIdx(i) == -1) "" else rowField(cur, fieldIdx(i))
+              arr(i) = if (fieldIdx(i) == -1) "" else field(cur, fieldIdx(i))
               i += 1
             }
             evs += new TrailEvent(cur.getLong(1), arr)
+            eventsKept += 1
             prev = cur
           }
         }
@@ -365,7 +426,10 @@ object TrailEngine {
     * EngineEquivalenceSpec's bucketed-table test).
     *
     * The guarantee emits needs is exactly: same-uuid rows contiguous per
-    * partition, ordered by (preOrder, ts, tiebreak) within each uuid run.
+    * partition. The reader orders the rows inside a trail itself (by
+    * source, ts, tiebreak), so the within-partition sort here is not part
+    * of the contract; it keeps each trail's rows in order for the other
+    * readers of the layout (the `ta_*_prepared` window queries).
     *
     * The layout bakes in `__ghost` presence sentinels
     * ([[withPresenceSentinels]]): one zero-event row per trail (per source)
@@ -436,10 +500,11 @@ object TrailEngine {
         */
       srcCol: Option[String] = None,
       srcCuts: Array[Long] = Array.empty,
-      /** true ⇒ `events` is already uuid-clustered and (uuid, src, ts,
-        * tiebreak)-sorted within partitions (via [[prepare]] or an
-        * equivalent bucketed layout) — the per-query shuffle+sort is
-        * skipped entirely. Correctness depends on the caller's guarantee.
+      /** true ⇒ `events` is already uuid-clustered: each trail's rows are
+        * contiguous within one partition, in any order (via [[prepare]] or
+        * an equivalent bucketed layout) — the per-query exchange and sort
+        * are skipped entirely; the reader orders each trail's rows.
+        * Correctness depends on the caller's guarantee.
         * [[prepare]] layouts bake in `__ghost` presence sentinels, so
         * empty-trail parity (a listed cookie filtered to zero events still
         * runs its per-entry loop + finalization) holds on the prepared
@@ -452,6 +517,7 @@ object TrailEngine {
     val spark = events.sparkSession
     val tuples = runTuples(prog, foreachTuples, events)
     val (projected, layout) = project(prog, events, uuidCol, tsCol, tiebreak, srcCol)
+    PlanBridge.registerStrategy(spark, TrailStrategy)
 
     // r21 note: an explicit-count repartition here (to defeat AQE's
     // coalesce-to-one at bench scale, the sessions()/asOfJoin fix) was
@@ -461,51 +527,15 @@ object TrailEngine {
     // task count exceeds the single-task matching cost at bench scale,
     // unlike the window kernels where per-row work dominates. Reverted;
     // the AQE-coalescible exchange stands.
-    val sorted =
-      if (prepared) projected // layout guaranteed by the caller — no shuffle
-      else
-        projected
-          .repartition(col("__uuid"))
-          .sortWithinPartitions(
-            col("__uuid") +: (srcCol.map(_ => col("__srcord")).toSeq ++
-              (col("__ts") +: tiebreak.indices.map(i => col(s"__tb$i")))): _*)
+    val packed = PlanBridge.ofRows(spark, TrailPack(PlanBridge.logicalPlan(projected)))
+    val clustered =
+      if (prepared) packed // layout guaranteed by the caller — no exchange
+      else packed.repartition(col("__uuid")).sortWithinPartitions(col("__uuid"))
 
-    val tuplesB = spark.sparkContext.broadcast(tuples)
-    val winB = spark.sparkContext.broadcast(windowsByCookie(windows))
-    val cutsB = spark.sparkContext.broadcast(srcCuts)
-
-    sorted.mapPartitions { part =>
-      val reader = new TrailReader(prog, tuplesB.value, layout, params, fcalls, winB.value)
-      val cuts = cutsB.value
-      val rows = part.buffered
-
-      /** A source's min_ts cut. Single-source runs carry no cuts (src
-        * tag 0, cuts empty); a TAGGED source beyond the cuts array means
-        * the caller lost the unionSources cuts — silently treating it as
-        * uncut would include events below that source's min_ts.
-        */
-      val cutOf: Long => Long = src =>
-        if (cuts.isEmpty) 0L
-        else if (src >= 0 && src < cuts.length) cuts(src.toInt)
-        else throw new IllegalStateException(
-          s"source index $src has no min_ts cut (${cuts.length} cuts) — " +
-            "pass unionSources' cuts through srcCuts")
-
-      // one trail in memory at a time: read the next same-uuid run and
-      // finalize it once the emit rows of the previous trail are drained
-      new Iterator[Row] {
-        private var pos = 0
-        override def hasNext: Boolean = {
-          while (pos >= reader.out.length && rows.hasNext) {
-            reader.out.clear(); pos = 0
-            val uuid = rows.head.getString(0)
-            reader.finish(uuid, reader.read(uuid, rows, reader.initial, cutOf))
-          }
-          pos < reader.out.length
-        }
-        override def next(): Row = { val r = reader.out(pos); pos += 1; r }
-      }
-    }(emitEncoder)
+    val sc = spark.sparkContext
+    val spec = new TrailMatchSpec(prog, sc.broadcast(tuples), layout, params, fcalls,
+      sc.broadcast(windowsByCookie(windows)), sc.broadcast(srcCuts))
+    PlanBridge.ofRows(spark, TrailMatch(spec, PlanBridge.logicalPlan(clustered)))
   }
 
   /** Counter results as a DataFrame: (tuple vars…, dst, value), summed

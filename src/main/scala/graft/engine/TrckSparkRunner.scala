@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
 import graft.trck._
@@ -71,9 +72,11 @@ object TrckSparkRunner {
     * cross-DB semantics (src/match_traildb.c:804 — `min_ts =
     * tdb_max_timestamp(db)`, a plain OVERWRITE with the previous DB's max,
     * NOT a running max): `cuts(i)` is source i-1's max timestamp, floored
-    * at 0, and 0 for an empty or all-null source. One aggregation over the
-    * tagged union of sources 0..N-2 computes every max a cut reads; the
-    * last source's max is never read, so it is never computed. No row is
+    * at 0, and 0 for an empty or all-null source. One Spark job over the
+    * tagged union of sources 0..N-2 computes every max a cut reads: each
+    * task keeps one running max per source, floored at 0, and the driver
+    * merges them as tasks finish. The last source's max is never read, so
+    * it is never computed. No row is
     * dropped here: [[runRaw]] takes the implicit-foreach lexicon and trail
     * presence from the whole frame, as the reference reads every DB's
     * lexicon and trail list, and then applies the cut before the shuffle.
@@ -86,17 +89,25 @@ object TrckSparkRunner {
     require(sources.nonEmpty)
     if (sources.lengthCompare(1) == 0) return (sources.head, Array.empty)
     val tagged = sources.zipWithIndex.map { case (df, i) => df.withColumn("__src", lit(i)) }
-    val maxes = tagged.init
-      .map(_.select(col("__src"), col(tsCol).cast("long").as("ts")))
+    val read = tagged.init
+      .map(_.select(col("__src"), col(tsCol).cast("long")))
       .reduce(_ union _)
-      .groupBy("__src").agg(max("ts"))
-      .collect()
-      .collect { case r if !r.isNullAt(1) => r.getInt(0) -> r.getLong(1) }
-      .toMap
+      .queryExecution.toRdd
+    val nCut = sources.length - 1
     // floored at 0 like LocalRunner's foldLeft(0L)(max) — an all-negative
     // source must not introduce a negative cut the oracle wouldn't apply
-    val cuts = (0L +: sources.indices.init.map(i => math.max(0L, maxes.getOrElse(i, 0L)))).toArray
-    (tagged.reduce(_ unionByName _), cuts)
+    val taskMax = (rows: Iterator[InternalRow]) => {
+      val m = new Array[Long](nCut)
+      rows.foreach(r => if (!r.isNullAt(1)) m(r.getInt(0)) = math.max(m(r.getInt(0)), r.getLong(1)))
+      m
+    }
+    val maxes = new Array[Long](nCut)
+    val sc = read.sparkContext
+    TrailEngine.withJobDescription(sc, "trck min_ts cuts") {
+      sc.runJob(read, taskMax, (_: Int, m: Array[Long]) =>
+        for (i <- 0 until nCut) maxes(i) = math.max(maxes(i), m(i)))
+    }
+    (tagged.reduce(_ unionByName _), 0L +: maxes)
   }
 
   /** Run a program over a trail DataFrame and return the raw
@@ -122,12 +133,13 @@ object TrckSparkRunner {
         */
       srcCuts: Array[Long] = Array.empty,
       /** true ⇒ `events` is a [[TrailEngine.prepare]] layout (or an
-        * equivalent bucketed table): uuid-clustered, (uuid, src, ts,
-        * tiebreak)-sorted, `__ghost` sentinels baked in — the per-query
-        * shuffle+sort is skipped and sentinels come from the layout
-        * instead of a presence union. All filters here are
-        * order-preserving narrow ops (filter / broadcast joins), so the
-        * layout contract survives them.
+        * equivalent bucketed table): uuid-clustered — each trail's rows
+        * contiguous within one partition, in any order; the engine orders
+        * a trail's rows itself — with `__ghost` sentinels baked in. The
+        * per-query exchange and sort are skipped and sentinels come from
+        * the layout instead of a presence union. All filters here are
+        * narrow ops that keep a partition's row order (filter / broadcast
+        * joins), so the layout contract survives them.
         */
       prepared: Boolean = false,
   ): LocalRunner.RunOutput = {

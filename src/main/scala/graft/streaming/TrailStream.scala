@@ -1,6 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -55,15 +57,38 @@ object TrailStream {
     s
   }
 
+  /** The stream's side of the trail row codec, built once per task: a
+    * group's rows arrive as external `Row`s of the projection (plus the
+    * watermark column, which no encoder field reads) and become
+    * `InternalRow`s for the one [[TrailEngine.TrailReader]]; its emit
+    * `UnsafeRow`s go back out as `Row`s.
+    */
+  private final class RowCodec(
+      prog: CompiledProgram,
+      tuples: Vector[ForeachTuple],
+      layout: TrailEngine.RowLayout,
+      params: Bindings,
+      fcalls: Map[String, Fsm.Fcall],
+      winMap: Option[Map[String, IndexedSeq[LocalRunner.WindowEntry]]],
+  ) extends Serializable {
+    @transient lazy val reader = new TrailEngine.TrailReader(prog, tuples, layout, params, fcalls, winMap)
+    @transient private lazy val serializer = ExpressionEncoder(layout.schema).createSerializer()
+    @transient private lazy val deserializer =
+      ExpressionEncoder(TrailEngine.emitSchema).resolveAndBind().createDeserializer()
+    def toInternal(r: Row): InternalRow = serializer(r).copy()
+    def toRow(r: InternalRow): Row = deserializer(r)
+  }
+
   /** Wire a streaming events DataFrame (uuidCol, tsCol seconds, program
     * field columns) into the FSM. Returns the stream of emitted yield rows
     * in the batch engine's format, `(uuid, tuple_idx, kind, dst, item, n)`,
     * which TrckSparkRunner.aggregateEmits folds. Rows go through the batch
     * engine's trail row codec: [[graft.engine.TrailEngine.project]] (its
     * watermark column comes after the projection, so it never joins the
-    * consecutive-duplicate compare), then one
-    * [[graft.engine.TrailEngine.TrailReader]] per cookie and micro-batch:
-    * the batch's rows sorted by ts, consecutive duplicates dropped once,
+    * consecutive-duplicate compare), then the batch engine's
+    * [[graft.engine.TrailEngine.TrailReader]] (one per task) reads each
+    * cookie's micro-batch rows as `InternalRow`s: ordered by ts as the
+    * batch engine orders a trail, consecutive duplicates dropped once,
     * replayed through [[graft.trck.TrailMatcher.runEntries]] with the
     * cookie's high-water mark as the min_ts cut.
     *
@@ -118,6 +143,7 @@ object TrailStream {
     import spark.implicits._
 
     val (projectedAll, layout) = TrailEngine.project(prog, events, uuidCol, tsCol)
+    val codec = new RowCodec(prog, foreachTuples, layout, params, fcalls, TrailEngine.windowsByCookie(windows))
     val timed = projectedAll.withColumn("__eventTime", timestamp_seconds(col("__ts")))
     // window runs: unlisted trails never reach the stateful operator
     val listed = windows.fold(timed) { ws =>
@@ -125,7 +151,6 @@ object TrailStream {
     }
     val projected =
       if (eventTimeGapSec > 0) listed.withWatermark("__eventTime", watermarkDelay) else listed
-    val winByCookie = TrailEngine.windowsByCookie(windows)
 
     // NoTimeout unless finalization is requested — with a timeout mode
     // enabled Spark schedules continuous timeout-check micro-batches even
@@ -139,7 +164,8 @@ object TrailStream {
       .groupByKey((r: Row) => r.getString(0))(Encoders.STRING)
       .flatMapGroupsWithState(OutputMode.Append(), timeoutMode)(
         (uuid: String, rows: Iterator[Row], state: GroupState[TrailState]) => {
-          val reader = new TrailEngine.TrailReader(prog, foreachTuples, layout, params, fcalls, winByCookie)
+          val reader = codec.reader
+          reader.out.clear()
           if (state.hasTimedOut) {
             // end-of-input analog: MAX_TIMESTAMP finalization, state dropped
             state.getOption.foreach(st => reader.finish(uuid, st.states.map(fromData(_, prog.nWindowRules))))
@@ -147,13 +173,14 @@ object TrailStream {
           } else {
             // micro-batch = "next DB": every entry runs on its ts slice
             // above the high-water cut (LocalRunner's max(start, minTs)),
-            // starting from the state the previous batch left
+            // starting from the state the previous batch left; the reader
+            // orders the batch's rows
             val prev = state.getOption
             val maxTs = prev.fold(0L)(_.maxTs)
-            val sorted = rows.toArray.sortBy(_.getLong(1))
-            val out = reader.read(uuid, sorted.iterator.buffered,
+            val batch = rows.map(codec.toInternal).toArray
+            val out = reader.read(uuid, batch, batch.length,
               prev.fold(reader.initial)(_.states.map(fromData(_, prog.nWindowRules))), _ => maxTs)
-            val newMax = if (sorted.isEmpty) maxTs else math.max(maxTs, sorted.last.getLong(1))
+            val newMax = batch.foldLeft(maxTs)((m, r) => math.max(m, r.getLong(1)))
             state.update(TrailState(out.map(toData), newMax))
             if (eventTimeGapSec > 0)
               // fire when the watermark passes last-event + gap; clamp above
@@ -162,7 +189,8 @@ object TrailStream {
                 math.max((newMax + eventTimeGapSec) * 1000L, state.getCurrentWatermarkMs() + 1L))
             else if (idleTimeoutMs > 0) state.setTimeoutDuration(idleTimeoutMs)
           }
-          reader.out.iterator
+          // copied out: the next group refills the task's one reader
+          reader.out.iterator.map(codec.toRow).toArray.iterator
         }
       )(Encoders.product[TrailState], TrailEngine.emitEncoder)
   }

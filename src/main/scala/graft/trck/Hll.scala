@@ -14,21 +14,37 @@ package graft.trck
   *  - bias interpolation skips the exact-datapoint case and the last
   *    interval (reference loop bound `red_length - 2`), returning 0 there.
   */
-final class Hll private (val registers: Array[Byte]) extends Serializable {
+final class Hll private (val registers: Array[Byte], tracked: Boolean) extends Serializable {
   import Hll._
+
+  /** Indices of the registers [[add]] and [[merge]] turned nonzero, in the
+    * order they did; null for a sketch over registers written elsewhere
+    * ([[Hll.wrap]], [[Hll.fromHexString]]), which [[sparse]] scans.
+    */
+  private var nonzero: Array[Short] = if (tracked) new Array[Short](16) else null
+  private var nNonzero = 0
+
+  private def set(idx: Int, rank: Byte): Unit = {
+    if (nonzero != null && registers(idx) == 0) {
+      if (nNonzero == nonzero.length) nonzero = java.util.Arrays.copyOf(nonzero, 2 * nNonzero)
+      nonzero(nNonzero) = idx.toShort
+      nNonzero += 1
+    }
+    registers(idx) = rank
+  }
 
   def add(data: Array[Byte]): Unit = {
     if (data.length == 0) return // reference hashes empty input to 0... but never inserts empties
     val h = Murmur3.hash64(data)
     val idx = (h & (M - 1)).toInt
     val w = Integer.numberOfLeadingZeros((h | (M - 1)).toInt) + 1
-    if ((registers(idx) & 0xff) < w) registers(idx) = w.toByte
+    if ((registers(idx) & 0xff) < w) set(idx, w.toByte)
   }
 
   def merge(other: Hll): Hll = {
     var i = 0
     while (i < M) {
-      if ((registers(i) & 0xff) < (other.registers(i) & 0xff)) registers(i) = other.registers(i)
+      if ((registers(i) & 0xff) < (other.registers(i) & 0xff)) set(i, other.registers(i))
       i += 1
     }
     this
@@ -71,23 +87,23 @@ final class Hll private (val registers: Array[Byte]) extends Serializable {
   /** Nonzero registers as (index hi, index lo, rank) byte triples, in
     * index order — the per-trail emit form: a sketch of k distinct items
     * ships at most 3k bytes instead of all [[Hll.M]] registers.
-    * [[Hll.maxSparse]] folds it back into a register array.
+    * [[Hll.maxSparse]] folds it back into a register array. A sketch built
+    * by [[Hll.apply]] visits only its k nonzero registers (sorted, O(k log
+    * k)); one over foreign registers scans all of them.
     */
   def sparse: Array[Byte] = {
-    var n = 0
-    var i = 0
-    while (i < M) { if (registers(i) != 0) n += 1; i += 1 }
-    val out = new Array[Byte](3 * n)
-    var o = 0
-    i = 0
-    while (i < M) {
-      if (registers(i) != 0) {
-        out(o) = (i >>> 8).toByte
-        out(o + 1) = i.toByte
-        out(o + 2) = registers(i)
-        o += 3
-      }
-      i += 1
+    val idx =
+      if (nonzero != null) java.util.Arrays.copyOf(nonzero, nNonzero)
+      else (0 until M).filter(registers(_) != 0).map(_.toShort).toArray
+    java.util.Arrays.sort(idx)
+    val out = new Array[Byte](3 * idx.length)
+    var k = 0
+    while (k < idx.length) {
+      val i = idx(k).toInt
+      out(3 * k) = (i >>> 8).toByte
+      out(3 * k + 1) = i.toByte
+      out(3 * k + 2) = registers(i)
+      k += 1
     }
     out
   }
@@ -127,14 +143,14 @@ object Hll {
   /** Serialization of an absent sketch (reference: hll_to_string NULL case). */
   final val EmptyHex = "0e00"
 
-  def apply(): Hll = new Hll(new Array[Byte](M))
+  def apply(): Hll = new Hll(new Array[Byte](M), tracked = true)
 
   /** View over an externally-owned register array (e.g. a Spark Aggregator
     * buffer) — mutations write through.
     */
   def wrap(registers: Array[Byte]): Hll = {
     require(registers.length == M, s"expected $M registers, got ${registers.length}")
-    new Hll(registers)
+    new Hll(registers, tracked = false)
   }
 
   /** RLE-hex of a raw register buffer, with the reference's empty-sketch
@@ -164,7 +180,7 @@ object Hll {
 
   def fromHexString(s: String): Hll = {
     // reference: src/utils.c:164-210 hll_rle_decode
-    val hll = Hll()
+    val hll = new Hll(new Array[Byte](M), tracked = false)
     if (s.length <= 4 || s.substring(2, 4) == "00") return hll
     var pos = 4
     var idx = 0

@@ -24,10 +24,14 @@ class CliSpec extends AnyFunSuite {
     } finally System.setOut(old)
   }
 
+  /** A program of the in-repo golden corpus (src/test/resources/golden). */
+  private def golden(name: String): String =
+    java.nio.file.Paths.get(getClass.getResource(s"/golden/$name").toURI).toString
+
   test("Tr2Png renders the reference window program to a real PNG") {
     val dir = Files.createTempDirectory("graft-tr2png")
     val out = dir.resolve("machine.png").toString
-    graft.Tr2Png.main(Array("/root/reference/test/tr/test_set_result_tuple_window.tr", out))
+    graft.Tr2Png.main(Array(golden("window_after_10m.tr"), out))
     val img = javax.imageio.ImageIO.read(new java.io.File(out))
     assert(img != null, "output must be a decodable PNG")
     val (w, h) = (img.getWidth, img.getHeight)
@@ -41,14 +45,14 @@ class CliSpec extends AnyFunSuite {
     assert(inked(0, w / 3) + inked(2 * w / 3, w) > 20, "edge margins are blank")
     // default output path derives from the program name
     val defaulted = dir.resolve("prog.tr")
-    Files.copy(java.nio.file.Paths.get("/root/reference/test/tr/test_filters.tr"), defaulted)
+    Files.copy(java.nio.file.Paths.get(golden("multi_db_carry.tr")), defaulted)
     graft.Tr2Png.main(Array(defaulted.toString))
     assert(Files.exists(dir.resolve("prog.png")))
   }
 
   test("Tr2Dot dumps the reference window program as DOT") {
     val (_, bytes) = withCapturedStdout {
-      graft.Tr2Dot.main(Array("/root/reference/test/tr/test_set_result_tuple_window.tr"))
+      graft.Tr2Dot.main(Array(golden("window_after_10m.tr")))
     }
     val out = new String(bytes, "UTF-8")
     assert(out.startsWith("digraph trck {"))

@@ -1,5 +1,10 @@
 package graft.engine
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -56,5 +61,34 @@ class UnionSourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
     intercept[Exception](last.collect())
     val (_, cuts) = TrckSparkRunner.unionSources(Seq(src(Some(7L)), src(Some(3L), Some(11L)), last), "ts")
     assert(cuts.toSeq == Seq(0L, 7L, 11L))
+  }
+
+  test("the cuts are one Spark job") {
+    val starts = new ConcurrentLinkedQueue[SparkListenerJobStart]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = starts.add(e)
+    }
+    val sc = spark.sparkContext
+    val sources = Seq(src(Some(5L), Some(8L)), src(Some(2L)), src(None), src(Some(1L)))
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("union-group", "caller description")
+      val (_, cuts) =
+        try TrckSparkRunner.unionSources(sources, "ts")
+        finally sc.clearJobGroup()
+      assert(cuts.toSeq == Seq(0L, 8L, 2L, 0L))
+      // listener events arrive in order: once the marker job is seen,
+      // every job unionSources started has been seen
+      sc.setJobDescription("marker")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      def described(d: String) =
+        starts.asScala.filter(_.properties.getProperty("spark.job.description") == d).toSeq
+      while (described("marker").isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(described("marker").size == 1)
+      val jobs = starts.asScala.filter(_.properties.getProperty("spark.jobGroup.id") == "union-group").toSeq
+      assert(jobs.size == 1, s"jobs: ${starts.asScala.map(_.properties).mkString("; ")}")
+    } finally sc.removeSparkListener(listener)
   }
 }
