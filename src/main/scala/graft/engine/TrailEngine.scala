@@ -6,11 +6,13 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Encoder, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
-import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, SortOrder, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{LazilyGeneratedOrdering, UnsafeRowWriter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.array.ByteArrayMethods
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.trck._
@@ -32,13 +34,16 @@ import graft.trck.LocalRunner.ForeachTuple
   *       one fragment per (trail × map task), not one row per event
   *     → repartition(__uuid)               // the ONE shuffle
   *     → sortWithinPartitions(__uuid)      // brings a trail's fragments together
-  *     → [[TrailMatch]]: consecutive same-uuid fragments are one trail; a
-  *       [[TrailReader]] splits them back into `UnsafeRow` views, orders
-  *       them by (source, ts, tiebreak…) with Spark's generated ordering,
-  *       drops consecutive duplicates once per source segment and replays
-  *       each segment through the cookie's window entries, each entry on
-  *       its own ts slice ([[graft.trck.TrailMatcher.runEntries]]: one pass
-  *       per trail for all foreach tuples, stepping tuple classes per event
+  *     → [[TrailMatch]]: consecutive same-uuid fragments are one trail,
+  *       copied into one arena per task; a [[TrailReader]] views them as
+  *       `UnsafeRow`s, orders them by (source, ts, tiebreak…) — primitive
+  *       `(source, ts)` keys first, the generated ordering only on runs of
+  *       equal keys — drops consecutive duplicates once per source segment,
+  *       decodes each compared field to the canonical String of a program
+  *       value (other values to a new String), and replays each segment
+  *       through the cookie's window entries, each entry on its own ts
+  *       slice ([[graft.trck.TrailMatcher.runEntries]]: one pass per trail
+  *       for all foreach tuples, stepping tuple classes in place per event
   *       — at most G + N event-steps per event for G starting states and N
   *       tuples whose values occur); finalize at MAX_TIMESTAMP inline (no
   *       cross-trail state), emit compact yield `UnsafeRow`s. No event is
@@ -52,7 +57,9 @@ import graft.trck.LocalRunner.ForeachTuple
   * Matching state never outlives one trail, so executor memory is
   * O(pack budget + longest trail + tuple count), independent of partition
   * size — the property that lets this run on 1000 executors with skewed
-  * users.
+  * users. The reduce side's buffers (fragment arena, row views, sort
+  * scratch, the class loop's scratch and results pool) are reused from
+  * trail to trail and grow to the longest trail.
   *
   * The trail row codec ([[project]], [[TrailReader]], [[emitSchema]]) is
   * also the streaming engine's: [[graft.streaming.TrailStream.emits]]
@@ -246,10 +253,56 @@ object TrailEngine {
       windows: Option[Seq[LocalRunner.WindowEntry]]): Option[Map[String, IndexedSeq[LocalRunner.WindowEntry]]] =
     windows.map(_.groupBy(_.cookie).view.mapValues(_.toIndexedSeq).toMap)
 
+  /** UTF-8 bytes → the canonical `String` of each of `values`, probed
+    * straight from a row's bytes (open addressing), so a hit decodes
+    * nothing and hands out a String whose hash is cached.
+    */
+  private final class CanonicalValues(values: Iterable[String]) {
+    private val vs = values.toArray
+    private val mask = Integer.highestOneBit(4 * vs.length + 3) - 1
+    private val keys = new Array[Array[Byte]](mask + 1)
+    private val strs = new Array[String](mask + 1)
+    private val hashes = new Array[Int](mask + 1)
+    vs.foreach { v =>
+      val b = v.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      val h = hash(b, Platform.BYTE_ARRAY_OFFSET.toLong, b.length)
+      var i = h & mask
+      while (strs(i) != null) i = (i + 1) & mask
+      keys(i) = b; strs(i) = v; hashes(i) = h
+    }
+
+    private def hash(base: AnyRef, offset: Long, len: Int): Int = {
+      var h = len
+      var i = 0
+      while (i < len) { h = 31 * h + Platform.getByte(base, offset + i); i += 1 }
+      h ^ (h >>> 16)
+    }
+
+    /** The canonical String of the `len` bytes at `offset`, or null. */
+    def get(base: AnyRef, offset: Long, len: Int): String = {
+      val h = hash(base, offset, len)
+      var i = h & mask
+      while (strs(i) != null) {
+        if (hashes(i) == h && keys(i).length == len &&
+            ByteArrayMethods.arrayEquals(keys(i), Platform.BYTE_ARRAY_OFFSET.toLong, base, offset, len))
+          return strs(i)
+        i = (i + 1) & mask
+      }
+      null
+    }
+  }
+
   /** The trail row codec of one task: orders a trail's [[project]]ed
     * rows, decodes them into [[TrailEvent]]s, replays them, and encodes
     * each tuple's [[Results]] as [[emitSchema]] `UnsafeRow`s into `out`.
     * Not serializable: build one inside the task.
+    *
+    * A field the program compares decodes through a table from UTF-8 bytes
+    * to the canonical String of each value it can be compared with
+    * (literals, params, set params, foreach tuple values): predicates and
+    * the foreach value index then hit on identity with a cached hash. Other
+    * values, and fields the program only yields, decode to a new String.
+    * Its buffers grow to the longest trail read.
     */
   private[graft] final class TrailReader(
       prog: CompiledProgram,
@@ -262,13 +315,36 @@ object TrailEngine {
     val out = mutable.ArrayBuffer[InternalRow]()
     /** non-ghost rows read, and those kept after consecutive-duplicate elision */
     var eventsIn, eventsKept = 0L
-    private val evs = mutable.ArrayBuffer[TrailEvent]()
+    // one source segment's events
+    private var evs = new Array[TrailEvent](256)
+    private var nEvs = 0
     private val ordering = layout.ordering
     private val writer = new UnsafeRowWriter(emitSchema.length)
-    import layout.{fieldBase, fieldIdx, ghostIdx, hasSrc, nDedup}
+    import layout.{fieldBase, fieldIdx, ghostIdx, hasSrc, nDedup, nTiebreak}
 
-    private def field(r: InternalRow, i: Int): String =
-      if (r.isNullAt(i)) "" else r.getUTF8String(i).toString
+    /** per program field, its canonical values (null: not compared) */
+    private val canon: Array[CanonicalValues] = {
+      val bySlot = Array.fill(prog.fields.length)(mutable.LinkedHashSet[String]())
+      lazy val bound = params +: tuples.map(_.bind(prog.groupbyVars, params))
+      for (r <- prog.rules; c <- r.clauses :+ r.after; p <- c.preds) p match {
+        case Compiled.EqLit(slot, v) if slot >= 0 => bySlot(slot) += v
+        case Compiled.EqScalar(slot, _, n) if slot >= 0 => bound.foreach(b => Option(b.scalar(n)).foreach(bySlot(slot) += _))
+        case Compiled.InSet(slot, _, n) if slot >= 0 => bound.foreach(b => Option(b.set(n)).foreach(bySlot(slot) ++= _))
+        case _ => ()
+      }
+      bySlot.map(vs => if (vs.isEmpty) null else new CanonicalValues(vs))
+    }
+
+    private def field(r: InternalRow, i: Int, table: CanonicalValues): String =
+      if (r.isNullAt(i)) ""
+      else r match {
+        case u: UnsafeRow if table != null =>
+          val offsetAndSize = u.getLong(i)
+          val len = offsetAndSize.toInt
+          val s = table.get(u.getBaseObject, u.getBaseOffset + (offsetAndSize >>> 32), len)
+          if (s != null) s else u.getUTF8String(i).toString
+        case _ => r.getUTF8String(i).toString
+      }
 
     /** dedup compare of one string column: null and "" are equal */
     private def sameField(a: InternalRow, b: InternalRow, i: Int): Boolean = {
@@ -278,6 +354,7 @@ object TrailEngine {
     }
 
     private val Seq(kindC, kindS, kindM, kindH) = Seq("c", "s", "m", "h").map(UTF8String.fromString)
+    private val dsts = new java.util.HashMap[String, UTF8String]()
 
     private def emit(ctx: UTF8String, j: Int, kind: UTF8String, dst: String, item: Array[Byte], n: Long): Unit = {
       writer.reset()
@@ -285,7 +362,7 @@ object TrailEngine {
       if (ctx == null) writer.setNullAt(0) else writer.write(0, ctx)
       writer.write(1, j)
       writer.write(2, kind)
-      writer.write(3, UTF8String.fromString(dst))
+      writer.write(3, dsts.computeIfAbsent(dst, d => UTF8String.fromString(d)))
       if (item == null) writer.setNullAt(4) else writer.write(4, item)
       writer.write(5, n)
       out += writer.getRow.copy()
@@ -316,6 +393,82 @@ object TrailEngine {
       Array.fill(tuples.length)(init)
     }
 
+    // sort scratch: (source, ts) keys by input position, row indices,
+    // ascending-run starts
+    private var srcKey, tsKey = new Array[Long](256)
+    private var order, merged = new Array[Int](256)
+    private var runs = new Array[Int](257)
+    private var moved = new Array[InternalRow](256)
+
+    private def keyLess(a: Int, b: Int): Boolean =
+      if (hasSrc && srcKey(a) != srcKey(b)) srcKey(a) < srcKey(b) else tsKey(a) < tsKey(b)
+
+    /** Sort `rows(0 until n)` by [[RowLayout.ordering]], stably: by the
+      * primitive `(__srcord, __ts)` keys first (input already in key order
+      * is left as it is, else its ascending runs are merged pairwise), then
+      * each run of equal keys by the generated ordering when tiebreak
+      * columns exist. With a null source or ts, all rows sort by the
+      * generated ordering.
+      */
+    private def sortRows(rows: Array[InternalRow], n: Int): Unit = {
+      if (order.length < n) {
+        val cap = math.max(n, 2 * order.length)
+        srcKey = new Array[Long](cap); tsKey = new Array[Long](cap)
+        order = new Array[Int](cap); merged = new Array[Int](cap)
+        runs = new Array[Int](cap + 1); moved = new Array[InternalRow](cap)
+      }
+      var nulls = false
+      var nRuns = 0
+      var i = 0
+      while (i < n) {
+        val r = rows(i)
+        if (hasSrc) { nulls |= r.isNullAt(2); srcKey(i) = r.getLong(2) }
+        nulls |= r.isNullAt(1)
+        tsKey(i) = r.getLong(1)
+        order(i) = i
+        if (i == 0 || keyLess(i, i - 1)) { runs(nRuns) = i; nRuns += 1 }
+        i += 1
+      }
+      if (nulls) { java.util.Arrays.sort(rows, 0, n, ordering); return }
+      var a = order
+      if (nRuns > 1) {
+        runs(nRuns) = n
+        var b = merged
+        while (nRuns > 1) {
+          // merge runs pairwise from a into b, the left run first on equal keys
+          var w = 0; var r = 0
+          while (r < nRuns) {
+            val lo = runs(r); val mid = runs(math.min(r + 1, nRuns)); val hi = runs(math.min(r + 2, nRuns))
+            var p = lo; var q = mid; var k = lo
+            while (k < hi) {
+              if (q >= hi || (p < mid && !keyLess(a(q), a(p)))) { b(k) = a(p); p += 1 }
+              else { b(k) = a(q); q += 1 }
+              k += 1
+            }
+            runs(w) = lo; w += 1
+            r += 2
+          }
+          runs(w) = n; nRuns = w
+          val t = a; a = b; b = t
+        }
+        i = 0
+        while (i < n) { moved(i) = rows(a(i)); i += 1 }
+        System.arraycopy(moved, 0, rows, 0, n)
+        java.util.Arrays.fill(moved.asInstanceOf[Array[AnyRef]], 0, n, null)
+      }
+      if (nTiebreak > 0) {
+        var from = 0
+        i = 1
+        while (i <= n) {
+          if (i == n || keyLess(a(i - 1), a(i))) {
+            if (i - from > 1) java.util.Arrays.sort(rows, from, i, ordering)
+            from = i
+          }
+          i += 1
+        }
+      }
+    }
+
     /** Read trail `uuid` from `rows(0 until n)`, all of its rows in any
       * order: sort them by [[RowLayout.ordering]] (stable, so rows equal on
       * the key keep their given order), then in one pass ghost rows
@@ -328,7 +481,7 @@ object TrailEngine {
       */
     def read(uuid: String, rows: Array[InternalRow], n: Int, from: Array[FsmState],
              cutOf: Long => Long): Array[FsmState] = {
-      java.util.Arrays.sort(rows, 0, n, ordering)
+      sortRows(rows, n)
       val entries = TrailMatcher.entriesOf(winMap, uuid)
       var carried = from
       var src = if (hasSrc && n > 0) rows(0).getLong(2) else 0L
@@ -337,9 +490,10 @@ object TrailEngine {
       // previous source left and the LAST entry's output carries
       // (LocalRunner dbStates overwrite)
       def replay(states: Array[FsmState], segSrc: Long): Array[FsmState] = {
-        val out = TrailMatcher.runEntries(
-          prog, tuples, states, evs.toArray, entries, cutOf(segSrc), params, fcalls, emitAs)
-        evs.clear()
+        val out = TrailMatcher.runEntries(prog, tuples, states, java.util.Arrays.copyOf(evs, nEvs), entries,
+          cutOf(segSrc), params, fcalls, emitAs)
+        java.util.Arrays.fill(evs.asInstanceOf[Array[AnyRef]], 0, nEvs, null)
+        nEvs = 0
         out
       }
       var k = 0
@@ -360,10 +514,12 @@ object TrailEngine {
             val arr = new Array[String](fieldIdx.length)
             var i = 0
             while (i < arr.length) {
-              arr(i) = if (fieldIdx(i) == -1) "" else field(cur, fieldIdx(i))
+              arr(i) = if (fieldIdx(i) == -1) "" else field(cur, fieldIdx(i), canon(i))
               i += 1
             }
-            evs += new TrailEvent(cur.getLong(1), arr)
+            if (nEvs == evs.length) evs = java.util.Arrays.copyOf(evs, 2 * nEvs)
+            evs(nEvs) = new TrailEvent(cur.getLong(1), arr)
+            nEvs += 1
             eventsKept += 1
             prev = cur
           }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{BinaryType, StringType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.trck.{Fsm, LocalRunner}
+import graft.trck.{Fsm, LocalRunner, TrailMatcher}
 import graft.trck.Compiled.CompiledProgram
 import graft.trck.Fsm.Bindings
 import graft.trck.LocalRunner.ForeachTuple
@@ -181,14 +181,16 @@ private[graft] final class TrailMatchSpec(
 
   /** Match one partition of uuid-grouped fragments, one trail in memory at
     * a time: read the next trail and finalize it once the emit rows of the
-    * previous one are drained.
+    * previous one are drained. A trail's fragments are copied into one
+    * arena per task, which the trail's rows then view; both are reused by
+    * the next trail, so they grow to the longest trail.
     */
   def run(part: Iterator[InternalRow], m: Map[String, SQLMetric]): Iterator[InternalRow] = {
     val reader = new TrailEngine.TrailReader(prog, tuples.value, layout, params, fcalls, windows.value)
     val srcCuts = cuts.value
     val nFields = layout.schema.length
-    val Seq(fragments, trails, eventsIn, eventsKept, emitRows) =
-      Seq("fragments", "trails", "eventsIn", "eventsKept", "emitRows").map(m)
+    val Seq(fragments, trails, eventsIn, eventsKept, eventSteps, emitRows) =
+      Seq("fragments", "trails", "eventsIn", "eventsKept", "eventSteps", "emitRows").map(m)
 
     /** A source's min_ts cut. Single-source runs carry no cuts (src tag 0,
       * cuts empty); a TAGGED source beyond the cuts array means the caller
@@ -203,28 +205,47 @@ private[graft] final class TrailMatchSpec(
           "pass unionSources' cuts through srcCuts")
 
     var rows = new Array[InternalRow](256)
+    var views = new Array[UnsafeRow](256)
     var n = 0
-    // the next fragment, copied out of the (reused) input row
+    // this trail's fragments back to back at [0, used), then the next
+    // trail's first fragment at [ahead, end)
+    var arena = new Array[Byte](64 << 10)
+    var used, ahead, end = 0
     var more = false
-    var uuid: UTF8String = null
-    var frag: Array[Byte] = null
+    var uuid: UTF8String = null // of the fragment at [ahead, end)
+    /** Copy the next fragment's rows to `end`, if there is one. */
     def advance(): Unit = {
       more = part.hasNext
       if (more) {
         val r = part.next()
-        uuid = if (r.isNullAt(0)) null else r.getUTF8String(0).clone()
-        frag = r.getBinary(1)
+        uuid = if (r.isNullAt(0)) null else r.getUTF8String(0)
+        r match {
+          case u: UnsafeRow =>
+            val offsetAndSize = u.getLong(1)
+            append(u.getBaseObject, u.getBaseOffset + (offsetAndSize >>> 32), offsetAndSize.toInt)
+          case _ =>
+            val b = r.getBinary(1)
+            append(b, TrailPacker.Base, b.length)
+        }
         fragments += 1
       }
     }
-    def split(bytes: Array[Byte]): Unit = {
+    def append(base: AnyRef, offset: Long, size: Int): Unit = {
+      if (end + size > arena.length)
+        arena = java.util.Arrays.copyOf(arena, math.max(end + size, 2 * arena.length))
+      Platform.copyMemory(base, offset, arena, TrailPacker.Base + end, size)
+      end += size
+    }
+    def split(): Unit = {
       var at = 0
-      while (at < bytes.length) {
-        val size = Platform.getInt(bytes, TrailPacker.Base + at)
-        val row = new UnsafeRow(nFields)
-        row.pointTo(bytes, TrailPacker.Base + at + TrailPacker.Header, size)
-        if (n == rows.length) rows = java.util.Arrays.copyOf(rows, 2 * n)
-        rows(n) = row
+      while (at < used) {
+        val size = Platform.getInt(arena, TrailPacker.Base + at)
+        if (n == views.length) {
+          views = java.util.Arrays.copyOf(views, 2 * n); rows = java.util.Arrays.copyOf(rows, 2 * n)
+        }
+        if (views(n) == null) views(n) = new UnsafeRow(nFields)
+        views(n).pointTo(arena, TrailPacker.Base + at + TrailPacker.Header, size)
+        rows(n) = views(n)
         n += 1
         at += TrailPacker.Header + size
       }
@@ -236,15 +257,20 @@ private[graft] final class TrailMatchSpec(
       override def hasNext: Boolean = {
         while (pos >= reader.out.length && more) {
           reader.out.clear(); pos = 0; n = 0
-          val trail = uuid
-          while (more && uuid == trail) { split(frag); advance() }
-          val (in0, kept0) = (reader.eventsIn, reader.eventsKept)
+          // the fragment read ahead opens this trail; same-uuid ones follow
+          System.arraycopy(arena, ahead, arena, 0, end - ahead)
+          used = end - ahead; ahead = used; end = used
+          val trail = if (uuid == null) null else uuid.clone()
+          advance()
+          while (more && uuid == trail) { used = end; ahead = used; advance() }
+          split()
+          val (in0, kept0, steps0) = (reader.eventsIn, reader.eventsKept, TrailMatcher.threadSteps)
           val cookie = if (trail == null) null else trail.toString
           reader.finish(cookie, reader.read(cookie, rows, n, reader.initial, cutOf))
-          java.util.Arrays.fill(rows.asInstanceOf[Array[AnyRef]], 0, n, null)
           trails += 1
           eventsIn += reader.eventsIn - in0
           eventsKept += reader.eventsKept - kept0
+          eventSteps += TrailMatcher.threadSteps - steps0
           emitRows += reader.out.length
         }
         pos < reader.out.length
@@ -262,6 +288,7 @@ private[graft] final case class TrailMatchExec(spec: TrailMatchSpec, output: Seq
     "trails" -> SQLMetrics.createMetric(sparkContext, "trails"),
     "eventsIn" -> SQLMetrics.createMetric(sparkContext, "events in"),
     "eventsKept" -> SQLMetrics.createMetric(sparkContext, "events kept after dedup"),
+    "eventSteps" -> SQLMetrics.createMetric(sparkContext, "event steps"),
     "emitRows" -> SQLMetrics.createMetric(sparkContext, "emit rows"),
   )
 

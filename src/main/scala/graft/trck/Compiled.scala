@@ -58,11 +58,39 @@ object Compiled {
   /** timestamp OP value; op ∈ { == < <= > >= }, rhs literal or %scalar (varIdx ≥ 0) */
   final case class TsCmp(op: String, lit: Long, varIdx: Int, varName: String) extends Pred
 
+  /** Yield kinds ([[CYield.kind]]), from the dst sigil. */
+  final val YieldCounter = 0
+  final val YieldSet = 1
+  final val YieldMultiset = 2
+  final val YieldHll = 3
+
+  /** A yield source term resolved at compile time. */
+  sealed trait CTerm
+  /** the ctx cookie as 16 raw bytes (type 'B') */
+  case object CookieT extends CTerm
+  case object TimestampT extends CTerm
+  case object FilterStartT extends CTerm
+  case object FilterEndT extends CTerm
+  /** a program field, by event slot */
+  final case class FieldT(slot: Int) extends CTerm
+  final case class LiteralT(value: String) extends CTerm
+  /** a param, by its index in [[CompiledProgram.yieldParams]] */
+  final case class ParamT(idx: Int) extends CTerm
+  final case class WindowRefT(ref: Option[String]) extends CTerm
+  final case class FcallT(name: String, args: Array[CTerm]) extends CTerm
+
+  /** A yield resolved at compile time: `dst` without its sigil (the String
+    * object [[Results]] keys by), its kind, its source terms and each
+    * term's tuple type byte — a run parses no sigil and builds no type
+    * array per yield.
+    */
+  final case class CYield(dst: String, kind: Int, src: Array[CTerm], types: Array[Byte])
+
   final case class CClause(
       preds: Array[Pred],
       negated: Boolean,
       action: Action,
-      yields: Array[Yield],
+      yields: Array[CYield],
       /** true if any pred consults a param var — drives GROUPBY_USED */
       anyVar: Boolean,
   )
@@ -95,10 +123,13 @@ object Compiled {
       varNames: Array[String],
       hasWindowRules: Boolean,
       nWindowRules: Int,
+      /** yield dsts without their sigil, per kind */
       yieldCounters: List[String],
       yieldSets: List[String],
       yieldMultisets: List[String],
       yieldHlls: List[String],
+      /** param vars read by yield terms (with sigil); [[ParamT]] indexes this */
+      yieldParams: Array[String],
   ) {
     def slot(field: String): Int = fieldIndex.getOrElse(field, -1)
   }
@@ -158,19 +189,49 @@ object Compiled {
     val varNamesArr = vars.toArray
     val varIndex = varNamesArr.zipWithIndex.toMap
 
-    // ---- yield var inventory (insertion-ordered, for stable output)
+    // ---- yield var inventory (insertion-ordered, for stable output); one
+    // String object per stripped dst, shared by every CYield and Results
     val counters = scala.collection.mutable.LinkedHashSet[String]()
     val sets = scala.collection.mutable.LinkedHashSet[String]()
     val msets = scala.collection.mutable.LinkedHashSet[String]()
     val hlls = scala.collection.mutable.LinkedHashSet[String]()
+    val dstNames = scala.collection.mutable.HashMap[String, String]()
+    def dstName(dst: String): String = dstNames.getOrElseUpdate(dst, stripType(dst))
     for (r <- rules; c <- r.clauses ++ r.after.toList; y <- c.yields)
       varType(y.dst) match {
-        case "counter"  => counters += y.dst
-        case "set"      => sets += stripType(y.dst)
-        case "multiset" => msets += stripType(y.dst)
-        case "hll"      => hlls += stripType(y.dst)
+        case "counter"  => counters += dstName(y.dst)
+        case "set"      => sets += dstName(y.dst)
+        case "multiset" => msets += dstName(y.dst)
+        case "hll"      => hlls += dstName(y.dst)
         case other      => sys.error(s"bad yield dst ${y.dst} ($other)")
       }
+    val yieldParams = scala.collection.mutable.LinkedHashMap[String, Int]()
+
+    def compileTerm(t: YieldTerm): CTerm = t match {
+      case FieldTerm("cookie")                        => CookieT
+      case FieldTerm("timestamp")                     => TimestampT
+      case FieldTerm("cookie_timestamp_filter_start") => FilterStartT
+      case FieldTerm("cookie_timestamp_filter_end")   => FilterEndT
+      case FieldTerm(f)                               => FieldT(fieldIndex(f))
+      case LiteralTerm(v)                             => LiteralT(v)
+      case ParamTerm(n)                               => ParamT(yieldParams.getOrElseUpdate(n, yieldParams.size))
+      case WindowRefTerm(ref)                         => WindowRefT(ref)
+      case FcallTerm(name, args)                      => FcallT(name, args.map(compileTerm).toArray)
+    }
+
+    def compileYield(y: Yield): CYield = {
+      val kind = varType(y.dst) match {
+        case "counter"  => YieldCounter
+        case "set"      => YieldSet
+        case "multiset" => YieldMultiset
+        case _          => YieldHll
+      }
+      val types = y.src.map {
+        case FieldTerm("cookie") => Tuple.TypeBytes
+        case _                   => Tuple.TypeString
+      }.toArray
+      CYield(dstName(y.dst), kind, y.src.map(compileTerm).toArray, types)
+    }
 
     // ---- compile clauses
     def compilePreds(attrs: Map[String, List[String]]): (Array[Pred], Boolean) = {
@@ -208,7 +269,7 @@ object Compiled {
         preds = preds,
         negated = c.negated,
         action = c.action.map(parseAction).getOrElse(defaultAction),
-        yields = c.yields.toArray,
+        yields = c.yields.map(compileYield).toArray,
         anyVar = anyVar,
       )
     }
@@ -274,6 +335,7 @@ object Compiled {
       yieldSets = sets.toList,
       yieldMultisets = msets.toList,
       yieldHlls = hlls.toList,
+      yieldParams = yieldParams.keys.toArray,
     )
   }
 }

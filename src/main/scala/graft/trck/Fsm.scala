@@ -31,10 +31,15 @@ object Fsm {
 
     def copyOf(): FsmState = {
       val s = new FsmState(outerIds.length - 1)
-      s.ri = ri; s.windowExpires = windowExpires
-      System.arraycopy(outerIds, 0, s.outerIds, 0, outerIds.length)
-      System.arraycopy(outerExpires, 0, s.outerExpires, 0, outerExpires.length)
+      s.copyFrom(this)
       s
+    }
+
+    /** Overwrite this state with `o` (a state of the same program). */
+    def copyFrom(o: FsmState): Unit = {
+      ri = o.ri; windowExpires = o.windowExpires
+      System.arraycopy(o.outerIds, 0, outerIds, 0, outerIds.length)
+      System.arraycopy(o.outerExpires, 0, outerExpires, 0, outerExpires.length)
     }
 
     /** reference: gen_is_initial_state (src/fsm2c.py:905-914) */
@@ -100,18 +105,23 @@ object Fsm {
     * `prog.varNames`, so the per-event loop does pure array access (the
     * analog of the reference resolving param value-ids once per DB,
     * src/match_traildb.c:86-159). `groupby(i)`: var i is a foreach var.
+    * `params(i)` is the value a yield of `prog.yieldParams(i)` reads ("" when
+    * unbound), and `paramGroupby(i)` whether that param is a foreach var.
     */
   final class Resolved(
-      val binds: Bindings,
       val scalars: Array[String],
       val sets: Array[Set[String]],
       val ts: Array[Long],
       val groupby: Array[Boolean],
+      val params: Array[String],
+      val paramGroupby: Array[Boolean],
   )
 
   def resolve(prog: CompiledProgram, binds: Bindings, groupbyVars: Set[String]): Resolved = {
     val n = prog.varNames.length
-    val r = new Resolved(binds, new Array[String](n), new Array[Set[String]](n), new Array[Long](n), new Array[Boolean](n))
+    val r = new Resolved(new Array[String](n), new Array[Set[String]](n), new Array[Long](n), new Array[Boolean](n),
+      prog.yieldParams.map(p => Option(binds.scalar(p)).getOrElse("")),
+      prog.yieldParams.map(p => prog.varNames.contains(p) && groupbyVars.contains(p)))
     var vi = 0
     while (vi < n) {
       val v = prog.varNames(vi)
@@ -183,22 +193,42 @@ object Fsm {
 
   /** An append-only record of yields, replayed by range into another
     * [[Emitter]]: TrailMatcher's per-class yields, settled per member.
+    * Records are (kind, dst, values, types) in parallel arrays.
     */
   final class YieldLog extends Emitter {
-    private val records = new scala.collection.mutable.ArrayBuffer[Emitter => Unit]
-    def size: Int = records.length
-    override def counter(dst: String): Unit = records += (_.counter(dst))
-    override def set(dst: String, values: Array[String], types: Array[Byte]): Unit =
-      records += (_.set(dst, values, types))
+    private var kinds = new Array[Int](4)
+    private var dsts = new Array[String](4)
+    private var vals = new Array[Array[String]](4)
+    private var tps = new Array[Array[Byte]](4)
+    private var n = 0
+    def size: Int = n
+
+    private def add(kind: Int, dst: String, values: Array[String], types: Array[Byte]): Unit = {
+      if (n == kinds.length) {
+        kinds = java.util.Arrays.copyOf(kinds, 2 * n); dsts = java.util.Arrays.copyOf(dsts, 2 * n)
+        vals = java.util.Arrays.copyOf(vals, 2 * n); tps = java.util.Arrays.copyOf(tps, 2 * n)
+      }
+      kinds(n) = kind; dsts(n) = dst; vals(n) = values; tps(n) = types
+      n += 1
+    }
+    override def counter(dst: String): Unit = add(YieldCounter, dst, null, null)
+    override def set(dst: String, values: Array[String], types: Array[Byte]): Unit = add(YieldSet, dst, values, types)
     override def multiset(dst: String, values: Array[String], types: Array[Byte]): Unit =
-      records += (_.multiset(dst, values, types))
-    override def hll(dst: String, values: Array[String], types: Array[Byte]): Unit =
-      records += (_.hll(dst, values, types))
+      add(YieldMultiset, dst, values, types)
+    override def hll(dst: String, values: Array[String], types: Array[Byte]): Unit = add(YieldHll, dst, values, types)
 
     /** Re-emit records `[from, until)` into `e`. */
     def replay(from: Int, until: Int, e: Emitter): Unit = {
       var i = from
-      while (i < until) { records(i)(e); i += 1 }
+      while (i < until) {
+        kinds(i) match {
+          case YieldCounter  => e.counter(dsts(i))
+          case YieldSet      => e.set(dsts(i), vals(i), tps(i))
+          case YieldMultiset => e.multiset(dsts(i), vals(i), tps(i))
+          case _             => e.hll(dsts(i), vals(i), tps(i))
+        }
+        i += 1
+      }
     }
   }
 
@@ -331,24 +361,21 @@ object Fsm {
       if (c.negated) !r else r
     }
 
-    private def evalTerm(t: Ir.YieldTerm, currentRule: Int): String = t match {
-      case Ir.FieldTerm("cookie") => ctx.cookiePadded
-      case Ir.FieldTerm("timestamp") => java.lang.Long.toString(item.ts)
-      case Ir.FieldTerm("cookie_timestamp_filter_start") => java.lang.Long.toString(ctx.filterStart)
-      case Ir.FieldTerm("cookie_timestamp_filter_end")   => java.lang.Long.toString(ctx.filterEnd)
-      case Ir.FieldTerm(f) =>
-        val slot = prog.slot(f)
-        if (slot == -1 || item.isEmpty) "" else item.fields(slot)
-      case Ir.LiteralTerm(v) => v
-      case Ir.ParamTerm(n) =>
-        val vi = prog.varNames.indexOf(n)
-        if (vi >= 0 && res.groupby(vi)) stats.groupbyUsed = true
-        Option(res.binds.scalar(n)).getOrElse("")
-      case Ir.WindowRefTerm(None) =>
+    private def evalTerm(t: CTerm, currentRule: Int): String = t match {
+      case FieldT(slot)  => if (item.isEmpty) "" else item.fields(slot)
+      case LiteralT(v)   => v
+      case ParamT(i)     =>
+        if (res.paramGroupby(i)) stats.groupbyUsed = true
+        res.params(i)
+      case CookieT       => ctx.cookiePadded
+      case TimestampT    => java.lang.Long.toString(item.ts)
+      case FilterStartT  => java.lang.Long.toString(ctx.filterStart)
+      case FilterEndT    => java.lang.Long.toString(ctx.filterEnd)
+      case WindowRefT(None) =>
         val dur = prog.rules(currentRule).window.getOrElse(
           sys.error("Cannot yield window start timestamp when window is infinite"))
         java.lang.Long.toString(state.windowExpires - dur)
-      case Ir.WindowRefTerm(Some(label)) =>
+      case WindowRefT(Some(label)) =>
         val wid = prog.rules.indexWhere(_.name == label)
         require(wid >= 0, s"Rule not found: $label")
         val dur = prog.rules(wid).window.getOrElse(
@@ -356,32 +383,27 @@ object Fsm {
         val pos = prog.rules(currentRule).windowStack.indexOf(wid)
         require(pos >= 0, s"No enclosing window block named $label")
         java.lang.Long.toString(state.outerExpires(pos) - dur)
-      case Ir.FcallTerm(name, args) =>
+      case FcallT(name, args) =>
         val f = fcalls.getOrElse(name, sys.error(s"unknown external function: $name"))
-        f(args.map(evalTerm(_, currentRule)))
-    }
-
-    private def termType(t: Ir.YieldTerm): Byte = t match {
-      case Ir.FieldTerm("cookie") => Tuple.TypeBytes
-      case _                      => Tuple.TypeString
+        f(args.toList.map(evalTerm(_, currentRule)))
     }
 
     private def runYields(c: CClause, currentRule: Int): Unit = {
-      if (c.yields.nonEmpty) stats.resultUpdated = true
+      val ys = c.yields
+      if (ys.length > 0) stats.resultUpdated = true
       var i = 0
-      while (i < c.yields.length) {
-        val y = c.yields(i)
-        Ir.varType(y.dst) match {
-          case "counter" => emitter.counter(Ir.stripType(y.dst))
-          case kind =>
-            val values = y.src.map(evalTerm(_, currentRule)).toArray
-            val types = y.src.map(termType).toArray
-            kind match {
-              case "set"      => emitter.set(Ir.stripType(y.dst), values, types)
-              case "multiset" => emitter.multiset(Ir.stripType(y.dst), values, types)
-              case "hll"      => emitter.hll(Ir.stripType(y.dst), values, types)
-              case other      => sys.error(s"bad yield dst ${y.dst} ($other)")
-            }
+      while (i < ys.length) {
+        val y = ys(i)
+        if (y.kind == YieldCounter) emitter.counter(y.dst)
+        else {
+          val values = new Array[String](y.src.length)
+          var k = 0
+          while (k < values.length) { values(k) = evalTerm(y.src(k), currentRule); k += 1 }
+          y.kind match {
+            case YieldSet      => emitter.set(y.dst, values, y.types)
+            case YieldMultiset => emitter.multiset(y.dst, values, y.types)
+            case _             => emitter.hll(y.dst, values, y.types)
+          }
         }
         i += 1
       }

@@ -24,7 +24,7 @@ final class Results(prog: CompiledProgram) extends Emitter {
   var touched: Boolean = false
 
   val counters: mutable.LinkedHashMap[String, Long] =
-    mutable.LinkedHashMap(prog.yieldCounters.map(c => Ir.stripType(c) -> 0L): _*)
+    mutable.LinkedHashMap(prog.yieldCounters.map(_ -> 0L): _*)
   val sets: mutable.LinkedHashMap[String, mutable.TreeMap[Array[Byte], Long]] =
     mutable.LinkedHashMap(prog.yieldSets.map(_ -> new mutable.TreeMap[Array[Byte], Long]()(Tuple.byteOrdering)): _*)
   val msets: mutable.LinkedHashMap[String, mutable.TreeMap[Array[Byte], Long]] =
@@ -54,6 +54,15 @@ final class Results(prog: CompiledProgram) extends Emitter {
     touched = true
     val h = hlls.getOrElseUpdate(dst, Hll())
     h.add(Tuple.encode(values, types))
+  }
+
+  /** Back to identity, keeping the maps (TrailMatcher reuses scratch results). */
+  private[trck] def clear(): Unit = if (touched) {
+    touched = false
+    counters.mapValuesInPlace((_, _) => 0L)
+    sets.valuesIterator.foreach(_.clear())
+    msets.valuesIterator.foreach(_.clear())
+    hlls.clear()
   }
 
   /** Monoid add (reference: match_add_results). */

@@ -47,7 +47,7 @@ object OutputProto {
   def defaultFieldNums(prog: Compiled.CompiledProgram): Map[String, Int] = {
     val names =
       prog.groupbyVars.filter(_.startsWith("%")).map(v => "scalar_" + Ir.stripType(v)) ++
-        prog.yieldCounters.map(c => "counter_" + Ir.stripType(c)) ++
+        prog.yieldCounters.map("counter_" + _) ++
         prog.yieldSets.map("set_" + _) ++
         prog.yieldMultisets.map("multiset_" + _) ++
         prog.yieldHlls.map("hll_" + _)

@@ -289,6 +289,27 @@ class EngineEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(TestHarness.compare(golden.expected, got).isEmpty, TestHarness.compare(golden.expected, got))
   }
 
+  test("golden yield_kinds.tr through runRaw gives its expected set, multiset and HLL results") {
+    val text = scala.io.Source.fromResource("golden/yield_kinds.tr").mkString
+    val trailer = org.json4s.jackson.JsonMethods.parse(TrParser.extractTestTrailer(text).get)
+    val golden = TestHarness.parseTest((trailer \ "tests")(0))
+    val prog = Compiled.compile(TrParser.parse(TrParser.programText(text)))
+    val s = spark
+    import s.implicits._
+    // a field an event does not carry is null; `coupon` is no column at all
+    val df = golden.dbs.head.trails.flatMap { case (uuid, evs) =>
+      evs.map(e => (uuid, e.ts, e.fields.get("type"), e.fields.get("country"), e.fields.get("product"),
+        e.fields.get("sku")))
+    }.toDF("uuid", "ts", "type", "country", "product", "sku").repartition(3)
+    val out = TrckSparkRunner.runRaw(prog, df, "uuid", "ts")
+    val got = TestHarness.outputToJValues(out)
+    assert(TestHarness.compare(golden.expected, got, strictHll = false).isEmpty,
+      TestHarness.compare(golden.expected, got, strictHll = false))
+    // the sketch of s1, s2, s3 (s9 is on a view, not a buy) estimates 3
+    assert(math.round(Hll.fromHexString(out.results.head.toOutput("^skus").toString).estimate) == 3L)
+    assert(out.toOutputs == LocalRunner.run(prog, golden.dbs).toOutputs)
+  }
+
   test("window-file runs: per-entry ctx, cookie-keyed state, single finalization, Spark = local") {
     // window rule + `after` yield: finalization fires per COOKIE, not per
     // window entry; Y5 bound yields + ctx-cookie echoes pin the per-entry

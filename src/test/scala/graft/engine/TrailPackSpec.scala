@@ -225,6 +225,129 @@ class TrailPackSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSpar
     assert(prepared == want)
   }
 
+  /** Order-sensitive: counts b after a, and yields each such b's timestamp
+    * and seq (the events' order decides both). An event at ts
+    * `Long.MaxValue` lies outside even an unbounded window (as a uint64
+    * ts does in the reference), so each rule's after-clause consumes it
+    * and counts it in `$late`.
+    */
+  private val ordered = {
+    def clause(tpe: Option[String], action: String, yields: List[Ir.Yield] = Nil) =
+      Ir.Clause(tpe.map(t => Map("type" -> List(t))).getOrElse(Map.empty), negated = false, Some(action), yields)
+    val late = Some(clause(None, "restart-from-next(0)", List(Ir.Yield("$late", Nil))))
+    Compiled.compile(Ir.Program(Vector(
+      Ir.Rule(Some("start"), None, None, entrypoint = false,
+        List(clause(Some("a"), "break"), clause(None, "repeat")), late),
+      Ir.Rule(Some("seen"), None, None, entrypoint = false,
+        List(clause(Some("b"), "repeat", List(Ir.Yield("$ab", Nil),
+          Ir.Yield("#bs", List(Ir.FieldTerm("timestamp"), Ir.FieldTerm("seq"))))),
+          clause(Some("a"), "repeat"), clause(None, "restart-from-next(0)")), late)), None))
+  }
+  private val one = Vector(ForeachTuple(Vector.empty))
+
+  /** Rows of `db` with its events' `seq` column; `type` and `seq` only. */
+  private def seqRows(db: Db): Seq[Row] = db.trails.flatMap { case (u, evs) =>
+    evs.map(e => Row(u, e.ts, e.fields("seq").toLong, e.fields("type")))
+  }
+  private val seqSchema = StructType(Seq(StructField("uuid", StringType), StructField("ts", LongType),
+    StructField("seq", LongType), StructField("type", StringType)))
+
+  test("extreme and negative timestamps and equal timestamps under a tiebreak order as LocalRunner reads them") {
+    val tss = Vector(Long.MinValue + 1, -86400L, -1L, 0L, 1L, 7L, Long.MaxValue - 2, Long.MaxValue)
+    val rnd = new scala.util.Random(12L)
+    // each trail's events in (ts, seq) order, as LocalRunner reads them
+    val db = Db((0 until 30).map { u =>
+      val evs = Vector.fill(24)(tss(rnd.nextInt(tss.length))).sorted.zipWithIndex.map { case (ts, i) =>
+        RawEvent(ts, Map("type" -> Vector("a", "b", "c")(rnd.nextInt(3)), "seq" -> i.toString))
+      }
+      s"t$u" -> evs
+    })
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rnd.shuffle(seqRows(db)), 5), seqSchema)
+    val got = spark(ordered, emits(ordered, df, Seq("seq"), one), one)
+    assert(got == local(ordered, Seq(db), one))
+    assert(got.head("$ab").asInstanceOf[Long] > 0L && got.head("$late").asInstanceOf[Long] > 0L)
+  }
+
+  test("without a tiebreak, rows with equal timestamps keep their input order, in order or not") {
+    // one partition: one map task packs each trail into one fragment in
+    // input order, so the rows TrailMatch reads are in the input's order
+    val rnd = new scala.util.Random(13L)
+    val db = Db((0 until 20).map { u =>
+      var ts = -50L
+      s"t$u" -> (0 until 30).map { i =>
+        ts += rnd.nextInt(3) // one event in three shares its predecessor's ts
+        RawEvent(ts, Map("type" -> Vector("a", "b", "c")(rnd.nextInt(3)), "seq" -> i.toString))
+      }
+    })
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(seqRows(db), 1), seqSchema)
+    val want = local(ordered, Seq(db), one)
+    assert(spark(ordered, emits(ordered, df, Nil, one), one) == want)
+    // the same rows reversed within each equal ts read in reverse, so only
+    // the tiebreak restores LocalRunner's order
+    val reversed = Db(db.trails.map { case (u, evs) =>
+      u -> evs.groupBy(_.ts).toSeq.sortBy(_._1).flatMap(_._2.reverse)
+    })
+    val rdf = spark.createDataFrame(spark.sparkContext.parallelize(seqRows(reversed), 1), seqSchema)
+    assert(spark(ordered, emits(ordered, rdf, Nil, one), one) == local(ordered, Seq(reversed), one))
+    assert(spark(ordered, emits(ordered, rdf, Seq("seq"), one), one) == want)
+    // each trail's rows shuffled: equal timestamps from different ascending
+    // runs of the input keep the input's order (a stable sort by ts)
+    val shuffled = Db(db.trails.map { case (u, evs) => u -> rnd.shuffle(evs) })
+    val sdf = spark.createDataFrame(spark.sparkContext.parallelize(seqRows(shuffled), 1), seqSchema)
+    val stable = Db(shuffled.trails.map { case (u, evs) => u -> evs.sortBy(_.ts) })
+    assert(spark(ordered, emits(ordered, sdf, Nil, one), one) == local(ordered, Seq(stable), one))
+  }
+
+  test("equal timestamps in two sources order by source") {
+    // DB 1 ends at ts 100; DB 2's events at 100 are kept (at the cut) and
+    // read after DB 1's
+    def ev(ts: Long, tpe: String, seq: Int) = RawEvent(ts, Map("type" -> tpe, "seq" -> seq.toString))
+    val db1 = Db(Seq("u1" -> Seq(ev(90, "c", 0), ev(100, "a", 1)), "u2" -> Seq(ev(100, "b", 0), ev(100, "a", 1))))
+    val db2 = Db(Seq("u1" -> Seq(ev(100, "b", 0), ev(100, "b", 1), ev(120, "b", 2)),
+      "u2" -> Seq(ev(100, "b", 0), ev(100, "c", 1))))
+    val want = local(ordered, Seq(db1, db2), one)
+    assert(want.head("$ab") == 4L)
+    val (events, cuts) = TrckSparkRunner.unionSources(Seq(db1, db2).map(db =>
+      spark.createDataFrame(spark.sparkContext.parallelize(seqRows(db).reverse, 2), seqSchema)), "ts")
+    assert(cuts.toSeq == Seq(0L, 100L))
+    val got = TrckSparkRunner.runRaw(ordered, events, "uuid", "ts", Seq("seq"), srcCuts = cuts)
+    assert(got.toOutputs.map(_.toMap) == want)
+    // no tiebreak, and DB 2's rows before DB 1's in one map task's input
+    // (each DB's rows in their order): only the source key puts DB 1 first
+    val db2First = events.orderBy(col("__src").desc, col("seq")).coalesce(1)
+    val got2 = TrckSparkRunner.runRaw(ordered, db2First, "uuid", "ts", Nil, srcCuts = cuts)
+    assert(got2.toOutputs.map(_.toMap) == want)
+  }
+
+  test("the event steps metric stays within 2 steps per kept event on perftest1-shaped input, 4 tasks") {
+    val prog = compile(
+      """foreach %aeid
+        |    start ->
+        |        receive
+        |            advertisable_eid = %aeid -> yield $r, repeat
+        |            * -> repeat
+        |""")
+    // 120 trails of two DBs x 100 events; trail c cycles through
+    // (c + 1) % 100 + 1 values of advertisable_eid
+    val rows = for (c <- 0 until 120; db <- 0 until 2; j <- 0 until 100)
+      yield Row(c.toString, 1000000L + db * 100000L + j, (j % ((c + 1) % 100 + 1)).toString)
+    val ptSchema = StructType(Seq(StructField("uuid", StringType), StructField("ts", LongType),
+      StructField("advertisable_eid", StringType)))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 8), ptSchema)
+    val layout = df.repartition(4, col("uuid"))
+    assert(layout.rdd.getNumPartitions == 4)
+    for (em <- Seq(TrailEngine.emits(prog, df, "uuid", "ts"),
+                   TrailEngine.emits(prog, layout, "uuid", "ts", prepared = true))) {
+      val m = matchMetrics(em)
+      assert(m("eventsKept") == 120 * 200, m.toString)
+      assert(m("eventSteps") > 0 && m("eventSteps") <= 2 * m("eventsKept"), m.toString)
+    }
+    val em = TrailEngine.emits(prog, layout, "uuid", "ts", prepared = true)
+    em.collect()
+    val node = collect(em.queryExecution.executedPlan) { case m: TrailMatchExec => m }.head
+    assert(node.execute().getNumPartitions == 4, "TrailMatch runs one task per layout partition")
+  }
+
   test("one exchange feeds TrailMatch, and on trail-contiguous input it ships fewer rows than events") {
     val db = randomDb(6L, nTrails = 50, nEvents = 80)
     // each trail's rows contiguous within one of 4 partitions, cached so
