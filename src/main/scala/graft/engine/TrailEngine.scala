@@ -216,8 +216,8 @@ object TrailEngine {
     * 112-131), so an event differing only in a column the program never
     * reads is not a duplicate. The source index, tiebreaks and `__ghost`
     * do not: per-source segmentation already prevents cross-boundary
-    * elision, and `__ghost` rows ([[withPresenceSentinels]]) assert a
-    * trail's presence but are never events.
+    * elision, and `__ghost` rows (rows runRaw's filters drop while presence
+    * is observable) assert a trail's presence but are never events.
     */
   private[graft] def project(
       prog: CompiledProgram,
@@ -536,38 +536,6 @@ object TrailEngine {
       TrailMatcher.finalizeTrail(prog, tuples, states, uuid, params, fcalls, emitAs(uuid))
   }
 
-  /** Union one zero-event `__ghost=1` sentinel row per trail (per source
-    * when `srcCol` is set) present in `presentFrom` onto `real` (whose rows
-    * get `__ghost=0`). Sentinels assert a trail's existence independently
-    * of how many events survive downstream filters — the reference iterates
-    * DB trail lists regardless of per-event filters
-    * (src/match_traildb.c:513-560) — so the engine still runs the per-entry
-    * loop and MAX_TIMESTAMP finalization for a trail filtered to zero
-    * events. The engine never materializes sentinels as events and they
-    * never join the consecutive-dup compare; for trails with surviving
-    * events the extra row is inert. Sentinel ts is 0 and every other
-    * column null — position inside the trail's run is irrelevant.
-    */
-  def withPresenceSentinels(
-      real: DataFrame,
-      presentFrom: DataFrame,
-      uuidCol: String,
-      tsCol: String,
-      srcCol: Option[String] = None,
-  ): DataFrame = {
-    require(!real.columns.contains("__ghost"),
-      "frame already carries __ghost presence sentinels")
-    val keyCols = (uuidCol +: srcCol.toSeq).map(col)
-    val present = presentFrom.select(keyCols: _*).distinct()
-    val sentinel = present.select(real.schema.fields.map { f =>
-      if (f.name == uuidCol || srcCol.contains(f.name)) col(f.name)
-      else if (f.name == tsCol) lit(0L).cast(f.dataType).as(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
-    }.toIndexedSeq: _*)
-    real.withColumn("__ghost", lit(0))
-      .unionByName(sentinel.withColumn("__ghost", lit(1)))
-  }
-
   /** Cluster + sort a trail events frame ONCE for repeated trail queries:
     * `emits(..., prepared = true)` over the result skips its per-query
     * shuffle+sort — the dominant cost of every trail query. Persist the
@@ -587,17 +555,11 @@ object TrailEngine {
     * of the contract; it keeps each trail's rows in order for the other
     * readers of the layout (the `ta_*_prepared` window queries).
     *
-    * The layout bakes in `__ghost` presence sentinels
-    * ([[withPresenceSentinels]]): one zero-event row per trail (per source)
-    * so downstream filters that empty a trail still leave its per-entry
-    * loop and finalization running — the same empty-trail parity
-    * TrckSparkRunner maintains on the unprepared path, now durable in the
-    * layout (filters over a prepared frame keep `__ghost=1` rows;
-    * runRaw(prepared = true) does so automatically). For multi-source runs,
-    * prepare the uncut [[TrckSparkRunner.unionSources]] frame with
-    * `srcCol = Some("__src")`: it is its own presence, so a source whose
-    * events all fall below its min_ts cut keeps its (uuid, src) sentinel,
-    * and runRaw applies the cut.
+    * The layout holds the events and nothing else, like a TrailDB: a
+    * trail's presence is its rows, and runRaw keeps a row that its filters
+    * drop as a `__ghost` row whenever presence is observable. For
+    * multi-source runs, prepare the uncut [[TrckSparkRunner.unionSources]]
+    * frame with `srcCol = Some("__src")`, and runRaw applies the cut.
     */
   def prepare(
       events: DataFrame,
@@ -605,11 +567,8 @@ object TrailEngine {
       tsCol: String,
       tiebreak: Seq[String] = Nil,
       srcCol: Option[String] = None,
-  ): DataFrame = {
-    val withGhosts =
-      if (events.columns.contains("__ghost")) events // already sentinel-bearing
-      else withPresenceSentinels(events, events, uuidCol, tsCol, srcCol)
-    withGhosts
+  ): DataFrame =
+    events
       .repartition(col(uuidCol))
       // sort on the SAME cast values emits sorts on — raw-typed string
       // timestamps or src indices would order lexically ("1000" < "999")
@@ -617,8 +576,7 @@ object TrailEngine {
       .sortWithinPartitions(
         col(uuidCol) +:
           (srcCol.map(c => col(c).cast(LongType)).toSeq ++
-            (graft.Tables.tsLong(withGhosts, tsCol) +: tiebreak.map(col))): _*)
-  }
+            (graft.Tables.tsLong(events, tsCol) +: tiebreak.map(col))): _*)
 
   /** Run `prog` over `events`, which must contain `uuidCol`, `tsCol`
     * (long seconds) and a column per program-referenced field (missing
@@ -661,12 +619,6 @@ object TrailEngine {
         * an equivalent bucketed layout) — the per-query exchange and sort
         * are skipped entirely; the reader orders each trail's rows.
         * Correctness depends on the caller's guarantee.
-        * [[prepare]] layouts bake in `__ghost` presence sentinels, so
-        * empty-trail parity (a listed cookie filtered to zero events still
-        * runs its per-entry loop + finalization) holds on the prepared
-        * path too — provided filters applied between prepare and emits
-        * keep `__ghost=1` rows (runRaw(prepared = true) does, and rejects
-        * sentinel-less hand-rolled layouts when the program needs them).
         */
       prepared: Boolean = false,
   ): DataFrame = {
@@ -683,7 +635,7 @@ object TrailEngine {
     // task count exceeds the single-task matching cost at bench scale,
     // unlike the window kernels where per-row work dominates. Reverted;
     // the AQE-coalescible exchange stands.
-    val packed = PlanBridge.ofRows(spark, TrailPack(PlanBridge.logicalPlan(projected)))
+    val packed = PlanBridge.ofRows(spark, TrailPack(layout, PlanBridge.logicalPlan(projected)))
     val clustered =
       if (prepared) packed // layout guaranteed by the caller — no exchange
       else packed.repartition(col("__uuid")).sortWithinPartitions(col("__uuid"))

@@ -24,9 +24,13 @@ import graft.trck.LocalRunner.ForeachTuple
   * buffers rows until they hold [[TrailPack.BudgetBytes]], then emits one
   * fragment per buffered trail in first-seen order; a fragment is never
   * larger than the budget plus one row, and a trail whose rows are
-  * contiguous in the input yields consecutive fragments.
+  * contiguous in the input yields consecutive fragments. A `__ghost` row
+  * (column `ghostIdx`; -1: none) only keeps its trail's source segment
+  * present, so it is dropped when the trail's previously packed row in
+  * the buffer has the same source (column `srcIdx`; -1: one source).
   */
-private[graft] final case class TrailPack(output: Seq[Attribute], child: LogicalPlan) extends UnaryNode {
+private[graft] final case class TrailPack(ghostIdx: Int, srcIdx: Int, output: Seq[Attribute], child: LogicalPlan)
+    extends UnaryNode {
   // every input column travels inside __rows: nothing may be pruned below
   override def references: AttributeSet = child.outputSet
   override def producedAttributes: AttributeSet = outputSet
@@ -40,8 +44,9 @@ private[graft] object TrailPack {
     */
   val BudgetBytes: Int = 4 << 20
 
-  def apply(child: LogicalPlan): TrailPack =
-    TrailPack(Seq(AttributeReference("__uuid", StringType)(), AttributeReference("__rows", BinaryType)()), child)
+  def apply(layout: TrailEngine.RowLayout, child: LogicalPlan): TrailPack =
+    TrailPack(layout.ghostIdx, if (layout.hasSrc) 2 else -1,
+      Seq(AttributeReference("__uuid", StringType)(), AttributeReference("__rows", BinaryType)()), child)
 }
 
 /** Reduce side: consecutive `(__uuid, __rows)` fragments with equal uuid
@@ -65,21 +70,22 @@ private[graft] object TrailMatch {
   */
 private[graft] object TrailStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case TrailPack(output, child)        => TrailPackExec(output, planLater(child)) :: Nil
-    case TrailMatch(spec, output, child) => TrailMatchExec(spec, output, planLater(child)) :: Nil
-    case _                               => Nil
+    case TrailPack(ghostIdx, srcIdx, output, child) => TrailPackExec(ghostIdx, srcIdx, output, planLater(child)) :: Nil
+    case TrailMatch(spec, output, child)            => TrailMatchExec(spec, output, planLater(child)) :: Nil
+    case _                                          => Nil
   }
 }
 
-private[graft] final case class TrailPackExec(output: Seq[Attribute], child: SparkPlan) extends UnaryExecNode {
+private[graft] final case class TrailPackExec(ghostIdx: Int, srcIdx: Int, output: Seq[Attribute], child: SparkPlan)
+    extends UnaryExecNode {
   override protected def doExecute(): RDD[InternalRow] = {
-    val schema = child.schema
+    val (schema, ghost, src) = (child.schema, ghostIdx, srcIdx)
     child.execute().mapPartitions { rows =>
       lazy val toUnsafe = UnsafeProjection.create(schema)
       new TrailPacker(rows.map {
         case u: UnsafeRow => u
         case r            => toUnsafe(r)
-      })
+      }, ghost, src)
     }
   }
   override protected def withNewChildInternal(newChild: SparkPlan): TrailPackExec = copy(child = newChild)
@@ -89,10 +95,11 @@ private[graft] final case class TrailPackExec(output: Seq[Attribute], child: Spa
   * and chained per trail through the second int of their header; a flush
   * writes each trail's chain into its fragment row.
   */
-private final class TrailPacker(in: Iterator[UnsafeRow]) extends Iterator[InternalRow] {
+private[engine] final class TrailPacker(in: Iterator[UnsafeRow], ghostIdx: Int, srcIdx: Int)
+    extends Iterator[InternalRow] {
   import TrailPacker._
 
-  private final class Run(val uuid: UTF8String) { var head, tail, bytes = 0 }
+  private final class Run(val uuid: UTF8String) { var head, tail, bytes = 0; var src = 0L }
 
   private val runs = new java.util.LinkedHashMap[UTF8String, Run]()
   private var last: Run = null // the previous row's trail: contiguous input skips the lookup
@@ -112,6 +119,10 @@ private final class TrailPacker(in: Iterator[UnsafeRow]) extends Iterator[Intern
           run
         case run => run
       }
+    last = run
+    val src = if (srcIdx < 0) 0L else r.getLong(srcIdx)
+    if (run.bytes > 0 && run.src == src && ghostIdx >= 0 && r.getInt(ghostIdx) == 1) return
+    run.src = src
     val size = r.getSizeInBytes
     val need = used + Header + size
     if (need > arena.length)
@@ -122,7 +133,6 @@ private final class TrailPacker(in: Iterator[UnsafeRow]) extends Iterator[Intern
     run.tail = used
     run.bytes += Header + size
     used = need
-    last = run
   }
 
   override def hasNext: Boolean = {

@@ -61,8 +61,8 @@ object TrckQueries {
     * partitioning with the bucket hash so each bucket is ONE sorted file
     * (multi-file buckets concatenate sorted runs and would break the
     * prepared contract — EngineEquivalenceSpec pins this). The bucketed
-    * SCAN must be forced on: Catalyst can't see that the FSM mapPartitions
-    * consumer needs bucket alignment, so autoBucketedScan would silently
+    * SCAN must be forced on: Catalyst can't see that the `TrailMatch`
+    * operator needs bucket alignment, so autoBucketedScan would silently
     * fall back to file-split partitioning and feed the prepared path
     * unsorted mixed-uuid partitions.
     */
@@ -86,7 +86,7 @@ object TrckQueries {
     * NOTE the autoBucketedScan conf flip is deliberately session-wide and
     * left set: the returned DataFrame executes arbitrarily later, and the
     * bucketed SCAN must be forced on at that point — Catalyst can't see
-    * that the FSM mapPartitions consumer needs bucket alignment, and with
+    * that the `TrailMatch` operator needs bucket alignment, and with
     * autoBucketedScan enabled it would silently fall back to file-split
     * partitioning and feed the prepared path unsorted mixed-uuid
     * partitions. The flip only ever disables an optimizer ELECTIVE
@@ -476,8 +476,8 @@ object TrckQueries {
         GROUP BY e.user_id ORDER BY uuid"""),
     ),
     // third consumer of the shared layout: the M2 window program (its
-    // `after` finalization path exercises the layout's baked-in __ghost
-    // sentinel contract under prepared=true).
+    // `after` finalization path runs under prepared=true over a layout
+    // that holds only events).
     Q(
       "m2_fsm_window_prepared",
       (s, dir) => {

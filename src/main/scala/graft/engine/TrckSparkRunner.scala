@@ -47,14 +47,6 @@ object TrckSparkRunner {
     ands.reduceOption(_ && _)
   }
 
-  /** Widen a row predicate so `__ghost=1` presence sentinels survive it:
-    * sentinel rows carry null fields and ts 0, so any cut/CNF/bounds
-    * predicate would silently drop them — losing exactly the empty-trail
-    * parity they exist for. No-op on frames without the column.
-    */
-  private def keepGhosts(df: DataFrame, c: Column): Column =
-    if (df.columns.contains("__ghost")) c || col("__ghost") === 1 else c
-
   /** The min_ts cut as a row predicate over a `__src`-tagged frame: a row
     * of source i needs `ts >= cuts(i)`, and a zero cut keeps every row
     * (LocalRunner sets no lower bound for a window start of 0). It adds no
@@ -135,29 +127,15 @@ object TrckSparkRunner {
       /** true ⇒ `events` is a [[TrailEngine.prepare]] layout (or an
         * equivalent bucketed table): uuid-clustered — each trail's rows
         * contiguous within one partition, in any order; the engine orders
-        * a trail's rows itself — with `__ghost` sentinels baked in. The
-        * per-query exchange and sort are skipped and sentinels come from
-        * the layout instead of a presence union. All filters here are
-        * narrow ops that keep a partition's row order (filter / broadcast
-        * joins), so the layout contract survives them.
+        * a trail's rows itself. The per-query exchange and sort are
+        * skipped. All filters here are narrow ops that keep a partition's
+        * row order (filter / projection / broadcast joins), so the layout
+        * contract survives them.
         */
       prepared: Boolean = false,
   ): LocalRunner.RunOutput = {
     module.onInitialize()
     try {
-      // a sentinel-bearing frame (prepare layout) is its own presence source:
-      // cut/CNF/bounds predicates are widened to keep __ghost rows, and the
-      // sentinel-union below is skipped
-      val hasGhostCol = events.columns.contains("__ghost")
-      require(
-        !prepared || hasGhostCol ||
-          (filters.windows.isEmpty && !TrailMatcher.emptyRunMutates(prog)),
-        "prepared layout lacks __ghost presence sentinels, but this run's " +
-          "empty-trail semantics are observable (window file, or the " +
-          "entrypoint chain mutates a fresh state): a listed cookie filtered " +
-          "to zero events would silently skip its per-entry loop — rebuild " +
-          "the layout with TrailEngine.prepare (it bakes sentinels in) or " +
-          "run unprepared")
       val srcCol = if (events.columns.contains("__src")) Some("__src") else None
       require(srcCol.isEmpty || srcCuts.nonEmpty,
         "multi-source events (__src column) need the unionSources cuts passed as srcCuts")
@@ -165,30 +143,19 @@ object TrckSparkRunner {
       // reference reads the DB lexicons, not the filtered event stream
       // (src/match_traildb.c:188-236; LocalRunner matches)
       val tuples = TrailEngine.runTuples(prog, foreachTuples, events)
-      // exclude first (excluded trails must not even run empty); trail
-      // PRESENCE is judged on what is left, before the min_ts cut and CNF,
-      // like the reference looking a cookie up in each DB before cutting and
-      // filtering its events (src/match_traildb.c:513-524)
-      val presentBase = filters.exclude.fold(events) { ex =>
+      // exclude first: excluded trails must not even run empty
+      val present = filters.exclude.fold(events) { ex =>
         events.join(
           broadcast(ex.select(col(ex.columns.head).as(uuidCol))), Seq(uuidCol), "left_anti")
       }
-      // then the cut and CNF, before the shuffle; the engine clamps every
-      // entry to [max(start, cut), end) as well, so the cut only prunes
-      val filtered = (srcCol.flatMap(_ => cutPredicate(tsCol, srcCuts)) ++ filters.cnf)
-        .reduceOption(_ && _)
-        .map(c => presentBase.filter(keepGhosts(presentBase, c)))
-        .getOrElse(presentBase)
 
-      // F2 window file: drop unlisted trails AND events outside every window
-      // of their cookie before the shuffle (broadcast join on per-cookie
-      // coverage bounds — a 2-year trail with a 1-day window ships one day of
-      // events, like the old per-entry range join); the per-entry ctx loop
-      // runs inside the engine with the window list broadcast (reference
-      // window_set semantics incl. cookie-keyed state carry and one
-      // finalization per cookie). Safe because an event outside the union of
-      // its cookie's entry bounds can never enter any processTrail call.
-      val (trailDf, winEntries) = filters.windows match {
+      // F2 window file: unlisted trails drop (broadcast inner join on each
+      // listed cookie's coverage bounds), and an event outside the union
+      // of its cookie's entry bounds can never enter any per-entry run; the
+      // per-entry ctx loop runs inside the engine with the window list
+      // broadcast (reference window_set semantics incl. cookie-keyed state
+      // carry and one finalization per cookie)
+      val (listed, inBounds) = filters.windows match {
         case Some(ws) =>
           val spark = events.sparkSession
           import spark.implicits._
@@ -202,39 +169,38 @@ object TrckSparkRunner {
             }
             .toSeq
             .toDF(uuidCol, "__wlo", "__whi")
-          val joined = filtered
-            .join(broadcast(bounds), Seq(uuidCol)) // inner: unlisted trails drop
-            .filter(keepGhosts(filtered,
-              (col("__wlo") === 0L || col(tsCol).cast("long") >= col("__wlo")) &&
-                (col("__whi") === 0L || col(tsCol).cast("long") < col("__whi"))))
-            .drop("__wlo", "__whi") // must not leak into the engine's dedup set
-          // A listed cookie whose events are all out-of-bounds (or all
-          // CNF-removed) must STILL run its per-entry loop and finalization —
-          // the reference iterates the window list against DB trails, not
-          // against surviving events — so keep a zero-event sentinel per
-          // listed cookie present in the pre-filter events. A sentinel-bearing
-          // layout already carries them (the inner bounds join keeps listed
-          // cookies' ghosts, keepGhosts saved them from the ts filter).
-          if (hasGhostCol) (joined, Some(ws.entries))
-          else {
-            val listed = presentBase
-              .join(broadcast(bounds.select(uuidCol)), Seq(uuidCol), "left_semi")
-            (TrailEngine.withPresenceSentinels(joined, listed, uuidCol, tsCol, srcCol), Some(ws.entries))
-          }
-        case None =>
-          // Without windows the empty-trail run is observable only when the
-          // entrypoint chain mutates a fresh state (outer window-block entry:
-          // after-yields appear at finalization) — probe once and keep the
-          // common path sentinel-free (no extra distinct pass at scale).
-          if (hasGhostCol) (filtered, None)
-          else if (TrailMatcher.emptyRunMutates(prog))
-            (TrailEngine.withPresenceSentinels(filtered, presentBase, uuidCol, tsCol, srcCol), None)
-          else (filtered, None)
+          val ts = col(tsCol).cast("long")
+          (present.join(broadcast(bounds), Seq(uuidCol)),
+            Some((col("__wlo") === 0L || ts >= col("__wlo")) && (col("__whi") === 0L || ts < col("__whi"))))
+        case None => (present, None)
       }
 
+      // the min_ts cut, CNF and window bounds, before the shuffle; the
+      // engine clamps every entry to [max(start, cut), end) as well, so the
+      // cut only prunes
+      val keep = (srcCol.flatMap(_ => cutPredicate(tsCol, srcCuts)) ++ filters.cnf ++ inBounds)
+        .reduceOption(_ && _)
+      val trailDf = keep match {
+        case None => listed
+        // A trail's presence is observable when a window file lists it (its
+        // per-entry loop runs even with zero events) or when an empty run
+        // mutates a fresh state (outer window-block entry: after-yields
+        // appear at finalization). The reference runs a trail found in a DB
+        // however many of its events the filters drop
+        // (src/match_traildb.c:513-560), so there every row stays and a
+        // filtered-out row becomes a `__ghost` row: it keeps its trail and
+        // source present and is never an event. TrailPack ships about one
+        // ghost per trail segment.
+        case Some(k) if filters.windows.nonEmpty || TrailMatcher.emptyRunMutates(prog) =>
+          val kept = if (listed.columns.contains("__ghost")) col("__ghost") else lit(0)
+          listed.withColumn("__ghost", when(k, kept).otherwise(1))
+        case Some(k) => listed.filter(k)
+      }
+
+      // the bounds columns must not join the engine's dedup compare
       val em = TrailEngine
-        .emits(prog, trailDf, uuidCol, tsCol, tiebreak, params, Some(tuples), module.fcalls,
-          winEntries, srcCol, srcCuts, prepared)
+        .emits(prog, trailDf.drop("__wlo", "__whi"), uuidCol, tsCol, tiebreak, params, Some(tuples),
+          module.fcalls, filters.windows.map(_.entries), srcCol, srcCuts, prepared)
       aggregateEmits(prog, tuples, em)
     } finally module.onFinalize()
   }

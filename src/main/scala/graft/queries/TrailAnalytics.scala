@@ -572,11 +572,7 @@ object TrailAnalytics {
     Q(
       "ta_sessionize_prepared",
       (s, dir) => {
-        // the prepared layout carries one __ghost sentinel row per trail
-        // (the FSM's finalization marker) — relational consumers must
-        // drop them; the filter preserves the uuid clustering
         val prep = graft.engine.TrckQueries.preparedTrailEvents(s, dir)
-          .filter(col("__ghost") === 0)
         val w = Window.partitionBy("uuid").orderBy(col("ts_sec"), col("event_id"))
         val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val prev = lag(col("ts_sec"), 1).over(w)
@@ -1174,7 +1170,6 @@ object TrailAnalytics {
           .distinct()
           .withColumn("__conv", lit(1L))
         prep
-          .filter(col("__ghost") === 0)
           .groupBy("uuid")
           .agg(min(col("ts_sec")).as("first_sec"))
           .withColumn("cohort_day", expr("first_sec div 86400"))
@@ -1231,7 +1226,6 @@ object TrailAnalytics {
       "ta_time_to_convert_prepared",
       (s, dir) => {
         val prep = graft.engine.TrckQueries.preparedTrailEvents(s, dir)
-          .filter(col("__ghost") === 0)
         val firstSignup = prep
           .filter(col("event_type") === "signup")
           .groupBy("uuid")
@@ -1295,7 +1289,6 @@ object TrailAnalytics {
       "ta_purchase_paths_prepared",
       (s, dir) => {
         val prep = graft.engine.TrckQueries.preparedTrailEvents(s, dir)
-          .filter(col("__ghost") === 0)
         val w = Window.partitionBy("uuid").orderBy(col("ts_sec"), col("event_id"))
         val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val prevTs = lag(col("ts_sec"), 1).over(w)

@@ -111,9 +111,9 @@ object TrailStream {
     * carrying forward; finalization fires once per cookie at timeout. A
     * cookie with batch rows but zero in-bounds events still runs its
     * per-entry loop — the same empty-trail parity the batch path keeps
-    * via __ghost sentinels. (A cookie absent from a batch is skipped,
-    * exactly as the reference skips window entries whose cookie is not in
-    * the current DB's trail list.)
+    * by marking filtered-out rows `__ghost`. (A cookie absent from a batch
+    * is skipped, exactly as the reference skips window entries whose
+    * cookie is not in the current DB's trail list.)
     */
   def emits(
       prog: CompiledProgram,

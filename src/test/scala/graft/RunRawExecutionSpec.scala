@@ -2,22 +2,26 @@ package graft
 
 import org.apache.spark.graft.QueryCapture
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.UnionExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec, ObjectHashAggregateExec}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.types.BinaryType
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.TrckSparkRunner
+import graft.engine.{TrailMatchExec, TrckSparkRunner}
 import graft.parser.TrParser
-import graft.trck.Compiled
+import graft.trck.{Compiled, LocalRunner}
 
 /** Execution pins for TrckSparkRunner.runRaw, beside PlanAuditSpec's plan
   * pins: what a trck query actually runs, seen through a
   * QueryExecutionListener. The emit stream is aggregated in ONE query —
   * every yield family in one pass, nothing cached — and only a program
-  * that yields an HLL sketch plans an ObjectHashAggregate.
+  * that yields an HLL sketch plans an ObjectHashAggregate. A run whose
+  * trail presence is observable keeps its filtered-out rows as `__ghost`
+  * rows, so it plans no presence pass of its own.
   */
 class RunRawExecutionSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSparkPlanHelper {
 
@@ -69,5 +73,35 @@ class RunRawExecutionSpec extends AnyFunSuite with BeforeAndAfterAll with Adapti
     // no set/multiset yields, so no binary item key: a binary grouping key
     // would disable the codegen fast hash map
     assert(hashAggs.forall(_.groupingExpressions.forall(_.dataType != BinaryType)))
+  }
+
+  test("a presence-observable runRaw under a window file or CNF plans no Union and no aggregate below the trail exchange") {
+    // the entrypoint enters a window block: an empty run is observable
+    val prog = Compiled.compile(TrParser.parse(
+      """start ->
+        |    window
+        |        mid ->
+        |            window
+        |                inner ->
+        |                    receive
+        |                        event_type = "buy" -> yield $buys, quit
+        |                        * -> repeat
+        |            after 1d -> yield $idle, quit
+        |    after 2d -> yield $closed, quit
+        |""".stripMargin))
+    val df = events
+    val ws = LocalRunner.WindowSet((0 until 10).map(u => LocalRunner.WindowEntry(s"u$u", s"u$u", 50L, 150L)))
+    val cnf = TrckSparkRunner.cnfColumn(Seq(Seq(("country", "c1", true))), df)
+    for (filters <- Seq(TrckSparkRunner.EngineFilters(windows = Some(ws)), TrckSparkRunner.EngineFilters(cnf = cnf))) {
+      val qes = QueryCapture(spark)(TrckSparkRunner.runRaw(prog, df, "uuid", "ts", filters = filters))._2
+      assert(qes.size == 1, s"expected one query, ran ${qes.size}")
+      val p = qes.head.executedPlan
+      assert(collect(p) { case u: UnionExec => u }.isEmpty, s"presence union planned:\n$p")
+      val matches = collect(p) { case m: TrailMatchExec => m }
+      assert(matches.size == 1)
+      assert(collect(matches.head) { case a: BaseAggregateExec => a }.isEmpty, s"aggregate below the trail exchange:\n$p")
+      // the trail exchange and the result aggregation's, nothing else
+      assert(collect(p) { case e: ShuffleExchangeExec => e }.size == 2, s"$p")
+    }
   }
 }

@@ -310,6 +310,38 @@ class EngineEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out.toOutputs == LocalRunner.run(prog, golden.dbs).toOutputs)
   }
 
+  test("golden window_file_presence.tr through unionSources + runRaw, cold and prepared, gives its expected results") {
+    // window and exclude sidecars, a min_ts cut and a CNF filter that each
+    // leave a listed cookie without events (TrGoldenSpec runs the same file
+    // on LocalRunner)
+    val path = java.nio.file.Paths.get(getClass.getResource("/golden/window_file_presence.tr").toURI)
+    val text = java.nio.file.Files.readString(path)
+    val trailer = org.json4s.jackson.JsonMethods.parse(TrParser.extractTestTrailer(text).get)
+    val prog = Compiled.compile(TrParser.parse(TrParser.programText(text)))
+    val (windows, exclude) = TestHarness.sidecars(path)
+    val s = spark
+    import s.implicits._
+    val org.json4s.JArray(tests) = trailer \ "tests"
+    for (golden <- tests.map(TestHarness.parseTest)) {
+      val dfs = golden.dbs.map { db =>
+        db.trails.flatMap { case (uuid, evs) => evs.map(e => (uuid, e.ts, e.fields("type"))) }
+          .toDF("uuid", "ts", "type")
+      }
+      val (events, cuts) = TrckSparkRunner.unionSources(dfs, "ts")
+      val filters = TrckSparkRunner.EngineFilters(
+        cnf = golden.cnf.flatMap(c => TrckSparkRunner.cnfColumn(c.clauses, events)),
+        windows = windows, exclude = Some(exclude.toSeq.toDF("uuid")))
+      val srcCol = if (cuts.isEmpty) None else Some("__src")
+      val layout = TrailEngine.prepare(events, "uuid", "ts", srcCol = srcCol)
+      for ((df, prepared) <- Seq(events -> false, layout -> true)) {
+        val got = TestHarness.outputToJValues(
+          TrckSparkRunner.runRaw(prog, df, "uuid", "ts", filters = filters, srcCuts = cuts, prepared = prepared))
+        assert(TestHarness.compare(golden.expected, got).isEmpty,
+          s"${golden.desc} (prepared = $prepared): ${TestHarness.compare(golden.expected, got)}")
+      }
+    }
+  }
+
   test("window-file runs: per-entry ctx, cookie-keyed state, single finalization, Spark = local") {
     // window rule + `after` yield: finalization fires per COOKIE, not per
     // window entry; Y5 bound yields + ctx-cookie echoes pin the per-entry

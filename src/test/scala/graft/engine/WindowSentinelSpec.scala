@@ -15,9 +15,11 @@ import graft.trck.LocalRunner.{Db, RawEvent}
   * events (src/match_traildb.c:513-560), and an empty run mutates state
   * whenever the entrypoint chain enters outer window-block rules — the
   * outer expiry is pushed at ts 0, so finalization at MAX_TIMESTAMP fires
-  * the block's `after` yields. The Spark path keeps zero-event sentinels
-  * for exactly these trails (TrailEngine.withPresenceSentinels), judged before
-  * the min_ts cut of a multi-source run.
+  * the block's `after` yields. The Spark path keeps such a trail present
+  * through its own rows: runRaw marks each row its cut, CNF or window
+  * bounds drop as a `__ghost` row, which the reader never treats as an
+  * event, so presence is judged before the min_ts cut of a multi-source
+  * run, and any uuid-clustered layout holding only events serves.
   */
 class WindowSentinelSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -243,19 +245,39 @@ class WindowSentinelSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("prepared layout without sentinels is rejected when empty-trail semantics matter") {
+  test("hand-rolled uuid-clustered layout without __ghost: window and CNF runs match LocalRunner") {
     val prog = Compiled.compile(nestedWindowProgram)
-    val df = dbToDf(Db(Seq("u1" -> Seq(RawEvent(500L, Map("type" -> "x"))))))
-    // hand-rolled layout, no __ghost column — the pre-fix footgun
-    val bare = df.repartition(org.apache.spark.sql.functions.col("uuid"))
-      .sortWithinPartitions("uuid", "ts", "seq")
-    val ws = LocalRunner.WindowSet(Seq(LocalRunner.WindowEntry("u1", "u1", 100L, 1000L)))
-    val e = intercept[IllegalArgumentException] {
-      TrckSparkRunner.runRaw(
+    val db = Db(Seq(
+      "u1" -> Seq(RawEvent(500L, Map("type" -> "x")), RawEvent(600L, Map("type" -> "conv"))),
+      "u2" -> Seq(RawEvent(5000L, Map("type" -> "x")), RawEvent(6000L, Map("type" -> "conv"))),
+      "u3" -> Seq(RawEvent(700L, Map("type" -> "y"))),
+    ))
+    // a plain clustered layout: no prepare, no __ghost column
+    val bare = dbToDf(db).repartition(org.apache.spark.sql.functions.col("uuid"))
+      .sortWithinPartitions("uuid", "ts", "seq").persist()
+    try {
+      assert(!bare.columns.contains("__ghost"))
+      // u2: every event out of bounds
+      val ws = LocalRunner.WindowSet(Seq(
+        LocalRunner.WindowEntry("u1", "u1", 100L, 1000L),
+        LocalRunner.WindowEntry("u2", "u2", 100L, 1000L),
+      ))
+      val localWs = LocalRunner.run(prog, Seq(db), windows = Some(ws))
+      assert(localWs.results.head.counters("midexp") >= 1L)
+      val engineWs = TrckSparkRunner.runRaw(
         prog, bare, "uuid", "ts", Seq("seq"),
         filters = TrckSparkRunner.EngineFilters(windows = Some(ws)), prepared = true)
-    }
-    assert(e.getMessage.contains("__ghost"))
+      assert(render(engineWs) == render(localWs))
+      // u3: every event CNF-removed
+      val cnf = LocalRunner.CnfFilter(Seq(Seq(("type", "y", false))))
+      val localCnf = LocalRunner.run(prog, Seq(db), cnf = Some(cnf))
+      assert(localCnf.results.head.counters("midexp") >= 1L)
+      val engineCnf = TrckSparkRunner.runRaw(
+        prog, bare, "uuid", "ts", Seq("seq"),
+        filters = TrckSparkRunner.EngineFilters(cnf = TrckSparkRunner.cnfColumn(cnf.clauses, bare)),
+        prepared = true)
+      assert(render(engineCnf) == render(localCnf))
+    } finally bare.unpersist()
   }
 
   test("multi-source window run keeps per-source presence for empty segments") {

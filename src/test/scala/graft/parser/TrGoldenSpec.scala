@@ -1,13 +1,12 @@
 package graft.parser
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.json4s.jackson.JsonMethods
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.trck._
-import graft.trck.LocalRunner.{WindowEntry, WindowSet}
 
 /** Golden end-to-end tests for the .tr surface: every reference test
   * program with an embedded unit-test trailer (reference: test/tr, 31
@@ -28,26 +27,6 @@ class TrGoldenSpec extends AnyFunSuite {
     "outer_fn" -> (a => "outer_" + a.head),
     "tu_concat" -> (a => a.head + a(1)),
   )
-
-  private def hexCookieToString(hex: String): String = {
-    val bytes = hex.trim.grouped(2).map(h => Integer.parseInt(h, 16).toByte).toArray
-    val end = bytes.lastIndexWhere(_ != 0) + 1
-    new String(bytes, 0, end, "ISO-8859-1")
-  }
-
-  private def loadWindowSet(p: Path): Option[WindowSet] =
-    if (!Files.exists(p)) None
-    else
-      Some(WindowSet(Files.readAllLines(p).asScala.filter(_.nonEmpty).map { line =>
-        val cols = line.trim.split(",")
-        val cookie = hexCookieToString(cols(0))
-        val id = if (cols.length > 3) hexCookieToString(cols(3)) else cookie
-        WindowEntry(id, cookie, cols(1).toLong, cols(2).toLong)
-      }.toSeq))
-
-  private def loadExclude(p: Path): Set[String] =
-    if (!Files.exists(p)) Set.empty
-    else Files.readAllLines(p).asScala.filter(_.nonEmpty).map(hexCookieToString).toSet
 
   /** Corrections for stale expectations in the corpus. The reference's
     * ddiff never compares single-object expected values (the obj_equals
@@ -90,8 +69,7 @@ class TrGoldenSpec extends AnyFunSuite {
           case org.json4s.JArray(ts) => ts.map(t => TestHarness.parseTest(t))
           case _                     => Nil
         }
-        val windows = loadWindowSet(Paths.get(path.toString + ".window.csv"))
-        val exclude = loadExclude(Paths.get(path.toString + ".exclude.csv"))
+        val (windows, exclude) = TestHarness.sidecars(path)
         for ((t, i) <- tests.zipWithIndex) {
           val corpus = if (inRepo.contains(path)) "golden/" else ""
           val name = s"$corpus${path.getFileName} #$i${if (t.desc.nonEmpty) s" (${t.desc})" else ""}"
@@ -111,7 +89,7 @@ class TrGoldenSpec extends AnyFunSuite {
   }
 
   test("in-repo golden corpus discovered") {
-    assert(inRepo.size >= 4, s"expected >=4 in-repo .tr files, found ${inRepo.size}")
+    assert(inRepo.size >= 8, s"expected >=8 in-repo .tr files, found ${inRepo.size}")
   }
 
   test("tr corpus discovered") {

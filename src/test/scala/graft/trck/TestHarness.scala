@@ -1,5 +1,8 @@
 package graft.trck
 
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -148,6 +151,30 @@ object TestHarness {
         if (errs.isEmpty) None else Some(errs.mkString("; "))
       case _ => Some("bad expected value")
     }
+  }
+
+  private def hexCookieToString(hex: String): String = {
+    val bytes = hex.trim.grouped(2).map(h => Integer.parseInt(h, 16).toByte).toArray
+    val end = bytes.lastIndexWhere(_ != 0) + 1
+    new String(bytes, 0, end, "ISO-8859-1")
+  }
+
+  /** A `.tr` file's window and exclude sidecars (`<file>.window.csv`:
+    * `hex cookie,start,end[,hex id]` per line; `<file>.exclude.csv`: one
+    * hex cookie per line; reference: src/window_set.c, src/exclude_set.c),
+    * each empty when its file is absent.
+    */
+  def sidecars(tr: Path): (Option[WindowSet], Set[String]) = {
+    def lines(p: Path) = Files.readAllLines(p).asScala.filter(_.nonEmpty).toSeq
+    val win = Paths.get(tr.toString + ".window.csv")
+    val ex = Paths.get(tr.toString + ".exclude.csv")
+    val windows = Option.when(Files.exists(win))(WindowSet(lines(win).map { line =>
+      val cols = line.trim.split(",")
+      val cookie = hexCookieToString(cols(0))
+      val id = if (cols.length > 3) hexCookieToString(cols(3)) else cookie
+      WindowEntry(id, cookie, cols(1).toLong, cols(2).toLong)
+    }))
+    (windows, if (Files.exists(ex)) lines(ex).map(hexCookieToString).toSet else Set.empty)
   }
 
   /** Run one golden test end-to-end through LocalRunner. */
