@@ -32,8 +32,8 @@ import graft.trck.LocalRunner.ForeachTuple
   *       fragment, flushing every buffered trail once the task holds
   *       [[TrailPack.BudgetBytes]] — the exchange and its sort carry about
   *       one fragment per (trail × map task), not one row per event
-  *     → repartition(__uuid)               // the ONE shuffle
-  *     → sortWithinPartitions(__uuid)      // brings a trail's fragments together
+  *     → exchange by __uuid                // the ONE shuffle
+  *     → sort by __uuid                    // brings a trail's fragments together
   *     → [[TrailMatch]]: consecutive same-uuid fragments are one trail,
   *       copied into one arena per task; a [[TrailReader]] views them as
   *       `UnsafeRow`s, orders them by (source, ts, tiebreak…) — primitive
@@ -51,8 +51,11 @@ import graft.trck.LocalRunner.ForeachTuple
   *     → groupBy(tuple, dst[, item]) aggregation — partial map-side combine
   *       makes the second shuffle O(distinct yields), not O(events)
   *
-  * A prepared layout ([[prepare]], `emits(prepared = true)`) runs
-  * project → TrailPack → TrailMatch with no exchange and no sort.
+  * [[TrailMatch]] requires its input clustered and sorted by `__uuid`, and
+  * [[TrailPack]] passes its input's uuid partitioning and order through,
+  * so Spark plans the exchange and sort only where the input lacks them:
+  * over a persisted [[prepare]] layout it plans neither, and over a table
+  * bucketed by uuid only the sort of its fragments.
   *
   * Matching state never outlives one trail, so executor memory is
   * O(pack budget + longest trail + tuple count), independent of partition
@@ -472,7 +475,8 @@ object TrailEngine {
     /** Read trail `uuid` from `rows(0 until n)`, all of its rows in any
       * order: sort them by [[RowLayout.ordering]] (stable, so rows equal on
       * the key keep their given order), then in one pass ghost rows
-      * establish the trail but add no event, consecutive duplicates are
+      * establish the trail but add no event, an event at or above
+      * [[Compiled.MaxTimestamp]] fails, consecutive duplicates are
       * dropped against the previous kept row, and each source segment
       * replays through the cookie's window entries from the state the
       * previous segment left, with `cutOf(source)` as its min_ts cut, as
@@ -504,6 +508,7 @@ object TrailEngine {
           carried = replay(carried, src); prev = null; src = cur.getLong(2)
         }
         if (ghostIdx < 0 || cur.getInt(ghostIdx) != 1) {
+          Compiled.requireEventTs(uuid, cur.getLong(1))
           eventsIn += 1
           val dup = prev != null && prev.getLong(1) == cur.getLong(1) && {
             var i = fieldBase; var same = true
@@ -536,47 +541,42 @@ object TrailEngine {
       TrailMatcher.finalizeTrail(prog, tuples, states, uuid, params, fcalls, emitAs(uuid))
   }
 
-  /** Cluster + sort a trail events frame ONCE for repeated trail queries:
-    * `emits(..., prepared = true)` over the result skips its per-query
-    * shuffle+sort — the dominant cost of every trail query. Persist the
-    * result for within-session reuse, or write a durable layout with
-    * `prepare(df, …).repartition(n, col(uuidCol)).write.bucketBy(n, uuidCol)
-    * .sortBy(uuidCol, tsCol, tiebreak…).saveAsTable(t)` — the repartition
-    * must align with the bucket count so each bucket is ONE sorted file
-    * (multi-file buckets concatenate per-file sorted runs and break the
-    * contract) — and read back with
-    * `spark.sql.sources.bucketing.autoBucketedScan.enabled=false` so the
-    * scan keeps one-partition-per-bucket (validated end-to-end in
-    * EngineEquivalenceSpec's bucketed-table test).
+  /** Cluster + sort a trail events frame ONCE for repeated trail queries.
+    * Persisted, the result carries its uuid partitioning and order into
+    * every later [[emits]] plan, which then has no exchange and no sort of
+    * its own — the dominant cost of every trail query. A table written
+    * with `bucketBy(n, uuidCol)` is a durable layout: its scan reports the
+    * same partitioning, and emits adds only a sort of its fragments.
     *
-    * The guarantee emits needs is exactly: same-uuid rows contiguous per
-    * partition. The reader orders the rows inside a trail itself (by
-    * source, ts, tiebreak), so the within-partition sort here is not part
-    * of the contract; it keeps each trail's rows in order for the other
-    * readers of the layout (the `ta_*_prepared` window queries).
+    * The reader orders the rows inside a trail itself (by source, ts,
+    * tiebreak); the within-partition order here keeps each trail's rows in
+    * order for the other readers of the layout (the `ta_*_prepared` window
+    * queries), on the same cast values the reader orders by.
     *
     * The layout holds the events and nothing else, like a TrailDB: a
     * trail's presence is its rows, and runRaw keeps a row that its filters
-    * drop as a `__ghost` row whenever presence is observable. For
-    * multi-source runs, prepare the uncut [[TrckSparkRunner.unionSources]]
-    * frame with `srcCol = Some("__src")`, and runRaw applies the cut.
+    * drop as a `__ghost` row whenever presence is observable. A multi-source
+    * layout is the uncut [[TrckSparkRunner.unionSources]] frame, ordered by
+    * its `__src` column too, and runRaw applies the cut.
     */
   def prepare(
       events: DataFrame,
       uuidCol: String,
       tsCol: String,
       tiebreak: Seq[String] = Nil,
-      srcCol: Option[String] = None,
   ): DataFrame =
     events
       .repartition(col(uuidCol))
-      // sort on the SAME cast values emits sorts on — raw-typed string
-      // timestamps or src indices would order lexically ("1000" < "999")
-      // and prepared=true would silently trust the wrong order
       .sortWithinPartitions(
         col(uuidCol) +:
-          (srcCol.map(c => col(c).cast(LongType)).toSeq ++
+          (srcColumn(events).map(c => col(c).cast(LongType)).toSeq ++
             (graft.Tables.tsLong(events, tsCol) +: tiebreak.map(col))): _*)
+
+  /** The source-index column of a multi-source frame
+    * ([[TrckSparkRunner.unionSources]]), if it has one.
+    */
+  private[graft] def srcColumn(events: DataFrame): Option[String] =
+    Some("__src").filter(events.columns.contains)
 
   /** Run `prog` over `events`, which must contain `uuidCol`, `tsCol`
     * (long seconds) and a column per program-referenced field (missing
@@ -604,46 +604,24 @@ object TrailEngine {
         * (broadcast semi-join) so they never reach the shuffle.
         */
       windows: Option[Seq[LocalRunner.WindowEntry]] = None,
-      /** source-index column for multi-source runs (see
-        * [[TrckSparkRunner.unionSources]]): each trail replays its sources
-        * sequentially, and `srcCuts(i)` (the min_ts cut of source i) feeds
-        * the per-source ctx window start like LocalRunner's
+      /** the min_ts cut of each source of a multi-source frame (one with
+        * a `__src` column, see [[TrckSparkRunner.unionSources]]): each
+        * trail replays its sources sequentially, and `srcCuts(i)` feeds
+        * source i's ctx window start like LocalRunner's
         * `max(windowStart, minTs)` (Local.scala) — so Y5
         * cookie_timestamp_filter_start yields match, and rows below the
         * cut never enter a replay.
         */
-      srcCol: Option[String] = None,
       srcCuts: Array[Long] = Array.empty,
-      /** true ⇒ `events` is already uuid-clustered: each trail's rows are
-        * contiguous within one partition, in any order (via [[prepare]] or
-        * an equivalent bucketed layout) — the per-query exchange and sort
-        * are skipped entirely; the reader orders each trail's rows.
-        * Correctness depends on the caller's guarantee.
-        */
-      prepared: Boolean = false,
   ): DataFrame = {
     val spark = events.sparkSession
     val tuples = runTuples(prog, foreachTuples, events)
-    val (projected, layout) = project(prog, events, uuidCol, tsCol, tiebreak, srcCol)
+    val (projected, layout) = project(prog, events, uuidCol, tsCol, tiebreak, srcColumn(events))
     PlanBridge.registerStrategy(spark, TrailStrategy)
-
-    // r21 note: an explicit-count repartition here (to defeat AQE's
-    // coalesce-to-one at bench scale, the sessions()/asOfJoin fix) was
-    // TRIED and measured SLOWER for the FSM family — m1_fsm_count
-    // 0.38→0.50, g1_fsm_foreach 0.38→0.65, m2 0.40→0.55 at sf0.1: the
-    // per-task FSM setup (broadcast tuple tables, window maps) times the
-    // task count exceeds the single-task matching cost at bench scale,
-    // unlike the window kernels where per-row work dominates. Reverted;
-    // the AQE-coalescible exchange stands.
-    val packed = PlanBridge.ofRows(spark, TrailPack(layout, PlanBridge.logicalPlan(projected)))
-    val clustered =
-      if (prepared) packed // layout guaranteed by the caller — no exchange
-      else packed.repartition(col("__uuid")).sortWithinPartitions(col("__uuid"))
-
     val sc = spark.sparkContext
     val spec = new TrailMatchSpec(prog, sc.broadcast(tuples), layout, params, fcalls,
       sc.broadcast(windowsByCookie(windows)), sc.broadcast(srcCuts))
-    PlanBridge.ofRows(spark, TrailMatch(spec, PlanBridge.logicalPlan(clustered)))
+    PlanBridge.ofRows(spark, TrailMatch(spec, TrailPack(layout, PlanBridge.logicalPlan(projected))))
   }
 
   /** Counter results as a DataFrame: (tuple vars…, dst, value), summed

@@ -3,12 +3,13 @@ package graft.engine
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, Expression, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
+import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning, SinglePartition, UnknownPartitioning}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
-import org.apache.spark.sql.types.{BinaryType, StringType}
+import org.apache.spark.sql.types.BinaryType
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -18,22 +19,25 @@ import graft.trck.Fsm.Bindings
 import graft.trck.LocalRunner.ForeachTuple
 
 /** Map side of the trail exchange: each task packs its [[TrailEngine.project]]ed
-  * rows into one `(__uuid, __rows)` fragment per trail. `__rows` is the
-  * trail's `UnsafeRow`s back to back, each behind an 8-byte header whose
-  * first int is its size, so every row stays 8-byte aligned. The task
-  * buffers rows until they hold [[TrailPack.BudgetBytes]], then emits one
-  * fragment per buffered trail in first-seen order; a fragment is never
-  * larger than the budget plus one row, and a trail whose rows are
-  * contiguous in the input yields consecutive fragments. A `__ghost` row
-  * (column `ghostIdx`; -1: none) only keeps its trail's source segment
-  * present, so it is dropped when the trail's previously packed row in
-  * the buffer has the same source (column `srcIdx`; -1: one source).
+  * rows into one `(__uuid, __rows)` fragment per trail. `__uuid` is the
+  * child's own first column, so a layout's uuid partitioning and order
+  * stay visible above the pack. `__rows` is the trail's `UnsafeRow`s back
+  * to back, each behind an 8-byte header whose first int is its size, so
+  * every row stays 8-byte aligned. The task buffers rows until they hold
+  * [[TrailPack.BudgetBytes]], then emits one fragment per buffered trail
+  * in first-seen order; a fragment is never larger than the budget plus
+  * one row, and a trail whose rows are contiguous in the input yields
+  * consecutive fragments. A `__ghost` row (column `ghostIdx`; -1: none)
+  * only keeps its trail's source segment present, so it is dropped when
+  * the trail's previously packed row in the buffer has the same source
+  * (column `srcIdx`; -1: one source).
   */
-private[graft] final case class TrailPack(ghostIdx: Int, srcIdx: Int, output: Seq[Attribute], child: LogicalPlan)
+private[graft] final case class TrailPack(ghostIdx: Int, srcIdx: Int, rows: Attribute, child: LogicalPlan)
     extends UnaryNode {
+  override def output: Seq[Attribute] = Seq(child.output.head, rows)
   // every input column travels inside __rows: nothing may be pruned below
   override def references: AttributeSet = child.outputSet
-  override def producedAttributes: AttributeSet = outputSet
+  override def producedAttributes: AttributeSet = AttributeSet(rows)
   override protected def withNewChildInternal(newChild: LogicalPlan): TrailPack = copy(child = newChild)
 }
 
@@ -45,13 +49,14 @@ private[graft] object TrailPack {
   val BudgetBytes: Int = 4 << 20
 
   def apply(layout: TrailEngine.RowLayout, child: LogicalPlan): TrailPack =
-    TrailPack(layout.ghostIdx, if (layout.hasSrc) 2 else -1,
-      Seq(AttributeReference("__uuid", StringType)(), AttributeReference("__rows", BinaryType)()), child)
+    TrailPack(layout.ghostIdx, if (layout.hasSrc) 2 else -1, AttributeReference("__rows", BinaryType)(), child)
 }
 
 /** Reduce side: consecutive `(__uuid, __rows)` fragments with equal uuid
   * are one trail, read by a [[TrailEngine.TrailReader]]; the output is the
-  * emit rows ([[TrailEngine.emitSchema]]).
+  * emit rows ([[TrailEngine.emitSchema]]). Its exec requires its input
+  * clustered and sorted by `__uuid`, so Spark plans the exchange and sort
+  * only when the input lacks them.
   */
 private[graft] final case class TrailMatch(spec: TrailMatchSpec, output: Seq[Attribute], child: LogicalPlan)
     extends UnaryNode {
@@ -70,19 +75,38 @@ private[graft] object TrailMatch {
   */
 private[graft] object TrailStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case TrailPack(ghostIdx, srcIdx, output, child) => TrailPackExec(ghostIdx, srcIdx, output, planLater(child)) :: Nil
-    case TrailMatch(spec, output, child)            => TrailMatchExec(spec, output, planLater(child)) :: Nil
-    case _                                          => Nil
+    case TrailPack(ghostIdx, srcIdx, rows, child) => TrailPackExec(ghostIdx, srcIdx, rows, planLater(child)) :: Nil
+    case TrailMatch(spec, output, child)          => TrailMatchExec(spec, output, planLater(child)) :: Nil
+    case _                                        => Nil
   }
 }
 
-private[graft] final case class TrailPackExec(ghostIdx: Int, srcIdx: Int, output: Seq[Attribute], child: SparkPlan)
+/** Packing keeps every row in its partition and emits a task's trails in
+  * first-seen order, so a child partitioned by `__uuid` alone stays so,
+  * and a child sorted by `__uuid` first yields fragments sorted by it.
+  */
+private[graft] final case class TrailPackExec(ghostIdx: Int, srcIdx: Int, rows: Attribute, child: SparkPlan)
     extends UnaryExecNode {
+  private def uuid: Attribute = child.output.head
+  override def output: Seq[Attribute] = Seq(uuid, rows)
+  override def producedAttributes: AttributeSet = AttributeSet(rows)
+
+  override def outputPartitioning: Partitioning = child.outputPartitioning match {
+    case p: Partitioning with Expression if p.references.subsetOf(AttributeSet(uuid)) => p
+    case SinglePartition => SinglePartition
+    case p => UnknownPartitioning(p.numPartitions)
+  }
+
+  override def outputOrdering: Seq[SortOrder] = {
+    val byUuid = SortOrder(uuid, Ascending)
+    if (child.outputOrdering.headOption.exists(_.satisfies(byUuid))) Seq(byUuid) else Nil
+  }
+
   override protected def doExecute(): RDD[InternalRow] = {
     val (schema, ghost, src) = (child.schema, ghostIdx, srcIdx)
-    child.execute().mapPartitions { rows =>
+    child.execute().mapPartitions { part =>
       lazy val toUnsafe = UnsafeProjection.create(schema)
-      new TrailPacker(rows.map {
+      new TrailPacker(part.map {
         case u: UnsafeRow => u
         case r            => toUnsafe(r)
       }, ghost, src)
@@ -292,6 +316,10 @@ private[graft] final class TrailMatchSpec(
 
 private[graft] final case class TrailMatchExec(spec: TrailMatchSpec, output: Seq[Attribute], child: SparkPlan)
     extends UnaryExecNode {
+
+  override def producedAttributes: AttributeSet = outputSet
+  override def requiredChildDistribution: Seq[Distribution] = Seq(ClusteredDistribution(Seq(child.output.head)))
+  override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(Seq(SortOrder(child.output.head, Ascending)))
 
   override lazy val metrics: Map[String, SQLMetric] = Map(
     "fragments" -> SQLMetrics.createMetric(sparkContext, "fragments in"),

@@ -35,7 +35,8 @@ object TrckQueries {
     * once and persisted, the amortize-the-shuffle step repeated trail
     * queries are built around. Bench warms it before timing, so the
     * m1_fsm_count vs m1_fsm_count_prepared delta exposes exactly the
-    * per-query shuffle+sort the prepared path eliminates.
+    * per-query shuffle+sort the layout's visible partitioning and order
+    * eliminate.
     */
   private val preparedCache =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
@@ -51,21 +52,6 @@ object TrckQueries {
       df
     })
 
-  /** Durable bucketed trail layout per sf dir — the CROSS-SESSION
-    * amortization story the persist-based [[preparedTrailEvents]] can't
-    * tell: at 100 TB "prepare once" is a `bucketBy(uuid).sortBy(uuid, ts,
-    * seq)` TABLE on storage, rebuilt never, re-read by every session, with
-    * zero executor memory pinned. Written once per (session, dir) here
-    * (the in-memory catalog forgets tables between sessions; the parquet
-    * files persist and are overwritten on rebuild); the write aligns task
-    * partitioning with the bucket hash so each bucket is ONE sorted file
-    * (multi-file buckets concatenate sorted runs and would break the
-    * prepared contract — EngineEquivalenceSpec pins this). The bucketed
-    * SCAN must be forced on: Catalyst can't see that the `TrailMatch`
-    * operator needs bucket alignment, so autoBucketedScan would silently
-    * fall back to file-split partitioning and feed the prepared path
-    * unsorted mixed-uuid partitions.
-    */
   /** Conf key for the durable layout's storage root (default
     * `/tmp/graft_durable`); on a cluster point it at a lake path.
     */
@@ -74,7 +60,14 @@ object TrckQueries {
   private val durableCache =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
-  /** Staleness contract: the layout is rebuilt only when the SESSION
+  /** Durable bucketed trail layout per sf dir: a `bucketBy(uuid)
+    * .sortBy(uuid, ts, seq)` table on storage, written once per (session,
+    * dir) and re-read by later sessions with no executor memory pinned.
+    * Its bucketed scan reports the uuid partitioning, so a trail query over
+    * it plans no exchange (the write aligns task partitioning with the
+    * bucket hash, one file per bucket).
+    *
+    * Staleness contract: the layout is rebuilt only when the SESSION
     * catalog lacks the table — that is the point of a durable layout
     * (cross-session amortization; a fresh session's in-memory catalog is
     * empty, so it overwrites from the current source files). If the
@@ -82,16 +75,6 @@ object TrckQueries {
     * serving the old rows until the caller drops it
     * (`spark.sql("DROP TABLE …")`) or starts a new session — the same
     * semantics as any saved table over mutable files.
-    *
-    * NOTE the autoBucketedScan conf flip is deliberately session-wide and
-    * left set: the returned DataFrame executes arbitrarily later, and the
-    * bucketed SCAN must be forced on at that point — Catalyst can't see
-    * that the `TrailMatch` operator needs bucket alignment, and with
-    * autoBucketedScan enabled it would silently fall back to file-split
-    * partitioning and feed the prepared path unsorted mixed-uuid
-    * partitions. The flip only ever disables an optimizer ELECTIVE
-    * (plain scans are unaffected; bucketed scans stay correct, at worst
-    * unexploited elsewhere).
     */
   def durableTrailEvents(s: SparkSession, dir: String): DataFrame = {
     val root = s.conf.getOption(DurableRootKey).getOrElse("/tmp/graft_durable")
@@ -99,7 +82,6 @@ object TrckQueries {
     // session re-pointing graft.durable.root must build (and read) a new
     // table at the new root, not silently keep serving the old files
     durableCache.computeIfAbsent(s"${System.identityHashCode(s)}:$root:$dir", _ => {
-      s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
       // table name from the SANITIZED FULL PATHS, not a hash: one session
       // may build durable layouts for several dirs, and a hash collision
       // would silently serve the wrong corpus
@@ -341,16 +323,14 @@ object TrckQueries {
     ),
     // m1 over the shared prepared layout: identical results (same oracle),
     // zero per-query shuffle before the final aggregation — the registered,
-    // bench-visible form of the prepared-layout contract (the plan-level
-    // no-shuffle guarantee is pinned in EngineEquivalenceSpec and
-    // PlanAuditSpec).
+    // bench-visible form of the prepared layout (the plan-level no-shuffle,
+    // no-sort shape is pinned in EngineEquivalenceSpec and PlanAuditSpec).
     Q(
       "m1_fsm_count_prepared",
       (s, dir) => {
         val prog = Compiled.compile(countProgram)
         val em = TrailEngine.emits(
-          prog, preparedTrailEvents(s, dir), "uuid", "ts_sec", Seq("event_id"),
-          prepared = true)
+          prog, preparedTrailEvents(s, dir), "uuid", "ts_sec", Seq("event_id"))
         em.filter(col("kind") === "c")
           .agg(sum("n").cast("long").as("n_clicks"))
       },
@@ -369,8 +349,7 @@ object TrckQueries {
       (s, dir) => {
         val prog = Compiled.compile(countProgram)
         val em = TrailEngine.emits(
-          prog, durableTrailEvents(s, dir), "uuid", "ts_sec", Seq("event_id"),
-          prepared = true)
+          prog, durableTrailEvents(s, dir), "uuid", "ts_sec", Seq("event_id"))
         em.filter(col("kind") === "c")
           .agg(sum("n").cast("long").as("n_clicks"))
       },
@@ -437,8 +416,7 @@ object TrckQueries {
       (s, dir) => {
         val prog = Compiled.compile(funnelProgram)
         val em = TrailEngine.emits(
-          prog, preparedTrailEvents(s, dir), "uuid", "ts_sec", Seq("event_id"),
-          prepared = true)
+          prog, preparedTrailEvents(s, dir), "uuid", "ts_sec", Seq("event_id"))
         // same converted-minority fold as m1_fsm_funnel (see its comment)
         em.filter(col("kind") === "c" && col("dst") === "conv")
           .agg(countDistinct(col("uuid")).as("n_converted"))
@@ -476,15 +454,14 @@ object TrckQueries {
         GROUP BY e.user_id ORDER BY uuid"""),
     ),
     // third consumer of the shared layout: the M2 window program (its
-    // `after` finalization path runs under prepared=true over a layout
-    // that holds only events).
+    // `after` finalization path runs over a layout that holds only
+    // events).
     Q(
       "m2_fsm_window_prepared",
       (s, dir) => {
         val prog = Compiled.compile(windowProgram)
         val em = TrailEngine.emits(
-          prog, preparedTrailEvents(s, dir), "uuid", "ts_sec", Seq("event_id"),
-          prepared = true)
+          prog, preparedTrailEvents(s, dir), "uuid", "ts_sec", Seq("event_id"))
         TrailEngine
           .countersByUuid(em)
           .select(col("uuid").cast("long").as("uuid"), col("value").as("n_in_window30"))

@@ -124,19 +124,15 @@ object TrckSparkRunner {
         * `events` carries a `__src` column)
         */
       srcCuts: Array[Long] = Array.empty,
-      /** true ⇒ `events` is a [[TrailEngine.prepare]] layout (or an
-        * equivalent bucketed table): uuid-clustered — each trail's rows
-        * contiguous within one partition, in any order; the engine orders
-        * a trail's rows itself. The per-query exchange and sort are
-        * skipped. All filters here are narrow ops that keep a partition's
-        * row order (filter / projection / broadcast joins), so the layout
-        * contract survives them.
+      /** ignored: the plan sees a [[TrailEngine.prepare]] layout's uuid
+        * partitioning and order itself, and skips the exchange and sort
+        * when the input already has them
         */
       prepared: Boolean = false,
   ): LocalRunner.RunOutput = {
     module.onInitialize()
     try {
-      val srcCol = if (events.columns.contains("__src")) Some("__src") else None
+      val srcCol = TrailEngine.srcColumn(events)
       require(srcCol.isEmpty || srcCuts.nonEmpty,
         "multi-source events (__src column) need the unionSources cuts passed as srcCuts")
       // implicit-foreach lexicon over the uncut, unfiltered input: the
@@ -200,7 +196,7 @@ object TrckSparkRunner {
       // the bounds columns must not join the engine's dedup compare
       val em = TrailEngine
         .emits(prog, trailDf.drop("__wlo", "__whi"), uuidCol, tsCol, tiebreak, params, Some(tuples),
-          module.fcalls, filters.windows.map(_.entries), srcCol, srcCuts, prepared)
+          module.fcalls, filters.windows.map(_.entries), srcCuts)
       aggregateEmits(prog, tuples, em)
     } finally module.onFinalize()
   }

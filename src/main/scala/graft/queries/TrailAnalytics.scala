@@ -1147,10 +1147,10 @@ object TrailAnalytics {
     ),
 
     // ---------------------------------------------- ta_funnel_cohort_prepared
-    // Both halves over the SHARED prepared trail layout: the FSM side runs
-    // prepared=true (no per-query trail shuffle — the m1_fsm_funnel_prepared
-    // precedent) AND the cohort side's first-touch aggregation keys on the
-    // layout's uuid clustering, so ITS per-query events exchange disappears
+    // Both halves over the SHARED prepared trail layout: the FSM side plans
+    // no per-query trail shuffle (the m1_fsm_funnel_prepared precedent) AND
+    // the cohort side's first-touch aggregation keys on the layout's uuid
+    // clustering, so ITS per-query events exchange disappears
     // too. One `TrailEngine.prepare` now feeds the matcher, sessionization,
     // paths, conversion timing and cohorts — the layout-amortization story
     // ta_sessionize_prepared started, completed across the composed query.
@@ -1163,7 +1163,7 @@ object TrailAnalytics {
         val prog = graft.trck.Compiled.compile(graft.engine.TrckQueries.funnelProgram)
         val prep = graft.engine.TrckQueries.preparedTrailEvents(s, dir)
         val em = graft.engine.TrailEngine
-          .emits(prog, prep, "uuid", "ts_sec", Seq("event_id"), prepared = true)
+          .emits(prog, prep, "uuid", "ts_sec", Seq("event_id"))
         val converted = em
           .filter(col("kind") === "c" && col("dst") === "conv")
           .select(col("uuid"))

@@ -18,6 +18,15 @@ object Compiled {
   val ExpiresNever: Long = Long.MaxValue // reference: UINT64_MAX
   val MaxTimestamp: Long = Long.MaxValue - 1 // reference: 0xfffffffffffffffe
 
+  /** Refuse an event of `trail` at or above [[MaxTimestamp]], the
+    * timestamp of the end-of-trail finalization: such an event would run
+    * at or after it.
+    */
+  def requireEventTs(trail: String, ts: Long): Unit =
+    if (ts >= MaxTimestamp)
+      throw new IllegalArgumentException(
+        s"trail $trail: event timestamp $ts must be below $MaxTimestamp, the end-of-trail timestamp")
+
   sealed trait Action
   case object Repeat extends Action
   case object Break extends Action

@@ -284,7 +284,7 @@ object LocalRunner {
               keys.forall(k => p.fields.getOrElse(k, "") == e.fields.getOrElse(k, ""))
             }
           }
-          if (!dup) deduped += e
+          if (!dup) { Compiled.requireEventTs(cookie, e.ts); deduped += e }
         }
         val events = deduped.iterator.map { e =>
           val arr = new Array[String](prog.fields.length)

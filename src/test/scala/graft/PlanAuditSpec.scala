@@ -96,6 +96,30 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"durable run must not shuffle trails (bucketed scan broken?): $shuffles")
       assert(qe.explainString(ExplainMode.fromString("formatted")).contains("Bucketed: true"),
         "the scan must engage the bucketed layout")
+      // at Spark's default: the trail operator's required distribution is
+      // what keeps the scan bucketed
+      assert(spark.conf.get("spark.sql.sources.bucketing.autoBucketedScan.enabled") == "true")
+      val belowMatch = qe.executedPlan.collect { case m: engine.TrailMatchExec => m }
+        .flatMap(_.collect { case e: ShuffleExchangeExec => e })
+      assert(belowMatch.isEmpty, qe.executedPlan.toString)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
+  test("a persisted prepare layout plans no exchange and no sort below TrailMatch") {
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      for (name <- Seq("m1_fsm_count_prepared", "m1_fsm_count")) {
+        val plan = SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan
+        val matches = plan.collect { case m: engine.TrailMatchExec => m }
+        assert(matches.size == 1, plan.toString)
+        val exchanges = matches.head.collect { case e: ShuffleExchangeExec => e }
+        val sorts = matches.head.collect { case s: SortExec => s }
+        // the cold twin shows what the layout saves: one exchange, one sort
+        val want = if (name == "m1_fsm_count") 1 else 0
+        assert(exchanges.size == want && sorts.size == want, s"$name: $plan")
+      }
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 

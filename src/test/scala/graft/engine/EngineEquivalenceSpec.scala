@@ -90,7 +90,7 @@ class EngineEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val preparedDf = TrailEngine.prepare(df, "uuid", "ts", Seq("seq")).persist()
     preparedDf.count() // materialize the one-time shuffle
     val fast = TrailEngine.emits(
-      prog, preparedDf, "uuid", "ts", Seq("seq"), foreachTuples = Some(tuples), prepared = true)
+      prog, preparedDf, "uuid", "ts", Seq("seq"), foreachTuples = Some(tuples))
 
     assert(countersOf(fast) == countersOf(normal))
 
@@ -101,7 +101,7 @@ class EngineEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val planned = TrailEngine.emits(
-        prog, preparedDf, "uuid", "ts", Seq("seq"), foreachTuples = Some(tuples), prepared = true)
+        prog, preparedDf, "uuid", "ts", Seq("seq"), foreachTuples = Some(tuples))
       val shuffles = planned.queryExecution.executedPlan.collect { case e: ShuffleExchangeExec => e }
       assert(shuffles.isEmpty, s"unexpected shuffles: $shuffles")
       val normalPlanned = TrailEngine.emits(prog, df, "uuid", "ts", Seq("seq"), foreachTuples = Some(tuples))
@@ -125,19 +125,16 @@ class EngineEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     val normal = TrailEngine.emits(prog, df, "uuid", "ts", Seq("seq"), foreachTuples = Some(tuples))
 
-    // durable layout: align write partitioning with the bucket hash so each
-    // bucket is ONE sorted file (multi-file buckets concatenate per-file
-    // sorted runs and would break the prepared contract), then force the
-    // bucketed scan on read
+    // durable layout: the bucketed scan reports the uuid partitioning, so
+    // the engine plans no exchange over it
     val nBuckets = 4
-    spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
     spark.sql("DROP TABLE IF EXISTS trails_bucketed")
     df.repartition(nBuckets, col("uuid"))
       .write.bucketBy(nBuckets, "uuid").sortBy("uuid", "ts", "seq")
       .mode("overwrite").saveAsTable("trails_bucketed")
     val table = spark.table("trails_bucketed")
     val fast = TrailEngine.emits(
-      prog, table, "uuid", "ts", Seq("seq"), foreachTuples = Some(tuples), prepared = true)
+      prog, table, "uuid", "ts", Seq("seq"), foreachTuples = Some(tuples))
 
     assert(countersOf(fast) == countersOf(normal))
     // AQE hides exchanges from executedPlan.collect — assert with it off
@@ -145,12 +142,11 @@ class EngineEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val planned = TrailEngine.emits(
-        prog, table, "uuid", "ts", Seq("seq"), foreachTuples = Some(tuples), prepared = true)
+        prog, table, "uuid", "ts", Seq("seq"), foreachTuples = Some(tuples))
       val shuffles = planned.queryExecution.executedPlan.collect { case e: ShuffleExchangeExec => e }
       assert(shuffles.isEmpty, s"unexpected shuffles: $shuffles")
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.sql("DROP TABLE IF EXISTS trails_bucketed")
-    spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "true")
   }
 
   test("multi-source runs: min_ts cut + cross-DB state carry, Spark = local") {
@@ -331,13 +327,12 @@ class EngineEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
       val filters = TrckSparkRunner.EngineFilters(
         cnf = golden.cnf.flatMap(c => TrckSparkRunner.cnfColumn(c.clauses, events)),
         windows = windows, exclude = Some(exclude.toSeq.toDF("uuid")))
-      val srcCol = if (cuts.isEmpty) None else Some("__src")
-      val layout = TrailEngine.prepare(events, "uuid", "ts", srcCol = srcCol)
-      for ((df, prepared) <- Seq(events -> false, layout -> true)) {
+      val layout = TrailEngine.prepare(events, "uuid", "ts")
+      for ((df, run) <- Seq(events -> "cold", layout -> "prepared")) {
         val got = TestHarness.outputToJValues(
-          TrckSparkRunner.runRaw(prog, df, "uuid", "ts", filters = filters, srcCuts = cuts, prepared = prepared))
+          TrckSparkRunner.runRaw(prog, df, "uuid", "ts", filters = filters, srcCuts = cuts))
         assert(TestHarness.compare(golden.expected, got).isEmpty,
-          s"${golden.desc} (prepared = $prepared): ${TestHarness.compare(golden.expected, got)}")
+          s"${golden.desc} ($run): ${TestHarness.compare(golden.expected, got)}")
       }
     }
   }
@@ -506,7 +501,7 @@ class EngineEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     ).toDF("uuid", "ts", "type", "advertisable_eid", "__ghost").coalesce(1)
     val ghostLocal = LocalRunner.run(prog, Seq(ghostDb))
     assert(ghostLocal.results.head.counters("n") == 2L)
-    val ghostSpark = TrckSparkRunner.runRaw(prog, layout, "uuid", "ts", prepared = true)
+    val ghostSpark = TrckSparkRunner.runRaw(prog, layout, "uuid", "ts")
     assert(ghostSpark.toOutputs == ghostLocal.toOutputs)
   }
 

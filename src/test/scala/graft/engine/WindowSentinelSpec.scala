@@ -145,8 +145,8 @@ class WindowSentinelSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("prepared layout: window run with zero in-bounds events matches LocalRunner") {
     // same shape as the unprepared window test, but through a
-    // TrailEngine.prepare layout — the baked-in __ghost sentinels must keep
-    // u2's empty per-entry loop + finalization running (byte-identical
+    // TrailEngine.prepare layout — u2's rows, all out of bounds, must keep
+    // its empty per-entry loop + finalization running (byte-identical
     // output), with no per-query shuffle
     val prog = Compiled.compile(nestedWindowProgram)
     val db = Db(Seq(
@@ -163,7 +163,7 @@ class WindowSentinelSpec extends AnyFunSuite with BeforeAndAfterAll {
     preparedDf.count()
     val engine = TrckSparkRunner.runRaw(
       prog, preparedDf, "uuid", "ts", Seq("seq"),
-      filters = TrckSparkRunner.EngineFilters(windows = Some(ws)), prepared = true)
+      filters = TrckSparkRunner.EngineFilters(windows = Some(ws)))
     assert(render(engine) == render(local))
     preparedDf.unpersist()
   }
@@ -182,8 +182,7 @@ class WindowSentinelSpec extends AnyFunSuite with BeforeAndAfterAll {
     val engine = TrckSparkRunner.runRaw(
       prog, preparedDf, "uuid", "ts", Seq("seq"),
       filters = TrckSparkRunner.EngineFilters(
-        cnf = TrckSparkRunner.cnfColumn(cnf.clauses, preparedDf)),
-      prepared = true)
+        cnf = TrckSparkRunner.cnfColumn(cnf.clauses, preparedDf)))
     assert(render(engine) == render(local))
     preparedDf.unpersist()
   }
@@ -203,20 +202,19 @@ class WindowSentinelSpec extends AnyFunSuite with BeforeAndAfterAll {
     ))
     val local = LocalRunner.run(prog, Seq(db1, db2), windows = Some(ws))
     val (unioned, cuts) = TrckSparkRunner.unionSources(Seq(dbToDf(db1), dbToDf(db2)), "ts")
-    val preparedDf = TrailEngine.prepare(
-      unioned, "uuid", "ts", Seq("seq"), srcCol = Some("__src")).persist()
+    val preparedDf = TrailEngine.prepare(unioned, "uuid", "ts", Seq("seq")).persist()
     preparedDf.count()
     val engine = TrckSparkRunner.runRaw(
       prog, preparedDf, "uuid", "ts", Seq("seq"),
       filters = TrckSparkRunner.EngineFilters(windows = Some(ws)),
-      srcCuts = cuts, prepared = true)
+      srcCuts = cuts)
     assert(render(engine) == render(local))
     preparedDf.unpersist()
   }
 
-  test("durable bucketed ghost-bearing layout: window run matches LocalRunner") {
-    // the docstring recipe end-to-end: prepare → bucketed table → runRaw
-    // prepared window run, empty-trail cookie included
+  test("durable bucketed layout: window run matches LocalRunner") {
+    // prepare → bucketed table → runRaw window run at the default
+    // autoBucketedScan, empty-trail cookie included
     val prog = Compiled.compile(nestedWindowProgram)
     val db = Db(Seq(
       "u1" -> Seq(RawEvent(500L, Map("type" -> "x")), RawEvent(600L, Map("type" -> "conv"))),
@@ -228,7 +226,6 @@ class WindowSentinelSpec extends AnyFunSuite with BeforeAndAfterAll {
     ))
     val local = LocalRunner.run(prog, Seq(db), windows = Some(ws))
     val nBuckets = 2
-    spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
     spark.sql("DROP TABLE IF EXISTS trails_ghost_bucketed")
     TrailEngine.prepare(dbToDf(db), "uuid", "ts", Seq("seq"))
       .repartition(nBuckets, org.apache.spark.sql.functions.col("uuid"))
@@ -237,12 +234,9 @@ class WindowSentinelSpec extends AnyFunSuite with BeforeAndAfterAll {
     try {
       val engine = TrckSparkRunner.runRaw(
         prog, spark.table("trails_ghost_bucketed"), "uuid", "ts", Seq("seq"),
-        filters = TrckSparkRunner.EngineFilters(windows = Some(ws)), prepared = true)
+        filters = TrckSparkRunner.EngineFilters(windows = Some(ws)))
       assert(render(engine) == render(local))
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS trails_ghost_bucketed")
-      spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "true")
-    }
+    } finally spark.sql("DROP TABLE IF EXISTS trails_ghost_bucketed")
   }
 
   test("hand-rolled uuid-clustered layout without __ghost: window and CNF runs match LocalRunner") {
@@ -266,7 +260,7 @@ class WindowSentinelSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(localWs.results.head.counters("midexp") >= 1L)
       val engineWs = TrckSparkRunner.runRaw(
         prog, bare, "uuid", "ts", Seq("seq"),
-        filters = TrckSparkRunner.EngineFilters(windows = Some(ws)), prepared = true)
+        filters = TrckSparkRunner.EngineFilters(windows = Some(ws)))
       assert(render(engineWs) == render(localWs))
       // u3: every event CNF-removed
       val cnf = LocalRunner.CnfFilter(Seq(Seq(("type", "y", false))))
@@ -274,8 +268,7 @@ class WindowSentinelSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(localCnf.results.head.counters("midexp") >= 1L)
       val engineCnf = TrckSparkRunner.runRaw(
         prog, bare, "uuid", "ts", Seq("seq"),
-        filters = TrckSparkRunner.EngineFilters(cnf = TrckSparkRunner.cnfColumn(cnf.clauses, bare)),
-        prepared = true)
+        filters = TrckSparkRunner.EngineFilters(cnf = TrckSparkRunner.cnfColumn(cnf.clauses, bare)))
       assert(render(engineCnf) == render(localCnf))
     } finally bare.unpersist()
   }

@@ -1,7 +1,11 @@
 package graft.trck
 
+import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.GraftSession
+import graft.engine.TrckSparkRunner
 import LocalRunner.{Db, RawEvent}
 
 /** The non-consuming-cycle guard in Fsm.matchTrail must (a) never trip on
@@ -11,8 +15,15 @@ import LocalRunner.{Db, RawEvent}
   * durations legitimately makes ~3·G/d non-consuming transitions at the
   * same position, one after-yield per period — and (b) still fail fast on a
   * genuinely non-terminating restart cycle (exact control-state repeat).
+  * An event at or above the end-of-trail timestamp is refused before the
+  * guard can see it, by both engines.
   */
-class StallGuardSpec extends AnyFunSuite {
+class StallGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  private lazy val spark: SparkSession =
+    GraftSession.builder("2").appName("stall-guard").getOrCreate()
+
+  override def afterAll(): Unit = spark.stop()
 
   private val noParams = Fsm.Bindings(Map.empty, Map.empty)
 
@@ -74,5 +85,32 @@ class StallGuardSpec extends AnyFunSuite {
     intercept[IllegalStateException] {
       LocalRunner.run(prog, Seq(db), noParams, None)
     }
+  }
+
+  test("an event at or above MaxTimestamp fails in both engines, and one below it counts") {
+    // the check runs first: at Long.MaxValue the rule's default
+    // after-clause would not consume the event, and the stall guard would
+    // throw "FSM control state repeated" instead
+    val prog = Compiled.compile(Ir.Program(Vector(
+      Ir.Rule(None, None, None, entrypoint = false, List(
+        clause(Map("type" -> List("x")), "repeat", Ir.Yield("$n", Nil)),
+        catchAll), None),
+    ), None))
+    def db(ts: Long) = Db(Seq("user0" -> Seq(RawEvent(5L, Map("type" -> "x")), RawEvent(ts, Map("type" -> "x")))))
+    def onSpark(ts: Long) = TrckSparkRunner.runRaw(
+      prog, spark.createDataFrame(Seq(("user0", 5L, "x"), ("user0", ts, "x"))).toDF("uuid", "ts", "type"),
+      "uuid", "ts")
+    for (ts <- Seq(Compiled.MaxTimestamp, Long.MaxValue)) {
+      val local = intercept[IllegalArgumentException](LocalRunner.run(prog, Seq(db(ts)), noParams, None))
+      assert(local.getMessage ==
+        s"trail user0: event timestamp $ts must be below ${Compiled.MaxTimestamp}, the end-of-trail timestamp")
+      // a task failure reaches the driver wrapped
+      val failed = intercept[Exception](onSpark(ts))
+      assert(Iterator.iterate[Throwable](failed)(_.getCause).takeWhile(_ != null)
+        .exists(e => e.getMessage != null && e.getMessage.contains(local.getMessage)), failed.toString)
+    }
+    val below = Long.MaxValue - 2
+    assert(LocalRunner.run(prog, Seq(db(below)), noParams, None).toOutputs.head("$n") == 2L)
+    assert(onSpark(below).toOutputs.head("$n") == 2L)
   }
 }
