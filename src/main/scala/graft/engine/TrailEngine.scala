@@ -48,8 +48,9 @@ import graft.trck.LocalRunner.ForeachTuple
   *       tuples whose values occur); finalize at MAX_TIMESTAMP inline (no
   *       cross-trail state), emit compact yield `UnsafeRow`s. No event is
   *       decoded into an external `Row`
-  *     → groupBy(tuple, dst[, item]) aggregation — partial map-side combine
-  *       makes the second shuffle O(distinct yields), not O(events)
+  *     → result fold (TrckSparkRunner.aggregateEmits, for runRaw): each
+  *       TrailMatch task adds its emit rows into its own per-tuple
+  *       results, and the driver merges them — no second shuffle
   *
   * [[TrailMatch]] requires its input clustered and sorted by `__uuid`, and
   * [[TrailPack]] passes its input's uuid partitioning and order through,
@@ -171,9 +172,10 @@ object TrailEngine {
     * for `c` rows, and for `h` rows the trail-local sketch's nonzero
     * registers as [[graft.trck.Hll.sparse]] (index hi, index lo, rank)
     * triples — ≤ 3k bytes for k distinct items, never the dense 16 KiB
-    * array. TrckSparkRunner.aggregateEmits folds every kind in one
-    * aggregation pass. [[graft.streaming.TrailStream.emits]] writes the
-    * same rows through the same [[TrailReader]].
+    * array. TrckSparkRunner.aggregateEmits adds each row back into a
+    * [[graft.trck.Results]] ([[graft.trck.Results.addEmit]]).
+    * [[graft.streaming.TrailStream.emits]] writes the same rows through
+    * the same [[TrailReader]].
     */
   private[graft] val emitSchema = StructType(Seq(
     StructField("uuid", StringType),
@@ -382,7 +384,7 @@ object TrailEngine {
           r.counters.foreach { case (d, v) => if (v != 0) emit(ctx, j, kindC, d, null, v) }
           r.sets.foreach { case (d, m) => m.foreach { case (t, c) => emit(ctx, j, kindS, d, t, c) } }
           r.msets.foreach { case (d, m) => m.foreach { case (t, c) => emit(ctx, j, kindM, d, t, c) } }
-          // the trail-local sketch's nonzero registers; merged upstream
+          // the trail-local sketch's nonzero registers (Results.addEmit merges them)
           r.hlls.foreach { case (d, h) => emit(ctx, j, kindH, d, h.sparse, 1L) }
         }
     }

@@ -2,21 +2,23 @@ package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.trck._
 import graft.trck.Compiled.CompiledProgram
 import graft.trck.Fsm.Bindings
 import graft.trck.LocalRunner.ForeachTuple
 
-/** Full trck query execution on Spark: TrailEngine emits → distributed
-  * monoid aggregation (counters sum, set/multiset counts, HLL register
-  * merge) → small per-tuple results collected and rendered in the
-  * reference's output shape (reference: src/results_json.c:233-295).
+/** Full trck query execution on Spark: TrailEngine emits → each task
+  * folds its emit rows into per-tuple result monoids (counters sum,
+  * set/multiset counts, HLL register merge) → the driver merges the task
+  * results and renders them in the reference's output shape (reference:
+  * src/results_json.c:233-295).
   *
-  * The collect is only of FINAL aggregated results — O(tuples × result
-  * vars [× set cardinality]) — never of events; everything upstream is
-  * distributed with map-side partial aggregation.
+  * The driver receives only folded results — O(tasks × tuples × result
+  * vars [× set cardinality]) — never events or emit rows.
   */
 object TrckSparkRunner {
 
@@ -106,9 +108,9 @@ object TrckSparkRunner {
     * [[LocalRunner.RunOutput]] (`toOutputs` renders reference-shaped maps;
     * the msgpack/proto sinks read the encoded tuples). The module's
     * initialize hook fires on the driver before the query plan is built,
-    * its finalize hook after the aggregated results are collected (runRaw
-    * is eager — the collects happen inside it), once per query run like
-    * the reference's main-scope calls (src/match_traildb.c:1248,1256).
+    * its finalize hook after the results are merged (runRaw is eager — its
+    * jobs run inside it), once per query run like the reference's
+    * main-scope calls (src/match_traildb.c:1248,1256).
     */
   def runRaw(
       prog: CompiledProgram,
@@ -201,50 +203,43 @@ object TrckSparkRunner {
     } finally module.onFinalize()
   }
 
-  /** Fold an emit stream ([[TrailEngine.emits]] schema) into reference-shaped
-    * results in ONE aggregation pass and one collect: group by (tuple_idx,
-    * kind, dst, item for set/multiset rows), sum `n` for counter, set and
-    * multiset groups, register-max the sparse sketches of `h` groups, then
-    * dispatch each collected row on `kind` on the driver. The HLL aggregate
-    * is planned only when the program declares an HLL yield, so other
-    * programs keep a plain HashAggregate. Per-tuple rows fold into slot 0
-    * under mergeResults: counters add, set counts add, sketches
-    * register-max (reference: match_add_results).
+  /** Fold an emit stream ([[TrailEngine.emits]] schema) into
+    * reference-shaped results with [[Results.merge]], the one result
+    * monoid (reference: match_add_results, src/match_traildb.c:402-406):
+    * one Spark job in which each task adds its emit rows
+    * ([[Results.addEmit]]) into its own results per tuple slot, making a
+    * slot only when a row reaches it, and the driver merges task results
+    * as they arrive. Under mergeResults every tuple folds into slot 0. The
+    * job runs as one SQL execution of `em`, so query listeners, the UI and
+    * TrailMatch's metrics see one query.
     */
   def aggregateEmits(
       prog: CompiledProgram, tuples: Vector[ForeachTuple], em: DataFrame): LocalRunner.RunOutput = {
-    val nSlots = if (prog.mergeResults) 1 else tuples.length
-    val results = Vector.fill(nSlots)(new Results(prog))
-    val kind = col("kind")
-    // a literal item key for programs without set/multiset yields: the
-    // optimizer drops it from the grouping, and the remaining fixed-width
-    // and string keys keep the codegen fast hash map
-    val item =
-      if (prog.yieldSets.isEmpty && prog.yieldMultisets.isEmpty) lit(null).cast("binary")
-      else when(kind.isin("s", "m"), col("item"))
-    val hll =
-      if (prog.yieldHlls.isEmpty) Nil
-      else Seq(graft.functions.HllAggregator
-        .trckHllMergeSparseHex(when(kind === "h", col("item"))).as("hex"))
-    em.groupBy(col("tuple_idx"), kind, col("dst"), item.as("item"))
-      .agg(sum("n").as("v"), hll: _*)
-      .collect()
-      .foreach { r =>
-        val res = results(if (prog.mergeResults) 0 else r.getInt(0))
-        res.touched = true // direct map writes bypass the emit methods
-        val dst = r.getString(2)
-        r.getString(1) match {
-          case "c" =>
-            res.counters.updateWith(dst)(c => Some(c.getOrElse(0L) + r.getLong(4)))
-          case "h" =>
-            val h = Hll.fromHexString(r.getString(5))
-            res.hlls.updateWith(dst)(prev => Some(prev.fold(h)(_.merge(h))))
-          case k =>
-            val m = if (k == "s") res.sets(dst) else res.msets(dst)
-            val item = r.getAs[Array[Byte]](3)
-            m.update(item, m.getOrElse(item, 0L) + r.getLong(4))
-        }
+    val merged = prog.mergeResults
+    val nSlots = if (merged) 1 else tuples.length
+    val fold = (rows: Iterator[InternalRow]) => {
+      val slots = new Array[Results](nSlots)
+      // kind and dst take a few values: decode each once per task
+      val strings = new java.util.HashMap[UTF8String, String]()
+      def str(u: UTF8String): String = {
+        val s = strings.get(u)
+        if (s != null) s else { val d = u.toString; strings.put(u.clone(), d); d }
       }
-    LocalRunner.RunOutput(prog, tuples, results, prog.mergeResults)
+      rows.foreach { r =>
+        val j = if (merged) 0 else r.getInt(0)
+        if (slots(j) == null) slots(j) = new Results(prog)
+        slots(j).addEmit(str(r.getUTF8String(1)), str(r.getUTF8String(2)),
+          if (r.isNullAt(3)) null else r.getBinary(3), r.getLong(4))
+      }
+      slots
+    }
+    val results = Vector.fill(nSlots)(new Results(prog))
+    val qe = em.select("tuple_idx", "kind", "dst", "item", "n").queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("trck runRaw")) {
+      val rows = qe.toRdd
+      rows.sparkContext.runJob(rows, fold, (_: Int, slots: Array[Results]) =>
+        for (j <- 0 until nSlots if slots(j) != null) results(j).merge(slots(j)))
+    }
+    LocalRunner.RunOutput(prog, tuples, results, merged)
   }
 }

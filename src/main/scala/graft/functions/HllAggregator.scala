@@ -62,33 +62,6 @@ object HllAggregator {
   val estimateUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
     org.apache.spark.sql.functions.udf((hex: String) => Option(hex).map(estimate))
 
-  /** Merge-aggregator over per-trail sparse sketches ([[Hll.sparse]]
-    * triples, the TrailEngine's `h` emit rows): register-max union. The
-    * buffer stays empty until the first non-null input, so groups of a
-    * shared aggregation that never see a sketch (counter and set rows fed
-    * as null) allocate no registers and finish as null; a group whose
-    * sketches are all empty still finishes as the reference's "0e00".
-    */
-  val mergeSparse: Aggregator[Array[Byte], Array[Byte], String] =
-    new Aggregator[Array[Byte], Array[Byte], String] {
-      override def zero: Array[Byte] = Array.emptyByteArray
-      override def reduce(buf: Array[Byte], sparse: Array[Byte]): Array[Byte] =
-        if (sparse == null) buf
-        else {
-          val regs = if (buf.length == 0) new Array[Byte](Hll.M) else buf
-          Hll.maxSparse(regs, sparse)
-          regs
-        }
-      override def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-        if (a.length == 0) b else if (b.length == 0) a else registerMax(a, b)
-      override def finish(buf: Array[Byte]): String =
-        if (buf.length == 0) null else Hll.serializeRegisters(buf)
-      override def bufferEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-      override def outputEncoder: Encoder[String] = Encoders.STRING
-    }
-
-  def trckHllMergeSparseHex(c: Column): Column = udaf(mergeSparse).apply(c)
-
   /** Merge-aggregator over dense register arrays with a BINARY result —
     * for iterative consumers (HyperBall's per-round ball union) that feed
     * the merged registers straight into the next round and would only pay

@@ -82,8 +82,10 @@ object TrailStream {
   /** Wire a streaming events DataFrame (uuidCol, tsCol seconds, program
     * field columns) into the FSM. Returns the stream of emitted yield rows
     * in the batch engine's format, `(uuid, tuple_idx, kind, dst, item, n)`,
-    * which TrckSparkRunner.aggregateEmits folds. Rows go through the batch
-    * engine's trail row codec: [[graft.engine.TrailEngine.project]] (its
+    * which TrckSparkRunner.aggregateEmits folds into [[graft.trck.Results]]
+    * (a batch DataFrame of them: a memory sink's table, say). Rows go
+    * through the batch engine's trail row codec:
+    * [[graft.engine.TrailEngine.project]] (its
     * watermark column comes after the projection, so it never joins the
     * consecutive-duplicate compare), then the batch engine's
     * [[graft.engine.TrailEngine.TrailReader]] (one per task) reads each
@@ -194,25 +196,6 @@ object TrailStream {
         }
       )(Encoders.product[TrailState], TrailEngine.emitEncoder)
   }
-
-  /** Streaming face of the A4 HLL yield: per-group trck-format distinct
-    * sketches over an unbounded stream. The reference's result-merge
-    * contract (register-wise max across partial sketches — the same merge
-    * its multi-DB runs and foreach shards rely on) is exactly what makes
-    * this streamable: each micro-batch folds new items into the per-group
-    * sketch state, and the aggregator's `merge` path combines partials, so
-    * the sketch after N micro-batches is byte-identical to one batch
-    * aggregation of all N batches' rows (pinned by TrailStreamSpec).
-    * Complete/update output mode; state per group is the fixed 16 KiB
-    * register array regardless of stream length — the sketch IS the
-    * bounded state, no watermark needed.
-    */
-  def hllDistinctByGroup(events: DataFrame, groupCol: String = "event_type",
-                         itemCol: String = "user_id"): DataFrame =
-    events
-      .groupBy(col(groupCol))
-      .agg(graft.functions.HllAggregator
-        .trckHllHex(encode(col(itemCol).cast("string"), "UTF-8")).as("hll_hex"))
 
   /** Streaming gap sessionization: the live twin of
     * [[graft.queries.TrailAnalytics.sessions]], on Spark's NATIVE session

@@ -17,9 +17,10 @@ package graft.trck
 final class Hll private (val registers: Array[Byte], tracked: Boolean) extends Serializable {
   import Hll._
 
-  /** Indices of the registers [[add]] and [[merge]] turned nonzero, in the
-    * order they did; null for a sketch over registers written elsewhere
-    * ([[Hll.wrap]], [[Hll.fromHexString]]), which [[sparse]] scans.
+  /** Indices of the registers [[add]], [[merge]] and [[mergeSparse]] turned
+    * nonzero, in the order they did; null for a sketch over registers
+    * written elsewhere ([[Hll.wrap]], [[Hll.fromHexString]]), which
+    * [[sparse]] scans.
     */
   private var nonzero: Array[Short] = if (tracked) new Array[Short](16) else null
   private var nNonzero = 0
@@ -46,6 +47,17 @@ final class Hll private (val registers: Array[Byte], tracked: Boolean) extends S
     while (i < M) {
       if ((registers(i) & 0xff) < (other.registers(i) & 0xff)) set(i, other.registers(i))
       i += 1
+    }
+    this
+  }
+
+  /** Register-max a [[sparse]] triple array into this sketch. */
+  def mergeSparse(sparse: Array[Byte]): Hll = {
+    var o = 0
+    while (o + 2 < sparse.length) {
+      val idx = ((sparse(o) & 0xff) << 8) | (sparse(o + 1) & 0xff)
+      if ((registers(idx) & 0xff) < (sparse(o + 2) & 0xff)) set(idx, sparse(o + 2))
+      o += 3
     }
     this
   }
@@ -87,7 +99,7 @@ final class Hll private (val registers: Array[Byte], tracked: Boolean) extends S
   /** Nonzero registers as (index hi, index lo, rank) byte triples, in
     * index order — the per-trail emit form: a sketch of k distinct items
     * ships at most 3k bytes instead of all [[Hll.M]] registers.
-    * [[Hll.maxSparse]] folds it back into a register array. A sketch built
+    * [[mergeSparse]] folds it back into a sketch. A sketch built
     * by [[Hll.apply]] visits only its k nonzero registers (sorted, O(k log
     * k)); one over foreign registers scans all of them.
     */
@@ -166,16 +178,6 @@ object Hll {
       i += 1
     }
     EmptyHex
-  }
-
-  /** Register-max a [[Hll.sparse]] triple array into `regs` (M registers). */
-  def maxSparse(regs: Array[Byte], sparse: Array[Byte]): Unit = {
-    var o = 0
-    while (o + 2 < sparse.length) {
-      val idx = ((sparse(o) & 0xff) << 8) | (sparse(o + 1) & 0xff)
-      if ((regs(idx) & 0xff) < (sparse(o + 2) & 0xff)) regs(idx) = sparse(o + 2)
-      o += 3
-    }
   }
 
   def fromHexString(s: String): Hll = {

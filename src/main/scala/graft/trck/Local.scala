@@ -14,7 +14,7 @@ import Fsm._
   * (unsigned byte sort) for output parity (reference:
   * src/results_json.c:137-160).
   */
-final class Results(prog: CompiledProgram) extends Emitter {
+final class Results(prog: CompiledProgram) extends Emitter with Serializable {
   /** False ⇔ every monoid is still at identity (no yield ever fired) — an
     * O(1) emptiness witness. The wide-foreach hot loop broadcasts ONE
     * scratch to thousands of tuples whose results are empty (absent
@@ -56,6 +56,22 @@ final class Results(prog: CompiledProgram) extends Emitter {
     h.add(Tuple.encode(values, types))
   }
 
+  /** Add one emit row (`TrailEngine.emitSchema`), the inverse of the
+    * engine's emit encoding: kind `c` adds `n` to counter `dst`, `s` and
+    * `m` add `n` to the count of the encoded tuple `item`, and `h`
+    * register-maxes the sparse sketch `item` ([[Hll.sparse]]) into `dst`'s.
+    */
+  def addEmit(kind: String, dst: String, item: Array[Byte], n: Long): Unit = {
+    touched = true
+    kind match {
+      case "c" => counters(dst) = counters(dst) + n
+      case "s" => val m = sets(dst); m.update(item, m.getOrElse(item, 0L) + n)
+      case "m" => val m = msets(dst); m.update(item, m.getOrElse(item, 0L) + n)
+      case "h" => hlls.getOrElseUpdate(dst, Hll()).mergeSparse(item)
+      case k   => throw new IllegalArgumentException(s"unknown emit kind '$k'")
+    }
+  }
+
   /** Back to identity, keeping the maps (TrailMatcher reuses scratch results). */
   private[trck] def clear(): Unit = if (touched) {
     touched = false
@@ -79,7 +95,7 @@ final class Results(prog: CompiledProgram) extends Emitter {
     other.hlls.foreach { case (k, h) =>
       hlls.get(k) match {
         case Some(mine) => mine.merge(h)
-        case None       => hlls.update(k, Hll.fromHexString(h.toHexString)) // deep copy
+        case None       => hlls.update(k, Hll().merge(h))
       }
     }
   }

@@ -35,7 +35,8 @@ object TrailMatcher {
 
   /** FSM event-steps made by [[processTrail]] (the events each Fsm run
     * reads, summed). JVM-wide, so meaningful only under local[*]; one add
-    * per trail.
+    * per trail. Only the trckperf benchmark reads it; tests read
+    * [[threadSteps]] or TrailMatch's `eventSteps` metric.
     */
   val matchCalls = new java.util.concurrent.atomic.LongAdder
 

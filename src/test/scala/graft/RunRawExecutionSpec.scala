@@ -4,10 +4,9 @@ import org.apache.spark.graft.QueryCapture
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.UnionExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec, ObjectHashAggregateExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.types.BinaryType
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,11 +16,12 @@ import graft.trck.{Compiled, LocalRunner}
 
 /** Execution pins for TrckSparkRunner.runRaw, beside PlanAuditSpec's plan
   * pins: what a trck query actually runs, seen through a
-  * QueryExecutionListener. The emit stream is aggregated in ONE query —
-  * every yield family in one pass, nothing cached — and only a program
-  * that yields an HLL sketch plans an ObjectHashAggregate. A run whose
-  * trail presence is observable keeps its filtered-out rows as `__ghost`
-  * rows, so it plans no presence pass of its own.
+  * QueryExecutionListener. A run is ONE query — the trail exchange and
+  * TrailMatch, whose tasks fold their emit rows into results that the
+  * driver merges — with no aggregate, no second exchange and nothing
+  * cached, for every yield family. A run whose trail presence is
+  * observable keeps its filtered-out rows as `__ghost` rows, so it plans
+  * no presence pass of its own.
   */
 class RunRawExecutionSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSparkPlanHelper {
 
@@ -53,26 +53,10 @@ class RunRawExecutionSpec extends AnyFunSuite with BeforeAndAfterAll with Adapti
         |""")
     assert(qes.size == 1, s"expected one query, ran ${qes.size}")
     val p = qes.head.executedPlan
-    assert(collect(p) { case a: BaseAggregateExec => a }.nonEmpty, "the one query must be the aggregation")
+    assert(collect(p) { case m: TrailMatchExec => m }.size == 1, s"$p")
+    assert(collect(p) { case a: BaseAggregateExec => a }.isEmpty, s"results are folded per task, not aggregated:\n$p")
+    assert(collect(p) { case e: ShuffleExchangeExec => e }.size == 1, s"the trail exchange only:\n$p")
     assert(qes.head.optimizedPlan.collect { case r: InMemoryRelation => r }.isEmpty, "emit stream was cached")
-    assert(collect(p) { case a: ObjectHashAggregateExec => a }.nonEmpty, "HLL merge missing")
-  }
-
-  test("a counters-only program plans a plain HashAggregate, no ObjectHashAggregate") {
-    val qes = runCaptured(
-      """start ->
-        |    receive
-        |        event_type = "buy" -> yield $buys, repeat
-        |        * -> repeat
-        |""")
-    assert(qes.size == 1, s"expected one query, ran ${qes.size}")
-    val p = qes.head.executedPlan
-    val hashAggs = collect(p) { case a: HashAggregateExec => a }
-    assert(hashAggs.nonEmpty)
-    assert(collect(p) { case a: ObjectHashAggregateExec => a }.isEmpty)
-    // no set/multiset yields, so no binary item key: a binary grouping key
-    // would disable the codegen fast hash map
-    assert(hashAggs.forall(_.groupingExpressions.forall(_.dataType != BinaryType)))
   }
 
   test("a presence-observable runRaw under a window file or CNF plans no Union and no aggregate below the trail exchange") {
@@ -100,8 +84,8 @@ class RunRawExecutionSpec extends AnyFunSuite with BeforeAndAfterAll with Adapti
       val matches = collect(p) { case m: TrailMatchExec => m }
       assert(matches.size == 1)
       assert(collect(matches.head) { case a: BaseAggregateExec => a }.isEmpty, s"aggregate below the trail exchange:\n$p")
-      // the trail exchange and the result aggregation's, nothing else
-      assert(collect(p) { case e: ShuffleExchangeExec => e }.size == 2, s"$p")
+      // the trail exchange, nothing else
+      assert(collect(p) { case e: ShuffleExchangeExec => e }.size == 1, s"$p")
     }
   }
 }

@@ -306,6 +306,27 @@ class EngineEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out.toOutputs == LocalRunner.run(prog, golden.dbs).toOutputs)
   }
 
+  test("golden nested_window_blocks.tr through runRaw gives its expected rows") {
+    // window blocks two levels deep, each with its own after (TrGoldenSpec
+    // runs the same file on LocalRunner)
+    val text = scala.io.Source.fromResource("golden/nested_window_blocks.tr").mkString
+    val trailer = org.json4s.jackson.JsonMethods.parse(TrParser.extractTestTrailer(text).get)
+    val golden = TestHarness.parseTest((trailer \ "tests")(0))
+    val program = TrParser.parse(TrParser.programText(text))
+    val (params, tuples) = TestHarness.parseParams(trailer \ "params", program)
+    val prog = Compiled.compile(program)
+    val s = spark
+    import s.implicits._
+    val df = golden.dbs.head.trails.flatMap { case (uuid, evs) =>
+      evs.map(e => (uuid, e.ts, e.fields("type"), e.fields("advertisable_eid")))
+    }.toDF("uuid", "ts", "type", "advertisable_eid").repartition(3)
+    val out = TrckSparkRunner.runRaw(prog, df, "uuid", "ts", params = params, foreachTuples = tuples)
+    val got = TestHarness.outputToJValues(out)
+    val org.json4s.JArray(expected) = golden.expected
+    assert(got.length == expected.length)
+    assert(TestHarness.compare(golden.expected, got).isEmpty, TestHarness.compare(golden.expected, got))
+  }
+
   test("golden window_file_presence.tr through unionSources + runRaw, cold and prepared, gives its expected results") {
     // window and exclude sidecars, a min_ts cut and a CNF filter that each
     // leave a listed cookie without events (TrGoldenSpec runs the same file

@@ -1,26 +1,22 @@
 package graft.engine
 
-import org.apache.spark.graft.QueryCapture
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.GraftSession
-import graft.functions.HllAggregator
 import graft.parser.TrParser
 import graft.trck._
 import graft.trck.LocalRunner.{Db, RawEvent}
 
 /** Per-trail HLL sketches travel as sparse (index hi, index lo, rank)
-  * triples and merge in the one aggregation pass of
-  * TrckSparkRunner.aggregateEmits. Pins the encoding, its size bound, and
-  * Spark ≡ LocalRunner rendered sketches byte for byte on the cases the
-  * shared aggregation must get right.
+  * triples, and TrckSparkRunner.aggregateEmits merges them into each
+  * task's results (`Hll.mergeSparse`) before the driver merges those.
+  * Pins the encoding, its size bound, and Spark ≡ LocalRunner rendered
+  * sketches byte for byte on the cases the result fold must get right.
   */
-class SparseHllSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSparkPlanHelper {
+class SparseHllSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark: SparkSession =
     GraftSession.builder("2").appName("sparse-hll").getOrCreate()
@@ -69,7 +65,7 @@ class SparseHllSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSpar
       val h = Hll()
       (0 until k).foreach(_ => h.add(rnd.nextString(8).getBytes("UTF-8")))
       val back = new Array[Byte](Hll.M)
-      Hll.maxSparse(back, h.sparse)
+      Hll.wrap(back).mergeSparse(h.sparse)
       assert(back.sameElements(h.registers), s"k=$k")
       assert(h.sparse.length == 3 * h.registers.count(_ != 0))
     }
@@ -91,16 +87,6 @@ class SparseHllSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSpar
       val item = r.getAs[Array[Byte]](1)
       assert(item.length > 0 && item.length <= 3 * k, s"${r.getString(0)}: ${item.length} bytes for $k items")
     }
-  }
-
-  test("sparse merge aggregator: null-only groups finish null, empty sketches finish 0e00") {
-    val s = spark
-    import s.implicits._
-    val df = Seq[(String, Option[Array[Byte]])](
-      ("nulls", None), ("empty", Some(Array.emptyByteArray)), ("empty", None)).toDF("g", "item")
-    val got = df.groupBy("g").agg(HllAggregator.trckHllMergeSparseHex(col("item")).as("hex"))
-      .collect().map(r => r.getString(0) -> Option(r.getString(1))).toMap
-    assert(got == Map("nulls" -> None, "empty" -> Some(Hll.EmptyHex)))
   }
 
   test("empty sketch: an HLL yield that never fires renders 0e00 on both engines") {
@@ -126,7 +112,7 @@ class SparseHllSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSpar
     assert(out.size == 1 && out.head("^skus") != Hll.EmptyHex)
   }
 
-  test("foreach with more than 128 sketch groups per task: sort-based fallback, Spark = local") {
+  test("foreach with more than 128 sketch groups per task, Spark = local") {
     val prog = compile(
       """foreach %s
         |    start ->
@@ -135,12 +121,9 @@ class SparseHllSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSpar
         |            * -> repeat
         |""")
     val d = db(17L, nTrails = 40, nEvents = 30, nSkus = 300)
-    val (_, qes) = QueryCapture(spark)(assertSame(prog, Seq(d)))
+    assertSame(prog, Seq(d))
     val nSkus = d.trails.flatMap(_._2.map(_.fields("sku"))).distinct.size
     assert(nSkus > 2 * 128, s"fixture too narrow: $nSkus foreach values")
-    val fellBack = qes.flatMap(qe => collect(qe.executedPlan) { case a: ObjectHashAggregateExec => a })
-      .map(_.metrics("numTasksFallBacked").value).sum
-    assert(fellBack > 0, "the sketch aggregation never left the hash path")
   }
 
   test("multi-source: cross-DB sketches merge through unionSources, Spark = local") {

@@ -1,5 +1,6 @@
 package graft.engine
 
+import org.apache.spark.graft.QueryCapture
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -328,32 +329,63 @@ class TrailPackSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSpar
     assert(got2.toOutputs.map(_.toMap) == want)
   }
 
-  test("the event steps metric stays within 2 steps per kept event on perftest1-shaped input, 4 tasks") {
-    val prog = compile(
-      """foreach %aeid
-        |    start ->
-        |        receive
-        |            advertisable_eid = %aeid -> yield $r, repeat
-        |            * -> repeat
-        |""")
-    // 120 trails of two DBs x 100 events; trail c cycles through
-    // (c + 1) % 100 + 1 values of advertisable_eid
+  /** perftest1's program: an implicit foreach over advertisable_eid */
+  private val perftest1 = compile(
+    """foreach %aeid
+      |    start ->
+      |        receive
+      |            advertisable_eid = %aeid -> yield $r, repeat
+      |            * -> repeat
+      |""")
+
+  /** 120 perftest1-shaped trails of two DBs x 100 events in 8 partitions;
+    * trail c cycles through (c + 1) % 100 + 1 values of advertisable_eid
+    */
+  private def perftest1Df: DataFrame = {
     val rows = for (c <- 0 until 120; db <- 0 until 2; j <- 0 until 100)
       yield Row(c.toString, 1000000L + db * 100000L + j, (j % ((c + 1) % 100 + 1)).toString)
     val ptSchema = StructType(Seq(StructField("uuid", StringType), StructField("ts", LongType),
       StructField("advertisable_eid", StringType)))
-    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 8), ptSchema)
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 8), ptSchema)
+  }
+
+  test("the event steps metric stays within 2 steps per kept event on perftest1-shaped input, 4 tasks") {
+    val df = perftest1Df
     val layout = df.repartition(4, col("uuid"))
     assert(layout.rdd.getNumPartitions == 4)
-    for (em <- Seq(TrailEngine.emits(prog, df, "uuid", "ts"), TrailEngine.emits(prog, layout, "uuid", "ts"))) {
-      val m = matchMetrics(em)
+    for (frame <- Seq(df, layout)) {
+      val m = matchMetrics(TrailEngine.emits(perftest1, frame, "uuid", "ts"))
       assert(m("eventsKept") == 120 * 200, m.toString)
       assert(m("eventSteps") > 0 && m("eventSteps") <= 2 * m("eventsKept"), m.toString)
     }
-    val em = TrailEngine.emits(prog, layout, "uuid", "ts")
+    val em = TrailEngine.emits(perftest1, layout, "uuid", "ts")
     em.collect()
     val node = collect(em.queryExecution.executedPlan) { case m: TrailMatchExec => m }.head
     assert(node.execute().getNumPartitions == 4, "TrailMatch runs one task per layout partition")
+  }
+
+  test("runRaw's event steps stay within 2 per kept event and do not grow from 101 to 10k tuples") {
+    // the distributed form of MatchCallBoundSpec's bound, read from the
+    // one query runRaw runs: 4 TrailMatch tasks, whose folded results the
+    // driver merges
+    val df = perftest1Df.repartition(4, col("uuid"))
+    val lexicon = (0 until 100).map(_.toString)
+    val steps = for (extra <- Seq(Nil, (0 until 9899).map(i => s"absent$i"))) yield {
+      val tuples = ("" +: (lexicon ++ extra).sorted).map(v => ForeachTuple(Vector(Left(v)))).toVector
+      val (out, qes) = QueryCapture(spark)(
+        TrckSparkRunner.runRaw(perftest1, df, "uuid", "ts", foreachTuples = Some(tuples)))
+      assert(qes.size == 1, s"expected one query, ran ${qes.size}")
+      val nodes = collect(qes.head.executedPlan) { case m: TrailMatchExec => m }
+      assert(nodes.size == 1, qes.head.executedPlan.toString)
+      assert(nodes.head.execute().getNumPartitions == 4)
+      val m = nodes.head.metrics.map { case (k, v) => k -> v.value }
+      assert(m("eventsKept") == 120 * 200, m.toString)
+      assert(m("eventSteps") > 0 && m("eventSteps") <= 2 * m("eventsKept"), m.toString)
+      // every event yields $r for the tuple of its own value
+      assert(out.results.map(_.counters("r")).sum == 120 * 200)
+      m("eventSteps")
+    }
+    assert(steps(0) == steps(1), "10k tuples must cost the 101-tuple input's steps")
   }
 
   test("one exchange feeds TrailMatch, and on trail-contiguous input it ships fewer rows than events") {

@@ -89,7 +89,7 @@ class TrGoldenSpec extends AnyFunSuite {
   }
 
   test("in-repo golden corpus discovered") {
-    assert(inRepo.size >= 8, s"expected >=8 in-repo .tr files, found ${inRepo.size}")
+    assert(inRepo.size >= 9, s"expected >=9 in-repo .tr files, found ${inRepo.size}")
   }
 
   test("tr corpus discovered") {

@@ -1,12 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.{col, encode}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.GraftSession
 import graft.engine.TrckQueries
+import graft.functions.HllAggregator
 import graft.trck.Compiled
 
 /** Streaming FSM: state must carry across micro-batches exactly as the
@@ -23,13 +25,18 @@ class TrailStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s = spark
     import s.implicits._
     implicit val sqlCtx = spark.sqlContext
+    // trck-format distinct-user sketch per event type: the aggregator's
+    // register-max merge folds each micro-batch into the group's state
+    def hllByType(events: DataFrame): DataFrame =
+      events.groupBy(col("event_type"))
+        .agg(HllAggregator.trckHllHex(encode(col("user_id").cast("string"), "UTF-8")).as("hll_hex"))
     // overlapping user sets across batches: the merged sketch must count
     // each distinct user once, and the hex must equal one-shot batch agg
     val batch1 = (1 to 60).map(u => ("click", u.toLong)) ++ (1 to 20).map(u => ("view", u.toLong))
     val batch2 = (30 to 90).map(u => ("click", u.toLong)) ++ (10 to 25).map(u => ("view", u.toLong))
     val input = MemoryStream[(String, Long)]
     val events = input.toDF().toDF("event_type", "user_id")
-    val query = TrailStream.hllDistinctByGroup(events)
+    val query = hllByType(events)
       .writeStream.format("memory").queryName("hll_out").outputMode("complete").start()
     try {
       input.addData(batch1: _*)
@@ -38,13 +45,12 @@ class TrailStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
       query.processAllAvailable()
       val streamed = spark.sql("SELECT event_type, hll_hex FROM hll_out")
         .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-      val oneShot = TrailStream.hllDistinctByGroup(
-        (batch1 ++ batch2).toDF("event_type", "user_id"))
+      val oneShot = hllByType((batch1 ++ batch2).toDF("event_type", "user_id"))
         .collect().map(r => r.getString(0) -> r.getString(1)).toMap
       assert(streamed == oneShot,
         "micro-batch-merged sketches must be byte-identical to one batch aggregation")
       // and the estimates are sane: 90 distinct click users, 25 view users
-      val est = streamed.view.mapValues(h => graft.functions.HllAggregator.estimate(h)).toMap
+      val est = streamed.view.mapValues(h => HllAggregator.estimate(h)).toMap
       assert(math.abs(est("click") - 90) <= 3 && math.abs(est("view") - 25) <= 2, est)
     } finally query.stop()
   }

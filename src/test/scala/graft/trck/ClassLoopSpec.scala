@@ -177,10 +177,10 @@ class ClassLoopSpec extends AnyFunSuite {
             prog.slot(field) >= 0 && evs.exists(e => vs.exists(_ == e.fields(prog.slot(field))))
           holds("advertisable_eid", Option(b.scalar("%g"))) || holds("type", Option(b.set("#h")).toSeq.flatten)
         }
-        TrailMatcher.matchCalls.reset()
+        val steps0 = TrailMatcher.threadSteps
         states = TrailMatcher.processTrail(prog, tuples, states, evs, "c1", 0L, 0L, params, Map.empty,
           (j, r) => got(j).merge(r))
-        val steps = TrailMatcher.matchCalls.sum()
+        val steps = TrailMatcher.threadSteps - steps0
         if (eligible) assert(steps <= (g + present).toLong * evs.length, s"seed $seed: $steps steps")
       }
       TrailMatcher.finalizeTrail(prog, tuples, states, "c1", params, Map.empty, (j, r) => got(j).merge(r))

@@ -6,8 +6,9 @@ import graft.parser.TrParser
 import Fsm.{Bindings, FsmState, TrailEvent}
 import LocalRunner.ForeachTuple
 
-/** The per-trail foreach loop's work bound, read from
-  * `TrailMatcher.matchCalls` (FSM event-steps). The reference makes at most
+/** The per-trail foreach loop's work bound, read as the difference of
+  * `TrailMatcher.threadSteps` (FSM event-steps made on this thread) across
+  * one trail. The reference makes at most
   * N+1 whole-trail match calls for N distinct foreach values present in a
   * trail (src/match_traildb.c:596-608), i.e. (N+1)·L event-steps for a
   * trail of L events; the class loop must stay within that for any trail,
@@ -53,10 +54,10 @@ class MatchCallBoundSpec extends AnyFunSuite {
         val got = new Array[Long](tuples.length)
         val saved = Array.fill(tuples.length)(FsmState.initial(prog))
         val events = trail(c)
-        TrailMatcher.matchCalls.reset()
+        val steps0 = TrailMatcher.threadSteps
         TrailMatcher.processTrail(prog, tuples, saved, events, c.toString, 0L, 0L, Bindings(), Map.empty,
           (j, r) => got(j) += r.counters.getOrElse("r", 0L))
-        val steps = TrailMatcher.matchCalls.sum()
+        val steps = TrailMatcher.threadSteps - steps0
         val want = values.map { v =>
           if (lexicon.contains(v) && v.toInt < seg(c)) 2L * (0 until 100).count(_ % seg(c) == v.toInt)
           else 0L
